@@ -4,7 +4,7 @@
 
 Builds graft and the benchmark from source (perfbench/build.py), makes a
 fresh run directory under .bench_run/ with an empty ArtifactStore root,
-generates the seeded input tables, runs the workload in one JVM at
+generates the seeded input corpus, runs the workload in one JVM at
 local[4] with a 3 GiB heap, prints every metric by name with its unit,
 and ends with one JSON line:
 
@@ -29,12 +29,9 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 import build  # noqa: E402
 
-WORKLOADS = ("pipeline_cold", "queries_warm", "ingest_stream")
+WORKLOADS = ("pipeline_cold", "ingest_stream")
 CPUS = 4
 HEAP = "3g"
-# Input scale: TPC-H-like tables at sf 0.01 and a 1000-document corpus.
-SF = "0.01"
-DOCS = "1000"
 RUN_TIMEOUT_S = 170
 
 JDK_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
@@ -68,9 +65,7 @@ def run_jvm(classpath, args, work):
     cmd += ["-cp", classpath, "graftbench.Main",
             "--workload", args.workload, "--seed", str(args.seed),
             "--seconds", str(args.seconds), "--trace", str(args.trace),
-            "--work", work, "--sf", SF, "--docs", DOCS,
-            "--registry", os.path.join(ROOT, "src", "main", "scala", "graft",
-                                       "SparkEntry.scala")]
+            "--work", work]
     log_path = os.path.join(work, "jvm.log")
     with open(log_path, "w") as log:
         p = subprocess.Popen(cmd, cwd=work, env=env, stdout=log,
@@ -82,6 +77,30 @@ def run_jvm(classpath, args, work):
             p.wait()
             code = None
     return code, log_path
+
+
+def git_commit():
+    """The checked-out commit, read from .git without running git;
+    "unknown" outside a git checkout."""
+    git = os.path.join(ROOT, ".git")
+    try:
+        with open(os.path.join(git, "HEAD")) as fh:
+            head = fh.read().strip()
+        if not head.startswith("ref: "):
+            return head
+        ref = head[5:]
+        path = os.path.join(git, ref)
+        if os.path.isfile(path):
+            with open(path) as fh:
+                return fh.read().strip()
+        with open(os.path.join(git, "packed-refs")) as fh:
+            for line in fh:
+                parts = line.split()
+                if len(parts) == 2 and parts[1] == ref:
+                    return parts[0]
+    except OSError:
+        pass
+    return "unknown"
 
 
 def check_expected(result, workload, seed):
@@ -139,6 +158,9 @@ def main():
             return 3
         with open(result_path) as fh:
             result = json.load(fh)
+        result["host"]["commit"] = git_commit()
+        with open(result_path, "w") as fh:
+            json.dump(result, fh)
         kept = os.path.join(ROOT, ".bench_results")
         os.makedirs(kept, exist_ok=True)
         shutil.copy(result_path, os.path.join(kept, tag + ".result.json"))

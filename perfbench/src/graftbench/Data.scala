@@ -1,18 +1,14 @@
 package graftbench
 
-import java.sql.Timestamp
 import java.util.SplittableRandom
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Seeded generator for the ten tables graft's queries read (the
-  * TPC-H-like star schema plus `events`, `documents` and `embeddings`),
-  * with the column names, types and value domains of the fixture tables
-  * the query surface was written against. The same `(seed, sf)` always
-  * writes the same rows. Row counts scale with `sf` the way the fixture
-  * tables do (lineitem = 6M × sf); `documents` and `embeddings` have a
-  * floor so the document pipeline has a corpus worth deduplicating.
+/** Seeded generator for the one table both workloads read: `documents`,
+  * with the column names, types and value domains of the fixture table
+  * the curation chain and the ingest gate were written against. The same
+  * seed always writes the same rows.
   *
   * The corpus carries the structure the curation chain acts on: about
   * 5 % near-duplicates (an earlier document with a few words replaced,
@@ -20,44 +16,14 @@ import org.apache.spark.sql.types._
   */
 object Data {
 
-  val tables: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  final case class Sizes(customer: Int, supplier: Int, part: Int, orders: Int,
-                         lineitem: Int, events: Int, documents: Int,
-                         embeddings: Int, users: Int)
-
-  def sizes(sf: Double, docs: Int): Sizes = {
-    def n(base: Double): Int = math.max(1, math.round(base * sf).toInt)
-    Sizes(customer = n(150000), supplier = n(10000), part = n(200000),
-      orders = n(1500000), lineitem = n(6000000), events = n(1000000),
-      documents = docs, embeddings = math.max(500, docs / 2),
-      users = math.max(15, n(15000)))
-  }
+  /** Corpus size: documents per run. */
+  val Documents = 1000
 
   private val vocab = Array("a", "agg", "batch", "big", "column", "customer",
     "data", "fast", "filter", "group", "hash", "join", "key", "line", "merge",
     "order", "part", "query", "row", "scan", "slow", "small", "sort", "spark",
     "stream", "table", "the", "value", "vector", "window")
   private val langs = Array("en", "en", "en", "es", "zh", "de", "fr")
-  private val segments = Array("AUTOMOBILE", "BUILDING", "FURNITURE",
-    "HOUSEHOLD", "MACHINERY")
-  private val adjectives = Array("blue", "old", "small", "new", "red",
-    "large", "hot", "cold")
-  private val nouns = Array("widget", "gizmo", "ring", "gear", "bolt", "plate",
-    "rod", "anvil")
-  private val partTypes = Array("LARGE", "ECONOMY", "STANDARD", "SMALL",
-    "MEDIUM", "PROMO")
-  private val priorities = Array("1-URGENT", "2-HIGH", "3-MEDIUM",
-    "4-NOT SPECIFIED", "5-LOW")
-  private val eventTypes = Array("click", "view", "purchase", "signup", "error")
-
-  private val day = 86400000L
-  private val ordersStart = Timestamp.valueOf("1995-01-01 00:00:00").getTime
-  private val eventsStart = Timestamp.valueOf("2024-01-01 00:00:00").getTime
-
-  private def cents(r: SplittableRandom, lo: Double, hi: Double): Double =
-    math.round((lo + r.nextDouble() * (hi - lo)) * 100) / 100.0
 
   private def pick[T](r: SplittableRandom, xs: Array[T]): T = xs(r.nextInt(xs.length))
 
@@ -77,107 +43,17 @@ object Data {
     out
   }
 
-  private def write(spark: SparkSession, dir: String, name: String,
-                    schema: StructType, rows: => Seq[Row])(implicit only: Set[String]): Unit =
-    if (only(name))
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-        .write.mode("overwrite").parquet(s"$dir/$name.parquet")
-
   private def f(name: String, t: DataType) = StructField(name, t, nullable = true)
 
-  /** Write the tables named in `only` under `dir` (one parquet directory
-    * each). Every table draws from its own split of the seeded stream,
-    * so a table's rows do not depend on which others are written.
-    */
-  def generate(spark: SparkSession, dir: String, seed: Long, sz: Sizes,
-               only: Set[String] = tables.toSet): Unit = {
-    implicit val wanted: Set[String] = only
-    val root = new SplittableRandom(seed)
-    def rng() = root.split()
-
-    write(spark, dir, "region", StructType(Seq(f("r_regionkey", IntegerType),
-      f("r_name", StringType))),
-      Seq("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST").zipWithIndex
-        .map { case (n, i) => Row(i, n) })
-    write(spark, dir, "nation", StructType(Seq(f("n_nationkey", IntegerType),
-      f("n_name", StringType), f("n_regionkey", IntegerType))),
-      (0 until 25).map(i => Row(i, s"NATION_$i", i % 5)))
-
-    var r = rng()
-    write(spark, dir, "customer", StructType(Seq(f("c_custkey", LongType),
-      f("c_name", StringType), f("c_nationkey", IntegerType),
-      f("c_acctbal", DoubleType), f("c_mktsegment", StringType))),
-      (0 until sz.customer).map(i => Row(i.toLong, f"Customer#$i%09d",
-        r.nextInt(25), cents(r, -999.99, 9999.99), pick(r, segments))))
-    r = rng()
-    write(spark, dir, "supplier", StructType(Seq(f("s_suppkey", LongType),
-      f("s_name", StringType), f("s_nationkey", IntegerType),
-      f("s_acctbal", DoubleType))),
-      (0 until sz.supplier).map(i => Row(i.toLong, f"Supplier#$i%09d",
-        r.nextInt(25), cents(r, -999.99, 9999.99))))
-    r = rng()
-    write(spark, dir, "part", StructType(Seq(f("p_partkey", LongType),
-      f("p_name", StringType), f("p_brand", StringType), f("p_type", StringType),
-      f("p_size", IntegerType), f("p_retailprice", DoubleType))),
-      (0 until sz.part).map(i => Row(i.toLong,
-        s"${pick(r, adjectives)} ${pick(r, nouns)}", s"Brand#${1 + r.nextInt(25)}",
-        pick(r, partTypes), 1 + r.nextInt(50), 900.0 + (i % 1000) / 10.0)))
-    r = rng()
-    val orderDays = 2403 // 1995-01-01 .. 2001-08-01
-    write(spark, dir, "orders", StructType(Seq(f("o_orderkey", LongType),
-      f("o_custkey", LongType), f("o_orderstatus", StringType),
-      f("o_totalprice", DoubleType), f("o_orderdate", TimestampType),
-      f("o_orderpriority", StringType))),
-      (0 until sz.orders).map(i => Row(i.toLong, r.nextInt(sz.customer).toLong,
-        pick(r, Array("O", "F", "P")), cents(r, 1000.0, 500000.0),
-        new Timestamp(ordersStart + r.nextInt(orderDays + 1) * day),
-        pick(r, priorities))))
-    r = rng()
-    write(spark, dir, "lineitem", StructType(Seq(f("l_orderkey", LongType),
-      f("l_partkey", LongType), f("l_suppkey", LongType),
-      f("l_linenumber", IntegerType), f("l_quantity", DoubleType),
-      f("l_extendedprice", DoubleType), f("l_discount", DoubleType),
-      f("l_tax", DoubleType), f("l_returnflag", StringType),
-      f("l_linestatus", StringType), f("l_shipdate", TimestampType))),
-      (0 until sz.lineitem).map { _ =>
-        val q = (1 + r.nextInt(50)).toDouble
-        Row(r.nextInt(sz.orders).toLong, r.nextInt(sz.part).toLong,
-          r.nextInt(sz.supplier).toLong, 1 + r.nextInt(7), q,
-          math.round(q * cents(r, 900.0, 2100.0) * 100) / 100.0,
-          r.nextInt(11) / 100.0, r.nextInt(9) / 100.0,
-          pick(r, Array("A", "N", "R")), pick(r, Array("O", "F")),
-          new Timestamp(ordersStart + (1 + r.nextInt(orderDays + 94)) * day))
-      })
-    r = rng()
-    val span = 30L * day * 1000 // microseconds in 30 days
-    val evTs = Array.fill(sz.events)((r.nextDouble() * span).toLong).sorted
-    write(spark, dir, "events", StructType(Seq(f("event_id", LongType),
-      f("ts", TimestampType), f("user_id", LongType), f("event_type", StringType),
-      f("value", DoubleType), f("props", StringType))),
-      (0 until sz.events).map { i =>
-        val ts = new Timestamp(eventsStart + evTs(i) / 1000)
-        ts.setNanos((evTs(i) % 1000000).toInt * 1000)
-        Row(i.toLong, ts, r.nextInt(sz.users).toLong, pick(r, eventTypes),
-          math.min(999.99, math.round(-50.0 * math.log(1 - r.nextDouble()) * 100) / 100.0),
-          s"""{"k": ${r.nextInt(100)}}""")
-      })
-    r = rng()
-    val texts = documentTexts(r, sz.documents)
-    write(spark, dir, "documents", StructType(Seq(f("doc_id", LongType),
-      f("text", StringType), f("lang", StringType), f("source", StringType),
-      f("n_chars", LongType))),
-      texts.indices.map(i => Row(i.toLong, texts(i), pick(r, langs),
-        s"src${i % 20}", texts(i).length.toLong)))
-    r = rng()
-    val centroids = Array.fill(10, 64)(r.nextGaussian().toFloat)
-    write(spark, dir, "embeddings", StructType(Seq(f("vec_id", LongType),
-      f("embedding", ArrayType(FloatType, containsNull = true)),
-      f("label", IntegerType))),
-      (0 until sz.embeddings).map { i =>
-        val label = r.nextInt(10)
-        val v = Array.tabulate(64)(k => centroids(label)(k) + 2.5 * r.nextGaussian())
-        val norm = math.sqrt(v.map(x => x * x).sum)
-        Row(i.toLong, v.map(x => (x / norm).toFloat).toSeq, label)
-      })
+  /** Write `dir/documents.parquet`: [[Documents]] rows drawn from `seed`. */
+  def generate(spark: SparkSession, dir: String, seed: Long): Unit = {
+    val r = new SplittableRandom(seed)
+    val texts = documentTexts(r, Documents)
+    val schema = StructType(Seq(f("doc_id", LongType), f("text", StringType),
+      f("lang", StringType), f("source", StringType), f("n_chars", LongType)))
+    val rows = texts.indices.map(i => Row(i.toLong, texts(i), pick(r, langs),
+      s"src${i % 20}", texts(i).length.toLong))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
   }
 }

@@ -15,20 +15,17 @@ import graft.LocalSession
   * check held.
   *
   * {{{
-  * graftbench.Main --workload pipeline_cold|queries_warm|ingest_stream
-  *   --seed N --seconds S --trace 0|1 --work DIR --registry SparkEntry.scala
-  *   [--sf 0.01] [--docs 1000]
+  * graftbench.Main --workload pipeline_cold|ingest_stream
+  *   --seed N --seconds S --trace 0|1 --work DIR
   * }}}
   * The ArtifactStore root is `SPARK_GRAFT_ARTIFACT_DIR`, which the
   * caller points at an empty directory.
   */
 object Main {
 
-  /** Each workload with the input tables it reads. */
-  val workloads: Map[String, ((Ctx, () => Unit) => Timed, Set[String])] = Map(
-    "pipeline_cold" -> ((Workloads.pipelineCold _, Set("documents"))),
-    "queries_warm" -> ((Workloads.queriesWarm _, Data.tables.toSet)),
-    "ingest_stream" -> ((Workloads.ingestStream _, Set("documents"))))
+  val workloads: Map[String, (Ctx, () => Unit) => Timed] = Map(
+    "pipeline_cold" -> Workloads.pipelineCold _,
+    "ingest_stream" -> Workloads.ingestStream _)
 
   private def loadAvg: String =
     try Files.readString(Paths.get("/proc/loadavg")).trim
@@ -50,14 +47,12 @@ object Main {
   def main(argv: Array[String]): Unit = {
     val args = argv.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val workload = args("workload")
-    val (run, inputs) = workloads.getOrElse(workload,
+    val run = workloads.getOrElse(workload,
       throw new IllegalArgumentException(s"unknown workload $workload"))
     val seed = args("seed").toLong
     val seconds = args("seconds").toDouble
     val traced = args.getOrElse("trace", "0") == "1"
     val work = new File(args("work"))
-    val sizes = Data.sizes(args.getOrElse("sf", "0.01").toDouble,
-      args.getOrElse("docs", "1000").toInt)
     val storeRoot = new File(sys.env("SPARK_GRAFT_ARTIFACT_DIR"))
     val loadBefore = loadAvg
     val steal0 = stealSeconds
@@ -70,7 +65,7 @@ object Main {
 
     val g0 = System.nanoTime()
     val dataDir = new File(work, "data").getPath
-    Data.generate(spark, dataDir, seed, sizes, inputs)
+    Data.generate(spark, dataDir, seed)
     val genS = (System.nanoTime() - g0) / 1e9
 
     val spans = new Spans
@@ -79,8 +74,7 @@ object Main {
     val runner = new Runner(spark, spans, tracer)
     val runSpan = spans.begin("run", workload, 0)
     tracer.foreach(_.setPhase(runSpan))
-    val ctx = new Ctx(spark, runner, tracer, runSpan, work, dataDir, storeRoot, seed,
-      seconds, cpus, args("registry"))
+    val ctx = new Ctx(spark, runner, tracer, runSpan, work, dataDir, storeRoot, seed, seconds)
 
     var setupS = Double.NaN
     var gc0 = 0.0
@@ -115,8 +109,10 @@ object Main {
     val layers = for (tr <- tracer; t <- timed) yield {
       tr.uninstall()
       val L = tr.layers
-      val wallMs = (t.endMs - t.startMs).max(1L)
-      val busy = tr.busyMs(t.startMs, t.endMs)
+      // the gap and the slot use are taken over the window wall_s times;
+      // the counters cover the whole timed phase
+      val wallMs = (t.wallEndMs - t.wallStartMs).max(1L)
+      val busy = tr.busyMs(t.wallStartMs, t.wallEndMs)
       val mine = ctx.layers
       def m(k: String): Double = mine.getOrElse(k, 0.0)
       val mb = 1048576.0
@@ -138,7 +134,7 @@ object Main {
         "exec.run_s" -> (L.runMs / 1000.0, "s"),
         "exec.cpu_s" -> (L.cpuNs / 1e9, "s"),
         "exec.gc_s" -> (L.gcMs / 1000.0, "s"),
-        "exec.slot_util" -> (L.runMs.toDouble / (wallMs * cpus), "ratio"),
+        "exec.slot_util" -> (tr.runMsIn(t.wallStartMs, t.wallEndMs) / (wallMs * cpus), "ratio"),
         "shuffle.write_mb" -> (L.shuffleWrite / mb, "MB"),
         "shuffle.read_mb" -> (L.shuffleRead / mb, "MB"),
         "shuffle.fetch_wait_s" -> (L.fetchWaitMs / 1000.0, "s"),
@@ -181,7 +177,7 @@ object Main {
         "spark_version" -> spark.version,
         "java_version" -> System.getProperty("java.version"),
         "seed" -> seed,
-        "sizes" -> sizes.toString),
+        "documents" -> Data.Documents),
       "digests" -> ctx.digests,
       "notes" -> ctx.notes)
     Files.writeString(new File(work, "result.json").toPath, Json.render(result))

@@ -1,10 +1,6 @@
 package graftbench
 
-import java.nio.file.{Files, Paths}
-
-import graft.SparkEntry
-
-/** Which queries each workload runs. */
+/** Which queries the benchmark runs. */
 object Panel {
 
   /** The document-curation chain, in dependency order: acquisition
@@ -18,45 +14,4 @@ object Panel {
     * Each was seen to change its digest across repeated executions.
     */
   val rowsOnly: Set[String] = Set.empty
-
-  /** The resident surface: every registered query the bench prices. */
-  def resident: Seq[String] =
-    SparkEntry.queries.keys.toSeq.sorted.filterNot(SparkEntry.correctnessOnly)
-
-  private val entry = """\s*"(q[a-z0-9_]+)"\s*->\s*(.*)""".r
-  private val owner = """(?:ext\.)?\b([A-Z][A-Za-z]+)\.[a-z]""".r
-
-  /** Owning module of each registered query, read off the registry's
-    * source: the first `Module.method` its builder expression names.
-    */
-  def modules(registrySource: String): Map[String, String] = {
-    val text = new String(Files.readAllBytes(Paths.get(registrySource)), "UTF-8")
-    val from = text.indexOf("def queries")
-    val lines = text.substring(from, text.indexOf("oracleSql", from)).split("\n")
-    lines.indices.flatMap { k =>
-      lines(k) match {
-        case entry(name, rest) =>
-          val window = (rest +: lines.slice(k + 1, k + 4)).mkString(" ")
-          Some(name -> owner.findFirstMatchIn(window).map(_.group(1)).getOrElse("SparkEntry"))
-        case _ => None
-      }
-    }.toMap
-  }
-
-  /** A sample of `n` resident queries stratified by owning module:
-    * each module gets its largest-remainder share of `n` in proportion
-    * to its size, and its members are drawn with `panelSeed`.
-    */
-  def stratified(mods: Map[String, String], n: Int, panelSeed: Long): Seq[String] = {
-    val pool = resident.groupBy(q => mods.getOrElse(q, "SparkEntry")).toSeq.sortBy(_._1)
-    val total = pool.map(_._2.size).sum.toDouble
-    val exact = pool.map { case (m, qs) => m -> qs.size * n / total }
-    val floors = exact.map { case (m, x) => m -> math.floor(x).toInt }.toMap
-    val extra = exact.sortBy { case (m, x) => (-(x - math.floor(x)), m) }
-      .take(n - floors.values.sum).map(_._1).toSet
-    val rnd = new scala.util.Random(panelSeed)
-    pool.flatMap { case (m, qs) =>
-      rnd.shuffle(qs.sorted).take(floors(m) + (if (extra(m)) 1 else 0))
-    }.sorted
-  }
 }

@@ -102,6 +102,15 @@ object SelfTest {
         assert(!runner.ok)
       }
 
+      check("run time and busy time are clipped to the wall window") {
+        val tr = new Tracer(spark, new Spans)
+        tr.layers.taskIntervals ++= Seq((0L, 100L, 80L), (50L, 150L, 100L), (300L, 300L, 5L))
+        assert(tr.runMsIn(0L, 100L) == 130.0)
+        assert(tr.runMsIn(100L, 400L) == 55.0)
+        assert(tr.busyMs(0L, 100L) == 100L)
+        assert(tr.busyMs(120L, 400L) == 30L)
+      }
+
       check("a digest mismatch between executions is a failure") {
         val runner = new Runner(spark, new Spans, None)
         val a = OpResult("q_x", 0.1, 0.0, Some(Digest(3, BigDecimal(7))), None)

@@ -60,7 +60,8 @@ final class Layers {
   var runMs, cpuNs, gcMs, fetchWaitMs = 0L
   var shuffleWrite, shuffleRead, spill = 0L
   var analysisMs, optimizationMs, planningMs = 0L
-  val taskIntervals = mutable.ArrayBuffer.empty[(Long, Long)]
+  /** Each task's launch and finish time and its executor run time. */
+  val taskIntervals = mutable.ArrayBuffer.empty[(Long, Long, Long)]
 }
 
 /** The traced run's listeners, registered from the benchmark's own code:
@@ -131,8 +132,9 @@ final class Tracer(spark: SparkSession, spans: Spans) {
       }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Tracer.this.synchronized {
       layers.tasks += 1
-      layers.taskIntervals += ((e.taskInfo.launchTime, e.taskInfo.finishTime))
       val m = e.taskMetrics
+      layers.taskIntervals += ((e.taskInfo.launchTime, e.taskInfo.finishTime,
+        if (m == null) 0L else m.executorRunTime))
       if (m != null) {
         layers.runMs += m.executorRunTime
         layers.cpuNs += m.executorCpuTime
@@ -193,7 +195,7 @@ final class Tracer(spark: SparkSession, spans: Spans) {
 
   /** Union length of the task busy intervals within [fromMs, toMs]. */
   def busyMs(fromMs: Long, toMs: Long): Long = synchronized {
-    val iv = layers.taskIntervals.map { case (a, b) => (a max fromMs, b min toMs) }
+    val iv = layers.taskIntervals.map { case (a, b, _) => (a max fromMs, b min toMs) }
       .filter { case (a, b) => b > a }.sortBy(_._1)
     var total = 0L
     var curA = -1L
@@ -203,6 +205,18 @@ final class Tracer(spark: SparkSession, spans: Spans) {
       else curB = curB max b
     }
     total + (curB - curA)
+  }
+
+  /** Executor run milliseconds inside [fromMs, toMs]: a task that
+    * straddles an edge counts in proportion to its overlap.
+    */
+  def runMsIn(fromMs: Long, toMs: Long): Double = synchronized {
+    layers.taskIntervals.map { case (a, b, run) =>
+      val overlap = (b min toMs) - (a max fromMs)
+      if (b <= a) { if (a >= fromMs && a <= toMs) run.toDouble else 0.0 }
+      else if (overlap <= 0) 0.0
+      else run * overlap.toDouble / (b - a)
+    }.sum
   }
 }
 
@@ -230,7 +244,7 @@ object Tracer {
 
 /** The traced run's report: every span with its self time (its length
   * minus the union of its children), the wall-clock accounting of the
-  * timed phase (task-busy time plus driver gap is the wall), and the
+  * window `wall_s` times (task-busy time plus driver gap is the wall), and the
   * queries with the most jobs and the most planning time per execution.
   */
 object TraceReport {
@@ -250,10 +264,12 @@ object TraceReport {
     val children = spans.groupBy(_.parent)
     def self(s: Span): Long = (s.endMs - s.startMs) - unionMs(
       children.getOrElse(s.id, Nil).map(c => (c.startMs max s.startMs, c.endMs min s.endMs)))
-    val wall = t.endMs - t.startMs
-    val busy = tr.busyMs(t.startMs, t.endMs)
+    val wall = t.wallEndMs - t.wallStartMs
+    val busy = tr.busyMs(t.wallStartMs, t.wallEndMs)
+    val inWall = spans.filter(s => s.kind == "op" && s.startMs >= t.wallStartMs &&
+      s.endMs <= t.wallEndMs)
+    val inOps = unionMs(inWall.map(s => (s.startMs, s.endMs)))
     val ops = spans.filter(s => s.kind == "op" && s.startMs >= t.startMs && s.endMs <= t.endMs)
-    val inOps = unionMs(ops.map(s => (s.startMs, s.endMs)))
     val byName = ops.groupBy(_.name).toSeq
     // micro-batches of each streaming query, from its progress events
     val streams = tr.progress.map(_.progress).filter(_.numInputRows > 0)

@@ -21,8 +21,7 @@ import graft.streaming.StreamingStats
   */
 final class Ctx(val spark: SparkSession, val runner: Runner, val tracer: Option[Tracer],
                 val runSpan: Long, val work: File, val base: String, val storeRoot: File,
-                val seed: Long, val seconds: Double, val cpus: Int,
-                val registrySource: String) {
+                val seed: Long, val seconds: Double) {
   def spans: Spans = runner.spans
   private val extras = mutable.LinkedHashMap.empty[String, (Double, String)]
   private val layer = mutable.LinkedHashMap.empty[String, Double]
@@ -45,9 +44,12 @@ final class Ctx(val spark: SparkSession, val runner: Runner, val tracer: Option[
     spark.sparkContext.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum / 1048576.0
 }
 
-/** The common shape of a workload's timed phase. */
-final case class Timed(startMs: Long, endMs: Long, wallS: Double,
-                       latencies: Seq[Double], residentMb: Double)
+/** The common shape of a workload's timed phase, which runs from
+  * `startMs` to `endMs`; `wallS` is the makespan of the part of it that
+  * runs from `wallStartMs` to `wallEndMs`.
+  */
+final case class Timed(startMs: Long, endMs: Long, wallStartMs: Long, wallEndMs: Long,
+                       wallS: Double, latencies: Seq[Double], residentMb: Double)
 
 object Workloads {
 
@@ -97,9 +99,11 @@ object Workloads {
     val dirs0 = fpDirs(storeRoot)
     val p1 = spans.begin("phase", "pass1", runSpan)
     tracer.foreach(_.setPhase(p1))
+    val wallStart = System.currentTimeMillis()
     val a = System.nanoTime()
     val pass1 = Panel.chain.map(q => runner.query(q, dir, p1))
     val wall = sinceS(a)
+    val wallEnd = System.currentTimeMillis()
     spans.end(p1)
     val ledger1 = ArtifactLedger.snapshot
     val resident = residentMb
@@ -130,62 +134,7 @@ object Workloads {
     layerValue("store.replay_s", replay)
     layerValue("store.dirs", dirs)
     layerValue("cache.rdds", rdds)
-    Timed(start, System.currentTimeMillis(), wall, lats, resident)
-  }
-
-  // ---------------------------------------------------------------- queries_warm
-
-  /** Size of the resident-surface panel and the seed that draws it. The
-    * panel is fixed for a given query surface; `--seed` changes the data
-    * and the order in which each sweep visits the panel.
-    */
-  val PanelSize = 10
-  val PanelSeed = 20260117L
-
-  /** An analyst on a live session: the panel runs once untimed (set-up:
-    * it builds the artifacts the panel needs and warms the JIT and
-    * codegen), then sweeps of the panel are timed query by query until
-    * `seconds` have passed, at least two sweeps.
-    */
-  def queriesWarm(ctx: Ctx, markSetupDone: () => Unit): Timed = {
-    import ctx._
-    val panel = Panel.stratified(Panel.modules(registrySource), PanelSize, PanelSeed)
-    notes("panel") = panel
-    val warm = spans.begin("phase", "warmup", runSpan)
-    val reference = panel.map(q => q -> runner.query(q, base, warm)).toMap
-    spans.end(warm)
-    markSetupDone()
-    ArtifactLedger.reset()
-    val start = System.currentTimeMillis()
-    val rnd = new scala.util.Random(seed)
-    val walls, lats, entryS = mutable.ArrayBuffer.empty[Double]
-    val t0 = System.nanoTime()
-    var sweep = 0
-    while (sweep < 2 || sinceS(t0) < seconds) {
-      val p = spans.begin("phase", s"sweep-$sweep", runSpan)
-      tracer.foreach(_.setPhase(p))
-      val a = System.nanoTime()
-      val rs = rnd.shuffle(panel).map(q => runner.query(q, base, p))
-      walls += sinceS(a)
-      spans.end(p)
-      lats ++= rs.map(_.latency)
-      entryS += rs.map(_.buildS).sum
-      rs.foreach(r => runner.checkSame("warm repeat", reference(r.name), r))
-      sweep += 1
-    }
-    notes("sweeps") = sweep
-    panel.foreach(q => reference(q).digest.foreach(d => digests(q) = d.toString))
-    val ledger = ArtifactLedger.snapshot
-    report("query_p50_s", Stats.median(lats.toSeq), "s")
-    Stats.tailPercentile(lats.size).filter(_ > 50).foreach(p =>
-      report(s"query_p${p}_s", Stats.percentile(lats.toSeq, p), "s"))
-    report("query_samples", lats.size, "count")
-    layerValue("entry.build_s", Stats.median(entryS.toSeq))
-    layerValue("artifact.build_s", ledger.values.sum)
-    layerValue("artifact.count", ledger.size)
-    layerValue("cache.rdds", spark.sparkContext.getPersistentRDDs.size)
-    Timed(start, System.currentTimeMillis(), Stats.median(walls.toSeq), lats.toSeq,
-      residentMb)
+    Timed(start, System.currentTimeMillis(), wallStart, wallEnd, wall, lats, resident)
   }
 
   // ---------------------------------------------------------------- ingest_stream
@@ -194,14 +143,17 @@ object Workloads {
     * lasts the run's `seconds`.
     */
   val SteadyRate = 8.0
-  /** Untimed warm-up before the steady phase: two single-event batches
-    * (the first plans and compiles everything), then the steady schedule
-    * itself for [[WarmupSeconds]]. A cold gate batch takes about three
-    * times as long as a warm one, and after ten small warm-up batches the
-    * gate's batches still slowed and sped up again across the first
-    * seconds of steady load, by a different amount in every run.
+  /** Events per micro-batch in the closed-loop phases: about what one
+    * batch reads at [[SteadyRate]].
     */
-  val WarmupSeconds = 10
+  val BatchEvents = 8
+  /** Untimed warm-up: two single-event batches (the first plans and
+    * compiles everything), then this many closed-loop batches. It waits
+    * only for the program, so set-up holds no fixed schedule.
+    */
+  val WarmupBatches = 6
+  /** Closed-loop batches of the drain phase, the part `wall_s` times. */
+  val DrainBatches = 16
 
   private final case class Doc(id: Long, text: String, lang: String, source: String)
 
@@ -223,28 +175,39 @@ object Workloads {
       col("domain").as("source"),
       length(col("content")).cast("long").as("n_chars"))
 
-  /** The reference consumer's own path, open loop: one generator thread
-    * feeds Kafka-envelope rows into two MemoryStreams (one per consumer,
-    * as two consumer groups read one topic). Query 1 is ConsumerPlan →
+  /** The reference consumer's own path: one generator thread feeds
+    * Kafka-envelope rows into two MemoryStreams (one per consumer, as two
+    * consumer groups read one topic). Query 1 is ConsumerPlan →
     * StreamingStats.statsSink; query 2 is ConsumerPlan → Ingest.gateSink.
-    * A steady phase emits at [[SteadyRate]] for `seconds`, then a burst
-    * enqueues the rest of the arrivals at once.
+    *
+    * After a closed-loop warm-up, the timed phase has two parts:
+    *  - steady: open loop at [[SteadyRate]] for `seconds`, which gives
+    *    the event latencies;
+    *  - drain: [[DrainBatches]] closed-loop batches of [[BatchEvents]]
+    *    events, each emitted when both queries have committed the one
+    *    before, then a burst that enqueues the rest of the arrivals at
+    *    once. `wall_s` is the drain's makespan: it holds no schedule, so
+    *    all of it is the program's time.
     */
   def ingestStream(ctx: Ctx, markSetupDone: () => Unit): Timed = {
     import ctx._
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // keep every micro-batch's progress: the latencies are read from it
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
 
     val all = Tables.documents(spark, base).select("doc_id", "text", "lang", "source")
       .as[(Long, String, String, String)].collect()
       .map { case (i, t, l, s) => Doc(i, t, l, s) }.sortBy(_.id)
     val rnd = new scala.util.Random(seed)
     val arrivals = all.filter(_.id % 4 == 0)
-    val redelivered = rnd.shuffle(all.filter(_.id % 4 != 0).toSeq).take(arrivals.length * 2 / 5)
+    val redelivered = rnd.shuffle(all.filter(_.id % 4 != 0).toSeq).take(arrivals.length * 4 / 5)
     val events = rnd.shuffle((arrivals ++ redelivered).toSeq).toArray
+    val nWarm = 2 + WarmupBatches * BatchEvents
     val nSteady = (SteadyRate * seconds).toInt
-    val nWarm = 2 + (SteadyRate * WarmupSeconds).toInt
-    require(events.length > nWarm + nSteady + 10, "corpus too small for the stream")
+    val steadyUntil = nWarm + nSteady
+    val drainUntil = steadyUntil + DrainBatches * BatchEvents
+    require(events.length > drainUntil + 10, "corpus too small for the stream")
     notes("events") = events.length
 
     val statsPath = new File(work, "stats").getPath
@@ -289,6 +252,14 @@ object Workloads {
       }
       queries.forall(q => committedOffset(q) >= k)
     }
+    /** Emit events [from, until) in batches of `size`, each once both
+      * queries have committed the one before.
+      */
+    def closedLoop(from: Int, until: Int, size: Int, what: String): Unit =
+      for (i <- from until until by size) {
+        emit(i, math.min(i + size, until))
+        if (!awaitOffset(created.size - 1, 60)) runner.fail("ingest_stream", s"$what never committed")
+      }
 
     var peakBacklog = 0L
     /** Emit events [from, until) one per offset on the open-loop schedule. */
@@ -306,36 +277,32 @@ object Workloads {
       schedule
     }
 
-    for (i <- 0 until 2) {
-      emit(i, i + 1)
-      if (!awaitOffset(i, 60)) runner.fail("ingest_stream", "warm-up never committed")
-    }
-    openLoop(2, nWarm)
-    if (!awaitOffset(created.size - 1, 60)) runner.fail("ingest_stream", "warm-up never committed")
+    closedLoop(0, 2, 1, "warm-up")
+    closedLoop(2, nWarm, BatchEvents, "warm-up")
     val steadyFromOffset = created.size
     markSetupDone()
     val start = System.currentTimeMillis()
-    val t0 = System.nanoTime()
-    val phase = spans.begin("phase", "steady", runSpan)
-    tracer.foreach(_.setPhase(phase))
-
-    peakBacklog = 0L
-    val steadyUntil = nWarm + nSteady
+    val steady = spans.begin("phase", "steady", runSpan)
+    tracer.foreach(_.setPhase(steady))
     val schedule = openLoop(nWarm, steadyUntil)
     val steadyLast = created.size - 1
-    awaitOffset(steadyLast, 60)
-    spans.end(phase)
+    if (!awaitOffset(steadyLast, 60)) runner.fail("ingest_stream", "steady phase never committed")
+    spans.end(steady)
 
-    val burst = spans.begin("phase", "burst", runSpan)
-    tracer.foreach(_.setPhase(burst))
+    val drain = spans.begin("phase", "drain", runSpan)
+    tracer.foreach(_.setPhase(drain))
+    val wallStart = System.currentTimeMillis()
+    val t0 = System.nanoTime()
+    closedLoop(steadyUntil, drainUntil, BatchEvents, "drain")
     val burstStartMs = System.currentTimeMillis()
     val bt = System.nanoTime()
-    emit(steadyUntil, events.length)
+    emit(drainUntil, events.length)
     val drained = awaitOffset(created.size - 1, 120)
     val drainS = sinceS(bt)
     val wallS = sinceS(t0)
-    spans.end(burst)
-    peakBacklog = math.max(peakBacklog, events.length - steadyUntil)
+    val wallEnd = System.currentTimeMillis()
+    spans.end(drain)
+    peakBacklog = math.max(peakBacklog, events.length - drainUntil)
     val resident = residentMb
     val end = System.currentTimeMillis()
     if (!drained) runner.fail("ingest_stream", "burst never fully committed")
@@ -345,11 +312,13 @@ object Workloads {
     val batchesOf = queries.map(_.recentProgress.toSeq.filter(_.numInputRows > 0))
     def ms(p: org.apache.spark.sql.streaming.StreamingQueryProgress, k: String): Long =
       p.durationMs.asScala.get(k).map(_.longValue).getOrElse(0L)
+    def startMs(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long =
+      java.time.Instant.parse(p.timestamp).toEpochMilli
     val progress = batchesOf.map(_.map { p =>
-      (p.sources.head.endOffset.trim.toLong,
-        java.time.Instant.parse(p.timestamp).toEpochMilli + ms(p, "triggerExecution"))
+      (p.sources.head.endOffset.trim.toLong, startMs(p) + ms(p, "triggerExecution"))
     }.sortBy(_._1))
-    notes("batch_ms") = batchesOf.map(_.map(ms(_, "triggerExecution")))
+    val timedBatches = batchesOf.map(_.filter(p => startMs(p) >= start))
+    notes("batch_ms") = timedBatches.map(_.map(ms(_, "triggerExecution")))
     queries.foreach(_.stop())
     queries.foreach(_.awaitTermination(60000L))
     // offset k commits in a query with the first batch whose end offset
@@ -374,20 +343,21 @@ object Workloads {
       report(s"event_latency_p${p}_s", Stats.percentile(steadyLat, p), "s"))
     report("event_samples", steadyLat.size, "count")
     report("burst_drain_s", burstDrain, "s")
-    report("burst_events", events.length - steadyUntil, "count")
+    report("burst_events", events.length - drainUntil, "count")
     layerValue("gen.late_max_s", schedule.lateMaxSeconds)
     layerValue("stream.backlog_max", peakBacklog.toDouble)
     layerValue("sink.write_mb",
       (dirBytes(new File(statsPath)) + dirBytes(new File(gatePath))) / 1048576.0)
     layerValue("cache.rdds", spark.sparkContext.getPersistentRDDs.size)
     def phaseS(keys: String*): Double =
-      batchesOf.flatten.map(p => keys.map(ms(p, _)).sum).sum / 1000.0
+      timedBatches.flatten.map(p => keys.map(ms(p, _)).sum).sum / 1000.0
     layerValue("stream.planning_s", phaseS("queryPlanning"))
     layerValue("stream.add_batch_s", phaseS("addBatch"))
     layerValue("stream.wal_s", phaseS("walCommit", "commitOffsets"))
-    val batches = progress.map(_.size).sum
+    val batches = timedBatches.map(_.size).sum
     layerValue("stream.batches", batches)
-    layerValue("stream.rows_per_batch", if (batches == 0) 0.0 else 2.0 * events.length / batches)
+    layerValue("stream.rows_per_batch",
+      if (batches == 0) 0.0 else timedBatches.flatten.map(_.numInputRows).sum.toDouble / batches)
 
     // ---- output checks, untimed
     runner.attempt()
@@ -408,6 +378,6 @@ object Workloads {
       runner.fail("ingest_stream.gate", s"gate rows $got != gateAgainst over the arrivals $expected")
     digests("gate") = got.toString
     digests("stats") = stats.toSeq.sorted.map { case (d, n) => s"$d=$n" }.mkString(",")
-    Timed(start, end, wallS, steadyLat, resident)
+    Timed(start, end, wallStart, wallEnd, wallS, steadyLat, resident)
   }
 }

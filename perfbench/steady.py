@@ -5,8 +5,9 @@ a share of the median, from statistics.quantiles(values, n=4)).
     python3 perfbench/steady.py --seeds 1-10 [--workloads a,b] [--trace 0]
         [--out perfbench/results/steadiness.json]
 
-A metric is steady when its spread is below a third of its bound in
-BENCHMARK.json. Every run must be correct; a failed run stops the check.
+The target is a spread below a third of the metric's bound in
+BENCHMARK.json; a spread above the bound fails the benchmark. Every run
+must be correct; a failed run stops the check.
 """
 import argparse
 import json
@@ -72,8 +73,12 @@ def main():
             s = spread([r["metrics"][n]["value"] for r in runs])
             s["bound"] = bounds.get(n)
             stats[n] = s
-            print("  %-24s median %.4f  spread %.3f  bound %s" % (
-                n, s["median"], s["spread"], s["bound"]))
+            verdict = ("" if s["bound"] is None else
+                       "above bound" if s["spread"] > s["bound"] else
+                       "above a third of bound" if s["spread"] > s["bound"] / 3 else
+                       "steady")
+            print("  %-24s median %.4f  spread %.3f  bound %s  %s" % (
+                n, s["median"], s["spread"], s["bound"], verdict))
         report[w] = {"seeds": [r["seed"] for r in runs],
                      "run_s": spread([r["run_s"] for r in runs]),
                      "metrics": stats,
