@@ -30,6 +30,10 @@ import java.nio.file.{Files, Paths}
   * And one r18 instrument: HOST-LOAD STAMPS + an IDLE GATE
   * (`load_before`/`load_after`/`idle_gate`/`repass_count` in the
   * output) — see [[IdleLoadMax]].
+  *
+  * Failures are loud: a query that throws is recorded in the ledger's
+  * `failed` map (query → message) instead of being priced, and the
+  * run exits non-zero after writing the ledger ([[priceAll]]).
   */
 object Bench {
 
@@ -130,20 +134,47 @@ object Bench {
   private def fmtMap(m: Seq[(String, Double)]): String =
     m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
+  /** FAIL LOUD: every query is priced with `price`; one that throws
+    * gets no price and lands in the failure map (query → message)
+    * instead — never a `-1` quietly dropped from a total. The ledger
+    * records the map as `failed`, and [[main]] exits non-zero after
+    * writing it.
+    */
+  private[graft] def priceAll(names: Seq[String])(price: String => Double)
+      : (Seq[(String, Double)], Seq[(String, String)]) = {
+    val tried = names.map(n => n -> scala.util.Try(price(n)))
+    (tried.collect { case (n, scala.util.Success(v)) => n -> v },
+      tried.collect { case (n, scala.util.Failure(e)) => n -> String.valueOf(e.getMessage) })
+  }
+
+  /** The ledger's `failed` member, trailing comma included. */
+  private def failedJson(failed: Seq[(String, String)]): String =
+    failed.map { case (n, m) => s"${Verify.jsonString(n)}:${Verify.jsonString(m)}" }
+      .mkString("\"failed\":{", ",", "},")
+
+  /** Name every failed query on stderr and exit non-zero (after the
+    * ledger is written and the session stopped).
+    */
+  private def exitOnFailures(failed: Seq[(String, String)]): Unit =
+    if (failed.nonEmpty) {
+      failed.foreach { case (n, m) => System.err.println(s"Bench: $n failed: $m") }
+      sys.exit(1)
+    }
+
   private def coldMain(spark: org.apache.spark.sql.SparkSession,
                        sfDir: String, loadBefore: (Double, Double, Double),
-                       idleGate: String): Unit = {
+                       idleGate: String): Seq[(String, String)] = {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(SparkEntry.correctnessOnly)
-    val results = names.map { n =>
+    val (results, failed) = priceAll(names) { n =>
       SessionCaches.clearAll(spark)
       System.gc()
-      n -> BenchKit.runOnce(spark, n, sfDir)
+      BenchKit.runOnce(spark, n, sfDir)
     }
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = results.map(_._2).sum
     val builds = ArtifactLedger.snapshot.toSeq.sortBy(_._1)
     val json = s"""{"metric":"cold_total","value":$total,"unit":"sec",""" +
-      s""""cold_queries":${fmtMap(results)},""" +
+      s""""cold_queries":${fmtMap(results)},${failedJson(failed)}""" +
       s""""artifact_rebuild_sec":${builds.map(_._2).sum},""" +
       s""""artifact_rebuilds":${fmtMap(builds)},""" +
       s""""artifact_store":${graft.storage.ArtifactStore.enabled},""" +
@@ -151,6 +182,7 @@ object Bench {
       s"""${loadJson("load_after", loadAvg())},"sf":"$sfDir"}"""
     println(json)
     Files.writeString(Paths.get("cold_bench_result.json"), json)
+    failed
   }
 
   def main(args: Array[String]): Unit = {
@@ -172,8 +204,9 @@ object Bench {
     ArtifactLedger.reset()
     BenchKit.warmUp(spark, sfDir)
     if (cold) {
-      coldMain(spark, sfDir, loadBefore, idleGate)
+      val failed = coldMain(spark, sfDir, loadBefore, idleGate)
       spark.stop()
+      exitOnFailures(failed)
       return
     }
     // the stall-re-pass reference is a WARM-mode concern — loading it
@@ -184,19 +217,16 @@ object Bench {
     // BASELINE.md); Verify still runs the full surface
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(SparkEntry.correctnessOnly)
-    val first = names.map(n => n -> BenchKit.best(spark, n, sfDir))
+    val (first, failedFirst) = priceAll(names)(BenchKit.best(spark, _, sfDir))
     val suspects = first.collect {
       case (n, v) if v > 0 && ref.get(n).exists(r => r > 0 && v > StallFactor * r) => n
     }
-    val reRun = suspects.map(n => n -> BenchKit.best(spark, n, sfDir)).toMap
-    val results = first.map { case (n, v) =>
-      n -> (reRun.get(n) match {
-        case Some(r2) if r2 >= 0 => math.min(v, r2)
-        case _ => v
-      })
-    }
+    val (rePriced, failedRe) = priceAll(suspects)(BenchKit.best(spark, _, sfDir))
+    val reRun = rePriced.toMap
+    val failed = failedFirst ++ failedRe
+    val results = first.map { case (n, v) => n -> reRun.get(n).fold(v)(math.min(v, _)) }
     val qs = fmtMap(results)
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = results.map(_._2).sum
     val firstByName = first.toMap
     val repass = reRun.toSeq.sortBy(_._1).map { case (n, r2) =>
       "\"" + n + "\":{\"first\":" + firstByName(n) + ",\"re\":" + r2 + "}"
@@ -204,7 +234,7 @@ object Bench {
     val builds = ArtifactLedger.snapshot.toSeq.sortBy(_._1)
     val artifactTotal = builds.map(_._2).sum
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""repass":$repass,"repass_count":${reRun.size},""" +
+      s"""${failedJson(failed)}"repass":$repass,"repass_count":${reRun.size},""" +
       s""""artifact_builds":${fmtMap(builds)},""" +
       s""""artifact_total_sec":$artifactTotal,""" +
       s""""artifact_store":${graft.storage.ArtifactStore.enabled},""" +
@@ -214,5 +244,6 @@ object Bench {
     println(json)
     Files.writeString(Paths.get("bench_result.json"), json)
     spark.stop()
+    exitOnFailures(failed)
   }
 }

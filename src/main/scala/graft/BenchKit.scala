@@ -11,12 +11,13 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchKit {
 
-  /** One timed materialization of a named SparkEntry query; -1 on error. */
+  /** One timed materialization of a named SparkEntry query. A query
+    * that throws propagates: a failure is never a price.
+    */
   def runOnce(spark: SparkSession, name: String, sfDir: String): Double = {
     val t0 = System.nanoTime()
-    try SparkEntry.queries(name)(spark, sfDir)
+    SparkEntry.queries(name)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => return -1.0 }
     (System.nanoTime() - t0) / 1e9
   }
 
@@ -29,7 +30,7 @@ object BenchKit {
     val a = runOnce(spark, name, sfDir)
     System.gc()
     val b = runOnce(spark, name, sfDir)
-    if (a < 0 || b < 0) -1.0 else math.min(a, b)
+    math.min(a, b)
   }
 
   /** best() for an arbitrary DataFrame builder (diagnostic paths that
@@ -40,13 +41,12 @@ object BenchKit {
     def once: Double = {
       System.gc()
       val t0 = System.nanoTime()
-      try build().write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      build().write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
     val a = once
     val b = once
-    if (a < 0 || b < 0) -1.0 else math.min(a, b)
+    math.min(a, b)
   }
 
   /** Session warm-up (parquet footers, codegen, JVM) — not billed. */

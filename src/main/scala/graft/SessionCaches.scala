@@ -51,6 +51,7 @@ object SessionCaches {
     ext.Cleaning.clearSessionCaches(spark)
     ext.Corpus.clearSessionCaches(spark)
     ext.Dedup.clearSessionCaches(spark)
+    ext.Ingest.clearSessionCaches(spark)
     ext.TextAnalysis.clearSessionCaches(spark)
     ext.Similarity.clearSessionCaches(spark)
     ext.Clustering.clearSessionCaches(spark)

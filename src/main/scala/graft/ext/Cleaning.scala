@@ -279,18 +279,9 @@ object Cleaning {
   def gopherFilterSink(docStream: DataFrame, outPath: String, checkpoint: String,
                        triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(gopherFiltersDf(batch))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      gopherFiltersDf(batch)
+    }
 
   /** Cross-document duplicate-SPAN removal stats (ExactSubstr-style, at
     * token n-gram granularity): every position in every document opens a
@@ -544,22 +535,9 @@ object Cleaning {
     // full base-corpus span pass (and re-read the base files) on every
     // trigger instead of joining one static, precomputed table
     val frozen = Freeze.scoped(checkpoint, keeperSpans)
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // batch entry points keep their presentation orderBy; the sink
-          // strips it — an append-mode file sink does not preserve the
-          // ordering across batches, and each trigger would otherwise pay
-          // a range-partitioning sample job plus a full sort for it
-          org.apache.spark.sql.GraftSql.unordered(
-            spanDedupStatsAgainst(batch, frozen, n, maxDupFrac))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      spanDedupStatsAgainst(batch, frozen, n, maxDupFrac)
+    }
   }
 
   /** MOSS WINNOWING selection (Schleimer et al. 2003 §4): the selected
@@ -888,19 +866,9 @@ object Cleaning {
                          maxDupFrac: Double = 0.2, triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, keeperParagraphHashes(baseDocs))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            paragraphDedupStatsAgainst(batch, frozen, maxDupFrac))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      paragraphDedupStatsAgainst(batch, frozen, maxDupFrac)
+    }
   }
 
   /** Shared verdict tail: dup fraction + keep flag over a
@@ -1046,19 +1014,9 @@ object Cleaning {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val fps = Freeze.scoped(checkpoint, winnowKeeperFingerprints(baseDocs, n, w))
     val spans = Freeze.scoped(checkpoint, keeperSpanHashes(baseDocs, n))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            winnowSpanDedupStatsAgainst(batch, fps, spans, n, w, maxDupFrac))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      winnowSpanDedupStatsAgainst(batch, fps, spans, n, w, maxDupFrac)
+    }
   }
 
   // --------------------------------------- exact substring dedup (Lee et al.)
@@ -1497,19 +1455,9 @@ object Cleaning {
                           k: Int = SubstrK, triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, substringGramIndex(baseDocs, k))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            substringExciseAgainst(batch, frozen, k))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      substringExciseAgainst(batch, frozen, k)
+    }
   }
 
   // ----------------------------------------------- C4 line-level cleaning
@@ -1687,19 +1635,9 @@ object Cleaning {
                    triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, keeperCanonUrls(baseDocs))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            urlDedupAgainst(batch, frozen))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      urlDedupAgainst(batch, frozen)
+    }
   }
 
   private val c4PolicyPhrases = Seq(
@@ -1739,17 +1677,9 @@ object Cleaning {
   def c4CleanedSink(docStream: DataFrame, outPath: String, checkpoint: String,
                     triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          c4CleanedDocs(batch)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      c4CleanedDocs(batch)
+    }
 
   private def c4LineKeep(l: Column): Column = {
     val lw = lower(l)
@@ -2099,17 +2029,9 @@ object Cleaning {
                            triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, boilerplateDictDf(baseDocs))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          boilerplateCleanedAgainst(batch, frozen)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      boilerplateCleanedAgainst(batch, frozen)
+    }
   }
 
   /** Quasi-identifier width of the length bucket in

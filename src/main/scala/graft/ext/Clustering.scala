@@ -222,17 +222,9 @@ object Clustering {
                      outPath: String, checkpoint: String,
                      triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batchHistogram(batch, cents)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(vecStream, outPath, checkpoint, triggerMs) { batch =>
+      batchHistogram(batch, cents)
+    }
 
   /** Cell histogram of one (vec_id, embedding) frame under fixed
     * centroids — shared by [[assignmentSink]] and its batch-parity test.

@@ -698,22 +698,9 @@ object Corpus {
     val frozenPlan = Freeze.scoped(checkpoint,
       mixturePlanDf(baseDocs, budgetTokens)
         .select(col("source"), col("sample_rate")))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // batch entry points keep their presentation orderBy; the sink
-          // strips it — an append-mode file sink does not preserve the
-          // ordering across batches, and each trigger would otherwise pay
-          // a range-partitioning sample job plus a full sort for it
-          org.apache.spark.sql.GraftSql.unordered(
-            mixtureFilterAgainst(batch, frozenPlan))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      mixtureFilterAgainst(batch, frozenPlan)
+    }
   }
 
   /** Deterministic STRATIFIED sampling: the k documents per source with
@@ -923,19 +910,9 @@ object Corpus {
     // eval set instead of re-reading its source (same contract as
     // Cleaning.spanDedupSink / TextAnalysis.backoffScoreSink)
     val frozen = Freeze.scoped(checkpoint, evalDocs)
-    trainStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see mixtureFilterSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            decontaminationStatsAgainst(batch, frozen, n, maxBroadcastEvalBytes))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(trainStream, outPath, checkpoint, triggerMs) { batch =>
+      decontaminationStatsAgainst(batch, frozen, n, maxBroadcastEvalBytes)
+    }
   }
 
   /** Distinct shingle HASHES per doc in one kernel pass — shingle
@@ -1319,19 +1296,9 @@ object Corpus {
     def snapLn(total: Long): Long =
       math.floor(math.log(1.0 / (total + DsirBuckets)) * 1e6 + 0.5).toLong
     val oov = snapLn(tot.getLong(0)) - snapLn(tot.getLong(1))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see mixtureFilterSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            dsirScoreAgainst(batch, frozen, oov))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      dsirScoreAgainst(batch, frozen, oov)
+    }
   }
 
   // ------------------------------------------------- mixture EXECUTION
@@ -1753,10 +1720,14 @@ object Corpus {
         sum(when(col("keeper_id").isNotNull, col("n_tokens")).otherwise(0L))
           .as("owned_tokens"))
       // every doc has >= 1 chunk of >= 1 token, so the ratio is total
-      .withColumn("owned_frac",
-        floor(col("owned_tokens").cast("double") / col("n_tokens").cast("double")
-          * 1e6 + 0.5) / 1e6)
+      .withColumn("owned_frac", ownedFrac(col("owned_tokens"), col("n_tokens")))
       .orderBy(col("doc_id"))
+
+  /** The owned-token fraction, rounded to 6 dp — shared with
+    * [[Ingest.gateProbe]]'s `cdc_owned_frac`.
+    */
+  private[ext] def ownedFrac(ownedTokens: Column, nTokens: Column): Column =
+    floor(ownedTokens.cast("double") / nTokens.cast("double") * 1e6 + 0.5) / 1e6
 
   /** Registered composition: the snapshot/delta split at CDC-chunk
     * granularity (doc_id % 4 == 0 arrives, the rest is indexed).
@@ -1778,19 +1749,9 @@ object Corpus {
                    triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, keeperChunkFingerprints(baseDocs))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see Cleaning.spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            cdcContainmentAgainst(batch, frozen))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      cdcContainmentAgainst(batch, frozen)
+    }
   }
 
   /** CURRICULUM training order: stage the corpus easy→hard by quality
@@ -2025,19 +1986,9 @@ object Corpus {
         leakageSafeSplitsFromPairs(baseDocs,
           Dedup.minhashCandidatePairsOfIndex(frozenIndex), threshold))
         .select(col("doc_id"), col("split")))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see Cleaning.spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            splitAssignAgainst(batch, frozenIndex, frozenSplits, threshold))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      splitAssignAgainst(batch, frozenIndex, frozenSplits, threshold)
+    }
   }
 
   /** The corpus card: the one-pass per-source summary a data consumer

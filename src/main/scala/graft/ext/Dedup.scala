@@ -221,19 +221,9 @@ object Dedup {
                      triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, keeperContentHashes(baseDocs))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see Cleaning.spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            exactDedupAgainst(batch, frozen))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      exactDedupAgainst(batch, frozen)
+    }
   }
 
   // ------------------------------------------------------- MinHash + LSH
@@ -432,7 +422,12 @@ object Dedup {
     * null-tolerant.
     */
   def minhashSignaturesDf(docs: DataFrame, numHashes: Int = 32): DataFrame =
-    Tables.fanOut(docs) // signature kernel is CPU-bound; single-split scans would serialize it
+    // signature kernel is CPU-bound; single-split scans would serialize it
+    signaturesOf(Tables.fanOut(docs), numHashes)
+
+  /** The signature kernel over `docs` as partitioned. */
+  private def signaturesOf(docs: DataFrame, numHashes: Int): DataFrame =
+    docs
       .filter(col("text").isNotNull)
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
       .select(col("doc_id"), minhashSigUdf(numHashes)(col("toks")).as("sig"))
@@ -531,7 +526,17 @@ object Dedup {
     */
   def minhashBandIndex(docs: DataFrame, numHashes: Int = 32,
                        bands: Int = 8): DataFrame =
-    bandHashes(minhashSignaturesDf(docs, numHashes), bands, numHashes / bands)
+    minhashBandsOf(Tables.fanOut(docs), numHashes, bands)
+
+  /** [[minhashBandIndex]]'s rows without its [[Tables.fanOut]]: the
+    * banding of `docs` as partitioned, for an input that is already
+    * split the way the caller wants — a persisted micro-batch, where a
+    * round-robin repartition would cost a shuffle job per trigger to
+    * parallelize a kernel over a handful of documents.
+    */
+  private[ext] def minhashBandsOf(docs: DataFrame, numHashes: Int = 32,
+                                  bands: Int = 8): DataFrame =
+    bandHashes(signaturesOf(docs, numHashes), bands, numHashes / bands)
 
   /** Near-dup candidates of ARRIVING documents against a frozen base
     * index — the incremental form of [[minhashCandidatePairsUnordered]]:
@@ -581,17 +586,9 @@ object Dedup {
                        triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, minhashBandIndex(baseDocs, numHashes, bands))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          minhashNearDupsAgainst(batch, frozen, numHashes, bands)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      minhashNearDupsAgainst(batch, frozen, numHashes, bands)
+    }
   }
 
   /** The end-to-end clean-corpus materialization: exact dedup keep-list

@@ -115,18 +115,8 @@ object EntityResolution {
                      triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, targetIndexDf(target))
-    mentionStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (spanDedupSink note)
-          org.apache.spark.sql.GraftSql.unordered(
-            fuzzyJoinAgainstIndex(batch, frozen))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(mentionStream, outPath, checkpoint, triggerMs) { batch =>
+      fuzzyJoinAgainstIndex(batch, frozen)
+    }
   }
 }

@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.{DataFrame, GraftSql, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** One-shot materialization of a derived table a streaming sink scores
   * every micro-batch against. A lazy DataFrame passed into a
@@ -32,6 +33,24 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * and the string the releaser holds (the listener sees Spark's fully
   * qualified resolved checkpoint root) agree on one spelling — with
   * raw keys a differently-spelled release was a silent no-op.
+  *
+  * The sink runner: every micro-batch sink is [[sink]] over a
+  * per-batch function, so the per-trigger mechanics live in one place
+  * and cost a constant number of jobs whatever the function does:
+  *   - the micro-batch is persisted once, and the empty check runs on
+  *     the persisted frame, so the rows it reads land in the cache;
+  *     every branch of the function then reads the cache, not the
+  *     source; the batch is unpersisted in `finally`;
+  *   - the function's top-level presentation sort is stripped
+  *     ([[GraftSql.unordered]]): an append-mode file sink does not keep
+  *     row order across batches;
+  *   - `batch_id` comes from a one-row local frame joined on as a
+  *     cartesian product, never from `lit(batchId)`. A literal is
+  *     inlined into whole-stage generated code, so a new batch id would
+  *     compile new code every trigger; a local frame's rows are data,
+  *     and the cartesian join reads them inside the last stage without
+  *     a broadcast job;
+  *   - the result appends to `outPath` as parquet, `batch_id` last.
   */
 object Freeze {
   private val registry =
@@ -93,6 +112,46 @@ object Freeze {
     import scala.jdk.CollectionConverters._
     registry.keySet.asScala.toSet
   }
+
+  // ------------------------------------------------- the sink runner
+
+  /** The micro-batch sink runner (see the object scaladoc): `perBatch`
+    * maps the persisted, non-empty micro-batch to its output rows; the
+    * runner tags them with `batch_id` (LongType, non-nullable) and
+    * appends them to `outPath`.
+    */
+  def sink(stream: DataFrame, outPath: String, checkpoint: String, triggerMs: Long)
+          (perBatch: DataFrame => DataFrame): DataStreamWriter[Row] =
+    taggedSink(stream, outPath, checkpoint, triggerMs)(
+      (batch, tag) => GraftSql.unordered(perBatch(batch)).crossJoin(tag))
+
+  /** [[sink]] for a sink that places the one-row tag frame itself
+    * (`statsSink` puts it first and adds its timestamp to it).
+    */
+  private[graft] def taggedSink(stream: DataFrame, outPath: String,
+                                checkpoint: String, triggerMs: Long)
+                               (perBatch: (DataFrame, DataFrame) => DataFrame)
+      : DataStreamWriter[Row] =
+    stream.writeStream
+      .outputMode("append")
+      .trigger(Trigger.ProcessingTime(triggerMs))
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val cached = batch.persist()
+        try {
+          if (!cached.isEmpty)
+            perBatch(cached, batchTag(cached.sparkSession, batchId))
+              .write.mode("append").parquet(outPath)
+        } finally cached.unpersist()
+      }
+
+  /** The one-row `batch_id` frame, hinted to join as a cartesian
+    * product (see the object scaladoc).
+    */
+  private[graft] def batchTag(spark: SparkSession, batchId: Long): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(batchId)),
+        StructType(Seq(StructField("batch_id", LongType, nullable = false))))
+      .hint("shuffle_replicate_nl")
 
   // --------------------------------------------- automatic release
 

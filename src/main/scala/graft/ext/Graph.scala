@@ -727,19 +727,9 @@ object Graph {
     // the Freeze pin is eager (persist + count), so the rank state and
     // edge table behind the serve frame are dead the moment it returns
     backing.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (spanDedupSink note)
-          org.apache.spark.sql.GraftSql.unordered(
-            crawlPriorityAgainst(batch, frozen))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      crawlPriorityAgainst(batch, frozen)
+    }
   }
 
   /** One rank-recurrence iteration over the carried state — shared by
@@ -2437,8 +2427,11 @@ object Graph {
   }
 
   def clusteringCoefficientDf(docs: DataFrame): DataFrame = {
-    // the graphTransitivityDf pattern: udeg must be materialized before
-    // the und release — the returned frame reads it directly now
+    // udeg must be materialized before the und release, as in
+    // graphTransitivityDf — but unlike it (which collects its 1-row
+    // result and releases both), the returned per-node frame is lazy
+    // and reads udeg AND oe: EVERY call pins these two checkpoints
+    // (|V| + |E_und| rows) until the frame is garbage collected
     val (und, udeg0) = undirectedWithDegrees(docs)
     val udeg = udeg0.localCheckpoint()
     val oe = orientEdges(und, udeg).localCheckpoint()

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -13,26 +13,34 @@ import graft.Tables
   * the final `admitted` bit (no dup fired, CDC ownership under 50 %,
   * quality passed).
   *
-  * Why one gate instead of five sinks: the five artifacts freeze under
-  * ONE checkpoint scope (a single [[Freeze]] lifecycle — the listener
-  * releases them together when the stream stops), the batch reads the
-  * corpus ONCE per stage family, and the verdict matrix is what the
-  * operator actually wants — WHICH gate fired, not five disjoint
-  * outputs to re-join downstream. The production sequencing
-  * optimization (gate stage N+1 on stage N's survivors to save
-  * compute) is the [[Dedup.dedupCascade]] scaladoc's trade; the audit
-  * form computes all verdicts so the stage-overlap is measurable.
+  * Why one gate instead of five sinks: the four base artifacts fold
+  * into ONE presence index ([[gateIndex]]) frozen under one checkpoint
+  * scope (a single [[Freeze]] lifecycle — the listener releases it
+  * when the stream stops), and the verdict matrix is what the operator
+  * actually wants — WHICH gate fired, not five disjoint outputs to
+  * re-join downstream. The production sequencing optimization (gate
+  * stage N+1 on stage N's survivors to save compute) is the
+  * [[Dedup.dedupCascade]] scaladoc's trade; the audit form computes
+  * all verdicts so the stage-overlap is measurable.
   *
-  * Scale shape: each verdict is its Against operator unchanged — one
-  * keyed probe join per artifact, probe work proportional to the
-  * batch, never |batch| × |base| — and the matrix assembles through
-  * doc_id-keyed left joins on the BATCH side only.
+  * Scale shape: one probe ([[gateProbe]]) — the arrivals' keys of
+  * every kind in one union, ONE left join against the (kind, key)
+  * index, ONE doc_id-keyed aggregate. Probe work is proportional to
+  * the batch, never |batch| × |base|, and a micro-batch runs the same
+  * small number of jobs whatever the number of verdicts. The keys come
+  * from the Against operators' own expression builders
+  * ([[Cleaning.canonicalUrl]], [[Dedup.contentHash]], the MinHash
+  * banding, [[Corpus.cdcChunksDf]], [[TextAnalysis.qualityScoreCol]]),
+  * so the verdicts cannot drift from theirs — IngestSpec asserts them
+  * column-for-column against [[Dedup.dedupCascade]] and
+  * [[Corpus.cdcIncremental]].
   */
 object Ingest {
 
-  /** All five frozen-base artifacts of a static base corpus, built
+  /** The four frozen-base artifacts of a static base corpus, built
     * once: canonical-URL keepers, content-hash keepers, MinHash band
     * index, CDC chunk keepers. (The quality gate is stateless.)
+    * [[gateIndex]] folds them into the one index the gate probes.
     */
   private[ext] def artifacts(base: DataFrame)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
@@ -41,43 +49,79 @@ object Ingest {
       Dedup.minhashBandIndex(base),
       Corpus.keeperChunkFingerprints(base))
 
-  /** The per-arrival verdict matrix against pre-built artifacts; see
-    * the object scaladoc. Columns: doc_id, url_dup, exact_dup,
-    * near_dup, cdc_owned_frac, quality_pass, admitted.
+  /** A MinHash band as one string key. */
+  private def bandKey(band: Column, bandHash: Column): Column =
+    concat(band.cast("string"), lit(":"), bandHash.cast("string"))
+
+  /** The gate's one presence index: a distinct (kind, key) row for
+    * every canonical URL, content hash, band (band + band_hash) and CDC
+    * chunk md5 the base owns. The one distinct is one keyed exchange:
+    * the index comes out hash-partitioned on (kind, key), in the
+    * session's shuffle-partition count, so a probe that cannot
+    * broadcast it exchanges only the arrival side.
     */
-  def gateAgainst(arrivals: DataFrame,
-                  urlKeepers: DataFrame, contentKeepers: DataFrame,
-                  bandIndex: DataFrame, chunkKeepers: DataFrame): DataFrame = {
-    val urlV = Cleaning.urlDedupAgainst(Dedup.cascadeUrls(arrivals), urlKeepers)
-      .select(col("doc_id"), col("dup").as("url_dup"))
-    val exactV = Dedup.exactDedupAgainst(arrivals, contentKeepers)
-      .select(col("doc_id"), col("dup").as("exact_dup"))
-    val nearV = Dedup.minhashNearDupsAgainst(arrivals, bandIndex)
-      .select(col("id_new").as("doc_id")).distinct()
-      .withColumn("near_dup", lit(true))
-    val cdcV = org.apache.spark.sql.GraftSql.unordered(
-        Corpus.cdcContainmentAgainst(arrivals, chunkKeepers))
-      .select(col("doc_id"), col("owned_frac").as("cdc_owned_frac"))
-    val qV = arrivals.filter(length(col("text")) > 0)
-      .select(col("doc_id"),
-        (TextAnalysis.qualityScoreCol >= 0.5).as("quality_pass"))
-    arrivals.filter(col("text").isNotNull).select(col("doc_id"))
-      .join(urlV, Seq("doc_id"), "left")
-      .join(exactV, Seq("doc_id"), "left")
-      .join(nearV, Seq("doc_id"), "left")
-      .join(cdcV, Seq("doc_id"), "left")
-      .join(qV, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("url_dup"), lit(false)).as("url_dup"),
-        coalesce(col("exact_dup"), lit(false)).as("exact_dup"),
-        coalesce(col("near_dup"), lit(false)).as("near_dup"),
-        coalesce(col("cdc_owned_frac"), lit(0.0)).as("cdc_owned_frac"),
-        coalesce(col("quality_pass"), lit(false)).as("quality_pass"))
+  def gateIndex(urlKeepers: DataFrame, contentKeepers: DataFrame,
+                bandIndex: DataFrame, chunkKeepers: DataFrame): DataFrame =
+    urlKeepers.select(lit("url").as("kind"), col("canon_url").as("key"))
+      .union(contentKeepers.select(lit("content"), col("content_hash")))
+      .union(bandIndex.select(lit("band"), bandKey(col("band"), col("band_hash"))))
+      .union(chunkKeepers.select(lit("chunk"), col("chunk_md5")))
+      .distinct()
+
+  /** The per-arrival verdict matrix against a [[gateIndex]], unordered;
+    * see the object scaladoc. Every arrival with non-null text emits
+    * (doc_id, kind, key, n_tokens) rows — its canonical URL, content
+    * hash, 8 band keys, CDC chunks with their token weights, and a
+    * `quality` row when its model score passes — and one left join
+    * marks which keys the base owns. Columns: doc_id, url_dup,
+    * exact_dup, near_dup, cdc_owned_frac, quality_pass, admitted.
+    * The input is read as partitioned (no fan-out): a batch caller
+    * that wants the kernels spread over more cores fans out first.
+    */
+  def gateProbe(arrivals: DataFrame, index: DataFrame): DataFrame = {
+    def keys(kind: String, rows: DataFrame, key: Column,
+             nTokens: Column = lit(0L)): DataFrame =
+      rows.select(col("doc_id"), lit(kind).as("kind"), key.as("key"),
+        nTokens.as("n_tokens"))
+    val probe = Seq(
+      keys("url", Dedup.cascadeUrls(arrivals), Cleaning.canonicalUrl(col("url"))),
+      keys("content", arrivals.filter(col("text").isNotNull), Dedup.contentHash(col("text"))),
+      keys("band", Dedup.minhashBandsOf(arrivals),
+        bandKey(col("band"), col("band_hash"))),
+      keys("chunk", org.apache.spark.sql.GraftSql.unordered(Corpus.cdcChunksDf(arrivals)),
+        col("chunk_md5"), col("n_tokens")),
+      // the key never matches: the row's presence is the verdict
+      keys("quality", arrivals.filter(length(col("text")) > 0)
+        .filter(TextAnalysis.qualityScoreCol >= 0.5), lit(null).cast("string"))
+    ).reduce(_ union _)
+    val owned = col("owned")
+    def fired(kind: String): Column =
+      coalesce(max(col("kind") === kind && owned), lit(false))
+    val chunk = col("kind") === "chunk"
+    probe.join(index.withColumn("owned", lit(true)), Seq("kind", "key"), "left")
+      .groupBy(col("doc_id"))
+      .agg(
+        fired("url").as("url_dup"),
+        fired("content").as("exact_dup"),
+        fired("band").as("near_dup"),
+        // a doc without chunks (empty text) has a NULL token total
+        coalesce(Corpus.ownedFrac(
+          sum(when(chunk && owned, col("n_tokens")).otherwise(0L)),
+          sum(when(chunk, col("n_tokens")))), lit(0.0)).as("cdc_owned_frac"),
+        coalesce(max(col("kind") === "quality"), lit(false)).as("quality_pass"))
       .withColumn("admitted",
         !col("url_dup") && !col("exact_dup") && !col("near_dup") &&
           col("cdc_owned_frac") < 0.5 && col("quality_pass"))
-      .orderBy(col("doc_id"))
   }
+
+  /** The per-arrival verdict matrix against pre-built artifacts, in
+    * doc_id order: [[gateProbe]] over their [[gateIndex]].
+    */
+  def gateAgainst(arrivals: DataFrame,
+                  urlKeepers: DataFrame, contentKeepers: DataFrame,
+                  bandIndex: DataFrame, chunkKeepers: DataFrame): DataFrame =
+    gateProbe(arrivals, gateIndex(urlKeepers, contentKeepers, bandIndex, chunkKeepers))
+      .orderBy(col("doc_id"))
 
   /** Registered composition: the snapshot/delta split (doc_id % 4 == 0
     * arrives) through the full gate. The three dedup verdict columns
@@ -86,44 +130,49 @@ object Ingest {
     * column-for-column in IngestSpec.
     */
   def ingestGate(spark: SparkSession, d: String): DataFrame = {
-    // all four frozen-base artifacts ride the session pins (r20) —
-    // the batch audit pays only its arrival-side probes per run; the
-    // streaming sink keeps the self-building [[artifacts]] under its
-    // own Freeze lifecycle
+    // the arrivals fan out once, so every key kernel runs on all cores
     val arrivals = Tables.documents(spark, d).filter(col("doc_id") % 4 === 0)
-    gateAgainst(arrivals,
-      Dedup.sessionBaseUrlKeepers(spark, d),
-      Dedup.sessionBaseContentKeepers(spark, d),
-      Dedup.sessionBaseBandIndex(spark, d),
-      Corpus.sessionBaseChunkKeepers(spark, d))
+    gateProbe(Tables.fanOut(arrivals), sessionGateIndex(spark, d)).orderBy(col("doc_id"))
   }
 
-  /** Streaming form (foreachBatch stage): the four base artifacts
-    * freeze under the sink's checkpoint scope in one lifecycle; each
-    * micro-batch of arrivals appends its verdict matrix tagged with
-    * the batch id.
+  private val gateIndexCache = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), DataFrame]()
+
+  /** Cold-bench hook ([[graft.SessionCaches]]): drop this session's
+    * gate index, releasing its checkpoint RDD.
+    */
+  private[graft] def clearSessionCaches(spark: SparkSession): Unit =
+    graft.SessionCaches.dropSession(gateIndexCache, spark)(graft.SessionCaches.releaseFrame)
+
+  /** The session [[gateIndex]] of the %4 base slice, folded from the
+    * four session-pinned base artifacts (the [[Dedup.sessionBaseBandIndex]]
+    * family). Keyed-checkpointed on (kind, key), the probe's join key,
+    * so q_ingest_gate exchanges only its arrival keys; ArtifactStore-
+    * backed, sidecar-billed, cold-cleared. |distinct base keys| rows
+    * (about 10 per base doc) pinned per (session, dir).
+    */
+  private def sessionGateIndex(spark: SparkSession, d: String): DataFrame =
+    gateIndexCache.computeIfAbsent((spark, d), _ =>
+      graft.ArtifactLedger.timed("base_gate_index")(
+        org.apache.spark.sql.GraftSql.localCheckpointKeyedBy(
+          graft.storage.ArtifactStore.cachedFrame(spark, "base_gate_index", d)(
+            gateIndex(Dedup.sessionBaseUrlKeepers(spark, d),
+              Dedup.sessionBaseContentKeepers(spark, d),
+              Dedup.sessionBaseBandIndex(spark, d),
+              Corpus.sessionBaseChunkKeepers(spark, d))),
+          Seq("kind", "key"))))
+
+  /** Streaming form (foreachBatch stage, on [[Freeze.sink]]'s runner):
+    * the base's [[gateIndex]] freezes under the sink's checkpoint scope;
+    * each micro-batch of arrivals appends its verdict matrix tagged
+    * with the batch id.
     */
   def gateSink(docStream: DataFrame, baseDocs: DataFrame,
                outPath: String, checkpoint: String,
                triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val (u, c, b, k) = artifacts(baseDocs)
-    val fu = Freeze.scoped(checkpoint, u)
-    val fc = Freeze.scoped(checkpoint, c)
-    val fb = Freeze.scoped(checkpoint, b)
-    val fk = Freeze.scoped(checkpoint, k)
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see Cleaning.spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            gateAgainst(batch, fu, fc, fb, fk))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    val index = Freeze.scoped(checkpoint, gateIndex(u, c, b, k))
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs)(gateProbe(_, index))
   }
 }

@@ -107,7 +107,10 @@ object Search {
     * for the serving sinks (the inverted index, parameter-free).
     * Consumer: the registered [[queryExpansion]], whose feedback and
     * candidate-df legs need postings over data-derived term/doc sets
-    * that the probed [[sessionQlPostings]] cannot cover.
+    * that the probed [[sessionQlPostings]] cannot cover. |distinct
+    * (doc, term) pairs| rows pinned per (session, dir) — the whole
+    * inverted index, likely the largest session artifact, for that
+    * one consumer.
     */
   private[graft] def sessionPostingsIndex(spark: SparkSession, d: String): DataFrame =
     sessionFrames.computeIfAbsent((spark, d, "postings_index"), _ =>
@@ -425,17 +428,9 @@ object Search {
   def snippetSink(docStream: DataFrame, outPath: String, checkpoint: String,
                   triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          org.apache.spark.sql.GraftSql.unordered(searchSnippetsDf(batch))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      searchSnippetsDf(batch)
+    }
 
   /** The semantic probe: the registered query fuses the lexical
     * [[ProbeTerms]] ranking with the cosine ranking around this
@@ -668,19 +663,9 @@ object Search {
     val dfAll = Freeze.scoped(checkpoint, dfPlan)
     val stats = Freeze.scoped(checkpoint, statsPlan)
     val chunkStore = Freeze.scoped(checkpoint, storePlan)
-    queryStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          org.apache.spark.sql.GraftSql.unordered(
-            chunkBm25ScoreBatch(batch, chunkPost, dfAll, stats,
-              chunkStore, k))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(queryStream, outPath, checkpoint, triggerMs) { batch =>
+      chunkBm25ScoreBatch(batch, chunkPost, dfAll, stats, chunkStore, k)
+    }
   }
 
   /** The section sink's LAZY artifact plans (the lexicalServePlans
@@ -729,25 +714,16 @@ object Search {
     val dfAll = Freeze.scoped(checkpoint, dfPlan)
     val store = Freeze.scoped(checkpoint, storePlan)
     val stats = Freeze.scoped(checkpoint, statsPlan)
-    queryStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val scored = chunkBm25ScoreBatch(batch, post, dfAll, stats,
-            store.select(col("doc_id"), col("chunk_id"), col("ct")), k)
-          org.apache.spark.sql.GraftSql.unordered(
-            scored.join(store.select(col("doc_id"), col("chunk_id"),
-                col("heading_path")), Seq("doc_id", "chunk_id"))
-              .select(col("query_id"), col("rank"), col("doc_id"),
-                col("chunk_id").as("section_id"), col("heading_path"),
-                col("score_micro"),
-                col("n_chunks_hit").as("n_sections_hit"), col("snippet")))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(queryStream, outPath, checkpoint, triggerMs) { batch =>
+      val scored = chunkBm25ScoreBatch(batch, post, dfAll, stats,
+        store.select(col("doc_id"), col("chunk_id"), col("ct")), k)
+      scored.join(store.select(col("doc_id"), col("chunk_id"),
+          col("heading_path")), Seq("doc_id", "chunk_id"))
+        .select(col("query_id"), col("rank"), col("doc_id"),
+          col("chunk_id").as("section_id"), col("heading_path"),
+          col("score_micro"),
+          col("n_chunks_hit").as("n_sections_hit"), col("snippet"))
+    }
   }
 
   /** MAXSCORE / WAND BOUND TABLE (Turtle & Flood 1995; Broder et al.
@@ -1899,18 +1875,9 @@ object Search {
     val index = Freeze.scoped(checkpoint, indexPlan)
     val dfAll = Freeze.scoped(checkpoint, dfPlan)
     val stats = Freeze.scoped(checkpoint, statsPlan)
-    queryStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          org.apache.spark.sql.GraftSql.unordered(
-            queryExpansionScoreBatch(batch, index, dfAll, stats, m, topK))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(queryStream, outPath, checkpoint, triggerMs) { batch =>
+      queryExpansionScoreBatch(batch, index, dfAll, stats, m, topK)
+    }
   }
 
   /** Per-query form of [[rrfFuse]] over two (query_id, doc_id, *_rank)
@@ -2021,19 +1988,9 @@ object Search {
       emb.select(col("vec_id"), col("embedding"),
           Similarity.norm(col("embedding")).as("nrm"))
         .join(Clustering.cellAssignments(emb, cents), Seq("vec_id")))
-    queryStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          org.apache.spark.sql.GraftSql.unordered(
-            hybridScoreBatch(batch, index, dfAll, stats,
-              cellTable, cents, depth, k))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(queryStream, outPath, checkpoint, triggerMs) { batch =>
+      hybridScoreBatch(batch, index, dfAll, stats, cellTable, cents, depth, k)
+    }
   }
 
   /** Streaming retrieval serving: arriving queries (query_id, query
@@ -2053,37 +2010,29 @@ object Search {
     val index = Freeze.scoped(checkpoint, indexPlan)
     val dfAll = Freeze.scoped(checkpoint, dfPlan)
     val stats = Freeze.scoped(checkpoint, statsPlan)
-    queryStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val qt = batch
-            .select(col("query_id"),
-              explode(array_distinct(TextAnalysis.tokens(col("query_text"))))
-                .as("term"))
-          // stats ride the frozen 1-row frame as broadcast columns —
-          // IEEE-identical to the former collected scalars
-          val idf = log(lit(1.0) + (csNDocs - col("df_t") + lit(0.5)) /
-            (col("df_t") + lit(0.5)))
-          val norm = lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / csAvgdl)
-          val contrib = idf * col("tf") / (col("tf") + norm)
-          val scored = qt.join(index, Seq("term"))
-            .join(dfAll, Seq("term"))
-            .crossJoin(broadcast(stats))
-            .select(col("query_id"), col("doc_id"),
-              floor(contrib * lit(1e6) + lit(0.5)).cast("long").as("c"))
-            .groupBy(col("query_id"), col("doc_id"))
-            .agg(sum(col("c")).as("score_micro"), count(lit(1)).as("n_terms_hit"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("score_micro").desc, col("doc_id"))
-          scored.withColumn("rank", row_number().over(w).cast("long"))
-            .filter(col("rank") <= k)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(queryStream, outPath, checkpoint, triggerMs) { batch =>
+      val qt = batch
+        .select(col("query_id"),
+          explode(array_distinct(TextAnalysis.tokens(col("query_text"))))
+            .as("term"))
+      // stats ride the frozen 1-row frame as broadcast columns —
+      // IEEE-identical to the former collected scalars
+      val idf = log(lit(1.0) + (csNDocs - col("df_t") + lit(0.5)) /
+        (col("df_t") + lit(0.5)))
+      val norm = lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / csAvgdl)
+      val contrib = idf * col("tf") / (col("tf") + norm)
+      val scored = qt.join(index, Seq("term"))
+        .join(dfAll, Seq("term"))
+        .crossJoin(broadcast(stats))
+        .select(col("query_id"), col("doc_id"),
+          floor(contrib * lit(1e6) + lit(0.5)).cast("long").as("c"))
+        .groupBy(col("query_id"), col("doc_id"))
+        .agg(sum(col("c")).as("score_micro"), count(lit(1)).as("n_terms_hit"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("query_id"))
+        .orderBy(col("score_micro").desc, col("doc_id"))
+      scored.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k)
+    }
   }
 }

@@ -645,17 +645,9 @@ object Similarity {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = graft.ext.Freeze.scoped(checkpoint,
       domainCentroidsDf(labeledEmbeddings(baseDocs, baseEmb)))
-    arrivalStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          semanticOutliersAgainst(batch, frozen, threshold)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(arrivalStream, outPath, checkpoint, triggerMs) { batch =>
+      semanticOutliersAgainst(batch, frozen, threshold)
+    }
   }
 
   /** Cosine over two DOUBLE arrays via builtin higher-order folds —
@@ -2254,31 +2246,18 @@ object Similarity {
       .select(col("vec_id"),
         ivfCellUdf(cents)(col("embedding")).as("cell"),
         sqEncodeUdf(col("embedding")).getField("_2").as("codes")))
-    queryStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val queries = batch.filter(col("embedding").isNotNull)
-            .select(col("vec_id").as("query_id"),
-              sqEncodeUdf(col("embedding")).getField("_2").as("q_codes"),
-              explode(ivfProbeUdf(cents, math.min(nprobe, nlist))(col("embedding")))
-                .as("probe_cell"))
-          val scored = frozenIndex.as("c")
-            .join(broadcast(queries), col("probe_cell") === col("c.cell"))
-            .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-              round(sqCosineUdf(col("q_codes"), col("c.codes")), 6).as("cos_sim_sq"))
-          // batch entry points keep their presentation orderBy; the sink
-          // strips it — an append-mode file sink does not preserve the
-          // ordering across batches, and each trigger would otherwise pay
-          // a range-partitioning sample job plus a full sort for it
-          org.apache.spark.sql.GraftSql.unordered(
-            topKFinal(scored, "cos_sim_sq", k))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(queryStream, outPath, checkpoint, triggerMs) { batch =>
+      val queries = batch.filter(col("embedding").isNotNull)
+        .select(col("vec_id").as("query_id"),
+          sqEncodeUdf(col("embedding")).getField("_2").as("q_codes"),
+          explode(ivfProbeUdf(cents, math.min(nprobe, nlist))(col("embedding")))
+            .as("probe_cell"))
+      val scored = frozenIndex.as("c")
+        .join(broadcast(queries), col("probe_cell") === col("c.cell"))
+        .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
+          round(sqCosineUdf(col("q_codes"), col("c.codes")), 6).as("cos_sim_sq"))
+      topKFinal(scored, "cos_sim_sq", k)
+    }
   }
 
   /** Streaming SEMANTIC decontamination (foreachBatch stage) — the
@@ -2317,23 +2296,13 @@ object Similarity {
       .filter(col("vec_id") % 20 === 7)
       .select(col("vec_id").as("eval_id"), col("embedding").as("e_emb"),
         norm(col("embedding")).as("e_nrm")))
-    vecStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see annServeSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            semanticScoreAgainst(
-              batch.filter(col("embedding").isNotNull)
-                .select(col("vec_id"), col("embedding"),
-                  norm(col("embedding")).as("nrm")),
-              frozenEval, tau))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(vecStream, outPath, checkpoint, triggerMs) { batch =>
+      semanticScoreAgainst(
+        batch.filter(col("embedding").isNotNull)
+          .select(col("vec_id"), col("embedding"),
+            norm(col("embedding")).as("nrm")),
+        frozenEval, tau)
+    }
   }
 
   // -------------------------------------------------- graph-ANN serving
@@ -2585,23 +2554,13 @@ object Similarity {
                                   k: Int, beamWidth: Int, rounds: Int,
                                   triggerMs: Long)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queryStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val queries = batch.filter(col("embedding").isNotNull)
-            .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-              norm(col("embedding")).as("q_nrm"))
-          // per-batch presentation sort stripped (see annServeSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            graphAnnCore(emb, edges, queries, entry, k, beamWidth, rounds,
-              excludeSelf = false))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(queryStream, outPath, checkpoint, triggerMs) { batch =>
+      val queries = batch.filter(col("embedding").isNotNull)
+        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+          norm(col("embedding")).as("q_nrm"))
+      graphAnnCore(emb, edges, queries, entry, k, beamWidth, rounds,
+        excludeSelf = false)
+    }
 
   /** One-shot serve-mode parity reference for [[graphAnnServeSink]]
     * (external queries, no self-exclusion) — what the union of the

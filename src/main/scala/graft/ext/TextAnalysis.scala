@@ -447,18 +447,9 @@ object TextAnalysis {
   def textrankSink(docStream: DataFrame, outPath: String, checkpoint: String,
                    triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see spanDedupSink)
-          org.apache.spark.sql.GraftSql.unordered(textrankKeywordsDf(batch))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      textrankKeywordsDf(batch)
+    }
 
   /** Per-doc (n_bigrams, top_count, dup_count) over adjacent word
     * pairs in ONE kernel pass — a local hash map per document, so the
@@ -1053,17 +1044,9 @@ object TextAnalysis {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val ranks = graft.functions.BpeKernel.train(freqs, nMerges)
       .zipWithIndex.map { case (p, i) => p -> i }.toMap
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          bpeStatsWithRanks(batch, ranks)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      bpeStatsWithRanks(batch, ranks)
+    }
   }
 
   /** Streaming compression-ratio audit (foreachBatch stage): stateless
@@ -1075,17 +1058,9 @@ object TextAnalysis {
                       minRatio: Double = 0.30, maxRatio: Double = 0.95,
                       triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          compressionStatsDf(batch, minRatio, maxRatio)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      compressionStatsDf(batch, minRatio, maxRatio)
+    }
 
   /** zlib compression ratio per document — the COMPRESSIBILITY quality
     * signal modern corpus releases ship alongside the rule battery
@@ -2595,22 +2570,9 @@ object TextAnalysis {
     // the full base-corpus count/window pipeline (and re-reads the base
     // files, so the table would track live data instead of being static)
     val frozen = Freeze.scoped(checkpoint, scoreTable)
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // batch entry points keep their presentation orderBy; the sink
-          // strips it — an append-mode file sink does not preserve the
-          // ordering across batches, and each trigger would otherwise pay
-          // a range-partitioning sample job plus a full sort for it
-          org.apache.spark.sql.GraftSql.unordered(
-            backoffScoreAgainst(batch, frozen, alpha))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      backoffScoreAgainst(batch, frozen, alpha)
+    }
   }
 
   /** Score a batch of documents against a FROZEN smoothed score table
@@ -2668,19 +2630,9 @@ object TextAnalysis {
                         triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, scoreTable)
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch presentation sort stripped (see backoffScoreSink)
-          org.apache.spark.sql.GraftSql.unordered(
-            smoothedScoreAgainst(batch, frozen))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      smoothedScoreAgainst(batch, frozen)
+    }
   }
 
   /** ROC OPERATING POINTS for the quality model at the nine decile
@@ -2800,20 +2752,12 @@ object TextAnalysis {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val baseCalib = Freeze.scoped(checkpoint, calibrationOfHist(scoreHistogram(baseDocs), bins)
       .select(col("bin"), col("pos_rate").as("base_pos_rate")))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          calibrationOfHist(scoreHistogram(batch), bins)
-            .join(baseCalib, Seq("bin"), "left")
-            .withColumn("drift",
-              round(abs(col("pos_rate") - col("base_pos_rate")), 6))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      calibrationOfHist(scoreHistogram(batch), bins)
+        .join(baseCalib, Seq("bin"), "left")
+        .withColumn("drift",
+          round(abs(col("pos_rate") - col("base_pos_rate")), 6))
+    }
   }
 
   /** Streaming ROC monitor (foreachBatch stage): per micro-batch, the
@@ -2831,20 +2775,12 @@ object TextAnalysis {
     val baseRoc = Freeze.scoped(checkpoint, rocOfHist(scoreHistogram(baseDocs), spark)
       .select(col("threshold"), col("tpr").as("base_tpr"),
         col("fpr").as("base_fpr")))
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          rocOfHist(scoreHistogram(batch), spark)
-            .join(baseRoc, Seq("threshold"))
-            .withColumn("tpr_drift", round(abs(col("tpr") - col("base_tpr")), 6))
-            .withColumn("fpr_drift", round(abs(col("fpr") - col("base_fpr")), 6))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-        }
-      }
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
+      rocOfHist(scoreHistogram(batch), spark)
+        .join(baseRoc, Seq("threshold"))
+        .withColumn("tpr_drift", round(abs(col("tpr") - col("base_tpr")), 6))
+        .withColumn("fpr_drift", round(abs(col("fpr") - col("base_fpr")), 6))
+    }
   }
 
   /** Per-source bigram ENTROPY RATE: H(W₂|W₁) = −Σ p(w1,w2)·ln p(w2|w1)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
 /** Streaming analytics (SURVEY.md §2.11): the reference's foreachBatch
@@ -14,17 +14,31 @@ import org.apache.spark.sql.Row
   * (`spark/export_stats.py`). Here each micro-batch computes the same stats
   * in ONE aggregation pass and writes them to a structured sink — the stats
   * table is then queryable/joinable instead of being scraped.
+  *
+  * The stats row's tag columns, `batch_id` and `timestamp`, come first
+  * and come from the sink runner's one-row tag frame
+  * ([[graft.ext.Freeze.sink]]): both change every batch, and as
+  * literals in generated code they would compile new code per trigger.
   */
 object StreamingStats {
 
   /** Per-batch stats in one pass: total count, per-domain counts as a map,
     * and min/max/avg/total of content length — the union of the reference's
     * A1+A3+A4 (`consumer.py:47-76`) without its redundant double count
-    * (§2.12 defect 4).
+    * (§2.12 defect 4). Columns: batch_id, timestamp, total_documents,
+    * domains, size_stats.
     */
-  def batchStats(batch: DataFrame, batchId: Long): DataFrame = {
+  def batchStats(batch: DataFrame, batchId: Long): DataFrame =
+    tagged(batch, graft.ext.Freeze.batchTag(batch.sparkSession, batchId))
+
+  /** The stats row behind the one-row tag frame: the tag carries
+    * `batch_id` and `timestamp` (`current_timestamp()`, folded into
+    * the tag's local rows at optimization), so neither per-batch value
+    * is a literal in generated code.
+    */
+  private def tagged(batch: DataFrame, tag: DataFrame): DataFrame = {
     val withLen = batch.select(col("domain"), length(col("content")).cast("long").as("len"))
-    withLen
+    val stats = withLen
       .groupBy(col("domain"))
       .agg(count(lit(1)).as("cnt"), min(col("len")).as("mn"),
         max(col("len")).as("mx"), sum(col("len")).as("tot"))
@@ -36,8 +50,6 @@ object StreamingStats {
         sum(col("tot")).as("total_size")
       )
       .select(
-        lit(batchId).as("batch_id"),
-        current_timestamp().as("timestamp"),
         coalesce(col("total_documents"), lit(0L)).as("total_documents"),
         col("domains"),
         map(
@@ -47,23 +59,16 @@ object StreamingStats {
           lit("tổng"), col("total_size")
         ).as("size_stats")
       )
+    tag.select(col("batch_id"), current_timestamp().as("timestamp")).crossJoin(stats)
   }
 
-  /** foreachBatch stats runner (K2): empty batches short-circuit
-    * (reference `consumer.py:36-40`); stats append to a parquet path.
+  /** foreachBatch stats runner (K2) on [[graft.ext.Freeze.sink]]'s
+    * runner: empty batches short-circuit (reference
+    * `consumer.py:36-40`); stats append to a parquet path.
     */
   def statsSink(docs: DataFrame, statsPath: String, checkpoint: String,
                 triggerMs: Long = 10000L): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batchStats(batch, batchId)
-            .write.mode("append").parquet(statsPath)
-        }
-      }
+    graft.ext.Freeze.taggedSink(docs, statsPath, checkpoint, triggerMs)(tagged)
 
   /** Watermarked tumbling-window counts — the intent behind the reference's
     * unused `window` import (`consumer.py:5`; SURVEY §2.9). State is bounded

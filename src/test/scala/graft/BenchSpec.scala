@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * reordered key cannot silently truncate the price map — the r15
   * judge's fragile-coupling finding) and loud-on-empty (Bench warns
   * and records `ref_prices_loaded` so a disabled re-pass is visible
-  * in the ledger, never silent).
+  * in the ledger, never silent). And fail-loud pricing: a query that
+  * throws is recorded by name, never priced.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -34,5 +35,19 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.refPricesFrom("""{"metric":"total"}""").isEmpty)
     assert(Bench.refPricesFrom("""{"queries":{"q1":1.0""").isEmpty)
     assert(Bench.refPricesFrom("").isEmpty)
+  }
+
+  test("a query that throws is a named failure, never a price in the total") {
+    val (prices, failed) = Bench.priceAll(Seq("q_ok", "q_bad", "q_two")) {
+      case "q_bad" => throw new IllegalStateException("boom")
+      case n => n.length.toDouble
+    }
+    assert(prices == Seq("q_ok" -> 4.0, "q_two" -> 5.0))
+    assert(failed == Seq("q_bad" -> "boom"))
+  }
+
+  test("BenchKit.runOnce propagates a failing query instead of pricing it") {
+    // the registry rejects an unknown name before any session work
+    assertThrows[NoSuchElementException](BenchKit.runOnce(null, "q_no_such_query", "/nowhere"))
   }
 }

@@ -53,8 +53,8 @@ class IngestSpec extends SparkTestBase {
     val query = Ingest.gateSink(
       input.toDF().toDF("doc_id", "text", "source"), base, out, ckpt,
       triggerMs = 50L).start()
-    assert(spark.sparkContext.getPersistentRDDs.size == pinnedBefore + 4,
-      "all four artifacts must pin under the one sink scope")
+    assert(spark.sparkContext.getPersistentRDDs.size == pinnedBefore + 1,
+      "the four artifacts must pin as one gate index under the sink scope")
     try {
       input.addData(arrivals: _*)
       query.processAllAvailable()
@@ -77,8 +77,8 @@ class IngestSpec extends SparkTestBase {
     // the novel quality doc: no dup fired, admitted
     assert(byDoc(8L) == ((false, false, 0.0, true)),
       s"novel quality arrival must be admitted: ${byDoc(8L)}")
-    // ONE scope, one lifecycle: termination auto-releases all four
-    // artifacts together (async event — bounded wait for the drain)
+    // ONE scope, one lifecycle: termination auto-releases the gate
+    // index (async event — bounded wait for the drain)
     val deadline = System.currentTimeMillis + 20000
     while (spark.sparkContext.getPersistentRDDs.size != pinnedBefore &&
            System.currentTimeMillis < deadline) Thread.sleep(50)
