@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionArtifact, Tables}
+import graft.SessionArtifact.Pin
 import graft.functions.{WinnowExpression, WinnowKernel}
 
 /** Heuristic corpus-cleaning operators: the rule-based document filter
@@ -1065,26 +1066,21 @@ object Cleaning {
     * driver state, no skew trap (the aggregate combines partials;
     * a corpus-hot phrase contributes one build-side row).
     */
-  def substringDedup(spark: SparkSession, d: String, k: Int = SubstrK): DataFrame =
-    if (k == SubstrK)
-      // the registered-width span table is a session artifact: the
-      // excerpt columns derive from the pinned rows alone (n_tokens is
-      // span arithmetic; span_md5 is stored) — no anchor-chain pass
-      sessionSubstrSpans(spark, d)
-        .select(col("doc_id"), col("start_tok"), col("end_tok"),
-          (col("end_tok") - col("start_tok") + 1).as("n_tokens"), col("span_md5"))
-        .orderBy(col("doc_id"), col("start_tok"))
-    else substringDedupOn(
-      TextAnalysis.sessionTokens(spark, d).select(col("doc_id"), col("toks").as("t")), k)
+  def substringDedup(spark: SparkSession, d: String): DataFrame =
+    // the registered-width span table is a session artifact: the
+    // excerpt columns derive from the pinned rows alone (n_tokens is
+    // span arithmetic; span_md5 is stored) — no anchor-chain pass
+    sessionSubstrSpans(spark, d)
+      .select(col("doc_id"), col("start_tok"), col("end_tok"),
+        (col("end_tok") - col("start_tok") + 1).as("n_tokens"), col("span_md5"))
+      .orderBy(col("doc_id"), col("start_tok"))
 
   /** DataFrame form (docs must have doc_id + text). */
-  def substringDedupDf(docs: DataFrame, k: Int = SubstrK): DataFrame =
-    substringDedupOn(
-      Tables.fanOut(docs).filter(col("text").isNotNull)
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t")), k)
-
-  private def substringDedupOn(toksed: DataFrame, k: Int): DataFrame =
+  def substringDedupDf(docs: DataFrame, k: Int = SubstrK): DataFrame = {
+    val toksed = Tables.fanOut(docs).filter(col("text").isNotNull)
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
     spanExcerpts(toksed, substringSpans(toksed, k))
+  }
 
   /** The excerpt tail shared by the cross-document, incremental and
     * self-repeat span queries: join each span back to its document's
@@ -1227,11 +1223,6 @@ object Cleaning {
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t")), k)
       .select(col("h")).distinct()
 
-  private val substrSpanCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val substrBaseGramCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** The cross-document ExactSubstr span table (doc_id, start_tok,
     * end_tok, span_md5) at the registered anchor width [[SubstrK]] —
     * parameter-free given the corpus and rebuilt per run by BOTH
@@ -1242,14 +1233,12 @@ object Cleaning {
     * `artifact_builds` sidecar, ArtifactStore-backed, cold-cleared.
     * Span-count rows pinned (≪ corpus — only duplicated islands).
     */
-  private[ext] def sessionSubstrSpans(spark: SparkSession, d: String): DataFrame =
-    substrSpanCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("substr_spans")(
-        graft.storage.ArtifactStore.cachedFrame(spark, "substr_spans", d) {
-          val toksed = TextAnalysis.sessionTokens(spark, d)
-            .select(col("doc_id"), col("toks").as("t"))
-          spansWithMd5(toksed, SubstrK)
-        }.localCheckpoint()))
+  private[ext] val sessionSubstrSpans =
+    SessionArtifact.frame("substr_spans", Pin.Checkpoint) { (spark, d) =>
+      val toksed = TextAnalysis.sessionTokens(spark, d)
+        .select(col("doc_id"), col("toks").as("t"))
+      spansWithMd5(toksed, SubstrK)
+    }
 
   /** The frozen-base duplicated-gram index at the registered width —
     * the [[substringIncremental]] base side (doc_id % 4 != 0, the
@@ -1260,16 +1249,14 @@ object Cleaning {
     * (session, dir) — the largest pin of this family; noted in the
     * artifact ledger like the postings-index pin.
     */
-  private[ext] def sessionSubstrBaseGrams(spark: SparkSession, d: String): DataFrame =
-    substrBaseGramCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("substr_base_grams")(
-        graft.storage.ArtifactStore.cachedFrame(spark, "substr_base_grams", d)(
-          anchorStream(
-            TextAnalysis.sessionTokens(spark, d)
-              .filter(col("doc_id") % 4 =!= 0)
-              .select(col("doc_id"), col("toks").as("t")), SubstrK)
-            .select(col("h")).distinct())
-          .localCheckpoint()))
+  private[ext] val sessionSubstrBaseGrams =
+    SessionArtifact.frame("substr_base_grams", Pin.Checkpoint) { (spark, d) =>
+      anchorStream(
+        TextAnalysis.sessionTokens(spark, d)
+          .filter(col("doc_id") % 4 =!= 0)
+          .select(col("doc_id"), col("toks").as("t")), SubstrK)
+        .select(col("h")).distinct()
+    }
 
   /** Arriving documents' spans already present in a FROZEN base-corpus
     * gram index — the delta half of incremental exact-substring dedup:
@@ -1298,14 +1285,9 @@ object Cleaning {
     * the exactDedupIncremental split convention — and arrivals report
     * their base-duplicated spans against the frozen gram index.
     */
-  def substringIncremental(spark: SparkSession, d: String,
-                           k: Int = SubstrK): DataFrame = {
-    val docs = Tables.documents(spark, d)
-    val grams =
-      if (k == SubstrK) sessionSubstrBaseGrams(spark, d)
-      else substringGramIndex(docs.filter(col("doc_id") % 4 =!= 0), k)
-    substringDedupAgainst(docs.filter(col("doc_id") % 4 === 0), grams, k)
-  }
+  def substringIncremental(spark: SparkSession, d: String): DataFrame =
+    substringDedupAgainst(Tables.documents(spark, d).filter(col("doc_id") % 4 === 0),
+      sessionSubstrBaseGrams(spark, d), SubstrK)
 
   /** SPAN EXCISION — the output half of the Lee et al. ExactSubstr
     * pipeline ([[substringDedup]] is the cut list; this applies it):
@@ -1335,15 +1317,12 @@ object Cleaning {
     * length), anti-joins the token stream, and re-joins in order —
     * all doc-keyed.
     */
-  def substringExcised(spark: SparkSession, d: String, k: Int = SubstrK): DataFrame =
-    if (k == SubstrK)
-      // keeper election + excise tail over the PINNED span table — the
-      // anchor chain (the expensive half) bills to the sidecar once
-      excisedFromSpans(
-        TextAnalysis.sessionTokens(spark, d).select(col("doc_id"), col("toks").as("t")),
-        sessionSubstrSpans(spark, d))
-    else substringExcisedOn(
-      TextAnalysis.sessionTokens(spark, d).select(col("doc_id"), col("toks").as("t")), k)
+  def substringExcised(spark: SparkSession, d: String): DataFrame =
+    // keeper election + excise tail over the PINNED span table — the
+    // anchor chain (the expensive half) bills to the sidecar once
+    excisedFromSpans(
+      TextAnalysis.sessionTokens(spark, d).select(col("doc_id"), col("toks").as("t")),
+      sessionSubstrSpans(spark, d))
 
   /** DataFrame form (docs must have doc_id + text). */
   def substringExcisedDf(docs: DataFrame, k: Int = SubstrK): DataFrame =
@@ -1853,19 +1832,6 @@ object Cleaning {
     boilerplateFlaggedDf(docs).groupBy(col("source"))
       .agg(sort_array(collect_list(col("line"))).as("boiler_lines"))
 
-  private val boilerDictCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Cold-bench hook ([[graft.SessionCaches]]): drop this session's
-    * cleaning artifacts.
-    */
-  private[graft] def clearSessionCaches(spark: SparkSession): Unit = {
-    import graft.SessionCaches.{dropSession, releaseFrame}
-    dropSession(boilerDictCache, spark)(releaseFrame)
-    dropSession(substrSpanCache, spark)(releaseFrame)
-    dropSession(substrBaseGramCache, spark)(releaseFrame)
-  }
-
   /** The session boilerplate dictionary of the corpus' structured view
     * — parameter-free given (session, dir) and rebuilt per run by BOTH
     * registered consumers ([[boilerplateCleaned]],
@@ -1876,13 +1842,9 @@ object Cleaning {
     * (the [[boilerplateDictDf]] scaladoc's ≤ 20-lines-per-domain
     * argument), so the pin is broadcast-sized at any scale.
     */
-  private[ext] def sessionBoilerDict(spark: SparkSession, d: String): DataFrame =
-    boilerDictCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("boiler_dict")(
-        graft.storage.ArtifactStore.cachedFrame(spark, "boiler_dict", d)(
-          boilerplateDictDf(c4StructuredDocs(
-            Tables.fanOut(Tables.documents(spark, d)))))
-          .localCheckpoint()))
+  private[ext] val sessionBoilerDict = SessionArtifact.frame("boiler_dict", Pin.Checkpoint) {
+    (spark, d) => boilerplateDictDf(c4StructuredDocs(Tables.fanOut(Tables.documents(spark, d))))
+  }
 
   /** The REWRITE form: every document with its domain's boilerplate
     * lines removed (kept lines reassembled in order; empty lines and

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionArtifact, Tables}
 
 /** Distributed k-means over the embedding column — the corpus-clustering
   * step a training-data pipeline runs for curation at scale (cluster
@@ -117,27 +117,19 @@ object Clustering {
     * divisions back to embedding units, 6-dp snapped — fully
     * oracle-replayed.
     */
-  /** Session-scoped cache of the (dataset, k, iters) Lloyd fit — the
-    * [[Similarity.knnGraph]] cache discipline one level down:
-    * q_kmeans and q_cluster_prune consume the identical deterministic
+  /** The session (dataset, k, iters) Lloyd fit — the
+    * [[Similarity.knnGraph]] pin discipline one level down: q_kmeans
+    * and q_cluster_prune consume the identical deterministic
     * centroids, so fitting twice per session buys nothing. k·dim longs
-    * per entry; a hit is bit-identical to a refit.
+    * per entry, driver-held; a hit is bit-identical to a refit.
     */
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int, Int),
-      Array[Array[Long]]]()
-
-  /** Cold-bench hook ([[graft.SessionCaches]]): drop this session's
-    * Lloyd fits (driver-held arrays — nothing to release).
-    */
-  private[graft] def clearSessionCaches(spark: SparkSession): Unit =
-    graft.SessionCaches.dropSession(fitCache, spark)(_ => ())
+  private val fits = SessionArtifact.value[(Int, Int), Array[Array[Long]]]("kmeans_fit") {
+    case (spark, d, (k, iters)) => kmeansCentroids(Tables.embeddings(spark, d), k, iters)
+  }
 
   private[ext] def fittedCentroids(spark: SparkSession, d: String,
                                    k: Int, iters: Int = KmeansIters): Array[Array[Long]] =
-    fitCache.computeIfAbsent((spark, d, k, iters),
-      _ => graft.ArtifactLedger.timed("kmeans_fit")(
-        kmeansCentroids(Tables.embeddings(spark, d), k, iters)))
+    fits(spark, d, (k, iters))
 
   def kmeansStats(spark: SparkSession, d: String,
                   k: Int = KmeansK, iters: Int = KmeansIters): DataFrame = {

@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionArtifact, Tables}
+import graft.SessionArtifact.Pin
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -44,24 +45,6 @@ object Dedup {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .orderBy(col("keep_id"))
 
-  private val baseBandCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val baseHashCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val baseUrlCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Cold-bench hook ([[graft.SessionCaches]]): drop this session's
-    * frozen-base dedup artifacts, releasing their checkpoint RDDs.
-    */
-  private[graft] def clearSessionCaches(spark: SparkSession): Unit = {
-    import graft.SessionCaches.{dropSession, releaseFrame}
-    dropSession(baseBandCache, spark)(releaseFrame)
-    dropSession(baseHashCache, spark)(releaseFrame)
-    dropSession(baseUrlCache, spark)(releaseFrame)
-    dropSession(clustersCache, spark)(releaseFrame)
-  }
-
   /** The %4 snapshot/delta split's BASE slice — the corpus every
     * incremental/gate/split-inheritance query indexes against.
     */
@@ -80,38 +63,27 @@ object Dedup {
     * prices the true rebuild. 8 rows per base doc pinned per
     * (session, dir).
     */
-  private[ext] def sessionBaseBandIndex(spark: SparkSession, d: String): DataFrame =
-    baseBandCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("base_band_index")(
-        org.apache.spark.sql.GraftSql.localCheckpointKeyedBy(
-          graft.storage.ArtifactStore.cachedFrame(spark, "base_band_index", d)(
-            minhashBandIndex(baseSlice(spark, d))),
-          Seq("band", "band_hash"))))
+  private[ext] val sessionBaseBandIndex =
+    SessionArtifact.frame("base_band_index", Pin.KeyedBy("band", "band_hash")) {
+      (spark, d) => minhashBandIndex(baseSlice(spark, d))
+    }
 
   /** The session content-hash keeper set of the base slice (same
     * amortization: q_exact_dedup_incremental, q_dedup_cascade,
     * q_ingest_gate). Keyed on content_hash, the probe join key.
     */
-  private[ext] def sessionBaseContentKeepers(spark: SparkSession, d: String): DataFrame =
-    baseHashCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("base_content_keepers")(
-        org.apache.spark.sql.GraftSql.localCheckpointKeyedBy(
-          graft.storage.ArtifactStore.cachedFrame(
-            spark, "base_content_keepers", d)(
-            keeperContentHashes(baseSlice(spark, d))),
-          Seq("content_hash"))))
+  private[ext] val sessionBaseContentKeepers =
+    SessionArtifact.frame("base_content_keepers", Pin.KeyedBy("content_hash")) {
+      (spark, d) => keeperContentHashes(baseSlice(spark, d))
+    }
 
   /** The session canonical-URL keeper set of the base slice's cascade
     * URL view (q_dedup_cascade, q_ingest_gate). Keyed on canon_url.
     */
-  private[ext] def sessionBaseUrlKeepers(spark: SparkSession, d: String): DataFrame =
-    baseUrlCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("base_url_keepers")(
-        org.apache.spark.sql.GraftSql.localCheckpointKeyedBy(
-          graft.storage.ArtifactStore.cachedFrame(
-            spark, "base_url_keepers", d)(
-            Cleaning.keeperCanonUrls(cascadeUrls(baseSlice(spark, d)))),
-          Seq("canon_url"))))
+  private[ext] val sessionBaseUrlKeepers =
+    SessionArtifact.frame("base_url_keepers", Pin.KeyedBy("canon_url")) {
+      (spark, d) => Cleaning.keeperCanonUrls(cascadeUrls(baseSlice(spark, d)))
+    }
 
   /** Content-hash keeper set of a static base corpus — the frozen side
     * of [[exactDedupSink]]: one (content_hash, keeper_id) row per
@@ -720,18 +692,8 @@ object Dedup {
     * Jaccard threshold → clusters → (doc_id, canonical_id) where
     * doc_id != canonical_id marks a document to drop.
     */
-  def nearDupKeepList(spark: SparkSession, d: String,
-                      threshold: Double = NearDupThreshold): DataFrame =
-    if (threshold == NearDupThreshold)
-      sessionNearDupClusters(spark, d).orderBy(col("doc_id"))
-    else
-      dedupClusters(
-        minhashCandidatePairsUnordered(Tables.documents(spark, d))
-          .filter(col("est_jaccard") >= threshold))
-        .orderBy(col("doc_id"))
-
-  private val clustersCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  def nearDupKeepList(spark: SparkSession, d: String): DataFrame =
+    sessionNearDupClusters(spark, d).orderBy(col("doc_id"))
 
   /** The session full-corpus near-dup cluster table at the registered
     * threshold — the LSH candidate pairs + label-propagation election,
@@ -741,14 +703,12 @@ object Dedup {
     * ArtifactStore-backed, sidecar-billed, cold-cleared; implicated
     * rows only (≤ |corpus|) pinned per (session, dir).
     */
-  private[ext] def sessionNearDupClusters(spark: SparkSession, d: String): DataFrame =
-    clustersCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("neardup_clusters")(
-        graft.storage.ArtifactStore.cachedFrame(spark, "neardup_clusters", d)(
-          dedupClusters(
-            minhashCandidatePairsUnordered(Tables.documents(spark, d))
-              .filter(col("est_jaccard") >= NearDupThreshold)))
-          .localCheckpoint()))
+  private[ext] val sessionNearDupClusters =
+    SessionArtifact.frame("neardup_clusters", Pin.Checkpoint) { (spark, d) =>
+      dedupClusters(
+        minhashCandidatePairsUnordered(Tables.documents(spark, d))
+          .filter(col("est_jaccard") >= NearDupThreshold))
+    }
 
   /** Near-dup cluster SIZE DISTRIBUTION: how duplication mass is
     * shaped — many pairs, or a few template storms? (cluster_size,
@@ -766,14 +726,8 @@ object Dedup {
     * cluster-table-sized, nothing corpus-sized beyond candidate
     * generation itself.
     */
-  def clusterSizes(spark: SparkSession, d: String,
-                   threshold: Double = NearDupThreshold): DataFrame =
-    if (threshold == NearDupThreshold)
-      clusterSizesDf(sessionNearDupClusters(spark, d))
-    else
-      clusterSizesDf(dedupClusters(
-        minhashCandidatePairsUnordered(Tables.documents(spark, d))
-          .filter(col("est_jaccard") >= threshold)))
+  def clusterSizes(spark: SparkSession, d: String): DataFrame =
+    clusterSizesDf(sessionNearDupClusters(spark, d))
 
   /** DataFrame form: `clusters` must carry (doc_id, canonical_id). */
   def clusterSizesDf(clusters: DataFrame): DataFrame =
@@ -804,17 +758,8 @@ object Dedup {
     * small, and no join-back re-references the membership (the
     * paragraph-dedup diamond lesson).
     */
-  def nearDupQualityKeepers(spark: SparkSession, d: String,
-                            threshold: Double = NearDupThreshold): DataFrame = {
-    val docs = Tables.documents(spark, d)
-    if (threshold == NearDupThreshold)
-      nearDupQualityKeepersDf(sessionNearDupClusters(spark, d), docs)
-    else
-      nearDupQualityKeepersDf(
-        dedupClusters(minhashCandidatePairsUnordered(docs)
-          .filter(col("est_jaccard") >= threshold)),
-        docs)
-  }
+  def nearDupQualityKeepers(spark: SparkSession, d: String): DataFrame =
+    nearDupQualityKeepersDf(sessionNearDupClusters(spark, d), Tables.documents(spark, d))
 
   /** DataFrame form: `clusters` must carry (doc_id, canonical_id) —
     * [[dedupClusters]] output — and `docs` (doc_id, text) for quality.

@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionArtifact, Tables}
+import graft.SessionArtifact.Pin
 
 /** The STREAMING INGEST GATE: every frozen-base admission artifact this
   * library builds, composed into ONE verdict row per arriving document
@@ -135,15 +136,6 @@ object Ingest {
     gateProbe(Tables.fanOut(arrivals), sessionGateIndex(spark, d)).orderBy(col("doc_id"))
   }
 
-  private val gateIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Cold-bench hook ([[graft.SessionCaches]]): drop this session's
-    * gate index, releasing its checkpoint RDD.
-    */
-  private[graft] def clearSessionCaches(spark: SparkSession): Unit =
-    graft.SessionCaches.dropSession(gateIndexCache, spark)(graft.SessionCaches.releaseFrame)
-
   /** The session [[gateIndex]] of the %4 base slice, folded from the
     * four session-pinned base artifacts (the [[Dedup.sessionBaseBandIndex]]
     * family). Keyed-checkpointed on (kind, key), the probe's join key,
@@ -151,16 +143,13 @@ object Ingest {
     * backed, sidecar-billed, cold-cleared. |distinct base keys| rows
     * (about 10 per base doc) pinned per (session, dir).
     */
-  private def sessionGateIndex(spark: SparkSession, d: String): DataFrame =
-    gateIndexCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("base_gate_index")(
-        org.apache.spark.sql.GraftSql.localCheckpointKeyedBy(
-          graft.storage.ArtifactStore.cachedFrame(spark, "base_gate_index", d)(
-            gateIndex(Dedup.sessionBaseUrlKeepers(spark, d),
-              Dedup.sessionBaseContentKeepers(spark, d),
-              Dedup.sessionBaseBandIndex(spark, d),
-              Corpus.sessionBaseChunkKeepers(spark, d))),
-          Seq("kind", "key"))))
+  private val sessionGateIndex =
+    SessionArtifact.frame("base_gate_index", Pin.KeyedBy("kind", "key")) { (spark, d) =>
+      gateIndex(Dedup.sessionBaseUrlKeepers(spark, d),
+        Dedup.sessionBaseContentKeepers(spark, d),
+        Dedup.sessionBaseBandIndex(spark, d),
+        Corpus.sessionBaseChunkKeepers(spark, d))
+    }
 
   /** Streaming form (foreachBatch stage, on [[Freeze.sink]]'s runner):
     * the base's [[gateIndex]] freezes under the sink's checkpoint scope;

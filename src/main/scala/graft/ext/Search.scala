@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionArtifact, Tables}
+import graft.SessionArtifact.Pin
 
 /** Full-text retrieval over the corpus: an inverted-index shape
   * (term-keyed postings with term frequencies and document lengths)
@@ -33,54 +34,36 @@ object Search {
     */
   private[graft] val ProbeTerms = Seq("hash", "join", "scan", "window", "merge")
 
-  /** SESSION-SHARED retrieval artifacts, keyed (session, dir, name) —
-    * the [[graft.ext.Graph]] edge-checkpoint discipline applied to the
-    * probed-postings family: one persisted BM25 contribution frame and
-    * one (term, block) block-max bound table per session instead of a
-    * fresh `.persist()` per builder call (the r15 advisor's pin-leak
-    * finding: every bench/verify invocation pinned a new block-manager
-    * entry for the session lifetime). Cache-miss bodies materialize
-    * (persist + count) inside [[graft.ArtifactLedger]].timed, so the
-    * one-time build is sidecar-priced; cached frames are READ-ONLY —
-    * consumers never unpersist them. The registered (spark, dir) query
-    * forms ride these; the DataFrame (fixture) forms stay fully lazy
-    * and build their own per-call frames, keeping the zero-jobs
-    * listener test and planted-fixture tests untouched.
+  /** SESSION-SHARED retrieval artifacts — the [[graft.ext.Graph]]
+    * edge-checkpoint discipline applied to the probed-postings family:
+    * one persisted BM25 contribution frame and one (term, block)
+    * block-max bound table per session instead of a fresh `.persist()`
+    * per builder call (the r15 advisor's pin-leak finding: every
+    * bench/verify invocation pinned a new block-manager entry for the
+    * session lifetime). Each materializes (persist + count) inside its
+    * ledger-timed build, so the one-time build is sidecar-priced;
+    * cached frames are READ-ONLY — consumers never unpersist them. The
+    * registered (spark, dir) query forms ride these; the DataFrame
+    * (fixture) forms stay fully lazy and build their own per-call
+    * frames, keeping the zero-jobs listener test and planted-fixture
+    * tests untouched.
+    *
+    * The contribution frame is the session [[bm25ContribAll]] frame
+    * over the probe postings — shared by the registered bound-table,
+    * MaxScore and block-max evaluators (one tokenize + snap per
+    * session, not per call).
     */
-  private val sessionFrames =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** The session [[bm25ContribAll]] frame over the probe postings —
-    * shared by the registered bound-table, MaxScore and block-max
-    * evaluators (one tokenize + snap per session, not per call).
-    */
-  private[graft] def sessionContrib(spark: SparkSession, d: String): DataFrame =
-    sessionFrames.computeIfAbsent((spark, d, "bm25_contrib"), _ =>
-      graft.ArtifactLedger.timed("bm25_contrib") {
-        val ca = graft.storage.ArtifactStore.cachedFrame(spark, "bm25_contrib", d)(
-          bm25ContribAll(Tables.fanOut(Tables.documents(spark, d)))).persist()
-        ca.count()
-        ca
-      })
+  private[graft] val sessionContrib = SessionArtifact.frame("bm25_contrib", Pin.Persist) {
+    (spark, d) => bm25ContribAll(Tables.fanOut(Tables.documents(spark, d)))
+  }
 
   /** The session (term, block, n_docs, bmax_micro) block-max table —
     * THE shared skip metadata (the r15 judge's "computed twice"
     * finding): [[bm25BlockMaxBounds]] reads it whole and
     * [[bm25BlockMaxTopK]] bounds candidates with it, one build total.
     */
-  private[graft] def sessionBlockMax(spark: SparkSession, d: String): DataFrame = {
-    // resolve the contribution artifact BEFORE computeIfAbsent: a
-    // nested insertion into the same ConcurrentHashMap is a recursive
-    // update (IllegalStateException) when the block-max consumer runs
-    // first in a cold session
-    val ca = sessionContrib(spark, d)
-    sessionFrames.computeIfAbsent((spark, d, "blockmax_bounds"), _ =>
-      graft.ArtifactLedger.timed("blockmax_bounds") {
-        val bm = graft.storage.ArtifactStore.cachedFrame(spark, "blockmax_bounds", d)(
-          blockMaxTable(ca)).persist()
-        bm.count()
-        bm
-      })
+  private[graft] val sessionBlockMax = SessionArtifact.frame("blockmax_bounds", Pin.Persist) {
+    (spark, d) => blockMaxTable(sessionContrib(spark, d))
   }
 
   /** The session SECTION-CHUNKS frame over the synthesized-markdown
@@ -92,15 +75,9 @@ object Search {
     * granularity). The DataFrame (fixture) forms stay fully lazy and
     * split their own inputs.
     */
-  private[graft] def sessionSections(spark: SparkSession, d: String): DataFrame =
-    sessionFrames.computeIfAbsent((spark, d, "section_chunks"), _ =>
-      graft.ArtifactLedger.timed("section_chunks") {
-        val s = graft.storage.ArtifactStore.cachedFrame(spark, "section_chunks", d)(
-          sectionChunksDf(sectionMdFrame(
-            Tables.fanOut(Tables.documents(spark, d))))).persist()
-        s.count()
-        s
-      })
+  private[graft] val sessionSections = SessionArtifact.frame("section_chunks", Pin.Persist) {
+    (spark, d) => sectionChunksDf(sectionMdFrame(Tables.fanOut(Tables.documents(spark, d))))
+  }
 
   /** The session FULL postings index (doc_id, term, tf, dl) — the
     * batch pin of exactly the artifact [[lexicalServePlans]] freezes
@@ -112,23 +89,9 @@ object Search {
     * inverted index, likely the largest session artifact, for that
     * one consumer.
     */
-  private[graft] def sessionPostingsIndex(spark: SparkSession, d: String): DataFrame =
-    sessionFrames.computeIfAbsent((spark, d, "postings_index"), _ =>
-      graft.ArtifactLedger.timed("postings_index") {
-        val p = graft.storage.ArtifactStore.cachedFrame(spark, "postings_index", d)(
-          postingsDf(Tables.fanOut(Tables.documents(spark, d)))).persist()
-        p.count()
-        p
-      })
-
-  /** Test/cold-bench hook: drop this session's cached retrieval frames
-    * (releasing their pins), so a cold-path measurement pays the
-    * builds — delegates to the shared eviction path like every other
-    * module (r16 review's duplication finding).
-    */
-  private[graft] def clearSessionFrames(spark: SparkSession): Unit =
-    graft.SessionCaches.dropSession(sessionFrames, spark)(
-      graft.SessionCaches.releaseFrame)
+  private[graft] val sessionPostingsIndex = SessionArtifact.frame("postings_index", Pin.Persist) {
+    (spark, d) => postingsDf(Tables.fanOut(Tables.documents(spark, d)))
+  }
 
   /** BM25 shape parameters (the standard defaults). */
   private[graft] val K1 = 1.2
@@ -283,14 +246,9 @@ object Search {
     * the registered QL re-ran a full corpus tokenize+sum per
     * execution for one row (the r16 review's unpinned-scan finding).
     */
-  private[graft] def sessionCorpusStats(spark: SparkSession, d: String): DataFrame =
-    sessionFrames.computeIfAbsent((spark, d, "ql_stats"), _ =>
-      graft.ArtifactLedger.timed("ql_stats") {
-        val st = graft.storage.ArtifactStore.cachedFrame(spark, "ql_stats", d)(
-          corpusStatsDf(Tables.fanOut(Tables.documents(spark, d)))).persist()
-        st.count()
-        st
-      })
+  private[graft] val sessionCorpusStats = SessionArtifact.frame("ql_stats", Pin.Persist) {
+    (spark, d) => corpusStatsDf(Tables.fanOut(Tables.documents(spark, d)))
+  }
 
   def queryLikelihoodTopKDf(docs: DataFrame, k: Int = 10): DataFrame =
     queryLikelihoodTopKOn(postingsDf(docs, Some(ProbeTerms)),
@@ -301,15 +259,9 @@ object Search {
     * candidate distinct, tf lookup) read one pinned copy instead of a
     * fresh per-call `.persist()` (the r15 advisor's pin-leak finding).
     */
-  private[graft] def sessionQlPostings(spark: SparkSession, d: String): DataFrame =
-    sessionFrames.computeIfAbsent((spark, d, "ql_postings"), _ =>
-      graft.ArtifactLedger.timed("ql_postings") {
-        val p = graft.storage.ArtifactStore.cachedFrame(spark, "ql_postings", d)(
-          postingsDf(Tables.fanOut(Tables.documents(spark, d)),
-            Some(ProbeTerms))).persist()
-        p.count()
-        p
-      })
+  private[graft] val sessionQlPostings = SessionArtifact.frame("ql_postings", Pin.Persist) {
+    (spark, d) => postingsDf(Tables.fanOut(Tables.documents(spark, d)), Some(ProbeTerms))
+  }
 
   /** The QL chain over an explicit postings frame: the registered form
     * passes the pinned session artifact; the DataFrame (fixture) form

@@ -3,7 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionArtifact, Tables}
+import graft.SessionArtifact.Pin
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -1096,14 +1097,37 @@ object Similarity {
                 m: Int = PqM, kSub: Int = PqKSub): DataFrame =
     ivfPqTopKInt(spark, d, nQueries, k, nlist, nprobe, m, kSub)
 
-  /** Session cache of the registered-parameter integer codebook fits,
-    * keyed (session, dir, variant) — the [[Clustering]] fitCache
-    * discipline: the fit is deterministic, so a hit is bit-identical
-    * to a refit; non-default parameters key separately.
+  /** The session integer codebook fits of the registered (session,
+    * dir) wrappers — the [[Clustering.fittedCentroids]] discipline: the
+    * fit is deterministic, so a hit is bit-identical to a refit;
+    * non-default parameters key separately. Two variants bill the one
+    * `pq_codebooks` ledger name: the residual fit of [[ivfPqTopKInt]],
+    * keyed (nlist, m, kSub), over the residuals of the
+    * [[Clustering.fittedCentroids]] coarse cells…
     */
-  private val pqIntFitCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      Array[Array[Array[Long]]]]()
+  private val residPqCodebooks = SessionArtifact.value[(Int, Int, Int),
+      Array[Array[Array[Long]]]]("pq_codebooks") { case (spark, d, (nlist, m, kSub)) =>
+    trainPqCodebooksInt(residualVecs(spark, d, nlist).select(col("vec_id"), col("rv")), m, kSub)
+  }
+
+  /** …and the raw-vector fit of [[semanticDedupPqDropList]], keyed
+    * (m, kSub).
+    */
+  private val rawPqCodebooks = SessionArtifact.value[(Int, Int),
+      Array[Array[Array[Long]]]]("pq_codebooks") { case (spark, d, (m, kSub)) =>
+    trainPqCodebooksInt(snappedVecs(Tables.embeddings(spark, d)
+      .filter(col("embedding").isNotNull)), m, kSub)
+  }
+
+  /** (vec_id, cell, rv): every embedded vector's integer residual
+    * against the session coarse fit at `nlist` cells.
+    */
+  private def residualVecs(spark: SparkSession, d: String, nlist: Int): DataFrame = {
+    val cents = Clustering.fittedCentroids(spark, d, nlist)
+    Tables.embeddings(spark, d).filter(col("embedding").isNotNull)
+      .select(col("vec_id"), residIntUdf(cents)(col("embedding")).as("cr"))
+      .select(col("vec_id"), col("cr._1").as("cell"), col("cr._2").as("rv"))
+  }
 
   /** INTEGER-EXACT residual IVF-PQ (the registered q_ivf_pq_topk):
     * the [[ivfPqTopKDf]] topology — coarse cells route probes, codes
@@ -1142,13 +1166,8 @@ object Similarity {
                    m: Int = PqM, kSub: Int = PqKSub): DataFrame = {
     val emb = Tables.embeddings(spark, d).filter(col("embedding").isNotNull)
     val cents = Clustering.fittedCentroids(spark, d, nlist)
-    val enc = emb
-      .select(col("vec_id"), residIntUdf(cents)(col("embedding")).as("cr"))
-      .select(col("vec_id"), col("cr._1").as("cell"), col("cr._2").as("rv"))
-    val cbs = pqIntFitCache.computeIfAbsent(
-      (spark, d, s"resid-$nlist-$m-$kSub"),
-      _ => graft.ArtifactLedger.timed("pq_codebooks")(
-        trainPqCodebooksInt(enc.select(col("vec_id"), col("rv")), m, kSub)))
+    val enc = residualVecs(spark, d, nlist)
+    val cbs = residPqCodebooks(spark, d, (nlist, m, kSub))
     val coded = enc
       .select(col("vec_id"), col("cell"),
         pqEncodeIntUdf(cbs, Some(cents))(col("cell"), col("rv")).as("pq"))
@@ -1742,38 +1761,20 @@ object Similarity {
   private[graft] val KnnNprobe = 2
   private[graft] val KnnTargetCellSize = 512
 
-  /** Session-scoped cache of the REGISTERED-parameter kNN graph — the
+  /** The session kNN graph at the registered parameters — the
     * [[graft.ext.Graph.trainedNodeEmbeddings]] discipline: q_knn_graph
     * and q_quality_propagation consume the identical deterministic
     * graph (same Lloyd fit, same probes, same top-k), so building it
     * twice per session buys nothing (~4 s duplicated at sf0.1). The
-    * cached frame is localCheckpoint-materialized (corpus × k rows)
-    * and deliberately never released; a cache hit is bit-identical to
-    * a rebuild. Non-default parameters bypass the cache.
+    * pinned frame is localCheckpoint-materialized (corpus × k rows);
+    * a cache hit is bit-identical to a rebuild. Other parameters go
+    * through [[knnGraphDf]].
     */
-  private val knnGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  def knnGraph(spark: SparkSession, d: String): DataFrame = sessionKnnGraph(spark, d)
 
-  /** Cold-bench hook ([[graft.SessionCaches]]): drop this session's
-    * similarity artifacts (kNN graph frame, integer PQ codebook fits).
-    */
-  private[graft] def clearSessionCaches(spark: SparkSession): Unit = {
-    import graft.SessionCaches.{dropSession, releaseFrame}
-    dropSession(knnGraphCache, spark)(releaseFrame)
-    dropSession(pqIntFitCache, spark)(_ => ())
+  private val sessionKnnGraph = SessionArtifact.frame("knn_graph", Pin.Checkpoint) {
+    (spark, d) => knnGraphDf(graft.Tables.embeddings(spark, d))
   }
-
-  def knnGraph(spark: SparkSession, d: String, k: Int = KnnK,
-               nlist: Int = 0, targetCellSize: Int = KnnTargetCellSize,
-               nprobe: Int = KnnNprobe): DataFrame =
-    if (k == KnnK && nlist == 0 && targetCellSize == KnnTargetCellSize &&
-        nprobe == KnnNprobe)
-      knnGraphCache.computeIfAbsent((spark, d), _ =>
-        graft.ArtifactLedger.timed("knn_graph")(
-          graft.storage.ArtifactStore.cachedFrame(spark, "knn_graph", d)(
-            knnGraphDf(graft.Tables.embeddings(spark, d))).localCheckpoint()))
-    else
-      knnGraphDf(graft.Tables.embeddings(spark, d), k, nlist, targetCellSize, nprobe)
 
   /** DataFrame form (embRaw must have vec_id + embedding). */
   def knnGraphDf(embRaw: DataFrame, k: Int = KnnK, nlist: Int = 0,
@@ -1844,16 +1845,12 @@ object Similarity {
   private[graft] val QualityPropK = 3
   private[graft] val QualityPropAlpha = 0.5
 
-  def qualityPropagation(spark: SparkSession, d: String, k: Int = QualityPropK,
+  def qualityPropagation(spark: SparkSession, d: String,
                          alpha: Double = QualityPropAlpha): DataFrame =
-    if (k == KnnK)
-      // reuse the session's cached registered-parameter graph (shared
-      // with q_knn_graph — one build per session)
-      qualityPropagationOnGraph(graft.Tables.documents(spark, d),
-        knnGraph(spark, d), alpha)
-    else
-      qualityPropagationDf(graft.Tables.documents(spark, d),
-        graft.Tables.embeddings(spark, d), k, alpha)
+    // rides the session's registered-parameter kNN graph (shared with
+    // q_knn_graph — one build per session; QualityPropK == KnnK)
+    qualityPropagationOnGraph(graft.Tables.documents(spark, d),
+      knnGraph(spark, d), alpha)
 
   /** DataFrame form (docs: doc_id + text; emb: vec_id + embedding;
     * vec_id keys into doc_id — the [[embeddingCoverage]] correspondence).
@@ -1990,10 +1987,7 @@ object Similarity {
     // (a hit is bit-identical to a refit; Df-form callers keep their
     // standalone fits so planted-fixture tests are untouched)
     val cbs = fitKey match {
-      case Some((sp, dd)) => pqIntFitCache.computeIfAbsent(
-        (sp, dd, s"raw-$m-$kSub"),
-        _ => graft.ArtifactLedger.timed("pq_codebooks")(
-          trainPqCodebooksInt(snapped, m, kSub)))
+      case Some((sp, dd)) => rawPqCodebooks(sp, dd, (m, kSub))
       case None => trainPqCodebooksInt(snapped, m, kSub)
     }
     val enc = pqEncodeIntUdf(cbs, None)

@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionArtifact, Tables}
+import graft.SessionArtifact.Pin
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * token counting, quality scoring, language ID, fingerprinting.
@@ -537,7 +538,7 @@ object TextAnalysis {
       .toDF("rank", "left", "right", "merged")
   }
 
-  /** Session-cached trained subword tables (driver-side, ≤ maxVocab
+  /** Session-held trained subword tables (driver-side, ≤ maxVocab
     * rows each) — both trainers are DETERMINISTIC functions of
     * (corpus, params), so a cache hit is bit-identical to a retrain
     * (the trainedNodeEmbeddings adjudication). Four registered
@@ -545,36 +546,37 @@ object TextAnalysis {
     * fertility, and the r19 bake-off which pays BOTH); before r19
     * every one of them re-ran its full training (the unigram EM is 5
     * distributed rounds) for an identical result. Builds bill to the
-    * `artifact_builds` sidecar; [[clearSessionCaches]] drops them so
-    * the cold bench still prices true first-pass training.
+    * `artifact_builds` sidecar; [[graft.SessionCaches.clearAll]] drops
+    * them so the cold bench still prices true first-pass training.
     */
-  private val mergesCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Int), Vector[(String, String)]]()
-  private val unigramCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Int), Vector[(String, Double)]]()
+  private val merges = SessionArtifact.value[(Int, Int, Int),
+      Vector[(String, String)]]("bpe_merges") {
+    case (spark, d, (nMerges, maxSampleDocs, maxVocab)) =>
+      val freqs = Tables.documents(spark, d)
+        .filter(col("text").isNotNull && col("doc_id") < maxSampleDocs)
+        .select(explode(tokens(col("text"))).as("word"))
+        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("word"))
+        .limit(maxVocab)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      graft.functions.BpeKernel.train(freqs, nMerges)
+  }
 
   private[ext] def trainedMerges(spark: SparkSession, d: String, nMerges: Int,
                             maxSampleDocs: Int, maxVocab: Int): Vector[(String, String)] =
-    mergesCache.computeIfAbsent((spark, d, nMerges, maxSampleDocs, maxVocab), _ =>
-      graft.ArtifactLedger.timed("bpe_merges") {
-        val freqs = Tables.documents(spark, d)
-          .filter(col("text").isNotNull && col("doc_id") < maxSampleDocs)
-          .select(explode(tokens(col("text"))).as("word"))
-          .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-          .orderBy(col("cnt").desc, col("word"))
-          .limit(maxVocab)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        graft.functions.BpeKernel.train(freqs, nMerges)
-      })
+    merges(spark, d, (nMerges, maxSampleDocs, maxVocab))
 
   /** The session unigram-LM piece table (trained once per (session,
-    * dir, targetVocab) — see [[mergesCache]]'s scaladoc).
+    * dir, targetVocab) — see [[merges]]' scaladoc).
     */
+  private val unigramPieces = SessionArtifact.value[Int, Vector[(String, Double)]](
+      "unigram_pieces") { (spark, d, targetVocab) =>
+    trainUnigramDistributed(unigramWordFreqs(spark, d), targetVocab)
+  }
+
   private[ext] def sessionUnigramPieces(spark: SparkSession, d: String,
                                    targetVocab: Int): Vector[(String, Double)] =
-    unigramCache.computeIfAbsent((spark, d, targetVocab, 3, 8192), _ =>
-      graft.ArtifactLedger.timed("unigram_pieces")(
-        trainUnigramDistributed(unigramWordFreqs(spark, d), targetVocab)))
+    unigramPieces(spark, d, targetVocab)
 
   /** Registered geometry of the subword SCORING family (the trainers'
     * own defaults): the per-word-type encoded lengths under these
@@ -584,13 +586,6 @@ object TextAnalysis {
   private[graft] val BpeSampleDocsDefault = 1024
   private[graft] val BpeMaxVocabDefault = 4096
   private[graft] val UnigramVocabDefault = 2048
-
-  private val bpeEncCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val uniEncCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val srcWcCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** Every corpus word TYPE once — the domain both encoded-length pins
     * map over. Word types come off the shared tokenized artifact; the
@@ -610,49 +605,43 @@ object TextAnalysis {
     * per (session, dir), sidecar-billed, ArtifactStore-backed,
     * cold-cleared. |word types| rows pinned.
     */
-  private[ext] def sessionBpeEncLens(spark: SparkSession, d: String): DataFrame =
-    bpeEncCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("bpe_enc_lens")(
-        graft.storage.ArtifactStore.cachedFrame(spark, "bpe_enc_lens", d) {
-          val ranks = trainedMerges(spark, d, BpeMergesDefault,
-            BpeSampleDocsDefault, BpeMaxVocabDefault)
-            .zipWithIndex.map { case (p, i) => p -> i }.toMap
-          val encLen = udf { w: String =>
-            graft.functions.BpeKernel.encode(w, ranks).length.toLong
-          }
-          sessionWordTypes(spark, d)
-            .select(col("word"), encLen(col("word")).as("enc_len"))
-        }.localCheckpoint()))
+  private[ext] val sessionBpeEncLens =
+    SessionArtifact.frame("bpe_enc_lens", Pin.Checkpoint) { (spark, d) =>
+      val ranks = trainedMerges(spark, d, BpeMergesDefault,
+        BpeSampleDocsDefault, BpeMaxVocabDefault)
+        .zipWithIndex.map { case (p, i) => p -> i }.toMap
+      val encLen = udf { w: String =>
+        graft.functions.BpeKernel.encode(w, ranks).length.toLong
+      }
+      sessionWordTypes(spark, d)
+        .select(col("word"), encLen(col("word")).as("enc_len"))
+    }
 
   /** (word, enc_len) under the REGISTERED unigram piece table — the
     * Viterbi-per-word-type mirror of [[sessionBpeEncLens]] shared by
     * q_unigram_tokenizer, q_unigram_fertility and q_tokenizer_bakeoff.
     */
-  private[ext] def sessionUnigramEncLens(spark: SparkSession, d: String): DataFrame =
-    uniEncCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("unigram_enc_lens")(
-        graft.storage.ArtifactStore.cachedFrame(spark, "unigram_enc_lens", d) {
-          val logp = sessionUnigramPieces(spark, d, UnigramVocabDefault).toMap
-          val segLen = udf { w: String =>
-            graft.functions.UnigramKernel.viterbi(w, logp).length.toLong
-          }
-          sessionWordTypes(spark, d)
-            .select(col("word"), segLen(col("word")).as("enc_len"))
-        }.localCheckpoint()))
+  private[ext] val sessionUnigramEncLens =
+    SessionArtifact.frame("unigram_enc_lens", Pin.Checkpoint) { (spark, d) =>
+      val logp = sessionUnigramPieces(spark, d, UnigramVocabDefault).toMap
+      val segLen = udf { w: String =>
+        graft.functions.UnigramKernel.viterbi(w, logp).length.toLong
+      }
+      sessionWordTypes(spark, d)
+        .select(col("word"), segLen(col("word")).as("enc_len"))
+    }
 
   /** The per-source word-count table (source, word, cnt) — the shared
     * aggregation both fertility queries (and the bake-off, through
     * them) rebuilt per run with a full corpus explode. Built once off
     * the tokenized artifact; |source × word types| rows pinned.
     */
-  private[ext] def sessionSourceWordCounts(spark: SparkSession, d: String): DataFrame =
-    srcWcCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("source_word_counts")(
-        graft.storage.ArtifactStore.cachedFrame(spark, "source_word_counts", d)(
-          termStream(sessionTokens(spark, d), Seq(col("source")))
-            .select(col("source"), col("term").as("word"))
-            .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cnt")))
-          .localCheckpoint()))
+  private[ext] val sessionSourceWordCounts =
+    SessionArtifact.frame("source_word_counts", Pin.Checkpoint) { (spark, d) =>
+      termStream(sessionTokens(spark, d), Seq(col("source")))
+        .select(col("source"), col("term").as("word"))
+        .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cnt"))
+    }
 
   /** Per-document subword statistics under the trained BPE merges — the
     * token-budget audit a pipeline runs before paying for a training
@@ -672,21 +661,12 @@ object TextAnalysis {
     * encode correctness is property-tested (round-trip concatenation,
     * hand-computed merges, monotonicity in nMerges).
     */
-  def bpeStats(spark: SparkSession, d: String, nMerges: Int = BpeMergesDefault,
-               maxSampleDocs: Int = BpeSampleDocsDefault,
-               maxVocab: Int = BpeMaxVocabDefault): DataFrame =
-    if (nMerges == BpeMergesDefault && maxSampleDocs == BpeSampleDocsDefault &&
-        maxVocab == BpeMaxVocabDefault)
-      // Registered geometry: the merge kernel runs once per corpus word
-      // type per SESSION (the [[sessionBpeEncLens]] pin), not once per
-      // run; per-run work is the (doc, word) rollup + n_chars projection.
-      perDocSubwordRollup(spark, d,
-        sessionBpeEncLens(spark, d), "n_bpe_tokens")
-    else {
-      val ranks = trainedMerges(spark, d, nMerges, maxSampleDocs, maxVocab)
-        .zipWithIndex.map { case (p, i) => p -> i }.toMap
-      bpeStatsWithRanks(Tables.fanOut(Tables.documents(spark, d)), ranks)
-    }
+  def bpeStats(spark: SparkSession, d: String): DataFrame =
+    // the merge kernel runs once per corpus word type per SESSION (the
+    // [[sessionBpeEncLens]] pin), not once per run; per-run work is
+    // the (doc, word) rollup + n_chars projection.
+    perDocSubwordRollup(spark, d,
+      sessionBpeEncLens(spark, d), "n_bpe_tokens")
 
   /** Per-doc rollup over a pre-encoded (word, enc_len) table — the
     * [[bpeStatsWithRanks]] / [[unigramStatsWithVocab]] topology with the
@@ -778,30 +758,11 @@ object TextAnalysis {
     * ranks and encode-per-word-TYPE shape as [[bpeStats]], rolled up
     * to sources instead of documents.
     */
-  def bpeFertility(spark: SparkSession, d: String,
-                   nMerges: Int = BpeMergesDefault,
-                   maxSampleDocs: Int = BpeSampleDocsDefault,
-                   maxVocab: Int = BpeMaxVocabDefault): DataFrame =
-    if (nMerges == BpeMergesDefault && maxSampleDocs == BpeSampleDocsDefault &&
-        maxVocab == BpeMaxVocabDefault)
-      // Registered geometry: both halves are session pins — per-run work
-      // is one join + one per-source aggregate.
-      sourceFertilityRollup(sessionSourceWordCounts(spark, d),
-        sessionBpeEncLens(spark, d), "n_bpe_tokens")
-    else {
-      val ranks = trainedMerges(spark, d, nMerges, maxSampleDocs, maxVocab)
-        .zipWithIndex.map { case (p, i) => p -> i }.toMap
-      val encLen = udf { w: String =>
-        graft.functions.BpeKernel.encode(w, ranks).length.toLong
-      }
-      val wc = Tables.fanOut(Tables.documents(spark, d))
-        .filter(col("text").isNotNull)
-        .select(col("source"), explode(tokens(col("text"))).as("word"))
-        .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cnt"))
-      val vocabEnc = wc.select(col("word")).distinct()
-        .select(col("word"), encLen(col("word")).as("enc_len"))
-      sourceFertilityRollup(wc, vocabEnc, "n_bpe_tokens")
-    }
+  def bpeFertility(spark: SparkSession, d: String): DataFrame =
+    // both halves are session pins — per-run work is one join + one
+    // per-source aggregate.
+    sourceFertilityRollup(sessionSourceWordCounts(spark, d),
+      sessionBpeEncLens(spark, d), "n_bpe_tokens")
 
   /** The trained unigram-LM piece table as a DataFrame — rank, piece,
     * and the micro-snapped log-prob (the [[bpeMerges]] companion: BPE
@@ -908,17 +869,11 @@ object TextAnalysis {
     * closure, O(targetVocab) per task), per-doc rollup through the
     * same (doc, word)-keyed join topology.
     */
-  def unigramStats(spark: SparkSession, d: String,
-                   targetVocab: Int = UnigramVocabDefault): DataFrame =
-    if (targetVocab == UnigramVocabDefault)
-      // Registered geometry: Viterbi runs once per corpus word type per
-      // SESSION (the [[sessionUnigramEncLens]] pin), not once per run.
-      perDocSubwordRollup(spark, d,
-        sessionUnigramEncLens(spark, d), "n_unigram_tokens")
-    else {
-      val logp = sessionUnigramPieces(spark, d, targetVocab).toMap
-      unigramStatsWithVocab(Tables.fanOut(Tables.documents(spark, d)), logp)
-    }
+  def unigramStats(spark: SparkSession, d: String): DataFrame =
+    // Viterbi runs once per corpus word type per SESSION (the
+    // [[sessionUnigramEncLens]] pin), not once per run.
+    perDocSubwordRollup(spark, d,
+      sessionUnigramEncLens(spark, d), "n_unigram_tokens")
 
   /** DataFrame form scoring `docs` under an already-trained piece
     * table — the frozen-model half (train once, score many), the
@@ -958,24 +913,9 @@ object TextAnalysis {
     * two schemes' shred rates off one union. Same trained vocabulary
     * and segment-per-word-TYPE shape as [[unigramStats]].
     */
-  def unigramFertility(spark: SparkSession, d: String,
-                       targetVocab: Int = UnigramVocabDefault): DataFrame =
-    if (targetVocab == UnigramVocabDefault)
-      sourceFertilityRollup(sessionSourceWordCounts(spark, d),
-        sessionUnigramEncLens(spark, d), "n_subword_tokens")
-    else {
-      val logp = sessionUnigramPieces(spark, d, targetVocab).toMap
-      val segLen = udf { w: String =>
-        graft.functions.UnigramKernel.viterbi(w, logp).length.toLong
-      }
-      val wc = Tables.fanOut(Tables.documents(spark, d))
-        .filter(col("text").isNotNull)
-        .select(col("source"), explode(tokens(col("text"))).as("word"))
-        .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cnt"))
-      val vocabEnc = wc.select(col("word")).distinct()
-        .select(col("word"), segLen(col("word")).as("enc_len"))
-      sourceFertilityRollup(wc, vocabEnc, "n_subword_tokens")
-    }
+  def unigramFertility(spark: SparkSession, d: String): DataFrame =
+    sourceFertilityRollup(sessionSourceWordCounts(spark, d),
+      sessionUnigramEncLens(spark, d), "n_subword_tokens")
 
   /** The tokenizer BAKE-OFF — [[bpeFertility]] and [[unigramFertility]]
     * joined into ONE per-source comparison table (the reason the two
@@ -1407,15 +1347,6 @@ object TextAnalysis {
     * final adaptive plan. Same FP discipline: per-pair ln snaps to
     * integer micro-nats, per-doc aggregation is exact BIGINT math.
     */
-  /** Session-scoped cache of the corpus bigram count table — the ONE
-    * (w1, w2) count shuffle q_bigram_logprob and q_top_collocations
-    * both run (identical grouping, no ids); the per-doc occurrence
-    * stream re-derives narrowly per consumer (the [[sessionC5]]
-    * discipline one order down).
-    */
-  private val c2Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Session-scoped cache of the TOKENIZED CORPUS — the (doc_id,
     * source, toks) frame the n-gram/LM/textrank families' first move
     * re-derived from raw text every query (the r16 judge's
@@ -1443,58 +1374,28 @@ object TextAnalysis {
     * index-building passes; keep scan-speed tokenization for
     * single-explode statistics.
     */
-  private val tokCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[graft] def sessionTokens(spark: SparkSession, d: String): DataFrame =
-    tokCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("tokenized_docs") {
-        // cross-session persisted (ArtifactStore): a fresh JVM reads
-        // the tokenized frame back instead of re-tokenizing the corpus
-        val df = graft.storage.ArtifactStore.cachedFrame(spark, "tokenized_docs", d) {
-          Tables.fanOut(Tables.documents(spark, d))
-            .filter(col("text").isNotNull)
-            .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
-        }
-        // columnar cache, not localCheckpoint: consumers re-READ this
-        // frame dozens of times, and the InMemoryRelation's compressed
-        // column batches scan much faster than a checkpointed
-        // row-RDD (measured on the first form of this artifact)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        df
-      })
-
-  /** Cold-bench hook ([[graft.SessionCaches]]): drop this session's
-    * LM-block artifacts (tokenized corpus, bigram counts + the 5-gram
-    * ladder).
-    */
-  private[graft] def clearSessionCaches(spark: SparkSession): Unit = {
-    import graft.SessionCaches.{dropSession, releaseFrame}
-    dropSession(tokCache, spark)(releaseFrame)
-    dropSession(mlLmCache, spark) { case (a, b) =>
-      releaseFrame(a); releaseFrame(b)
+  private[graft] val sessionTokens =
+    // columnar cache, not localCheckpoint: consumers re-READ this
+    // frame dozens of times, and the InMemoryRelation's compressed
+    // column batches scan much faster than a checkpointed row-RDD
+    // (measured on the first form of this artifact)
+    SessionArtifact.frame("tokenized_docs", Pin.Persist) { (spark, d) =>
+      Tables.fanOut(Tables.documents(spark, d))
+        .filter(col("text").isNotNull)
+        .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
     }
-    dropSession(c2Cache, spark)(releaseFrame)
-    dropSession(c3ScoreCache, spark)(releaseFrame)
-    dropSession(c5Cache, spark)(releaseFrame)
-    dropSession(cnts5Cache, spark)(releaseFrame)
-    dropSession(smoothCache, spark)(releaseFrame)
-    dropSession(bpeEncCache, spark)(releaseFrame)
-    dropSession(uniEncCache, spark)(releaseFrame)
-    dropSession(srcWcCache, spark)(releaseFrame)
-    // driver-side trained tables: nothing to release, just drop
-    dropSession(mergesCache, spark)(_ => ())
-    dropSession(unigramCache, spark)(_ => ())
-  }
 
-  private def sessionBigramCounts(spark: SparkSession, d: String): DataFrame =
-    c2Cache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("lm_bigram_counts")(
-        graft.storage.ArtifactStore.cachedFrame(spark, "lm_bigram_counts", d)(
-          bigramPairStream(sessionTokens(spark, d), Seq.empty)
-            .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")))
-          .localCheckpoint()))
+  /** The session corpus bigram count table — the ONE (w1, w2) count
+    * shuffle q_bigram_logprob and q_top_collocations both run
+    * (identical grouping, no ids); the per-doc occurrence stream
+    * re-derives narrowly per consumer (the [[sessionC5]] discipline
+    * one order down).
+    */
+  private val sessionBigramCounts =
+    SessionArtifact.frame("lm_bigram_counts", Pin.Checkpoint) { (spark, d) =>
+      bigramPairStream(sessionTokens(spark, d), Seq.empty)
+        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
+    }
 
   def bigramLogProb(spark: SparkSession, d: String): DataFrame =
     bigramScoreCore(
@@ -1589,23 +1490,19 @@ object TextAnalysis {
     * exploded ~3 string copies per corpus token (10× smoke ratio 3.3
     * then; the 5-gram family's measured win motivated the change).
     */
-  def backoffLogProb(spark: SparkSession, d: String,
-                     minCount: Int = 2, alpha: Double = 0.5): DataFrame =
-    if (minCount == BackoffMinCount && alpha == BackoffAlpha)
-      // registered/default form: the fully-resolved h3 → mlp score
-      // table is parameter-free given the corpus, so it is
-      // session-pinned ([[sessionBackoffScores]] — the count shuffle
-      // and all four backoff window sums are billed once per session)
-      // and the per-run cost is the h3-only scoring stream + rollup.
-      // The scoring explode computes ONE hash per position instead of
-      // the count pass's five (8 bytes/position on the wire, §2.3).
-      gramRollup(trigramH3Stream(sessionTokens(spark, d)),
-        sessionBackoffScores(spark, d), "h3", "n_trigrams")
-    else backoffLogProbDf(sessionTokens(spark, d), minCount, alpha)
+  def backoffLogProb(spark: SparkSession, d: String): DataFrame =
+    // the fully-resolved h3 → mlp score table is parameter-free given
+    // the corpus, so it is session-pinned ([[sessionBackoffScores]] —
+    // the count shuffle and all four backoff window sums are billed
+    // once per session) and the per-run cost is the h3-only scoring
+    // stream + rollup. The scoring explode computes ONE hash per
+    // position instead of the count pass's five (8 bytes/position on
+    // the wire, §2.3).
+    gramRollup(trigramH3Stream(sessionTokens(spark, d)),
+      sessionBackoffScores(spark, d), "h3", "n_trigrams")
 
-  /** The registered form's fixed hyper-parameters — the session pin is
-    * keyed on (session, dir) only, so non-default calls take the
-    * self-building Df path instead (the [[MlMinCount]] discipline).
+  /** The registered form's fixed hyper-parameters (other values go
+    * through [[backoffLogProbDf]], the [[MlMinCount]] discipline).
     */
   private val BackoffMinCount = 2
   private val BackoffAlpha = 0.5
@@ -1677,33 +1574,25 @@ object TextAnalysis {
     * floor exactly as the Against scorer's left join did. Nothing
     * pairwise, nothing driver-side.
     */
-  def mooreLewisSelect(spark: SparkSession, d: String,
-                       minCount: Int = 2, alpha: Double = 0.5): DataFrame =
-    if (minCount == MlMinCount && alpha == MlAlpha) {
-      // registered/default form: both trigram LMs are parameter-free
-      // given the corpus (fixed eval-slice target predicate), so the
-      // merged score table is session-pinned ([[sessionMooreLewisLm]])
-      // — per-run cost is the pool scoring pass only, previously two
-      // full count chains per run (the subword-trainer discipline)
-      val (lm, ns) = sessionMooreLewisLm(spark, d)
-      mooreLewisTail(
-        sessionTokens(spark, d).filter(!(col("doc_id") % 20 === 7)),
-        lm.select(col("w1"), col("w2"), col("w3"),
-          col("in_mlp"), col("gen_mlp")),
-        ns, alpha)
-    } else
-      mooreLewisSelectDf(sessionTokens(spark, d), col("doc_id") % 20 === 7,
-        minCount, alpha)
+  def mooreLewisSelect(spark: SparkSession, d: String): DataFrame = {
+    // both trigram LMs are parameter-free given the corpus (fixed
+    // eval-slice target predicate), so the merged score table is
+    // session-pinned ([[sessionMooreLewisLm]]) — per-run cost is the
+    // pool scoring pass only, previously two full count chains per run
+    // (the subword-trainer discipline)
+    val (lm, ns) = sessionMooreLewisLm(spark, d)
+    mooreLewisTail(
+      sessionTokens(spark, d).filter(!(col("doc_id") % 20 === 7)),
+      lm.select(col("w1"), col("w2"), col("w3"),
+        col("in_mlp"), col("gen_mlp")),
+      ns, MlAlpha)
+  }
 
-  /** The registered form's fixed LM hyper-parameters — the session pin
-    * is keyed on (session, dir) only, so non-default calls take the
-    * self-building Df path instead.
+  /** The registered form's fixed LM hyper-parameters (other values go
+    * through [[mooreLewisSelectDf]]).
     */
   private val MlMinCount = 2
   private val MlAlpha = 0.5
-
-  private val mlLmCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
 
   /** The session (merged score table, model-size scalars) pair of the
     * registered Moore–Lewis query: both stupid-backoff trigram LMs
@@ -1714,43 +1603,40 @@ object TextAnalysis {
     * load instead of re-counting, and the cold ledger prices the true
     * rebuild. ~|trigram vocabulary| rows pinned per (session, dir).
     */
-  private def sessionMooreLewisLm(spark: SparkSession, d: String): (DataFrame, DataFrame) =
-    mlLmCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("moore_lewis_lm") {
-        var inT: DataFrame = null
-        var genT: DataFrame = null
-        val lm = graft.storage.ArtifactStore.cachedFrame(
-            spark, "moore_lewis_lm", d) {
-          val docs = sessionTokens(spark, d)
-          val target = docs.filter(col("doc_id") % 20 === 7)
-          require(!tokStream(target, Seq(col("doc_id")))
-              .filter(size(col("t")) >= 3).isEmpty,
-            "mooreLewisSelect: target slice has no document with >= 3 tokens — " +
-              "no in-domain trigram LM can be trained")
-          inT = backoffScoreTable(target, MlMinCount, MlAlpha)
-            .localCheckpoint(false)
-          genT = backoffScoreTable(docs.filter(!(col("doc_id") % 20 === 7)),
-            MlMinCount, MlAlpha).localCheckpoint(false)
-          // the N scalars ride every row (constant columns, RLE-free in
-          // the store) so ONE artifact carries the whole frozen state
-          mlMergedTable(inT, genT).crossJoin(broadcast(mlNsRow(inT, genT)))
-        }.localCheckpoint()
-        // the store copy (or the outer pin) is materialized — the
-        // builder's score-table checkpoints have no reader left
-        if (inT ne null) {
-          org.apache.spark.sql.GraftSql.releaseCheckpoint(inT)
-          org.apache.spark.sql.GraftSql.releaseCheckpoint(genT)
-        }
-        // 1-row scalar frame for the scoring tail's OOV floors — kept
-        // loud on the (store-roundtrip) empty-table edge exactly like
-        // the inline nRow guard
-        def guarded(c: String) = coalesce(max(col(c)),
-          raise_error(lit("mooreLewisSelect: empty pinned score table — " +
-            "rebuild the moore_lewis_lm artifact from a non-empty corpus"))
-            .cast("long")).as(c)
-        val ns = lm.agg(guarded("n_in"), guarded("n_gen")).localCheckpoint()
-        (lm, ns)
-      })
+  private val sessionMooreLewisLm = SessionArtifact.pair("moore_lewis_lm") { (spark, d) =>
+    var inT: DataFrame = null
+    var genT: DataFrame = null
+    val lm = SessionArtifact.stored(spark, "moore_lewis_lm", d, Pin.Checkpoint) {
+      val docs = sessionTokens(spark, d)
+      val target = docs.filter(col("doc_id") % 20 === 7)
+      require(!tokStream(target, Seq(col("doc_id")))
+          .filter(size(col("t")) >= 3).isEmpty,
+        "mooreLewisSelect: target slice has no document with >= 3 tokens — " +
+          "no in-domain trigram LM can be trained")
+      inT = backoffScoreTable(target, MlMinCount, MlAlpha)
+        .localCheckpoint(false)
+      genT = backoffScoreTable(docs.filter(!(col("doc_id") % 20 === 7)),
+        MlMinCount, MlAlpha).localCheckpoint(false)
+      // the N scalars ride every row (constant columns, RLE-free in
+      // the store) so ONE artifact carries the whole frozen state
+      mlMergedTable(inT, genT).crossJoin(broadcast(mlNsRow(inT, genT)))
+    }
+    // the store copy (or the outer pin) is materialized — the
+    // builder's score-table checkpoints have no reader left
+    if (inT ne null) {
+      org.apache.spark.sql.GraftSql.releaseCheckpoint(inT)
+      org.apache.spark.sql.GraftSql.releaseCheckpoint(genT)
+    }
+    // 1-row scalar frame for the scoring tail's OOV floors — kept
+    // loud on the (store-roundtrip) empty-table edge exactly like
+    // the inline nRow guard
+    def guarded(c: String) = coalesce(max(col(c)),
+      raise_error(lit("mooreLewisSelect: empty pinned score table — " +
+        "rebuild the moore_lewis_lm artifact from a non-empty corpus"))
+        .cast("long")).as(c)
+    val ns = lm.agg(guarded("n_in"), guarded("n_gen")).localCheckpoint()
+    (lm, ns)
+  }
 
   /** DataFrame form (docs must have doc_id + text, or the pre-tokenized
     * artifact schema).
@@ -1867,9 +1753,6 @@ object TextAnalysis {
       .select(col("doc_id"), explode(grams).as("h3"))
   }
 
-  private val c3ScoreCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   /** The session (h3 → mlp) stupid-backoff score table of the
     * registered trigram scorer: count shuffle + the four backoff
     * window sums + the score/log snap, built once per (session, dir)
@@ -1879,15 +1762,11 @@ object TextAnalysis {
     * scoring join co-partitions against it with no table-side
     * exchange. ~|trigram vocabulary| rows pinned per (session, dir).
     */
-  private def sessionBackoffScores(spark: SparkSession, d: String): DataFrame =
-    c3ScoreCache.computeIfAbsent((spark, d), _ =>
-      graft.ArtifactLedger.timed("lm_backoff_scores")(
-        org.apache.spark.sql.GraftSql.localCheckpointKeyedBy(
-          graft.storage.ArtifactStore.cachedFrame(
-              spark, "lm_backoff_scores", d) {
-            val (_, withCounts, n) = trigramCounts(sessionTokens(spark, d))
-            backoffMlpTable(withCounts, n, BackoffMinCount, BackoffAlpha)
-          }, Seq("h3"))))
+  private val sessionBackoffScores =
+    SessionArtifact.frame("lm_backoff_scores", Pin.KeyedBy("h3")) { (spark, d) =>
+      val (_, withCounts, n) = trigramCounts(sessionTokens(spark, d))
+      backoffMlpTable(withCounts, n, BackoffMinCount, BackoffAlpha)
+    }
 
   /** The score→micro-nat projection shared by the pinned builder and
     * the self-building Df form (one definition, no drift).
@@ -2141,8 +2020,9 @@ object TextAnalysis {
       .withColumn("ctx1", wsum("hm1")).withColumn("c1s", wsum("hs1"))
   }
 
-  /** Session-scoped caches of the 5-gram LM artifacts, keyed
-    * (session, dir, keyWidth) — the [[graft.ext.Graph]] sessionEdges
+  /** The session 5-gram LM artifacts, keyed (session, dir, keyWidth)
+    * and stored under `<name>_wide` for the wide-key variant — the
+    * [[graft.ext.Graph]] sessionEdges
     * discipline applied to the LM ladder: the type table (ONE corpus
     * count shuffle), its backoff window block (q_fivegram/q_interp)
     * and its smoothed stat block (q_wb/q_kn) are identical
@@ -2156,35 +2036,21 @@ object TextAnalysis {
     * checkpoint). Every oracle replays its full chain, so parity is
     * unaffected; cached frames are read-only (never released).
     */
-  private val c5Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Boolean), DataFrame]()
-  private val cnts5Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Boolean), DataFrame]()
-  private val smoothCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Boolean), DataFrame]()
+  private def lm5(name: String)(build: (SparkSession, String, Boolean) => DataFrame) =
+    SessionArtifact.frameBy[Boolean](name, Pin.Checkpoint,
+      wide => if (wide) name + "_wide" else name)(build)
 
-  private def sessionC5(spark: SparkSession, d: String, wide: Boolean): DataFrame =
-    c5Cache.computeIfAbsent((spark, d, wide), _ =>
-      graft.ArtifactLedger.timed("lm_5gram_types")(
-        graft.storage.ArtifactStore.cachedFrame(
-          spark, if (wide) "lm_5gram_types_wide" else "lm_5gram_types", d)(
-          fivegramTypeTable(sessionTokens(spark, d), wide)._2).localCheckpoint()))
+  private val sessionC5 = lm5("lm_5gram_types") { (spark, d, wide) =>
+    fivegramTypeTable(sessionTokens(spark, d), wide)._2
+  }
 
-  private def sessionWindowCounts(spark: SparkSession, d: String,
-                                  wide: Boolean): DataFrame =
-    cnts5Cache.computeIfAbsent((spark, d, wide), _ =>
-      graft.ArtifactLedger.timed("lm_5gram_windows")(
-        graft.storage.ArtifactStore.cachedFrame(
-          spark, if (wide) "lm_5gram_windows_wide" else "lm_5gram_windows", d)(
-          fivegramWindowCounts(sessionC5(spark, d, wide))).localCheckpoint()))
+  private val sessionWindowCounts = lm5("lm_5gram_windows") { (spark, d, wide) =>
+    fivegramWindowCounts(sessionC5(spark, d, wide))
+  }
 
-  private def sessionSmoothedStats(spark: SparkSession, d: String,
-                                   wide: Boolean): DataFrame =
-    smoothCache.computeIfAbsent((spark, d, wide), _ =>
-      graft.ArtifactLedger.timed("lm_5gram_smoothed")(
-        graft.storage.ArtifactStore.cachedFrame(
-          spark, if (wide) "lm_5gram_smoothed_wide" else "lm_5gram_smoothed", d)(
-          smoothedStatTable(sessionC5(spark, d, wide))).localCheckpoint()))
+  private val sessionSmoothedStats = lm5("lm_5gram_smoothed") { (spark, d, wide) =>
+    smoothedStatTable(sessionC5(spark, d, wide))
+  }
 
   /** The per-query occurrence stream — narrow tokenize + hash, no
     * shuffle; the join side of [[gramRollup]].
