@@ -88,6 +88,9 @@ object Tables {
   def fanOut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
+    // a micro-batch sink builds its plan once, before any batch has
+    // files or a size: every batch takes the unknown-size branch
+    if (graft.ext.Freeze.readsMicroBatch(df)) return df.repartition(target)
     val nFiles = df.inputFiles.length.toLong
     val maxSplitBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))

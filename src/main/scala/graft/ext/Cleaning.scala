@@ -1415,10 +1415,11 @@ object Cleaning {
                              k: Int = SubstrK): DataFrame = {
     val toksed = Tables.fanOut(arrivals).filter(col("text").isNotNull)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
+    // no checkpoint: this is a sink's per-batch plan, built once per
+    // query; the three readers of the islands share their exchanges
     val excised = islandsOf(
       anchorStream(toksed, k).join(baseGrams, Seq("h"), "left_semi"), k)
       .select(col("doc_id"), col("start_tok"), col("end_tok"))
-      .localCheckpoint(false)
     exciseTail(toksed, excised)
   }
 

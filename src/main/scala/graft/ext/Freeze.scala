@@ -1,6 +1,15 @@
 package graft.ext
 
+import scala.reflect.ClassTag
+import scala.util.control.NonFatal
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, GraftSql, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, Project, Statistics}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -12,21 +21,23 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * scaladocs promise — persist + count before the stream starts, so
   * every batch joins one precomputed, truly static table.
   *
-  * Lifecycle: the cache is held for the stream's lifetime. Sinks pin
-  * their frozen tables under a SCOPE (their checkpoint path — unique
-  * per sink by Structured Streaming's own contract) via [[scoped]],
-  * and the pins are released either
+  * Lifecycle: the pins are held for the stream's lifetime. Sinks pin
+  * their frozen tables ([[scoped]]) and broadcast values
+  * ([[scopedBroadcast]]) under a SCOPE (their checkpoint path — unique
+  * per sink by Structured Streaming's own contract), and the pins are
+  * released — frames unpersisted, broadcasts destroyed — either
   *   - automatically, by installing [[autoRelease]] once per session —
   *     a StreamingQueryListener that maps each started query to its
-  *     resolved checkpoint root and unpersists the scope's tables when
-  *     the query terminates; or
+  *     resolved checkpoint root and releases the scope when the query
+  *     terminates; or
   *   - manually, with `Freeze.release(checkpoint)` after
   *     `query.stop()`/`awaitTermination`.
-  * Without either, the frames stay cached for the session (the
-  * pre-release behavior; harmless for one-shot jobs, a leak for long
-  * sessions cycling many sinks). A sink that was CONSTRUCTED but whose
-  * stream never started (or whose `start()` threw) has no query to
-  * terminate, so its pins still require a manual `release`.
+  * Without either, the pins stay for the session (the pre-release
+  * behavior; harmless for one-shot jobs, a leak for long sessions
+  * cycling many sinks). A sink that was CONSTRUCTED but whose stream
+  * never started (or whose `start()` threw) has no query to terminate,
+  * so its pins still require a manual `release`. [[pins]] and
+  * [[pinnedBytes]] report what each scope holds.
   *
   * Scope keys are path-normalized ([[normalizeScope]]) so the string
   * the sink registered ("ckpt/", "file:/tmp/ckpt", a relative path)
@@ -37,10 +48,22 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * The sink runner: every micro-batch sink is [[sink]] over a
   * per-batch function, so the per-trigger mechanics live in one place
   * and cost a constant number of jobs whatever the function does:
+  *   - plan once: at sink construction the function is called ONCE,
+  *     over a stand-in leaf ([[BatchSlot]]) with the stream's schema,
+  *     and the analyzed plan is kept. Building it must start no Spark
+  *     job, and the stand-in has no rows or statistics, so a function
+  *     that runs an action or reads the batch's size fails here, at
+  *     construction;
+  *   - swap per trigger: every stand-in occurrence (the analyzer gives
+  *     each use of the batch its own attribute ids, e.g. one per union
+  *     branch) is replaced by the persisted batch's plan under a
+  *     projection onto that occurrence's ids, and the tag stand-in by
+  *     the one-row tag. Only the copied spine is analyzed again. The
+  *     batch's schema must equal the stream's, or the trigger fails;
   *   - the micro-batch is persisted once, and the empty check runs on
   *     the persisted frame, so the rows it reads land in the cache;
-  *     every branch of the function then reads the cache, not the
-  *     source; the batch is unpersisted in `finally`;
+  *     every branch of the plan then reads the cache, not the source;
+  *     the batch is unpersisted in `finally`;
   *   - the function's top-level presentation sort is stripped
   *     ([[GraftSql.unordered]]): an append-mode file sink does not keep
   *     row order across batches;
@@ -53,8 +76,30 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *   - the result appends to `outPath` as parquet, `batch_id` last.
   */
 object Freeze {
+
+  /** One resource a scope holds until [[release]]. `bytes` is what it
+    * keeps resident: a frozen frame's cached blocks (memory + disk), or
+    * a broadcast value's estimated in-memory size.
+    */
+  sealed trait Pin {
+    def bytes: Long
+    private[Freeze] def release(): Unit
+  }
+
+  final case class FramePin(frame: DataFrame) extends Pin {
+    def bytes: Long =
+      GraftSql.cachedRddId(frame).flatMap(id =>
+        frame.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == id))
+        .map(r => r.memSize + r.diskSize).getOrElse(0L)
+    private[Freeze] def release(): Unit = frame.unpersist()
+  }
+
+  final case class BroadcastPin(value: Broadcast[_], bytes: Long) extends Pin {
+    private[Freeze] def release(): Unit = value.destroy()
+  }
+
   private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, List[DataFrame]]()
+    new java.util.concurrent.ConcurrentHashMap[String, List[Pin]]()
 
   def apply(df: DataFrame): DataFrame = {
     val pinned = df.persist()
@@ -86,24 +131,38 @@ object Freeze {
     }
   }
 
+  private def register(scope: String, pin: Pin): Unit =
+    registry.merge(normalizeScope(scope), List(pin), (older, newer) => newer ::: older)
+
   /** Freeze `df` and register the pinned frame under `scope` so
     * [[release]] can unpersist it once the scope's stream has stopped.
     */
   private[ext] def scoped(scope: String, df: DataFrame): DataFrame = {
     val pinned = apply(df)
-    registry.merge(normalizeScope(scope), List(pinned),
-      (older, newer) => newer ::: older)
+    register(scope, FramePin(pinned))
     pinned
   }
 
-  /** Unpersist every table frozen under `scope` (a sink's checkpoint
-    * path). Call after `query.stop()`/`awaitTermination` — a running
-    * stream would silently re-run the full lineage per trigger on a
-    * released table. Idempotent; unknown scopes are a no-op.
+  /** Broadcast `value` once and register it under `scope` so
+    * [[release]] destroys it once the scope's stream has stopped: the
+    * form for a small static table a sink looks values up in, so no
+    * trigger moves it again.
+    */
+  private[ext] def scopedBroadcast[T <: AnyRef : ClassTag](scope: String, spark: SparkSession,
+                                                           value: T): Broadcast[T] = {
+    val shared = spark.sparkContext.broadcast(value)
+    register(scope, BroadcastPin(shared, org.apache.spark.util.SizeEstimator.estimate(value)))
+    shared
+  }
+
+  /** Release every pin held under `scope` (a sink's checkpoint path):
+    * unpersist its frames, destroy its broadcasts. Call after
+    * `query.stop()`/`awaitTermination` — a running stream would
+    * silently re-run the full lineage per trigger on a released table.
+    * Idempotent; unknown scopes are a no-op.
     */
   def release(scope: String): Unit =
-    Option(registry.remove(normalizeScope(scope)))
-      .foreach(_.foreach(_.unpersist()))
+    Option(registry.remove(normalizeScope(scope))).foreach(_.foreach(_.release()))
 
   /** Scopes currently holding pins (normalized) — the leak audit hook
     * the listener test asserts empties out.
@@ -112,6 +171,16 @@ object Freeze {
     import scala.jdk.CollectionConverters._
     registry.keySet.asScala.toSet
   }
+
+  /** The pins `scope` holds, newest first; empty once released. */
+  def pins(scope: String): Seq[Pin] =
+    Option(registry.get(normalizeScope(scope))).getOrElse(Nil)
+
+  /** Resident bytes per pinned scope: the storage bytes of its frozen
+    * frames plus the estimated size of its broadcasts.
+    */
+  def pinnedBytes: Map[String, Long] =
+    pinnedScopes.map(s => s -> pins(s).map(_.bytes).sum).toMap
 
   // ------------------------------------------------- the sink runner
 
@@ -131,7 +200,8 @@ object Freeze {
   private[graft] def taggedSink(stream: DataFrame, outPath: String,
                                 checkpoint: String, triggerMs: Long)
                                (perBatch: (DataFrame, DataFrame) => DataFrame)
-      : DataStreamWriter[Row] =
+      : DataStreamWriter[Row] = {
+    val plan = planOnce(stream, checkpoint)(perBatch)
     stream.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -140,18 +210,72 @@ object Freeze {
         val cached = batch.persist()
         try {
           if (!cached.isEmpty)
-            perBatch(cached, batchTag(cached.sparkSession, batchId))
-              .write.mode("append").parquet(outPath)
+            plan(cached, batchId).write.mode("append").parquet(outPath)
         } finally cached.unpersist()
       }
+  }
+
+  private val TagSchema = StructType(Seq(StructField("batch_id", LongType, nullable = false)))
 
   /** The one-row `batch_id` frame, hinted to join as a cartesian
     * product (see the object scaladoc).
     */
   private[graft] def batchTag(spark: SparkSession, batchId: Long): DataFrame =
-    spark.createDataFrame(java.util.List.of(Row(batchId)),
-        StructType(Seq(StructField("batch_id", LongType, nullable = false))))
+    spark.createDataFrame(java.util.List.of(Row(batchId)), TagSchema)
       .hint("shuffle_replicate_nl")
+
+  /** The stand-in for a sink's micro-batch (`slot` "batch") or its tag
+    * frame ("tag") in the plan the runner builds once per query (see
+    * the object scaladoc). It is never planned: every trigger swaps
+    * each occurrence for real rows. It has no statistics, so a
+    * per-batch function cannot pick its plan by the batch's size.
+    */
+  private[graft] final case class BatchSlot(slot: String, output: Seq[Attribute])
+      extends LeafNode with MultiInstanceRelation {
+    override def newInstance(): BatchSlot = copy(output = output.map(_.newInstance()))
+    override def computeStats(): Statistics = throw new IllegalStateException(
+      s"the $slot stand-in of a micro-batch sink has no statistics")
+  }
+
+  /** Whether `df` reads a micro-batch stand-in, i.e. is being built
+    * as part of a sink's per-batch plan.
+    */
+  private[graft] def readsMicroBatch(df: DataFrame): Boolean =
+    GraftSql.analyzedPlan(df).exists(_.isInstanceOf[BatchSlot])
+
+  /** Build a sink's per-batch plan once, over [[BatchSlot]]s, and
+    * return the per-trigger swap that puts a persisted batch and its id
+    * in their place (see the object scaladoc).
+    */
+  private def planOnce(stream: DataFrame, checkpoint: String)
+                      (perBatch: (DataFrame, DataFrame) => DataFrame)
+      : (DataFrame, Long) => DataFrame = {
+    val spark = stream.sparkSession
+    val schema = stream.schema
+    def slot(name: String, of: StructType): DataFrame =
+      GraftSql.ofRows(spark, BatchSlot(name, DataTypeUtils.toAttributes(of)))
+    def failed(why: String) = new IllegalArgumentException(s"the per-batch plan of the " +
+      s"sink at $checkpoint must be built without reading the batch (no action, no " +
+      s"statistics): $why")
+    val (plan, jobs) = GraftSql.jobsStartedBy(spark) {
+      try GraftSql.analyzedPlan(perBatch(
+        slot("batch", schema), slot("tag", TagSchema).hint("shuffle_replicate_nl")))
+      catch { case NonFatal(e) => throw failed(e.toString).initCause(e) }
+    }
+    if (jobs > 0) throw failed(s"building it started $jobs Spark jobs")
+    (batch, batchId) => {
+      if (batch.schema != schema)
+        throw new IllegalStateException(s"micro-batch schema ${batch.schema.simpleString} " +
+          s"differs from the stream schema ${schema.simpleString} the sink's plan was built for")
+      val rows = GraftSql.analyzedPlan(batch)
+      GraftSql.ofRows(spark, plan.transformUpWithSubqueries {
+        case BatchSlot("batch", ids) =>
+          Project(rows.output.zip(ids).map { case (b, a) =>
+            Alias(b, a.name)(exprId = a.exprId) }, rows)
+        case BatchSlot("tag", ids) => LocalRelation(ids, Seq(InternalRow(batchId)))
+      })
+    }
+  }
 
   // --------------------------------------------- automatic release
 

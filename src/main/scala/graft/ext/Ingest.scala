@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{SessionArtifact, Tables}
@@ -25,11 +26,21 @@ import graft.SessionArtifact.Pin
   * all verdicts so the stage-overlap is measurable.
   *
   * Scale shape: one probe ([[gateProbe]]) — the arrivals' keys of
-  * every kind in one union, ONE left join against the (kind, key)
-  * index, ONE doc_id-keyed aggregate. Probe work is proportional to
-  * the batch, never |batch| × |base|, and a micro-batch runs the same
-  * small number of jobs whatever the number of verdicts. The keys come
-  * from the Against operators' own expression builders
+  * every kind in one union, each marked owned or not against the
+  * base's (kind, key) set, then ONE doc_id-keyed aggregate. Probe work
+  * is proportional to the batch, never |batch| × |base|, and a
+  * micro-batch runs the same small number of jobs whatever the number
+  * of verdicts. How a key is marked owned depends on the caller:
+  *   - the batch forms ([[gateAgainst]], [[ingestGate]]) left-join the
+  *     [[gateIndex]] frame — a keyed join that scales with the base;
+  *   - the stream ([[gateSink]]) collects the index once at freeze time
+  *     and broadcasts it under the sink's [[Freeze]] scope; each
+  *     trigger looks its keys up in that broadcast set, so no trigger
+  *     collects, hashes or broadcasts the base again. The base's key
+  *     set (about 10 keys per base document) must fit in memory where
+  *     it is collected and on every executor; a base too big for that
+  *     belongs in the batch form.
+  * The keys come from the Against operators' own expression builders
   * ([[Cleaning.canonicalUrl]], [[Dedup.contentHash]], the MinHash
   * banding, [[Corpus.cdcChunksDf]], [[TextAnalysis.qualityScoreCol]]),
   * so the verdicts cannot drift from theirs — IngestSpec asserts them
@@ -69,17 +80,19 @@ object Ingest {
       .union(chunkKeepers.select(lit("chunk"), col("chunk_md5")))
       .distinct()
 
-  /** The per-arrival verdict matrix against a [[gateIndex]], unordered;
-    * see the object scaladoc. Every arrival with non-null text emits
+  /** The per-arrival verdict matrix, unordered; see the object
+    * scaladoc. Every arrival with non-null text emits
     * (doc_id, kind, key, n_tokens) rows — its canonical URL, content
     * hash, 8 band keys, CDC chunks with their token weights, and a
-    * `quality` row when its model score passes — and one left join
-    * marks which keys the base owns. Columns: doc_id, url_dup,
-    * exact_dup, near_dup, cdc_owned_frac, quality_pass, admitted.
-    * The input is read as partitioned (no fan-out): a batch caller
-    * that wants the kernels spread over more cores fans out first.
+    * `quality` row when its model score passes — and `markOwned` adds
+    * the boolean `owned` column: true when the base owns (kind, key),
+    * false or null otherwise (a null key is never owned). Columns:
+    * doc_id, url_dup, exact_dup, near_dup, cdc_owned_frac,
+    * quality_pass, admitted. The input is read as partitioned (no
+    * fan-out): a batch caller that wants the kernels spread over more
+    * cores fans out first.
     */
-  def gateProbe(arrivals: DataFrame, index: DataFrame): DataFrame = {
+  def gateProbe(arrivals: DataFrame, markOwned: DataFrame => DataFrame): DataFrame = {
     def keys(kind: String, rows: DataFrame, key: Column,
              nTokens: Column = lit(0L)): DataFrame =
       rows.select(col("doc_id"), lit(kind).as("kind"), key.as("key"),
@@ -99,7 +112,7 @@ object Ingest {
     def fired(kind: String): Column =
       coalesce(max(col("kind") === kind && owned), lit(false))
     val chunk = col("kind") === "chunk"
-    probe.join(index.withColumn("owned", lit(true)), Seq("kind", "key"), "left")
+    markOwned(probe)
       .groupBy(col("doc_id"))
       .agg(
         fired("url").as("url_dup"),
@@ -115,13 +128,20 @@ object Ingest {
           col("cdc_owned_frac") < 0.5 && col("quality_pass"))
   }
 
+  /** [[gateProbe]]'s owned marking for a [[gateIndex]] frame: one left
+    * join on (kind, key), `owned` null where the base lacks the key.
+    */
+  private def joinedTo(index: DataFrame)(probe: DataFrame): DataFrame =
+    probe.join(index.withColumn("owned", lit(true)), Seq("kind", "key"), "left")
+
   /** The per-arrival verdict matrix against pre-built artifacts, in
-    * doc_id order: [[gateProbe]] over their [[gateIndex]].
+    * doc_id order: [[gateProbe]] joined to their [[gateIndex]].
     */
   def gateAgainst(arrivals: DataFrame,
                   urlKeepers: DataFrame, contentKeepers: DataFrame,
                   bandIndex: DataFrame, chunkKeepers: DataFrame): DataFrame =
-    gateProbe(arrivals, gateIndex(urlKeepers, contentKeepers, bandIndex, chunkKeepers))
+    gateProbe(arrivals,
+      joinedTo(gateIndex(urlKeepers, contentKeepers, bandIndex, chunkKeepers)))
       .orderBy(col("doc_id"))
 
   /** Registered composition: the snapshot/delta split (doc_id % 4 == 0
@@ -133,7 +153,8 @@ object Ingest {
   def ingestGate(spark: SparkSession, d: String): DataFrame = {
     // the arrivals fan out once, so every key kernel runs on all cores
     val arrivals = Tables.documents(spark, d).filter(col("doc_id") % 4 === 0)
-    gateProbe(Tables.fanOut(arrivals), sessionGateIndex(spark, d)).orderBy(col("doc_id"))
+    gateProbe(Tables.fanOut(arrivals), joinedTo(sessionGateIndex(spark, d)))
+      .orderBy(col("doc_id"))
   }
 
   /** The session [[gateIndex]] of the %4 base slice, folded from the
@@ -151,17 +172,38 @@ object Ingest {
         Corpus.sessionBaseChunkKeepers(spark, d))
     }
 
+  /** The base's [[gateIndex]] as a (kind → keys) map, collected once
+    * and broadcast under `scope`, so [[Freeze.release]] destroys it
+    * when the stream stops.
+    */
+  private[ext] def frozenGateKeys(scope: String, baseDocs: DataFrame)
+      : Broadcast[Map[String, Set[String]]] = {
+    val (u, c, b, k) = artifacts(baseDocs)
+    val keys = gateIndex(u, c, b, k).collect()
+      .groupMap(_.getString(0))(_.getString(1)).map { case (kind, ks) => kind -> ks.toSet }
+    Freeze.scopedBroadcast(scope, baseDocs.sparkSession, keys)
+  }
+
+  /** The gate sink's per-batch function: [[gateProbe]] marking each
+    * key owned by a lookup in the broadcast key set. The lookup is a
+    * UDF over the `Broadcast` handle, so the set never enters the plan.
+    */
+  private[ext] def gateBatch(keys: Broadcast[Map[String, Set[String]]])
+                            (arrivals: DataFrame): DataFrame = {
+    val owned = udf((kind: String, key: String) =>
+      key != null && keys.value.get(kind).exists(_.contains(key)))
+    gateProbe(arrivals, _.withColumn("owned", owned(col("kind"), col("key"))))
+  }
+
   /** Streaming form (foreachBatch stage, on [[Freeze.sink]]'s runner):
-    * the base's [[gateIndex]] freezes under the sink's checkpoint scope;
-    * each micro-batch of arrivals appends its verdict matrix tagged
-    * with the batch id.
+    * the base's [[gateIndex]] is collected and broadcast once under the
+    * sink's checkpoint scope; each micro-batch of arrivals appends its
+    * verdict matrix tagged with the batch id.
     */
   def gateSink(docStream: DataFrame, baseDocs: DataFrame,
                outPath: String, checkpoint: String,
                triggerMs: Long = 10000L)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val (u, c, b, k) = artifacts(baseDocs)
-    val index = Freeze.scoped(checkpoint, gateIndex(u, c, b, k))
-    Freeze.sink(docStream, outPath, checkpoint, triggerMs)(gateProbe(_, index))
-  }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    Freeze.sink(docStream, outPath, checkpoint, triggerMs)(
+      gateBatch(frozenGateKeys(checkpoint, baseDocs)))
 }

@@ -2391,8 +2391,8 @@ object Similarity {
 
   /** The beam recurrence over an ALREADY-NARROWED (vec_id, embedding,
     * nrm) frame, a caller-supplied query frame and entry point —
-    * shared by the batch entry points and [[graphAnnServeSink]] (one
-    * kernel, two call shapes, so serve and batch cannot drift).
+    * shared by the batch entry points and [[graphAnnServeOnce]], the
+    * reference the serve sinks' [[graphAnnBeamPlan]] is tested against.
     * Driver state is bounded at |queries| × beamWidth × KnnK rows per
     * round (SURVEY §8.3 recurrence inventory).
     */
@@ -2495,18 +2495,15 @@ object Similarity {
     * kNN edge table, both directions) and the narrow corpus embedding
     * frame are FROZEN once at sink construction, plus the
     * deterministic entry point (minimum corpus vec_id); each
-    * micro-batch of arriving QUERY vectors runs the identical
-    * [[graphAnnCore]] beam recurrence against the snapshot and appends
-    * its top-k tagged with the batch id. Arriving queries are
+    * micro-batch of arriving QUERY vectors runs the beam recurrence
+    * against the snapshot as one plan ([[graphAnnBeamPlan]]) and
+    * appends its top-k tagged with the batch id. Arriving queries are
     * EXTERNAL — no self-exclusion (an identical corpus vector is the
     * ideal neighbor, the annServeSink contract). Per-query results
     * depend only on the query and the frozen graph, so per-batch
     * outputs union to the one-shot serve-mode result on the same
-    * queries (asserted in StreamingSpec). Driver state per trigger is
-    * |batch| × beamWidth × KnnK rows — the documented recurrence
-    * bound, now batch-sized; at real query volumes the batch itself
-    * is the shard unit. Release the pinned frames after the stream
-    * stops with `Freeze.release(checkpoint)`.
+    * queries (asserted in StreamingSpec). Release the pinned frames
+    * after the stream stops with `Freeze.release(checkpoint)`.
     */
   def graphAnnServeSink(queryStream: DataFrame, baseEmb: DataFrame,
                         outPath: String, checkpoint: String,
@@ -2525,12 +2522,11 @@ object Similarity {
   /** [[graphAnnServeSink]] over EXPLICIT pre-built serve state — the
     * [[bucketedAnnState]] consumer for a LONG-LIVED serving stream:
     * the bucketed on-disk snapshot replaces the session-frozen
-    * localCheckpoints (nothing to pin or release; the In-filter
-    * gathers prune to the candidates' buckets on every trigger — the
-    * 100 TB shape, where the snapshot outlives any one driver).
-    * Same [[graphAnnCore]] recurrence, so per-batch outputs union to
-    * [[graphAnnServeOnceOn]] on the same queries (StreamingSpec
-    * parity). `entry` pins the snapshot's entry point (derive it once
+    * localCheckpoints (nothing to pin or release; the snapshot
+    * outlives any one session). Same [[graphAnnBeamPlan]], so
+    * per-batch outputs union to [[graphAnnServeOnceOn]] on the same
+    * queries (StreamingSpec parity); each round joins the snapshot
+    * tables whole, without bucket pruning. `entry` pins the snapshot's entry point (derive it once
     * at snapshot build with `min(vec_id)`).
     */
   def graphAnnServeSinkOn(queryStream: DataFrame, emb: DataFrame,
@@ -2552,9 +2548,50 @@ object Similarity {
       val queries = batch.filter(col("embedding").isNotNull)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
           norm(col("embedding")).as("q_nrm"))
-      graphAnnCore(emb, edges, queries, entry, k, beamWidth, rounds,
-        excludeSelf = false)
+      graphAnnBeamPlan(emb, edges, queries, entry, k, beamWidth, rounds)
     }
+
+  /** [[graphAnnCore]]'s beam recurrence without self-exclusion, as ONE
+    * plan over the query frame — the serve sinks' form, since a sink's
+    * per-batch plan is built once per query and cannot collect its
+    * batch. Round r keeps the beam (the top `beamWidth` visited nodes
+    * per query under (score DESC, id ASC)) and derives the next one
+    * from it alone: top-W(visited ∪ new) = top-W(beam ∪ new), and a
+    * node seen before scores the same again, so each round is the
+    * beam joined to its out-edges, its nodes and their neighbors
+    * scored, and the top W kept — one reference to the previous round,
+    * so the plan grows linearly in `rounds`. The answer is the top k
+    * of the last beam (k ≤ beamWidth). Same score expression and tie
+    * order as [[graphAnnCore]]; StreamingSpec asserts the sink equal
+    * to [[graphAnnServeOnce]]. Each round joins the whole edge and
+    * embedding frames instead of [[graphAnnCore]]'s candidate
+    * In-filters, so over [[bucketedAnnState]] tables a trigger no
+    * longer prunes to the candidates' buckets.
+    */
+  private def graphAnnBeamPlan(emb: DataFrame, edges: DataFrame, queries: DataFrame,
+                               entry: Long, k: Int, beamWidth: Int,
+                               rounds: Int): DataFrame = {
+    require(k <= beamWidth, s"k=$k must fit in the beam (width $beamWidth)")
+    val best = Window.partitionBy(col("query_id")).orderBy(col("micro").desc, col("vec_id"))
+    def scoredTop(cands: DataFrame, n: Int): DataFrame =
+      cands.join(queries, Seq("query_id")).join(emb, Seq("vec_id"))
+        .select(col("query_id"), col("vec_id"),
+          floor(round(dot(col("q_emb"), col("embedding")) /
+            (col("q_nrm") * col("nrm")), 6) * lit(1e6) + lit(0.5)).cast("long")
+            .as("micro"))
+        .withColumn("rk", row_number().over(best))
+        .filter(col("rk") <= n)
+    val out = edges.select(col("src").as("vec_id"), col("dst"))
+    val start = queries.select(col("query_id"), lit(entry).as("vec_id"))
+    val beam = (1 to rounds).foldLeft(scoredTop(start, beamWidth)) { (b, _) =>
+      scoredTop(b.join(out, Seq("vec_id"), "left")
+        .select(col("query_id"), explode(array(col("vec_id"), col("dst"))).as("vec_id"))
+        .filter(col("vec_id").isNotNull).distinct(), beamWidth)
+    }
+    beam.filter(col("rk") <= k)
+      .select(col("query_id"), col("rk"),
+        col("vec_id").as("neighbor_id"), (col("micro") / lit(1e6)).as("cos_sim_r"))
+  }
 
   /** One-shot serve-mode parity reference for [[graphAnnServeSink]]
     * (external queries, no self-exclusion) — what the union of the

@@ -36,7 +36,7 @@ object StreamingStats {
     * the tag's local rows at optimization), so neither per-batch value
     * is a literal in generated code.
     */
-  private def tagged(batch: DataFrame, tag: DataFrame): DataFrame = {
+  private[graft] def tagged(batch: DataFrame, tag: DataFrame): DataFrame = {
     val withLen = batch.select(col("domain"), length(col("content")).cast("long").as("len"))
     val stats = withLen
       .groupBy(col("domain"))

@@ -44,6 +44,42 @@ object GraftSql {
       case _ => None
     }
 
+  /** Run `body` on this thread and count the Spark jobs it started.
+    * Jobs are recognised by a local property set for the call, so jobs
+    * that other threads start meanwhile are not counted; the count is
+    * read after the listener bus has delivered every event posted so
+    * far.
+    */
+  def jobsStartedBy[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.jobsStartedBy"
+    val token = java.util.UUID.randomUUID.toString
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == token)) started.incrementAndGet()
+    }
+    val outer = sc.getLocalProperty(key)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, token)
+    try {
+      val result = body
+      sc.listenerBus.waitUntilEmpty()
+      (result, started.get)
+    } finally {
+      sc.setLocalProperty(key, outer)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The id of the RDD holding a persisted frame's cached blocks, if
+    * the frame is in the session's cache.
+    */
+  def cachedRddId(df: DataFrame): Option[Int] =
+    df.sparkSession.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id)
+
   /** The same frame minus a TOP-LEVEL global Sort, if one is present.
     *
     * Batch entry points end with a presentation `orderBy`; reused

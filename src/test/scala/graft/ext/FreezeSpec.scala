@@ -39,6 +39,22 @@ class FreezeSpec extends SparkTestBase {
     assert(!Freeze.pinnedScopes.contains("/tmp/freeze-spec-scope"))
   }
 
+  test("a scope reports its pins' bytes; release unpersists its frames and destroys its broadcasts") {
+    import spark.implicits._
+    val scope = "/tmp/freeze-spec-bytes"
+    val before = spark.sparkContext.getPersistentRDDs.size
+    Freeze.scoped(scope, (1 to 1000).toDF("v"))
+    val shared = Freeze.scopedBroadcast(scope, spark, (1 to 1000).map(_.toString).toSet)
+    val pins = Freeze.pins(scope)
+    assert(pins.map(_.getClass) == Seq(classOf[Freeze.BroadcastPin], classOf[Freeze.FramePin]))
+    assert(pins.forall(_.bytes > 0), s"every pin holds bytes: ${pins.map(_.bytes)}")
+    assert(Freeze.pinnedBytes(Freeze.normalizeScope(scope)) == pins.map(_.bytes).sum)
+    Freeze.release(scope)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assert(Freeze.pins(scope).isEmpty && !Freeze.pinnedBytes.contains(Freeze.normalizeScope(scope)))
+    intercept[org.apache.spark.SparkException](shared.value)
+  }
+
   test("GraftSql.unordered strips exactly the top-level presentation sort") {
     import spark.implicits._
     val df = Seq((3L, "c"), (1L, "a"), (2L, "b")).toDF("id", "s")

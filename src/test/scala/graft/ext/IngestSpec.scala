@@ -53,8 +53,12 @@ class IngestSpec extends SparkTestBase {
     val query = Ingest.gateSink(
       input.toDF().toDF("doc_id", "text", "source"), base, out, ckpt,
       triggerMs = 50L).start()
-    assert(spark.sparkContext.getPersistentRDDs.size == pinnedBefore + 1,
-      "the four artifacts must pin as one gate index under the sink scope")
+    assert(spark.sparkContext.getPersistentRDDs.size == pinnedBefore,
+      "the gate index must not stay in the RDD cache: it is broadcast once")
+    val shared = Freeze.pins(ckpt) match {
+      case Seq(Freeze.BroadcastPin(b, bytes)) => assert(bytes > 0); b
+      case other => fail(s"the four artifacts must pin as ONE broadcast index under the sink scope: $other")
+    }
     try {
       input.addData(arrivals: _*)
       query.processAllAvailable()
@@ -80,9 +84,12 @@ class IngestSpec extends SparkTestBase {
     // ONE scope, one lifecycle: termination auto-releases the gate
     // index (async event — bounded wait for the drain)
     val deadline = System.currentTimeMillis + 20000
-    while (spark.sparkContext.getPersistentRDDs.size != pinnedBefore &&
+    while (Freeze.pinnedScopes.contains(Freeze.normalizeScope(ckpt)) &&
            System.currentTimeMillis < deadline) Thread.sleep(50)
-    assert(spark.sparkContext.getPersistentRDDs.size == pinnedBefore,
+    assert(Freeze.pins(ckpt).isEmpty && !Freeze.pinnedScopes.contains(Freeze.normalizeScope(ckpt)),
       "stream stop must release every artifact of the gate's scope")
+    assert(spark.sparkContext.getPersistentRDDs.size == pinnedBefore)
+    val destroyed = intercept[org.apache.spark.SparkException](shared.value)
+    assert(destroyed.getMessage.contains("destroyed"), destroyed.getMessage)
   }
 }
