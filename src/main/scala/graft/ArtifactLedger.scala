@@ -55,5 +55,22 @@ object ArtifactLedger {
     m
   }
 
-  def reset(): Unit = builds.clear()
+  private val failedStores =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Record that artifact `name` could not be written to the
+    * [[graft.storage.ArtifactStore]]; the session serves its pinned
+    * build regardless, so this record is the only trace of the miss
+    * later sessions will pay again.
+    */
+  def storeFailed(name: String, message: String): Unit =
+    failedStores.put(name, message): Unit
+
+  /** Artifact-name → message of the last failed store write. */
+  def storeFailures: Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    failedStores.asScala.toMap
+  }
+
+  def reset(): Unit = { builds.clear(); failedStores.clear() }
 }

@@ -147,10 +147,19 @@ object Bench {
       tried.collect { case (n, scala.util.Failure(e)) => n -> String.valueOf(e.getMessage) })
   }
 
-  /** The ledger's `failed` member, trailing comma included. */
-  private def failedJson(failed: Seq[(String, String)]): String =
-    failed.map { case (n, m) => s"${Verify.jsonString(n)}:${Verify.jsonString(m)}" }
-      .mkString("\"failed\":{", ",", "},")
+  /** A ledger member mapping names to messages, trailing comma
+    * included: `failed` (query → message) and `artifact_store_failures`
+    * (artifact → message of a store write that failed; the artifact
+    * was served from its pin).
+    */
+  private def messagesJson(member: String, m: Seq[(String, String)]): String =
+    m.map { case (n, msg) => s"${Verify.jsonString(n)}:${Verify.jsonString(msg)}" }
+      .mkString(s""""$member":{""", ",", "},")
+
+  private def failedJson(failed: Seq[(String, String)]): String = messagesJson("failed", failed)
+
+  private def storeFailuresJson: String =
+    messagesJson("artifact_store_failures", ArtifactLedger.storeFailures.toSeq.sorted)
 
   /** Name every failed query on stderr and exit non-zero (after the
     * ledger is written and the session stopped).
@@ -178,6 +187,7 @@ object Bench {
       s""""artifact_rebuild_sec":${builds.map(_._2).sum},""" +
       s""""artifact_rebuilds":${fmtMap(builds)},""" +
       s""""artifact_store":${graft.storage.ArtifactStore.enabled},""" +
+      storeFailuresJson +
       s""""idle_gate":"$idleGate",${loadJson("load_before", loadBefore)},""" +
       s"""${loadJson("load_after", loadAvg())},"sf":"$sfDir"}"""
     println(json)
@@ -238,6 +248,7 @@ object Bench {
       s""""artifact_builds":${fmtMap(builds)},""" +
       s""""artifact_total_sec":$artifactTotal,""" +
       s""""artifact_store":${graft.storage.ArtifactStore.enabled},""" +
+      storeFailuresJson +
       s""""idle_gate":"$idleGate",${loadJson("load_before", loadBefore)},""" +
       s"""${loadJson("load_after", loadAvg())},""" +
       s""""ref_prices_loaded":${ref.size},"sf":"$sfDir"}"""

@@ -121,13 +121,50 @@ object SessionArtifact {
     }
   }
 
-  /** The one read-through-and-pin path of every frame artifact: load
-    * `store` from the [[graft.storage.ArtifactStore]] (or build and
-    * persist it there), then pin it.
+  /** The one read-through-and-pin path of every frame artifact,
+    * stored under `store` for corpus `d`:
+    *  - hit: pin the [[graft.storage.ArtifactStore]]'s copy;
+    *  - miss: pin the build, write the pinned frame to the store, and
+    *    serve it spread ([[spread]]). The build's lineage runs once and
+    *    nothing is read back; a failed write is recorded in the
+    *    [[ArtifactLedger]] and the pinned frame is served regardless.
+    * With the store off, every call is a miss that writes nothing.
     */
   private[graft] def stored(spark: SparkSession, store: String, d: String, pin: Pin)
                            (build: => DataFrame): DataFrame =
-    pin(graft.storage.ArtifactStore.cachedFrame(spark, store, d)(build))
+    storedAt(spark, store, graft.storage.ArtifactStore.location(store, d), pin)(build)
+
+  /** [[stored]] at an explicit store location (None: the store is off). */
+  private[graft] def storedAt(spark: SparkSession, store: String, at: Option[java.io.File],
+                              pin: Pin)(build: => DataFrame): DataFrame =
+    at.flatMap(graft.storage.ArtifactStore.load(spark, _)) match {
+      case Some(scan) => pin(scan)
+      case None =>
+        val pinned = pin(build)
+        at.foreach(graft.storage.ArtifactStore.save(pinned, store, _))
+        spread(pinned, pin)
+    }
+
+  /** A pinned build with fewer partitions than the session's
+    * parallelism, re-pinned at that parallelism (the old pin released):
+    * a store hit serves at least that many partitions
+    * ([[graft.storage.ArtifactStore.load]]), and a miss must serve its
+    * consumers the same width. The partition count of a pinned frame is
+    * known without a job, so a build already fanned out (a corpus-sized
+    * one at scale) passes through with no exchange. A keyed pin keeps
+    * the layout its key established.
+    */
+  private def spread(pinned: DataFrame, pin: Pin): DataFrame = pin match {
+    case _: Pin.KeyedBy => pinned
+    case _ =>
+      val target = pinned.sparkSession.sparkContext.defaultParallelism
+      if (pinned.rdd.getNumPartitions >= target) pinned
+      else {
+        val wide = pin(pinned.repartition(target))
+        SessionCaches.releaseFrame(pinned)
+        wide
+      }
+  }
 
   /** A parameter-free frame, stored under its ledger name — or, with
     * `inStore = false`, pinned straight from the build (for a frame

@@ -1,16 +1,44 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * Each loader is a plain parquet scan: column pruning and predicate
   * pushdown happen in Catalyst based on what the query selects, so the
   * scan reads only the needed columns/row-groups at any scale.
+  *
+  * Each table's schema is inferred once: inferring it is a Spark job
+  * that reads a parquet footer, and the loaders have hundreds of call
+  * sites (a cold document pipeline inferred `documents` 11 times).
+  * The first read infers; later reads pass the known schema, which
+  * starts no job. The memo is the `table_schema` [[SessionArtifact]],
+  * keyed on
+  *  - the session, and the session's parquet confs (every conf whose
+  *    name mentions parquet): inference reads them, e.g.
+  *    `spark.sql.legacy.parquet.nanosAsLong` decides whether a
+  *    TIMESTAMP(NANOS) column is a long or an error;
+  *  - the table's path and the length and mtime of every file under it
+  *    ([[graft.storage.ArtifactStore.fingerprint]]), so a table
+  *    rewritten in place is inferred again, whether it is one file or
+  *    a directory of part files.
+  * Known limit, as for the store: the fingerprint stats local files
+  * only, so a remote URI keys on its path alone and a remote table
+  * rewritten within one session keeps its first schema.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private val schemas =
+    SessionArtifact.value[(String, Map[String, String]), StructType]("table_schema") {
+      (spark, path, _) => spark.read.parquet(path).schema
+    }
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val parquetConfs = spark.conf.getAll.filter(_._1.contains("parquet"))
+    val schema = schemas(spark, path, (graft.storage.ArtifactStore.fingerprint(path), parquetConfs))
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(spark: SparkSession, d: String): DataFrame    = table(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame    = table(spark, d, "nation")

@@ -29,6 +29,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * its copy -- readers only ever see a complete directory (parquet
   * `_SUCCESS` guarded).
   *
+  * The store holds a copy of what the session pinned: on a miss,
+  * [[graft.SessionArtifact]] pins the build first and then writes the
+  * pinned frame ([[save]]), so the build's lineage runs once and
+  * nothing is read back. The first session therefore consumes its
+  * pinned build and later sessions consume the stored copy
+  * ([[load]]); the registry's cold-contract spec
+  * (`SessionArtifactSpec`) proves the two bit-equal for every
+  * declared artifact.
+  *
   * Scope: only artifacts that are parameter-free functions of the
   * corpus dir go through here (the session caches' own keying). The
   * store is ON by default; `SPARK_GRAFT_ARTIFACT_STORE=0` disables it
@@ -57,20 +66,20 @@ object ArtifactStore {
     * a corpus laid out as Spark-style parquet directories (part files
     * under per-table subdirs) must fingerprint its leaf files, or a
     * content change inside a subdirectory would silently serve stale
-    * artifacts. Missing/empty dirs fingerprint to a constant (they
-    * still key deterministically).
+    * artifacts. A plain file fingerprints by its own length and mtime
+    * (a single-file table, as [[graft.Tables]] keys its schema memo).
+    * Missing/empty dirs fingerprint to a constant (they still key
+    * deterministically).
     */
   def fingerprint(dir: String): String = {
     val d = new File(dir)
     val rows = scala.collection.mutable.ArrayBuffer.empty[String]
+    def stamp(f: File): Unit =
+      rows += (f.getPath.stripPrefix(d.getPath) + "|" + f.length + "|" + f.lastModified)
     def walk(f: File): Unit =
       Option(f.listFiles()).getOrElse(Array.empty[File])
-        .sortBy(_.getName).foreach { k =>
-          if (k.isDirectory) walk(k)
-          else rows += (k.getPath.stripPrefix(d.getPath) + "|" + k.length +
-            "|" + k.lastModified)
-        }
-    walk(d)
+        .sortBy(_.getName).foreach(k => if (k.isDirectory) walk(k) else stamp(k))
+    if (d.isFile) stamp(d) else walk(d)
     md5hex(rows.sorted.mkString("\n"))
   }
 
@@ -128,44 +137,22 @@ object ArtifactStore {
       md5hex(sb.toString)
     } catch { case scala.util.control.NonFatal(_) => "nocode" }
 
-  private def artifactPath(name: String, dir: String): File =
-    new File(new File(root, name),
-      "fp-" + md5hex(codeStamp + "|" + fingerprint(dir)))
+  /** Where artifact `name` of corpus `dir` is stored, or None while the
+    * store is off.
+    */
+  private[graft] def location(name: String, dir: String): Option[File] =
+    if (enabled)
+      Some(new File(new File(root, name), "fp-" + md5hex(codeStamp + "|" + fingerprint(dir))))
+    else None
 
   private def isComplete(path: File): Boolean =
     new File(path, "_SUCCESS").isFile
 
-  /** Read-through cache: if `<root>/<name>/fp-<key>` holds a complete
-    * parquet write, return a scan of it; otherwise run `build`,
-    * persist its result, and return a scan of the persisted copy (so
-    * first and later sessions consume the identical physical
-    * artifact). Any store failure falls back to the plain built
-    * frame -- persistence is an optimization, never a correctness
-    * dependency.
-    */
-  def cachedFrame(spark: SparkSession, name: String, dir: String)
-                 (build: => DataFrame): DataFrame = {
-    if (!enabled) return build
-    val path = artifactPath(name, dir)
-    if (isComplete(path)) return load(spark, path)
-    val df = build
-    try {
-      val tmp = new File(path.getParent,
-        ".tmp-" + ProcessHandle.current().pid() + "-" + System.nanoTime())
-      Files.createDirectories(Paths.get(path.getParent))
-      df.write.mode("overwrite").parquet(tmp.getPath)
-      if (!tmp.renameTo(path)) deleteRecursively(tmp) // lost a writer race
-      prune(path.getParentFile, keep = 8)
-      if (isComplete(path)) load(spark, path) else df
-    } catch {
-      case scala.util.control.NonFatal(_) => df
-    }
-  }
-
-  /** Load with the session's parallelism RESTORED: a small artifact's
-    * files pack into 1-2 scan partitions (the 4 MB file-open cost
-    * folds dozens of small files per split), and since every call
-    * site immediately checkpoints/persists the result, that collapsed
+  /** A scan of the artifact stored at `path`, if a complete write is
+    * there, with the session's parallelism RESTORED: a small
+    * artifact's files pack into 1-2 scan partitions (the 4 MB
+    * file-open cost folds dozens of small files per split), and since
+    * every caller immediately pins the result, that collapsed
     * partitioning would ride into EVERY consumer's narrow pre-shuffle
     * work -- measured as a uniform ~2x on the LM family's per-position
     * hash kernels when this path first landed without the
@@ -173,11 +160,41 @@ object ArtifactStore {
     * already at session parallelism passes through untouched (at real
     * scale files are split-sized and this branch never fires).
     */
-  private def load(spark: SparkSession, path: File): DataFrame = {
-    val df = spark.read.parquet(path.getPath)
-    val target = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
+  private[graft] def load(spark: SparkSession, path: File): Option[DataFrame] =
+    if (!isComplete(path)) None
+    else {
+      val df = spark.read.parquet(path.getPath)
+      val target = spark.sparkContext.defaultParallelism
+      Some(if (df.rdd.getNumPartitions < target) df.repartition(target) else df)
+    }
+
+  /** Write `df` (a pinned frame, so the write reads memory, not the
+    * build's lineage) to `path` for later sessions: into a
+    * process-unique temp dir, then RENAME into place, then prune. A
+    * lost writer race is no failure -- the winner's copy is complete.
+    * Any other failure is recorded by artifact `name` in
+    * [[graft.ArtifactLedger.storeFailures]] and on stderr, never
+    * thrown: the caller keeps serving its pinned frame, so
+    * persistence stays an optimization, not a correctness dependency.
+    */
+  private[graft] def save(df: DataFrame, name: String, path: File): Unit =
+    try {
+      val tmp = new File(path.getParent,
+        ".tmp-" + ProcessHandle.current().pid() + "-" + System.nanoTime())
+      Files.createDirectories(Paths.get(path.getParent))
+      df.write.mode("overwrite").parquet(tmp.getPath)
+      if (!tmp.renameTo(path)) {
+        deleteRecursively(tmp)
+        if (!isComplete(path))
+          throw new java.io.IOException(s"could not rename $tmp to $path")
+      }
+      prune(path.getParentFile, keep = 8)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        val message = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+        graft.ArtifactLedger.storeFailed(name, message)
+        System.err.println(s"ArtifactStore: could not store $name at $path: $message")
+    }
 
   /** Minimum age (ms since last modification) before a superseded
     * fp-dir may be pruned. The within-process safety argument (call
@@ -195,8 +212,8 @@ object ArtifactStore {
     * (stale code stamps and superseded corpora) — but never a dir
     * modified within [[PruneGraceMs]], so a concurrent session that
     * saw `isComplete` and is still reading cannot lose files under
-    * it. Within one process the call sites additionally eagerly
-    * checkpoint/persist the returned scan before handing it out.
+    * it. Within one process the caller additionally pins the loaded
+    * scan before handing it out.
     */
   private[storage] def prune(nameDir: File, keep: Int,
                              nowMs: Long = System.currentTimeMillis()): Unit = {

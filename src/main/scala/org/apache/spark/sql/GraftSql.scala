@@ -186,10 +186,18 @@ object GraftSql {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     val cap = spark.sessionState.conf.numShufflePartitions
     // pass 1: pin the rows once (the frame was about to be checkpointed
-    // anyway) and learn the size, so the keyed shuffle below reads
-    // memory and the partition count can be derived from the data
-    val scratch = df.localCheckpoint()
-    val rows = scratch.count()
+    // anyway) and learn the size in the same job, so the keyed shuffle
+    // below reads memory and the partition count can be derived from
+    // the data. This is Dataset.localCheckpoint(eager = true) spelled
+    // out: its materializing count IS the row count, where a separate
+    // `count()` of the checkpoint would start two more jobs under AQE.
+    val in = df.queryExecution
+    val pinned = in.toRdd.map(_.copy())
+    pinned.localCheckpoint()
+    val rows = pinned.count()
+    val scratch = classic.Dataset.ofRows(spark,
+      execution.LogicalRDD(in.analyzed.output, pinned)(
+        spark, Some(in.optimizedPlan.stats), None))
     // an EMPTY frame cannot be stamped: AQE collapses its repartition
     // to a 0-partition empty relation, so there is no physical layout
     // to declare (the SCC peel's last live subgraph hits this). The

@@ -163,7 +163,8 @@ class SessionArtifactSpec extends SparkTestBase {
     "base_chunk_keepers" -> "q_cdc_incremental",
     "dsir_weights" -> "q_dsir_weights",
     "base_splits" -> "q_split_inheritance",
-    "base_gate_index" -> "q_ingest_gate")
+    "base_gate_index" -> "q_ingest_gate",
+    "table_schema" -> "q_pagerank")
 
   /** The RDD a pinned frame holds in the block manager: the checkpoint
     * RDD of a checkpointed frame, the column-buffer RDD of a persisted

@@ -60,6 +60,18 @@ class KeyedCheckpointSpec extends SparkTestBase {
     releaseCheckpoint(e); releaseCheckpoint(s)
   }
 
+  test("a keyed checkpoint of a checkpointed frame runs the pin, the exchange and the stamp only") {
+    // one job pins the rows and counts them (the count that sizes the
+    // layout rides the pin's own materializing pass); under AQE the
+    // keyed exchange is a job of its own, and one more materializes
+    // the stamped checkpoint
+    val input = edgesDf.localCheckpoint()
+    val (e, jobs) = GraftSql.jobsStartedBy(spark)(GraftSql.localCheckpointKeyedBy(input, Seq("src")))
+    assert(jobs == 3, s"keyed checkpoint started $jobs jobs")
+    assert(e.count() == 20000L)
+    releaseCheckpoint(e); releaseCheckpoint(input)
+  }
+
   test("an empty frame checkpoints without a stamp instead of refusing") {
     // the SCC peel's last live subgraph is empty; AQE collapses its
     // repartition to a 0-partition relation, so there is no layout to
