@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{SessionArtifact, Tables}
+import graft.{Fixpoint, SessionArtifact, Tables}
 import graft.SessionArtifact.Pin
 
 /** Link-graph analytics over the crawl frontier.
@@ -41,8 +41,9 @@ import graft.SessionArtifact.Pin
   *  - Degrees: one aggregation over the unpivoted edge stream — the
   *    corpus-sized edge subtree appears exactly once in the plan
   *    (structural, not reuse-dependent; asserted in GraphSpec).
-  *  - PageRank iterations: the edge table and each iteration's rank
-  *    table are materialized via eager `localCheckpoint` — the GraphX
+  *  - PageRank iterations: the edge table is materialized via eager
+  *    `localCheckpoint`, and each iteration is one [[graft.Fixpoint]]
+  *    round (checkpointed, the previous round released) — the GraphX
   *    lineage-truncation discipline for iterative graph algorithms.
   *    Without it, iteration i references iteration i-1 three times
   *    (contributions, dangling mass, carry-through) and the lazy plan
@@ -205,7 +206,7 @@ object Graph {
       rankServeStateOn(
         Tables.fanOut(Tables.documents(spark, d)),
         sessionEdges(spark, d),
-        col("source") === lit("src0"), RankIters, ownEdges = false)
+        col("source") === lit("src0"), RankIters)
     }
 
   /** Per-node degree table over the full frontier: (doc_id, out_deg,
@@ -342,18 +343,9 @@ object Graph {
     *             + snap(0.85 · (inflow(v) + s(v) · snap(dang / |S|)))
     * }}}
     */
-  /** Checkpointed edges + the seeded initial state — shared by
-    * [[rankLoop]] and [[pagerankConvergenceDf]] so the r0 definition
+  /** The seeded r0 over an already-checkpointed edge table — shared by
+    * the rank loops and [[pagerankConvergenceDf]] so the r0 definition
     * cannot drift between the ranks and the audit of those ranks.
-    */
-  private def rankInit(docs: DataFrame, seed: Column): (DataFrame, DataFrame) = {
-    val edges = linkEdgesDf(docs).localCheckpoint()
-    (edges, rankSeedState(docs, edges, seed))
-  }
-
-  /** The seeded r0 over an already-checkpointed edge table — split out
-    * of [[rankInit]] so [[rankServeState]] can run BOTH its loops over
-    * ONE edge derivation (the corpus-sized half of the job).
     */
   private def rankSeedState(docs: DataFrame, edges: DataFrame,
                             seed: Column): DataFrame =
@@ -431,20 +423,9 @@ object Graph {
   }
 
   private def rankLoopStateOn(docs: DataFrame, edges: DataFrame,
-                              seed: Column, iters: Int): DataFrame = {
-    require(iters >= 1, s"rank loop needs >= 1 iteration, got $iters")
-    var ranks = rankSeedState(docs, edges, seed)
-    for (_ <- 1 to iters) {
-      val next = rankStep(ranks, edges).localCheckpoint()
-      // round k-1's state is dead once round k is materialized —
-      // release it NOW (deterministic), not whenever the ContextCleaner
-      // notices the weak ref: at frontier scale each round pins a full
-      // per-node table and a long session would hold iters copies
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(ranks)
-      ranks = next
-    }
-    ranks
-  }
+                              seed: Column, iters: Int): DataFrame =
+    Fixpoint.iterate(rankSeedState(docs, edges, seed), iters)(
+      rankStep(_, edges))(Fixpoint.Never)
 
   /** The SERVING artifact of the rank family: the FULL per-node
     * (doc_id, rank_nano, trust_nano) table — vanilla PageRank plus the
@@ -466,20 +447,19 @@ object Graph {
     */
   private[ext] def rankServeState(docs: DataFrame, trustSeed: Column,
                                   iters: Int = RankIters)
-      : (DataFrame, Seq[DataFrame]) =
-    rankServeStateOn(docs, linkEdgesDf(docs).localCheckpoint(), trustSeed,
-      iters, ownEdges = true)
+      : (DataFrame, Seq[DataFrame]) = {
+    val edges = linkEdgesDf(docs).localCheckpoint()
+    val (serve, backing) = rankServeStateOn(docs, edges, trustSeed, iters)
+    (serve, backing :+ edges)
+  }
 
-  /** The fused loop over an ALREADY-CHECKPOINTED edge table; with
-    * `ownEdges = false` (the [[sessionEdges]] path) the shared table
-    * is NOT part of the returned backing, so release-bearing callers
-    * cannot free it.
+  /** The fused loop over an ALREADY-CHECKPOINTED edge table. The
+    * returned backing is the converged state only: the edge table
+    * belongs to the caller (the [[sessionEdges]] pin is shared).
     */
   private def rankServeStateOn(docs: DataFrame, edges: DataFrame,
-                               trustSeed: Column, iters: Int,
-                               ownEdges: Boolean)
+                               trustSeed: Column, iters: Int)
       : (DataFrame, Seq[DataFrame]) = {
-    require(iters >= 1, s"rank loop needs >= 1 iteration, got $iters")
     // FUSED dual recurrence: the vanilla and the seeded rank ride ONE
     // state frame — one edge join, one dangling aggregate, one
     // checkpoint per round instead of two of each. Per column the
@@ -506,7 +486,7 @@ object Graph {
             "rankServeState: the trust seed set is empty — no document " +
               "matches the seed predicate, every trust rank would be 0/0"))
             .cast("long")).as("cn_t"))
-    var st = docs.select(col("doc_id"),
+    val st0 = docs.select(col("doc_id"),
         when(trustSeed, lit(1L)).otherwise(lit(0L)).as("s_t"))
       .join(outDeg.withColumnRenamed("src", "doc_id"), Seq("doc_id"), "left")
       .crossJoin(broadcast(counts))
@@ -515,8 +495,7 @@ object Graph {
         col("cn_all").as("n_all"), col("cn_t").as("n_trust"),
         snap(lit(Unit) / col("cn_all")).as("rank_nano"),
         (col("s_t") * snap(lit(Unit) / col("cn_t"))).as("trust_nano"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
+    val last = Fixpoint.iterate(st0.localCheckpoint(), iters) { st =>
       val contribs = st.filter(col("out_deg") > 0)
         .select(col("doc_id").as("src"),
           snap(col("rank_nano").cast("double") / col("out_deg")).as("cp"),
@@ -529,7 +508,7 @@ object Graph {
           .as("dang_p"),
         coalesce(sum(when(col("out_deg") === 0, col("trust_nano"))), lit(0L))
           .as("dang_t"))
-      val next = st.select(col("doc_id"), col("s_t"), col("out_deg"),
+      st.select(col("doc_id"), col("s_t"), col("out_deg"),
           col("n_all"), col("n_trust"))
         .join(contribs, Seq("doc_id"), "left")
         .crossJoin(dang)
@@ -545,12 +524,8 @@ object Graph {
               (coalesce(col("inflow_t"), lit(0L)) +
                 col("s_t") * snap(col("dang_t").cast("double") / col("n_trust")))
                 .cast("double"))).as("trust_nano"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(st)
-      st = next
-    }
-    val serve = st.select(col("doc_id"), col("rank_nano"), col("trust_nano"))
-    (serve, if (ownEdges) Seq(st, edges) else Seq(st))
+    }(Fixpoint.Never)
+    (last.select(col("doc_id"), col("rank_nano"), col("trust_nano")), Seq(last))
   }
 
   /** CRAWL-PRIORITY scoring against a frozen rank/trust table — the
@@ -698,23 +673,26 @@ object Graph {
 
   def pagerankConvergenceDf(spark: SparkSession, docs: DataFrame,
                             iters: Int = RankIters): DataFrame = {
-    require(iters >= 1, s"convergence audit needs >= 1 iteration, got $iters")
-    val (edges, r0) = rankInit(docs, lit(true))
-    var ranks = r0
-    val deltas = (1 to iters).map { k =>
-      val next = rankStep(ranks, edges).localCheckpoint()
+    val edges = linkEdgesDf(docs).localCheckpoint()
+    // the per-round movement IS the probe: it reads both rounds, so it
+    // runs before the operator releases the older one
+    val deltas = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    val last = Fixpoint.iterate(rankSeedState(docs, edges, lit(true)), iters)(
+        rankStep(_, edges)) { (ranks, next) =>
       val d = next.select(col("doc_id"), col("rank_nano").as("r_new"))
         .join(ranks.select(col("doc_id"), col("rank_nano").as("r_old")),
           Seq("doc_id"))
         .agg(sum(abs(col("r_new") - col("r_old"))).as("l1"),
           max(abs(col("r_new") - col("r_old"))).as("mx")).head()
-      // the delta head() was round k-1's last reader
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(ranks)
-      ranks = next
-      (k.toLong, d.getLong(0), d.getLong(1))
+      deltas += ((deltas.size + 1L, d.getLong(0), d.getLong(1)))
+      false
     }
+    // the result is built on the driver from the collected deltas: the
+    // edge table and the final ranks have no reader left
+    org.apache.spark.sql.GraftSql.releaseCheckpoint(last)
+    org.apache.spark.sql.GraftSql.releaseCheckpoint(edges)
     import spark.implicits._
-    deltas.toDF("iter", "l1_delta_nano", "max_delta_nano").orderBy(col("iter"))
+    deltas.toSeq.toDF("iter", "l1_delta_nano", "max_delta_nano").orderBy(col("iter"))
   }
 
   /** Base-corpus fraction (numerator/denominator, integer arithmetic
@@ -822,22 +800,13 @@ object Graph {
   }
 
   /** Refine rounds + audit tail over a prepared warm-start state.
-    * `baseState` may be session-shared ([[sessionIncrBase]]): the
-    * refine loop's release discipline never frees it (the first
-    * round's "previous checkpoint" slot starts empty, not at the pin).
+    * `baseState` may be session-shared ([[sessionIncrBase]]), so the
+    * refine loop never releases it.
     */
   private def pagerankIncrementalTail(baseState: DataFrame, edges: DataFrame,
-                                      refine: Int, topK: Int): DataFrame = {
-    require(refine >= 1, s"incremental refine needs >= 1 round, got $refine")
-    var ranks = baseState
-    var ck: DataFrame = null
-    for (_ <- 1 to refine) {
-      val next = rankStep(ranks, edges).localCheckpoint()
-      if (ck ne null) org.apache.spark.sql.GraftSql.releaseCheckpoint(ck)
-      ck = next
-      ranks = next
-    }
-    ranks
+                                      refine: Int, topK: Int): DataFrame =
+    Fixpoint.iterate(baseState, refine, releaseInit = false)(
+        rankStep(_, edges))(Fixpoint.Never)
       .join(baseState
           .select(col("doc_id"), col("rank_nano").as("base_rank_nano")),
         Seq("doc_id"))
@@ -845,7 +814,6 @@ object Graph {
         (col("rank_nano") - col("base_rank_nano")).as("delta_nano"))
       .orderBy(col("rank_nano").desc, col("doc_id"))
       .limit(topK)
-  }
 
   /** HITS hubs & authorities (Kleinberg, "Authoritative Sources in a
     * Hyperlinked Environment", JACM 1999) — the complement of PageRank
@@ -934,10 +902,10 @@ object Graph {
     // read (iters >= 1) — only the hub seed participates in the
     // recurrence
     var auths: DataFrame = null
-    // the checkpoints a finished round leaves dead (the rankLoopStateOn
-    // release discipline): the hub state consumed by this round's aRaw,
-    // and the PREVIOUS round's aRaw once this round's replaces it in
-    // the auths var — the FINAL round's pair stays live for the tail
+    // not on [[Fixpoint]]: a round materializes two tables (aRaw, hRaw)
+    // and the result reads the final round's pair. Dead once a round is
+    // done: the hub state consumed by its aRaw, and the PREVIOUS round's
+    // aRaw once this round's replaces it in the auths var
     var prevA: DataFrame = null
     var prevH: DataFrame = hubs
     for (_ <- 1 to iters) {
@@ -1040,6 +1008,8 @@ object Graph {
       .localCheckpoint()
     val acc = scala.collection.mutable.ListBuffer(
       pos.withColumn("step", lit(0L)))
+    // not on [[Fixpoint]]: the final union reads every step's positions,
+    // so no round may be released
     for (k <- 1 to steps) {
       // checkpointed: cand feeds BOTH the argmin groupBy and the
       // equality join-back — without the checkpoint each step pays the
@@ -1146,6 +1116,7 @@ object Graph {
     val acc = scala.collection.mutable.ListBuffer(
       pos.select(col("start_id"), col("walk_seed"), col("node_id"))
         .withColumn("step", lit(0L)))
+    // not on [[Fixpoint]]: every step's positions stay live for the union
     for (k <- 1 to steps) {
       // candidates + their node2vec class priority; checkpointed (the
       // randomWalksUnorderedDf discipline: cand feeds the election AND
@@ -1262,8 +1233,7 @@ object Graph {
     * WALK-VISITED nodes (walk volume bounds it, not corpus size — the
     * randomWalks contract); each epoch is two embedding-keyed probe
     * joins into the pair table + one center-keyed SUM + the update
-    * join, all checkpointed per round with the dead round released
-    * (the rankLoopStateOn discipline). No driver-side weight state at
+    * join, one [[graft.Fixpoint]] round per epoch. No driver-side weight state at
     * all — unlike [[Training.fit]]'s 13 scalars, per-node state stays
     * distributed.
     */
@@ -1302,7 +1272,6 @@ object Graph {
   private[graft] def nodeEmbeddingsOnPairs(pairs: DataFrame, nTotal: Long,
                                            epochs: Int = EmbedEpochs,
                                            lr: Double = EmbedLr): DataFrame = {
-    require(epochs >= 1, s"embedding training needs >= 1 epoch, got $epochs")
     require(nTotal >= 1, s"need a positive frontier size, got $nTotal")
     // positives + one deterministic negative each; negatives whose
     // target is the center itself, or a node no walk visited, drop out
@@ -1320,10 +1289,9 @@ object Graph {
     def initDim(j: Int): Column =
       (pmod(md5Bucket60(concat_ws(":", col("doc_id"), lit(j.toString))),
         lit(1000001L)) - lit(500000L)).as(s"x$j")
-    var emb = pp.select(col("center").as("doc_id")).distinct()
+    val emb0 = pp.select(col("center").as("doc_id")).distinct()
       .select(col("doc_id"), initDim(0), initDim(1), initDim(2), initDim(3))
-      .localCheckpoint()
-    for (_ <- 1 to epochs) {
+    val emb = Fixpoint.iterate(emb0.localCheckpoint(), epochs) { emb =>
       val ce = emb.select(col("doc_id").as("center"), col("x0").as("c0"),
         col("x1").as("c1"), col("x2").as("c2"), col("x3").as("c3"))
       val xe = emb.select(col("doc_id").as("other"), col("x0").as("o0"),
@@ -1340,16 +1308,13 @@ object Graph {
       val grad = j.groupBy(col("center"))
         .agg(g(0), g(1), g(2), g(3), sum(col("n")).as("m"))
         .withColumnRenamed("center", "doc_id")
-      val next = emb.join(grad, Seq("doc_id"))
+      emb.join(grad, Seq("doc_id"))
         .select(col("doc_id"),
           (col("x0") - snap(lit(lr) * (col("g0") / col("m")))).as("x0"),
           (col("x1") - snap(lit(lr) * (col("g1") / col("m")))).as("x1"),
           (col("x2") - snap(lit(lr) * (col("g2") / col("m")))).as("x2"),
           (col("x3") - snap(lit(lr) * (col("g3") / col("m")))).as("x3"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(emb)
-      emb = next
-    }
+    }(Fixpoint.Never)
     // the pair table is dead once the last epoch is materialized
     org.apache.spark.sql.GraftSql.releaseCheckpoint(pp)
     val np = pairs.groupBy(col("center"))
@@ -1422,30 +1387,19 @@ object Graph {
     */
   private[graft] def minLabelComponentsOn(nodes: DataFrame, und: DataFrame,
                                           rounds: Int): DataFrame = {
-    require(rounds >= 1, s"min-label components need >= 1 round, got $rounds")
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("component"))
-      .localCheckpoint()
-    var converged = false
-    var r = 0
-    // the checkpoint backing the current labels frame — released once
-    // the next round's state is materialized (rankLoopStateOn
-    // discipline); the final round's stays live for the size tail
-    var labelsCk = labels
-    while (!converged && r < rounds) {
+    val labels = Fixpoint.iterate(
+        nodes.select(col("doc_id"), col("doc_id").as("component")).localCheckpoint(),
+        rounds) { ck =>
+      val labels = ck.select(col("doc_id"), col("component"))
       val neighborMin = labels.join(und, labels("doc_id") === und("src"))
         .groupBy(col("dst").as("doc_id"))
         .agg(min(col("component")).as("nbr_min"))
-      val upd = labels.join(neighborMin, Seq("doc_id"), "left")
+      labels.join(neighborMin, Seq("doc_id"), "left")
         .select(col("doc_id"), col("component").as("old_c"),
           least(col("component"), coalesce(col("nbr_min"), col("component")))
             .as("component"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(labelsCk)
-      labelsCk = upd
-      converged = upd.filter(col("component") =!= col("old_c")).isEmpty
-      labels = upd.select(col("doc_id"), col("component"))
-      r += 1
-    }
+    } { (_, upd) => upd.filter(col("component") =!= col("old_c")).isEmpty }
+      .select(col("doc_id"), col("component"))
     val sizes = labels.groupBy(col("component"))
       .agg(count(lit(1)).as("component_size"))
     labels.join(sizes, Seq("component"))
@@ -1531,29 +1485,18 @@ object Graph {
     * (doc_id, depth) state.
     */
   private[graft] def hopDistancesOn(init: DataFrame, e: DataFrame,
-                                    rounds: Int): DataFrame = {
-    require(rounds >= 1, s"crawlDepth needs >= 1 round, got $rounds")
-    var dist = init.localCheckpoint()
-    var distCk = dist
-    var converged = false
-    var r = 0
-    while (!converged && r < rounds) {
+                                    rounds: Int): DataFrame =
+    Fixpoint.iterate(init.localCheckpoint(), rounds) { ck =>
+      val dist = ck.select(col("doc_id"), col("depth"))
       val nd = dist.filter(col("depth") < lit(BfsUnreached))
         .join(e, dist("doc_id") === e("src"))
         .groupBy(col("dst").as("doc_id"))
         .agg((min(col("depth")) + lit(1L)).as("nd"))
-      val upd = dist.join(nd, Seq("doc_id"), "left")
+      dist.join(nd, Seq("doc_id"), "left")
         .select(col("doc_id"), col("depth").as("old_d"),
           least(col("depth"), coalesce(col("nd"), col("depth"))).as("depth"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(distCk)
-      distCk = upd
-      converged = upd.filter(col("depth") =!= col("old_d")).isEmpty
-      dist = upd.select(col("doc_id"), col("depth"))
-      r += 1
-    }
-    dist
-  }
+    } { (_, upd) => upd.filter(col("depth") =!= col("old_d")).isEmpty }
+      .select(col("doc_id"), col("depth"))
 
   /** Peel count of [[linkScc]] — shared with the oracle builder. */
   private[graft] val SccPeels = 3
@@ -1731,14 +1674,12 @@ object Graph {
   private[ext] def sccDf(nodes: DataFrame, edges: DataFrame,
                          peels: Int = SccPeels,
                          rounds: Int = ComponentRounds): DataFrame = {
-    require(peels >= 1 && rounds >= 1,
-      s"linkScc needs >= 1 peel and >= 1 round, got $peels/$rounds")
     // (doc_id, scc_id), scc_id null until confirmed
-    var state = nodes.select(col("doc_id"),
-      lit(null).cast("long").as("scc_id")).localCheckpoint()
-    var p = 0
-    var anyLeft = true
-    while (anyLeft && p < peels) {
+    val state0 = nodes.select(col("doc_id"), lit(null).cast("long").as("scc_id"))
+    // what a peel builds besides its state: dead once the next peel
+    // state is materialized, so the peel probe releases it
+    var peelScratch = Seq.empty[DataFrame]
+    val state = Fixpoint.iterate(state0.localCheckpoint(), peels) { state =>
       val un = state.filter(col("scc_id").isNull).select(col("doc_id"))
       // keyed on src (the forward loop's per-round join key; stamped
       // layout — see sessionEdges): the live subgraph is re-joined
@@ -1750,37 +1691,27 @@ object Graph {
           .join(un.withColumnRenamed("doc_id", "dst"), Seq("dst"), "left_semi"),
         Seq("src"))
       // forward min-label over the live subgraph, early-exit at fixpoint
-      var f = un.select(col("doc_id"), col("doc_id").as("flabel"))
-        .localCheckpoint()
-      var fCk = f
-      var fConverged = false
-      var r = 0
-      while (!fConverged && r < rounds) {
+      val f = Fixpoint.iterate(
+          un.select(col("doc_id"), col("doc_id").as("flabel")).localCheckpoint(),
+          rounds) { ck =>
+        val f = ck.select(col("doc_id"), col("flabel"))
         val nm = f.join(e, f("doc_id") === e("src"))
           .groupBy(col("dst").as("doc_id"))
           .agg(min(col("flabel")).as("m"))
-        val upd = f.join(nm, Seq("doc_id"), "left")
+        f.join(nm, Seq("doc_id"), "left")
           .select(col("doc_id"), col("flabel").as("old_f"),
             least(col("flabel"), coalesce(col("m"), col("flabel"))).as("flabel"))
-          .localCheckpoint()
-        org.apache.spark.sql.GraftSql.releaseCheckpoint(fCk)
-        fCk = upd
-        fConverged = upd.filter(col("flabel") =!= col("old_f")).isEmpty
-        f = upd.select(col("doc_id"), col("flabel"))
-        r += 1
-      }
+      } { (_, upd) => upd.filter(col("flabel") =!= col("old_f")).isEmpty }
       // backward: each root's id flows along reverse edges, gated to
       // its own F-class; blabel != null == "confirmed member of
       // SCC(flabel)"
-      var b = f.select(col("doc_id"), col("flabel"),
+      val b0 = f.select(col("doc_id"), col("flabel"),
           when(col("flabel") === col("doc_id"), col("doc_id")).as("blabel"))
         .localCheckpoint()
       // the b seed consumed the converged forward state
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(fCk)
-      var bCk = b
-      var bConverged = false
-      r = 0
-      while (!bConverged && r < rounds) {
+      org.apache.spark.sql.GraftSql.releaseCheckpoint(f)
+      val b = Fixpoint.iterate(b0, rounds) { ck =>
+        val b = ck.select(col("doc_id"), col("flabel"), col("blabel"))
         // distinct (receiver, root) PAIRS with the class gate as a join
         // key — aggregating MIN(blabel) before gating would let a
         // smaller foreign root shadow the receiver's own (a node of
@@ -1795,31 +1726,21 @@ object Graph {
           .join(e, Seq("dst"))
           .select(col("src").as("pid"), col("bm"))
           .distinct()
-        val upd = b.join(prop,
+        b.join(prop,
             col("doc_id") === col("pid") && col("bm") === col("flabel"), "left")
           .select(col("doc_id"), col("flabel"), col("blabel").as("old_b"),
             coalesce(col("blabel"), col("bm")).as("blabel"))
-          .localCheckpoint()
-        org.apache.spark.sql.GraftSql.releaseCheckpoint(bCk)
-        bCk = upd
-        bConverged = upd.filter(
-          col("blabel").isNotNull && col("old_b").isNull).isEmpty
-        b = upd.select(col("doc_id"), col("flabel"), col("blabel"))
-        r += 1
-      }
-      val nextState = state
+      } { (_, upd) => upd.filter(col("blabel").isNotNull && col("old_b").isNull).isEmpty }
+      peelScratch = Seq(b, e)
+      state
         .join(b.select(col("doc_id"), col("blabel")), Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("scc_id"), col("blabel")).as("scc_id"))
-        .localCheckpoint()
-      // the new peel state absorbed everything this peel built: the
-      // old state, the confirmed backward labels, the live subgraph
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(state)
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(bCk)
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(e)
-      state = nextState
-      anyLeft = !state.filter(col("scc_id").isNull).isEmpty
-      p += 1
+    } { (_, next) =>
+      // the new peel state absorbed the confirmed backward labels and
+      // the live subgraph
+      peelScratch.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
+      next.filter(col("scc_id").isNull).isEmpty
     }
     val labeled = state.select(col("doc_id"),
       coalesce(col("scc_id"), col("doc_id")).as("scc_id"))
@@ -1863,8 +1784,8 @@ object Graph {
     * Scale shape: the undirected edge table is checkpointed once;
     * each round is one labeled-state⋈edges keyed join, one
     * (node, label) count, one per-node argmin and one state join —
-    * per-round cost ∝ |E|, state one row per node; dead rounds
-    * released (the rankLoopStateOn discipline).
+    * per-round cost ∝ |E|, state one row per node; one
+    * [[graft.Fixpoint]] round each.
     */
   def labelPropagation(spark: SparkSession, d: String): DataFrame =
     // the converged vote state is parameter-free given the corpus —
@@ -1875,31 +1796,29 @@ object Graph {
     SessionArtifact.frame("labelprop_state", Pin.Checkpoint) { (spark, d) =>
       org.apache.spark.sql.GraftSql.unordered(
         labelPropagationOn(Tables.fanOut(Tables.documents(spark, d)),
-          sessionUndirected(spark, d), LabelPropRounds,
-          releaseUnd = false))
+          sessionUndirected(spark, d), LabelPropRounds))
     }
 
   def labelPropagationDf(docs: DataFrame, rounds: Int = LabelPropRounds): DataFrame = {
     val (und, _) = undirectedWithDegrees(docs)
-    labelPropagationOn(docs, und, rounds, releaseUnd = true)
+    val out = labelPropagationOn(docs, und, rounds)
+    // the returned frame reads the final label state only
+    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
+    out
   }
 
   /** The propagation loop over an ALREADY-CHECKPOINTED undirected
-    * table — the registered query passes the shared [[sessionUndirected]]
-    * with `releaseUnd = false` (cached frames are read-only).
+    * table, which stays the caller's: the registered query passes the
+    * shared [[sessionUndirected]].
     */
   private def labelPropagationOn(docs: DataFrame, und: DataFrame,
-                                 rounds: Int, releaseUnd: Boolean): DataFrame = {
-    require(rounds >= 1, s"label propagation needs >= 1 round, got $rounds")
-    var st = docs.select(col("doc_id"), col("lang"),
+                                 rounds: Int): DataFrame = {
+    val st0 = docs.select(col("doc_id"), col("lang"),
         (col("doc_id") % 3 === 0).as("is_seed"))
       .select(col("doc_id"), col("lang"), col("is_seed"),
         when(col("is_seed"), col("lang")).as("label"))
-      .localCheckpoint()
-    var stCk = st
-    var converged = false
-    var r = 0
-    while (!converged && r < rounds) {
+    val st = Fixpoint.iterate(st0.localCheckpoint(), rounds) { ck =>
+      val st = ck.select(col("doc_id"), col("lang"), col("is_seed"), col("label"))
       val votes = st.filter(col("label").isNotNull)
         .select(col("doc_id").as("src"), col("label"))
         .join(und, Seq("src"))
@@ -1911,21 +1830,16 @@ object Graph {
         .groupBy(col("doc_id"))
         .agg(min(col("m")).as("b"))
         .select(col("doc_id"), col("b.label").as("vote"))
-      val next = st.join(best, Seq("doc_id"), "left")
+      st.join(best, Seq("doc_id"), "left")
         .select(col("doc_id"), col("lang"), col("is_seed"),
           col("label").as("old_l"),
           when(col("is_seed"), col("label"))
             .otherwise(coalesce(col("vote"), col("label"))).as("label"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(stCk)
-      stCk = next
-      converged = next.filter(
+    } { (_, next) =>
+      next.filter(
         coalesce(col("label") =!= col("old_l"),
           col("label").isNotNull =!= col("old_l").isNotNull)).isEmpty
-      st = next.select(col("doc_id"), col("lang"), col("is_seed"), col("label"))
-      r += 1
     }
-    if (releaseUnd) org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
     st.select(col("doc_id"), col("lang"), col("is_seed"),
         col("label").as("predicted_lang"),
         when(!col("is_seed") && col("label").isNotNull,
@@ -1957,8 +1871,8 @@ object Graph {
     *
     * Scale shape: the undirected edge table is checkpointed once; each
     * round is two alive-set semi-joins + one degree aggregate —
-    * per-round cost ∝ surviving edges, strictly shrinking; dead round
-    * state is released (the rankLoopStateOn discipline).
+    * per-round cost ∝ surviving edges, strictly shrinking; rounds 2..
+    * are [[graft.Fixpoint]] rounds.
     */
   def kcoreMembership(spark: SparkSession, d: String): DataFrame =
     // the peeled membership state is parameter-free given the corpus —
@@ -1975,20 +1889,23 @@ object Graph {
     SessionArtifact.frame("kcore_state", Pin.Checkpoint) { (spark, d) =>
       org.apache.spark.sql.GraftSql.unordered(
         kcoreMembershipOn(Tables.fanOut(Tables.documents(spark, d)),
-          sessionUndirected(spark, d), KcoreRounds, releaseUnd = false))
+          sessionUndirected(spark, d), KcoreRounds))
     }
 
   def kcoreMembershipDf(docs: DataFrame, rounds: Int = KcoreRounds): DataFrame = {
     val (und, _) = undirectedWithDegrees(docs)
-    kcoreMembershipOn(docs, und, rounds, releaseUnd = true)
+    val out = kcoreMembershipOn(docs, und, rounds)
+    // the returned frame reads the degree, threshold and alive tables only
+    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
+    out
   }
 
-  /** The peel loop over an ALREADY-CHECKPOINTED undirected table — the
-    * registered query passes the shared [[sessionUndirected]] with
-    * `releaseUnd = false` (cached frames are read-only).
+  /** The peel loop over an ALREADY-CHECKPOINTED undirected table, which
+    * stays the caller's: the registered query passes the shared
+    * [[sessionUndirected]].
     */
-  private def kcoreMembershipOn(docs: DataFrame, und: DataFrame, rounds: Int,
-                                releaseUnd: Boolean): DataFrame = {
+  private def kcoreMembershipOn(docs: DataFrame, und: DataFrame,
+                                rounds: Int): DataFrame = {
     require(rounds >= 1, s"kcore needs >= 1 round, got $rounds")
     val udeg = und.groupBy(col("src").as("doc_id"))
       .agg(count(lit(1)).as("udeg"))
@@ -2004,37 +1921,33 @@ object Graph {
     // udeg and the two semi-joins are identities — the first peel is a
     // plain filter (the oracle's kd1/ka1 compute the same values the
     // expensive way; results coincide, only the plan differs)
-    var alive = udeg.crossJoin(kRow)
+    val alive1 = udeg.crossJoin(kRow)
       .filter(col("udeg") >= col("k_threshold"))
       .select(col("doc_id"))
       .localCheckpoint()
     // the fixpoint test is a COUNT COMPARISON (the peel only removes),
     // and the previous round's count is carried — one count action per
     // round, not two
-    var aliveN = alive.count()
-    var aliveCk = alive
-    var converged = false
-    var r = 1
-    while (!converged && r < rounds) {
-      val e2 = und
-        .join(alive.select(col("doc_id").as("src")), Seq("src"))
-        .join(alive.select(col("doc_id").as("dst")), Seq("dst"))
-      val deg = e2.groupBy(col("src").as("doc_id"))
-        .agg(count(lit(1)).as("d"))
-      val next = alive.join(deg, Seq("doc_id"), "left")
-        .crossJoin(kRow)
-        .filter(coalesce(col("d"), lit(0L)) >= col("k_threshold"))
-        .select(col("doc_id"))
-        .localCheckpoint()
-      val nextN = next.count()
-      converged = nextN == aliveN
-      aliveN = nextN
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(aliveCk)
-      aliveCk = next
-      alive = next
-      r += 1
-    }
-    if (releaseUnd) org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
+    var aliveN = alive1.count()
+    // round 1 is the filter above; the operator runs rounds 2..rounds
+    val alive =
+      if (rounds == 1) alive1
+      else Fixpoint.iterate(alive1, rounds - 1) { alive =>
+        val e2 = und
+          .join(alive.select(col("doc_id").as("src")), Seq("src"))
+          .join(alive.select(col("doc_id").as("dst")), Seq("dst"))
+        val deg = e2.groupBy(col("src").as("doc_id"))
+          .agg(count(lit(1)).as("d"))
+        alive.join(deg, Seq("doc_id"), "left")
+          .crossJoin(kRow)
+          .filter(coalesce(col("d"), lit(0L)) >= col("k_threshold"))
+          .select(col("doc_id"))
+      } { (_, next) =>
+        val nextN = next.count()
+        val converged = nextN == aliveN
+        aliveN = nextN
+        converged
+      }
     docs.select(col("doc_id"))
       .join(udeg, Seq("doc_id"), "left")
       .join(alive.withColumn("in_kcore", lit(true)), Seq("doc_id"), "left")
@@ -2372,35 +2285,6 @@ object Graph {
           floor(lit(3000000.0) * col("n_triangles") / col("n_wedges") +
             lit(0.5)) / lit(1000000.0))
           .otherwise(lit(0.0)).as("transitivity"))
-  }
-
-  /** Scale-probe seams ([[graft.tools.TriangleProbe]]): the triangle
-    * family over a CALLER-SUPPLIED undirected edge set — the same
-    * degree/orient/count chain as the Df forms, bypassing the corpus
-    * edge derivation, so a probe can feed DISJOINT ISOMORPHIC replicas
-    * (degree-distribution-preserving scale-up) instead of the
-    * ScaleSmoke replica corpus, whose re-hashed frontier DENSIFIES the
-    * graph and confounds data growth with plan growth (the r16
-    * judge's open exponent question).
-    */
-  private[graft] def probeUndirectedEdges(docs: DataFrame): DataFrame =
-    undirectedWithDegrees(docs)._1
-
-  private[graft] def probeTriangleFamily(docs: DataFrame, und: DataFrame)
-      : (DataFrame, DataFrame, Seq[DataFrame]) = {
-    // checkpoint udeg and oe exactly as the production path does
-    // (orientedTriangleState / the Df forms) — the counting tails
-    // reference both several times, and the probe must time the plan
-    // it adjudicates, not a re-derivation-inflated variant. The
-    // checkpointed frames are RETURNED so the caller releases them
-    // after each timed run (ADVICE r17: the probe invokes this 6+
-    // times per replica; leaked blocks would skew the larger-R
-    // timings the probe exists to adjudicate).
-    val udeg = und.groupBy(col("src").as("doc_id"))
-      .agg(count(lit(1)).as("udeg")).localCheckpoint()
-    val oe = orientEdges(und, udeg).localCheckpoint()
-    (graphTransitivityOn(docs, oe, udeg), clusteringCoefficientOn(docs, oe, udeg),
-      Seq(udeg, oe))
   }
 
   /** Link RECIPROCITY of the directed graph (Garlaschelli & Loffredo,

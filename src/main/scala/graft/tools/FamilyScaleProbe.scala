@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Directed 100× scaling probes for the round-17 operator families
-  * (the TriangleProbe discipline: scale the INPUT STRUCTURE exactly,
-  * not a re-hashed replica corpus whose density confounds data growth
+  * (scale the INPUT STRUCTURE exactly, not a re-hashed replica corpus whose density confounds data growth
   * with plan growth), settling the exponent question the 10× probes
   * left open:
   *
@@ -124,8 +123,8 @@ object FamilyScaleProbe {
       }.reduce(_ unionAll _).localCheckpoint()
 
     // prepare each replica input ONCE (checkpointed), time only the
-    // operator chain over it (min-of-2), release before the next R —
-    // the probeTriangleFamily leak lesson (ADVICE r17)
+    // operator chain over it (min-of-2), release before the next R so
+    // leaked blocks cannot skew the larger-R timings (ADVICE r17)
     // SPARK_GRAFT_PROBE_FAMILIES=substring,gann_bucket narrows a run
     // to the named families (re-probing one family need not pay all)
     val famFilter = sys.env.get("SPARK_GRAFT_PROBE_FAMILIES")

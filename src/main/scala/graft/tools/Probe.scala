@@ -1,8 +1,17 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 
-/** Scratch profiler: time named SparkEntry queries and print plans.
-  * Usage: runMain graft.tools.Probe <sfDir> <query...> [--plan]
+/** Scratch profiler for named SparkEntry queries.
+  *
+  * Usage: runMain graft.tools.Probe <sfDir> <query...> [--plan] [--exchanges]
+  *  - default: warm min-of-3 wall time per query, with `--plan` the
+  *    formatted physical plan first;
+  *  - `--exchanges`: the final-adaptive-plan exchange census behind
+  *    PlanShapeSpec's exchange-count pins instead of timings. Runs each
+  *    query to completion (AQE finalizes the plan only at runtime),
+  *    then counts keyed shuffles the way the pins do: Exchange lines
+  *    that are not broadcasts, reuses, or round-robin fanOut
+  *    repartitions. With `--plan` it also prints that final plan.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -10,6 +19,26 @@ object Probe {
     val names = args.drop(1).filterNot(_.startsWith("--"))
     val showPlan = args.contains("--plan")
     val spark = graft.LocalSession.build()
+    if (args.contains("--exchanges")) names.foreach(exchanges(spark, sfDir, _, showPlan))
+    else time(spark, sfDir, names, showPlan)
+    spark.stop()
+  }
+
+  private def exchanges(spark: SparkSession, sfDir: String, n: String,
+                        showPlan: Boolean): Unit = {
+    val df = graft.SparkEntry.queries(n)(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    val cnt = p.linesIterator.count(l => l.contains("Exchange")
+      && !l.contains("BroadcastExchange") && !l.contains("Reused")
+      && !l.contains("RoundRobinPartitioning"))
+    println(s"EXCHANGES $n = $cnt")
+    if (showPlan) println(p)
+  }
+
+  private def time(spark: SparkSession, sfDir: String, names: Seq[String],
+                   showPlan: Boolean): Unit = {
     graft.SparkEntry.queries("q_domain_stats")(spark, sfDir)
       .write.format("noop").mode("overwrite").save() // warm-up
     names.foreach { n =>
@@ -26,6 +55,5 @@ object Probe {
       }
       println(f"==== TIME $n min=${times.min}%.3f all=${times.map(t => f"$t%.3f").mkString(",")}")
     }
-    spark.stop()
   }
 }

@@ -811,4 +811,117 @@ class GraphSpec extends SparkTestBase {
     val ds = byDepth.keySet
     assert(ds == (0L to ds.max).toSet, s"BFS layers must be contiguous: $ds")
   }
+
+  /** Jobs one call starts and checkpoints it leaves persisted, counted
+    * against the RDDs persisted before it (so earlier garbage the GC
+    * reclaims meanwhile cannot skew the count).
+    */
+  private def loopCost(body: => org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (out, jobs) = org.apache.spark.sql.GraftSql.jobsStartedBy(spark)(body)
+    val left = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    assert(out.columns.nonEmpty)
+    (jobs, left)
+  }
+
+  /** (jobs, persisted RDDs left) per call of every loop that runs on
+    * [[graft.Fixpoint]] (and the HITS loop beside them), measured on
+    * the planted graphs; `/1` is the one-round call. A moved job count
+    * means a round, a probe or a checkpoint was added or dropped; the
+    * checkpoints left are those the lazy result still reads, plus the
+    * edge tables some Df forms never release.
+    */
+  private val loopPins: Map[String, (Int, Int)] = Map(
+    "pagerankDf" -> (37, 2),
+    "pagerankDf/1" -> (16, 2),
+    "trustrankDf" -> (37, 2),
+    "rankServeTableDf" -> (37, 2),
+    "rankServeTableDf/1" -> (16, 2),
+    "pagerankIncrementalDf" -> (57, 3),
+    "pagerankIncrementalDf/1" -> (29, 3),
+    "pagerankConvergenceDf" -> (55, 0),
+    "pagerankConvergenceDf/1" -> (19, 0),
+    "hitsDf" -> (43, 3),
+    "nodeEmbeddingsOnPairs" -> (29, 1),
+    "nodeEmbeddingsOnPairs/1" -> (8, 1),
+    "linkComponentsDf" -> (24, 2),
+    "linkComponentsDf/1" -> (12, 2),
+    "mediaDedupClusters" -> (20, 2),
+    "crawlDepthDf" -> (28, 1),
+    "hopDistancesOn" -> (17, 1),
+    "hopDistancesOn/1" -> (6, 1),
+    "sccDf" -> (137, 1),
+    "sccDf/1" -> (25, 1),
+    "linkSccDf" -> (94, 2),
+    "labelPropagationDf" -> (27, 1),
+    "labelPropagationDf/1" -> (13, 1),
+    "kcoreMembershipDf" -> (23, 3),
+    "kcoreMembershipDf/1" -> (14, 3))
+
+  test("fixpoint loops start the pinned jobs and leave the pinned checkpoints") {
+    import spark.implicits._
+    val fx = plantedDocs
+      .withColumn("lang", when(col("doc_id") < 5, lit("aa")).otherwise(lit("bb")))
+      .withColumn("source", when(col("doc_id") < 3, lit("src0")).otherwise(lit("srcX")))
+    val trust = col("source") === lit("src0")
+    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L), (0L, 1L), (3L, 4L))
+      .toDF("src", "dst").localCheckpoint()
+    val cycleNodes = (0L to 5L).toDF("doc_id")
+    val paths = Seq((0L, 1L), (1L, 2L), (2L, 3L), (1L, 4L), (4L, 3L),
+      (0L, 6L), (6L, 3L), (7L, 0L)).toDF("src", "dst").localCheckpoint()
+    val depth0 = (0L to 7L).toDF("doc_id").select(col("doc_id"),
+      when(col("doc_id") === 0L, 0L).otherwise(lit(Graph.BfsUnreached)).as("depth"))
+    val cliques = Seq(Seq(0L, 1L, 2L, 3L), Seq(4L, 5L, 6L, 7L))
+    val pairs = (for { c <- cliques; x <- c; y <- c if x != y }
+      yield (x, y, 25L)).toDF("center", "context", "n_cooc")
+    graft.analytics.ExtraQueries.mediaDedupClusters(spark, sfDir).collect() // schema memo
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pagerankDf" -> (() => Graph.pagerankDf(fx)),
+      "pagerankDf/1" -> (() => Graph.pagerankDf(fx, iters = 1)),
+      "trustrankDf" -> (() => Graph.trustrankDf(fx, trust)),
+      "rankServeTableDf" -> (() => Graph.rankServeTableDf(fx, trust)),
+      "rankServeTableDf/1" -> (() => Graph.rankServeTableDf(fx, trust, iters = 1)),
+      "pagerankIncrementalDf" -> (() => Graph.pagerankIncrementalDf(fx)),
+      "pagerankIncrementalDf/1" -> (() => Graph.pagerankIncrementalDf(fx, 1, 1)),
+      "pagerankConvergenceDf" -> (() => Graph.pagerankConvergenceDf(spark, fx)),
+      "pagerankConvergenceDf/1" -> (() => Graph.pagerankConvergenceDf(spark, fx, 1)),
+      "hitsDf" -> (() => Graph.hitsDf(fx)),
+      "nodeEmbeddingsOnPairs" -> (() => Graph.nodeEmbeddingsOnPairs(pairs, 8)),
+      "nodeEmbeddingsOnPairs/1" -> (() => Graph.nodeEmbeddingsOnPairs(pairs, 8, epochs = 1)),
+      "linkComponentsDf" -> (() => Graph.linkComponentsDf(fx)),
+      "linkComponentsDf/1" -> (() => Graph.linkComponentsDf(fx, rounds = 1)),
+      "mediaDedupClusters" -> (() => graft.analytics.ExtraQueries.mediaDedupClusters(spark, sfDir)),
+      "crawlDepthDf" -> (() => Graph.crawlDepthDf(fx, trust)),
+      "hopDistancesOn" -> (() => Graph.hopDistancesOn(depth0, paths, Graph.BfsRounds)),
+      "hopDistancesOn/1" -> (() => Graph.hopDistancesOn(depth0, paths, 1)),
+      "sccDf" -> (() => Graph.sccDf(cycleNodes, cycle)),
+      "sccDf/1" -> (() => Graph.sccDf(cycleNodes, cycle, 1, 1)),
+      "linkSccDf" -> (() => Graph.linkSccDf(fx)),
+      "labelPropagationDf" -> (() => Graph.labelPropagationDf(fx)),
+      "labelPropagationDf/1" -> (() => Graph.labelPropagationDf(fx, rounds = 1)),
+      "kcoreMembershipDf" -> (() => Graph.kcoreMembershipDf(fx)),
+      "kcoreMembershipDf/1" -> (() => Graph.kcoreMembershipDf(fx, rounds = 1)))
+    val got = calls.map { case (name, call) => name -> loopCost(call()) }
+    got.foreach { case (name, cost) =>
+      assert(cost == loopPins(name), s"$name: (jobs, pins left) $cost, pinned ${loopPins(name)}")
+    }
+  }
+
+  test("the convergence audit leaves nothing pinned") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Graph.pagerankConvergenceDf(spark, plantedDocs)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(out.count() == Graph.RankIters)
+  }
+
+  test("the incremental refine never releases the shared base pin") {
+    val base = Graph.sessionIncrBase(spark, sfDir)
+    val id = base.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      case p => fail(s"the session base is not a checkpoint leaf: $p")
+    }
+    val first = Graph.pagerankIncremental(spark, sfDir).collect().toSeq
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    assert(Graph.pagerankIncremental(spark, sfDir).collect().toSeq == first)
+  }
 }
