@@ -37,8 +37,9 @@ object SparkEntry {
     * set: q_kn_logprob_wide is Kneser-Ney at the 16-byte gram-key
     * width; q_kn_logprob already prices the KN policy itself, and the
     * width switch is the auto-policy's job. q_pagerank_converge
-    * (r14 ruling) re-runs the identical rank recurrence q_pagerank
-    * already prices, adding only the per-round movement diagnostic —
+    * (r14 ruling) re-runs the vanilla rank recurrence over the session
+    * edge pin — the recurrence q_pagerank's session serve table
+    * already prices — adding only the per-round movement diagnostic:
     * a diagnostic variant, not a distinct capability (BASELINE.md
     * records both decisions). Correctness coverage is unchanged:
     * Verify runs EVERY query.
@@ -853,7 +854,7 @@ object SparkEntry {
 
   // HITS: 4 unrolled rounds — integer sums + integer MAX; the only
   // float op is the per-row max-normalization division, identical on
-  // both engines (Graph.hitsDf's exactness note)
+  // both engines (Graph.hits's exactness note)
   private lazy val hitsSql = {
     val rounds = (1 to ext.Graph.HitsIters).map { k =>
       val p = s"s${k - 1}"
@@ -1522,7 +1523,7 @@ object SparkEntry {
   // strongly-connected components: the nested peel unroll — per peel,
   // ComponentRounds forward min-label rounds then ComponentRounds
   // backward root-flow rounds over the still-unassigned subgraph
-  // (ext.Graph.linkSccDf's exact recurrence; Spark's fixpoint
+  // (ext.Graph.sccDf's exact recurrence; Spark's fixpoint
   // early-exits only skip identity rounds/peels, so parity is
   // unconditional)
   private lazy val sccCtesSql: String = {

@@ -519,11 +519,13 @@ object ExtraQueries {
       .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
     org.apache.spark.sql.GraftSql.releaseCheckpoint(pairs)
-    graft.ext.Graph.minLabelComponentsOn(
-        media.select(col("media_id").as("doc_id")).toDF(), und,
-        graft.ext.Graph.ComponentRounds)
-      .select(col("doc_id").as("media_id"), col("component").as("cluster"),
-        col("component_size").as("cluster_size"))
+    val clusters = graft.ext.Graph.minLabelComponentsOn(
+      media.select(col("media_id").as("doc_id")).toDF(), und,
+      graft.ext.Graph.ComponentRounds)
+    // the returned frame reads the final label checkpoint only
+    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
+    clusters.select(col("doc_id").as("media_id"), col("component").as("cluster"),
+      col("component_size").as("cluster_size"))
   }
 
   /** parse_vn_date + stripDashRuns wired to a query: construct Vietnamese

@@ -1879,9 +1879,6 @@ object Cleaning {
           .as("removed_lines"),
         array_join(col("kept"), "\n").as("clean_text"))
 
-  private def boilerplateCleanedDf(docs: DataFrame): DataFrame =
-    boilerplateCleanedAgainst(docs, boilerplateDictDf(docs))
-
   /** Streaming form (foreachBatch stage): the base corpus's
     * boilerplate dictionary is FROZEN once; each micro-batch rewrites
     * its documents against it and appends, tagged with the batch id.

@@ -38,12 +38,13 @@ import graft.SessionArtifact.Pin
   *  - Edge derivation: one narrow tokenize→bigram→hash pass, one
   *    (src,dst) distinct exchange. Edge count is bounded by total
   *    bigram count, never O(n²).
-  *  - Degrees: one aggregation over the unpivoted edge stream — the
-  *    corpus-sized edge subtree appears exactly once in the plan
-  *    (structural, not reuse-dependent; asserted in GraphSpec).
-  *  - PageRank iterations: the edge table is materialized via eager
-  *    `localCheckpoint`, and each iteration is one [[graft.Fixpoint]]
-  *    round (checkpointed, the previous round released) — the GraphX
+  *  - Degrees: one aggregation over the unpivoted stream of the
+  *    session edge pin — the derivation itself never appears in the
+  *    query plan (asserted in GraphSpec).
+  *  - PageRank iterations: the edge table is the session's keyed
+  *    checkpoint ([[sessionEdges]]), and each iteration is one
+  *    [[graft.Fixpoint]] round (checkpointed, the previous round
+  *    released) — the GraphX
   *    lineage-truncation discipline for iterative graph algorithms.
   *    Without it, iteration i references iteration i-1 three times
   *    (contributions, dangling mass, carry-through) and the lazy plan
@@ -52,7 +53,7 @@ import graft.SessionArtifact.Pin
   *    removed from the LM family. With it, each iteration is one
   *    ranks⋈edges keyed join + one groupBy(dst) exchange + a 1-row
   *    dangling aggregate over a few-MB-per-1e9-nodes state table.
-  *    This makes [[pagerankDf]] an EAGER builder (it runs `iters`
+  *    This makes [[rankLoopOn]] an EAGER builder (it runs `iters`
   *    small jobs at build time), the [[Clustering.kmeansCentroids]]
   *    precedent — but state stays distributed; nothing per-node ever
   *    reaches the driver.
@@ -127,11 +128,13 @@ object Graph {
     * [[orientedTriangleState]]/trainedNodeEmbeddings discipline:
     * whichever query runs first bills the build, the rest replay;
     * every oracle replays its own full chain, so parity is
-    * unaffected. Consumers must treat the cached frames as READ-ONLY
-    * (never releaseCheckpoint them) — the standalone Df forms keep
-    * building and releasing their own copies, and the release-bearing
-    * cores take a flag or a seam so the shared table is never
-    * released. |E| (+ |E_und|) rows pinned per (session, dir).
+    * unaffected. Every graph computation is one core written over the
+    * edge table it is given (the `*On` forms and [[sccDf]]); no core
+    * releases that table, so the registered queries pass these pins
+    * and tests pass a fixture checkpoint they own. The one other
+    * derivation is [[trustRankSink]]'s frozen base, whose graph is an
+    * arbitrary base frame, not a corpus directory. |E| (+ |E_und|)
+    * rows pinned per (session, dir).
     *
     * Both shared tables checkpoint KEYED on src (GraftSql.
     * localCheckpointKeyedBy): plain localCheckpoint reports
@@ -166,11 +169,18 @@ object Graph {
 
   private[ext] val sessionUndirected =
     SessionArtifact.frame("graph_undirected", Pin.KeyedBy("src")) { (spark, d) =>
-      val e = sessionEdges(spark, d)
-      e.select(col("src"), col("dst"))
-        .union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
+      undirectedOf(sessionEdges(spark, d))
     }
+
+  /** The undirected simple edge set of a directed edge table: both
+    * directions, distinct — the base of the components, label
+    * propagation, k-core and triangle families. `e` should be
+    * materialized: it feeds both union branches.
+    */
+  private[graft] def undirectedOf(e: DataFrame): DataFrame =
+    e.select(col("src"), col("dst"))
+      .union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
 
   /** The session warm-start state of [[pagerankIncremental]] — the
     * converged base ranks with full-edge out-degrees
@@ -213,15 +223,14 @@ object Graph {
     * in_deg), zero-filled for nodes on neither side of an edge.
     */
   def linkGraphDegrees(spark: SparkSession, d: String): DataFrame =
-    linkGraphDegreesDf(Tables.fanOut(Tables.documents(spark, d)))
+    linkGraphDegreesOn(Tables.fanOut(Tables.documents(spark, d)), sessionEdges(spark, d))
 
-  def linkGraphDegreesDf(docs: DataFrame): DataFrame = {
+  private[graft] def linkGraphDegreesOn(docs: DataFrame, edges: DataFrame): DataFrame = {
     // both degrees from ONE aggregation over an unpivoted edge stream —
-    // two separate groupBys would reference the corpus-sized edge
-    // subtree twice, and exchange reuse across those copies is an
-    // optimizer courtesy, not a guarantee (the smoothedStatTable
-    // lesson: make single evaluation STRUCTURAL)
-    val deg = linkEdgesDf(docs).select(explode(array(
+    // two separate groupBys would read and exchange the edge table
+    // twice (the smoothedStatTable lesson: make single evaluation
+    // STRUCTURAL)
+    val deg = edges.select(explode(array(
         struct(col("src").as("doc_id"), lit(1L).as("o"), lit(0L).as("i")),
         struct(col("dst").as("doc_id"), lit(0L).as("o"), lit(1L).as("i")))).as("x"))
       .select(col("x.doc_id").as("doc_id"), col("x.o").as("o"), col("x.i").as("i"))
@@ -259,14 +268,6 @@ object Graph {
     serveRankTail(spark, d, col("rank_nano"), lit(true), topK)
       .select(col("doc_id"), col("rank_nano"), col("out_deg"), col("in_deg"))
 
-  /** Vanilla PageRank = the rank loop with the whole frontier as the
-    * teleport set (|S| = D reduces the seeded recurrence to the
-    * classic one term for term).
-    */
-  def pagerankDf(docs: DataFrame, iters: Int = RankIters, topK: Int = 100): DataFrame =
-    rankLoop(docs, lit(true), iters, topK)
-      .select(col("doc_id"), col("rank_nano"), col("out_deg"), col("in_deg"))
-
   /** TrustRank (Gyöngyi et al., "Combating Web Spam with TrustRank",
     * VLDB 2004): PageRank whose teleport — both the restart mass and
     * the dangling mass — lands only on a trusted SEED set, so rank
@@ -281,7 +282,7 @@ object Graph {
     serveRankTail(spark, d, col("trust_nano"),
       col("source") === lit("src0"), topK)
 
-  /** [[rankLoopTail]] replayed off the pinned serve table: same
+  /** [[rankLoopOn]]'s tail replayed off the pinned serve table: same
     * columns, same coalesces, same (rank DESC, doc_id) total order —
     * only the converged rank column comes from [[sessionRankServe]]
     * instead of a per-run loop. The empty-seed raise_error fires at
@@ -305,20 +306,16 @@ object Graph {
       .limit(topK)
   }
 
-  def trustrankDf(docs: DataFrame, seed: Column, iters: Int = RankIters,
-                  topK: Int = 100): DataFrame =
-    rankLoop(docs, seed, iters, topK)
-
   /** PERSONALIZED PageRank (Page et al. 1999 §6; the topic-sensitive
     * form of Haveliwala, WWW 2002): the seeded rank loop with an
     * arbitrary TOPIC predicate as the teleport set — rank flows from
     * the topic's pages, so the scores answer "how central is this page
     * to readers of topic T" rather than "to the whole web". This is a
-    * THIN generalization by construction: [[trustrankDf]] IS
-    * personalized PageRank whose topic is a trusted source, and
-    * vanilla [[pagerankDf]] the special case topic = everything —
-    * all three share [[rankLoop]] literally (GraphSpec asserts the
-    * specializations coincide), so no new recurrence code exists to
+    * THIN generalization by construction: TrustRank IS personalized
+    * PageRank whose topic is a trusted source, and vanilla PageRank the
+    * special case topic = everything — all three are [[rankLoopOn]]
+    * (GraphSpec asserts the fused serve table's two columns equal
+    * those specializations), so no new recurrence code exists to
     * drift. The registered query personalizes to the English-language
     * slice of the corpus.
     */
@@ -327,24 +324,8 @@ object Graph {
     rankLoopOn(Tables.fanOut(Tables.documents(spark, d)),
       sessionEdges(spark, d), col("lang") === lit("en"), iters, topK)
 
-  def personalizedPagerankDf(docs: DataFrame, topic: Column,
-                             iters: Int = RankIters,
-                             topK: Int = 100): DataFrame =
-    rankLoop(docs, topic, iters, topK)
-
-  /** The shared seeded-teleport rank loop. Recurrence (nano BIGINTs;
-    * s(v) ∈ {0,1} the seed indicator, |S| the seed count):
-    * {{{
-    *   r0(v)     = s(v) · snap(1e9 / |S|)
-    *   contrib_e = snap(r(src) / out_deg(src))
-    *   inflow(v) = Σ contrib_e over in-edges            — exact int sum
-    *   dang      = Σ r(u) over out_deg(u) = 0           — exact int sum
-    *   r'(v)     = s(v) · snap(0.15e9 / |S|)
-    *             + snap(0.85 · (inflow(v) + s(v) · snap(dang / |S|)))
-    * }}}
-    */
   /** The seeded r0 over an already-checkpointed edge table — shared by
-    * the rank loops and [[pagerankConvergenceDf]] so the r0 definition
+    * the rank loop and [[pagerankConvergenceOn]] so the r0 definition
     * cannot drift between the ranks and the audit of those ranks.
     */
   private def rankSeedState(docs: DataFrame, edges: DataFrame,
@@ -372,7 +353,7 @@ object Graph {
       coalesce(sum(when(seed, lit(1L)).otherwise(lit(0L))), lit(0L)).as("sc_n"))
       .select(when(col("sc_n") > 0, col("sc_n"))
         .otherwise(raise_error(lit(
-          "rankLoop: the teleport seed set is empty — no document matches " +
+          "rankLoopOn: the teleport seed set is empty — no document matches " +
             "the seed predicate, every rank would be 0/0")).cast("long"))
         .as("sc_n"))
     // per-node state: (doc_id, is_seed, out_deg, n_seed, rank_nano)
@@ -387,22 +368,25 @@ object Graph {
         (col("is_seed") * snap(lit(Unit) / col("sc_n"))).as("rank_nano"))
   }
 
-  private def rankLoop(docs: DataFrame, seed: Column, iters: Int,
-                       topK: Int): DataFrame = {
-    val (ranks, edges) = rankLoopState(docs, seed, iters)
-    rankLoopTail(ranks, edges, topK)
-  }
-
-  /** [[rankLoop]] over an ALREADY-CHECKPOINTED (shared) edge table —
-    * the registered rank queries run here so the session bills one
-    * edge derivation total ([[sessionEdges]]).
+  /** The seeded-teleport rank loop over a checkpointed edge table,
+    * topped with the in-degree/sort/limit tail: (doc_id, rank_nano,
+    * is_seed, out_deg, in_deg). Recurrence (nano BIGINTs; s(v) ∈ {0,1}
+    * the seed indicator, |S| the seed count):
+    * {{{
+    *   r0(v)     = s(v) · snap(1e9 / |S|)
+    *   contrib_e = snap(r(src) / out_deg(src))
+    *   inflow(v) = Σ contrib_e over in-edges            — exact int sum
+    *   dang      = Σ r(u) over out_deg(u) = 0           — exact int sum
+    *   r'(v)     = s(v) · snap(0.15e9 / |S|)
+    *             + snap(0.85 · (inflow(v) + s(v) · snap(dang / |S|)))
+    * }}}
+    * With seed = everything (|S| = D) this is vanilla PageRank term for
+    * term.
     */
-  private def rankLoopOn(docs: DataFrame, edges: DataFrame, seed: Column,
-                         iters: Int, topK: Int): DataFrame =
-    rankLoopTail(rankLoopStateOn(docs, edges, seed, iters), edges, topK)
-
-  private def rankLoopTail(ranks: DataFrame, edges: DataFrame,
-                           topK: Int): DataFrame = {
+  private[graft] def rankLoopOn(docs: DataFrame, edges: DataFrame, seed: Column,
+                                iters: Int, topK: Int): DataFrame = {
+    val ranks = Fixpoint.iterate(rankSeedState(docs, edges, seed), iters)(
+      rankStep(_, edges))(Fixpoint.Never)
     val inDeg = edges.groupBy(col("dst").as("doc_id"))
       .agg(count(lit(1)).as("in_deg"))
     ranks.join(inDeg, Seq("doc_id"), "left")
@@ -412,21 +396,6 @@ object Graph {
       .limit(topK)
   }
 
-  /** The converged full-frontier rank state + the checkpointed edge
-    * table — the presentation-free core [[rankLoop]] tops with the
-    * in-degree/sort/limit tail and [[rankServeTableDf]] reads whole.
-    */
-  private def rankLoopState(docs: DataFrame, seed: Column,
-                            iters: Int): (DataFrame, DataFrame) = {
-    val edges = linkEdgesDf(docs).localCheckpoint()
-    (rankLoopStateOn(docs, edges, seed, iters), edges)
-  }
-
-  private def rankLoopStateOn(docs: DataFrame, edges: DataFrame,
-                              seed: Column, iters: Int): DataFrame =
-    Fixpoint.iterate(rankSeedState(docs, edges, seed), iters)(
-      rankStep(_, edges))(Fixpoint.Never)
-
   /** The SERVING artifact of the rank family: the FULL per-node
     * (doc_id, rank_nano, trust_nano) table — vanilla PageRank plus the
     * seeded TrustRank in one frame — that [[trustRankSink]] freezes
@@ -434,31 +403,14 @@ object Graph {
     * queries this keeps every node: a crawl scheduler needs the rank
     * of WHATEVER an arrival links at, not just the leaders. 24 bytes
     * per frontier node at any scale.
+    *
+    * Runs over an ALREADY-CHECKPOINTED edge table, which stays the
+    * caller's. The returned backing is the converged state only: a
+    * caller that eagerly materializes the serve frame releases it, a
+    * lazy caller must keep it live.
     */
-  def rankServeTableDf(docs: DataFrame, trustSeed: Column,
-                       iters: Int = RankIters): DataFrame =
-    rankServeState(docs, trustSeed, iters)._1
-
-  /** [[rankServeTableDf]] plus the checkpoint frames backing it (the
-    * two converged rank states + the ONE shared edge table both loops
-    * ran over) — a caller that eagerly materializes the serve frame
-    * (the Freeze pin in [[trustRankSink]]) releases them immediately;
-    * a lazy caller must keep them live.
-    */
-  private[ext] def rankServeState(docs: DataFrame, trustSeed: Column,
-                                  iters: Int = RankIters)
-      : (DataFrame, Seq[DataFrame]) = {
-    val edges = linkEdgesDf(docs).localCheckpoint()
-    val (serve, backing) = rankServeStateOn(docs, edges, trustSeed, iters)
-    (serve, backing :+ edges)
-  }
-
-  /** The fused loop over an ALREADY-CHECKPOINTED edge table. The
-    * returned backing is the converged state only: the edge table
-    * belongs to the caller (the [[sessionEdges]] pin is shared).
-    */
-  private def rankServeStateOn(docs: DataFrame, edges: DataFrame,
-                               trustSeed: Column, iters: Int)
+  private[graft] def rankServeStateOn(docs: DataFrame, edges: DataFrame,
+                                      trustSeed: Column, iters: Int)
       : (DataFrame, Seq[DataFrame]) = {
     // FUSED dual recurrence: the vanilla and the seeded rank ride ONE
     // state frame — one edge join, one dangling aggregate, one
@@ -483,7 +435,7 @@ object Graph {
       .select(col("cn_all"),
         when(col("cn_t") > 0, col("cn_t"))
           .otherwise(raise_error(lit(
-            "rankServeState: the trust seed set is empty — no document " +
+            "rankServeStateOn: the trust seed set is empty — no document " +
               "matches the seed predicate, every trust rank would be 0/0"))
             .cast("long")).as("cn_t"))
     val st0 = docs.select(col("doc_id"),
@@ -625,18 +577,22 @@ object Graph {
                     triggerMs: Long = 10000L,
                     trustSeed: Column = col("source") === lit("src0"))
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val (serve, backing) = rankServeState(baseDocs, trustSeed)
+    // the base is an arbitrary frame, not a corpus directory, so its
+    // graph is derived here rather than read from the session pins
+    val edges = linkEdgesDf(baseDocs).localCheckpoint()
+    val (serve, backing) = rankServeStateOn(baseDocs, edges, trustSeed, RankIters)
     val frozen = Freeze.scoped(checkpoint, serve)
     // the Freeze pin is eager (persist + count), so the rank state and
     // edge table behind the serve frame are dead the moment it returns
-    backing.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
+    (backing :+ edges).foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
     Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
       crawlPriorityAgainst(batch, frozen)
     }
   }
 
   /** One rank-recurrence iteration over the carried state — shared by
-    * [[rankLoop]] and [[pagerankConvergence]] so the two cannot drift.
+    * [[rankLoopOn]], [[pagerankConvergenceOn]] and the incremental
+    * rounds so they cannot drift.
     */
   private def rankStep(ranks: DataFrame, edges: DataFrame): DataFrame = {
     val contribs = ranks.filter(col("out_deg") > 0)
@@ -669,11 +625,11 @@ object Graph {
     */
   def pagerankConvergence(spark: SparkSession, d: String,
                           iters: Int = RankIters): DataFrame =
-    pagerankConvergenceDf(spark, Tables.fanOut(Tables.documents(spark, d)), iters)
+    pagerankConvergenceOn(spark, Tables.fanOut(Tables.documents(spark, d)),
+      sessionEdges(spark, d), iters)
 
-  def pagerankConvergenceDf(spark: SparkSession, docs: DataFrame,
-                            iters: Int = RankIters): DataFrame = {
-    val edges = linkEdgesDf(docs).localCheckpoint()
+  private[graft] def pagerankConvergenceOn(spark: SparkSession, docs: DataFrame,
+                                           edges: DataFrame, iters: Int): DataFrame = {
     // the per-round movement IS the probe: it reads both rounds, so it
     // runs before the operator releases the older one
     val deltas = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
@@ -688,9 +644,8 @@ object Graph {
       false
     }
     // the result is built on the driver from the collected deltas: the
-    // edge table and the final ranks have no reader left
+    // final ranks have no reader left (the edge table is the caller's)
     org.apache.spark.sql.GraftSql.releaseCheckpoint(last)
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(edges)
     import spark.implicits._
     deltas.toSeq.toDF("iter", "l1_delta_nano", "max_delta_nano").orderBy(col("iter"))
   }
@@ -747,14 +702,6 @@ object Graph {
     pagerankIncrementalTail(sessionIncrBase(spark, d),
       sessionEdges(spark, d), IncrRefineIters, 100)
 
-  def pagerankIncrementalDf(docs: DataFrame, iters: Int = RankIters,
-                            refine: Int = IncrRefineIters,
-                            topK: Int = 100): DataFrame = {
-    val edges = linkEdgesDf(docs).localCheckpoint()
-    pagerankIncrementalTail(incrBaseState(docs, edges, iters), edges,
-      refine, topK)
-  }
-
   /** The converged BASE ranks with out-degrees rebound to the full
     * edge set — the warm-start state the refine rounds iterate from
     * and the tail reads `base_rank_nano` out of. Parameter-free given
@@ -763,8 +710,8 @@ object Graph {
     * the operator's own "price only the delta" thesis, previously paid
     * as [[RankIters]] full base rounds per run. Returned CHECKPOINTED.
     */
-  private def incrBaseState(docs: DataFrame, edges: DataFrame,
-                            iters: Int = RankIters): DataFrame = {
+  private[graft] def incrBaseState(docs: DataFrame, edges: DataFrame,
+                                   iters: Int = RankIters): DataFrame = {
     // the cutoff scalar rides the base-edge materialization as a
     // broadcast 1-row count instead of a separate driver action: with
     // cutoff = floor(IncrBaseNum·n / IncrBaseDen), the predicate
@@ -778,7 +725,8 @@ object Graph {
         (col("src") + lit(1L)) * lit(IncrBaseDen.toLong))
       .select(col("src"), col("dst"))
       .localCheckpoint()
-    val base = rankLoopStateOn(docs, baseEdges, lit(true), iters)
+    val base = Fixpoint.iterate(rankSeedState(docs, baseEdges, lit(true)), iters)(
+      rankStep(_, baseEdges))(Fixpoint.Never)
     // the base state is checkpointed — its edge subset is dead
     org.apache.spark.sql.GraftSql.releaseCheckpoint(baseEdges)
     // warm start: rank mass carried over, out-degrees rebound to the
@@ -803,8 +751,8 @@ object Graph {
     * `baseState` may be session-shared ([[sessionIncrBase]]), so the
     * refine loop never releases it.
     */
-  private def pagerankIncrementalTail(baseState: DataFrame, edges: DataFrame,
-                                      refine: Int, topK: Int): DataFrame =
+  private[graft] def pagerankIncrementalTail(baseState: DataFrame, edges: DataFrame,
+                                             refine: Int, topK: Int): DataFrame =
     Fixpoint.iterate(baseState, refine, releaseInit = false)(
         rankStep(_, edges))(Fixpoint.Never)
       .join(baseState
@@ -863,25 +811,17 @@ object Graph {
         sessionEdges(spark, d), sessionEdgesByDst(spark, d), HitsIters)
     }
 
-  def hitsDf(docs: DataFrame, iters: Int = HitsIters, topK: Int = 100): DataFrame = {
-    // fixture form: one plain checkpoint serves both join sides (the
-    // hRaw join re-exchanges it on dst as before — a per-call dst twin
-    // would pay its build shuffle once per call for the same total)
-    val e = linkEdgesDf(docs).localCheckpoint()
-    hitsStateOn(docs, e, e, iters)._1
-      .orderBy(col("auth").desc, col("doc_id")).limit(topK)
-  }
-
   /** The HITS convergence loop over ALREADY-CHECKPOINTED edge tables,
     * returning the zero-filled full-frontier state plus the final
     * round's backing checkpoints (live under the lazy state; an
-    * eagerly-materializing caller releases them — the rankServeState
+    * eagerly-materializing caller releases them — the rankServeStateOn
     * contract). `edgesByDst` holds the same rows keyed for the hRaw
     * gather (the session state passes [[sessionEdgesByDst]], so
-    * neither side of either per-round join re-exchanges |E|).
+    * neither side of either per-round join re-exchanges |E|; a caller
+    * may pass one table for both sides).
     */
-  private def hitsStateOn(docs: DataFrame, edges: DataFrame, edgesByDst: DataFrame,
-                          iters: Int): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def hitsStateOn(docs: DataFrame, edges: DataFrame, edgesByDst: DataFrame,
+                                 iters: Int): (DataFrame, Seq[DataFrame]) = {
     require(iters >= 1, s"hits needs >= 1 iteration, got $iters")
 
     def renorm(raw: Column, mx: Column): Column =
@@ -975,23 +915,10 @@ object Graph {
         sessionEdges(spark, d), WalkSteps, WalkSeeds, WalkStartEvery)
     }
 
-  def randomWalksDf(docs: DataFrame, steps: Int = WalkSteps, seeds: Int = WalkSeeds,
-                    startEvery: Int = WalkStartEvery): DataFrame =
-    randomWalksUnorderedDf(docs, steps, seeds, startEvery)
-      .orderBy(col("start_id"), col("walk_seed"), col("step"))
-
-  /** The walk table without the presentation sort — for consumers
-    * (the context-pair self-join) whose next operation destroys any
-    * ordering (the minhashCandidatePairsUnordered discipline).
-    */
-  def randomWalksUnorderedDf(docs: DataFrame, steps: Int = WalkSteps, seeds: Int = WalkSeeds,
-                             startEvery: Int = WalkStartEvery): DataFrame =
-    randomWalksUnorderedOnEdges(docs, linkEdgesDf(docs).localCheckpoint(),
-      steps, seeds, startEvery)
-
-  /** The walk loop over an ALREADY-CHECKPOINTED edge table — callers
-    * that also consume the edges themselves (link prediction) pass the
-    * shared checkpoint so the corpus-sized bigram derivation runs once.
+  /** The walk loop over an ALREADY-CHECKPOINTED edge table, without
+    * the presentation sort — its consumers (the context-pair self-join)
+    * destroy any ordering (the minhashCandidatePairsUnordered
+    * discipline).
     */
   private[graft] def randomWalksUnorderedOnEdges(docs: DataFrame, edges: DataFrame,
                                                  steps: Int = WalkSteps, seeds: Int = WalkSeeds,
@@ -1047,7 +974,7 @@ object Graph {
     * return (x = prev), local (prev → x is an edge), outward — classes
     * are ordered by descending weight, and the hash only tie-breaks
     * within the winning class. Equal weights collapse to equal
-    * priority, so p = q = 1 reproduces [[randomWalksUnorderedDf]]
+    * priority, so p = q = 1 reproduces [[randomWalksUnorderedOnEdges]]
     * EXACTLY (asserted in GraphSpec), the way the continuous sampler
     * degenerates to the uniform walk. The registered query runs the
     * DFS-like parameterization p = 4, q = 0.25 (outward class wins).
@@ -1087,18 +1014,12 @@ object Graph {
     (order.indexOf(wr), order.indexOf(wl), order.indexOf(wo))
   }
 
-  def node2vecWalksDf(docs: DataFrame, p: Double = 4.0, q: Double = 0.25,
-                      steps: Int = WalkSteps, seeds: Int = WalkSeeds,
-                      startEvery: Int = WalkStartEvery): DataFrame =
-    node2vecWalksOn(docs, linkEdgesDf(docs).localCheckpoint(), p, q, steps,
-      seeds, startEvery)
-
   /** The biased-walk loop over an ALREADY-CHECKPOINTED edge table —
     * the shared-session seam.
     */
-  private def node2vecWalksOn(docs: DataFrame, edges: DataFrame,
-                              p: Double, q: Double, steps: Int, seeds: Int,
-                              startEvery: Int): DataFrame = {
+  private[graft] def node2vecWalksOn(docs: DataFrame, edges: DataFrame,
+                                     p: Double, q: Double, steps: Int, seeds: Int,
+                                     startEvery: Int): DataFrame = {
     require(steps >= 1 && seeds >= 1 && startEvery >= 1,
       s"need steps/seeds/startEvery >= 1, got $steps/$seeds/$startEvery")
     val (prReturn, prLocal, prOut) = node2vecPriorities(p, q)
@@ -1119,7 +1040,7 @@ object Graph {
     // not on [[Fixpoint]]: every step's positions stay live for the union
     for (k <- 1 to steps) {
       // candidates + their node2vec class priority; checkpointed (the
-      // randomWalksUnorderedDf discipline: cand feeds the election AND
+      // uniform walk's discipline: cand feeds the election AND
       // the join-back)
       val cand = pos.join(edges, pos("node_id") === edges("src"))
         .join(adj, Seq("prev_id", "dst"), "left")
@@ -1162,39 +1083,13 @@ object Graph {
     walkPairsFrom(sessionWalkTable(spark, d), WalkWindow)
       .orderBy(col("center"), col("context"))
 
-  def walkContextPairsDf(docs: DataFrame, window: Int = WalkWindow, steps: Int = WalkSteps,
-                         seeds: Int = WalkSeeds, startEvery: Int = WalkStartEvery): DataFrame =
-    walkContextPairsUnorderedDf(docs, window, steps, seeds, startEvery)
-      .orderBy(col("center"), col("context"))
-
-  /** The pair table without the presentation sort — the embedding
-    * trainer's input (its epoch joins destroy any ordering).
-    */
-  def walkContextPairsUnorderedDf(docs: DataFrame, window: Int = WalkWindow,
-                                  steps: Int = WalkSteps, seeds: Int = WalkSeeds,
-                                  startEvery: Int = WalkStartEvery): DataFrame =
-    walkContextPairsUnorderedOnEdges(docs, linkEdgesDf(docs).localCheckpoint(),
-      window, steps, seeds, startEvery)
-
-  /** Pair table over a shared pre-checkpointed edge table — see
-    * [[randomWalksUnorderedOnEdges]].
-    */
-  private[graft] def walkContextPairsUnorderedOnEdges(docs: DataFrame, edges: DataFrame,
-                                                      window: Int = WalkWindow,
-                                                      steps: Int = WalkSteps, seeds: Int = WalkSeeds,
-                                                      startEvery: Int = WalkStartEvery): DataFrame = {
-    require(window >= 1, s"need window >= 1, got $window")
-    walkPairsFrom(
-      randomWalksUnorderedOnEdges(docs, edges, steps, seeds, startEvery)
-        .localCheckpoint(), // the eager walk loop runs once, not per side
-      window)
-  }
-
   /** The windowed co-occurrence pass over an already-materialized walk
-    * table — shared by the per-call form above and the session-pinned
-    * registered path (one definition, no drift).
+    * table (it feeds both self-join sides), without the presentation
+    * sort — the embedding trainer's input (its epoch joins destroy any
+    * ordering).
     */
-  private def walkPairsFrom(walks: DataFrame, window: Int): DataFrame = {
+  private[graft] def walkPairsFrom(walks: DataFrame, window: Int): DataFrame = {
+    require(window >= 1, s"need window >= 1, got $window")
     val a = walks.select(col("start_id"), col("walk_seed"),
       col("step").as("step_a"), col("node_id").as("center"))
     val b = walks.select(col("start_id"), col("walk_seed"),
@@ -1255,11 +1150,11 @@ object Graph {
     */
   private[graft] val trainedNodeEmbeddings =
     SessionArtifact.frameWithScratch("node_embeddings", Pin.Checkpoint) { (spark, d) =>
-      val docs = Tables.fanOut(Tables.documents(spark, d))
       // checkpointed: the pair table feeds every epoch AND the n_pairs
       // tail — without this the walk-pair groupBy re-evaluates per reader
-      val pairs = walkContextPairsUnorderedDf(docs).localCheckpoint()
-      val out = nodeEmbeddingsOnPairs(pairs, docs.count()).localCheckpoint()
+      val pairs = walkPairsFrom(sessionWalkTable(spark, d), WalkWindow).localCheckpoint()
+      val out = nodeEmbeddingsOnPairs(pairs,
+        Tables.fanOut(Tables.documents(spark, d)).count()).localCheckpoint()
       org.apache.spark.sql.GraftSql.releaseCheckpoint(pairs)
       (out, Seq(out))
     }
@@ -1362,24 +1257,9 @@ object Graph {
           sessionUndirected(spark, d), ComponentRounds))
     }
 
-  def linkComponentsDf(docs: DataFrame, rounds: Int = ComponentRounds): DataFrame = {
-    require(rounds >= 1, s"linkComponents needs >= 1 round, got $rounds")
-    // checkpoint before the two-branch union: the corpus-sized edge
-    // derivation must not ride into both branches (the rankLoop/hitsDf
-    // discipline; exchange reuse across the copies is not guaranteed)
-    val e = linkEdgesDf(docs).localCheckpoint()
-    val und = e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    // only und is read from here on — the directed table is dead
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(e)
-    minLabelComponentsOn(docs.select(col("doc_id")), und, rounds)
-  }
-
   /** The min-label propagation core over an explicit node frontier and
     * an ALREADY-CHECKPOINTED undirected edge table — shared by
-    * [[linkComponentsDf]] and the media dedup-cluster query (one loop,
+    * [[linkComponents]] and the media dedup-cluster query (one loop,
     * no drift). Iterates to a fixpoint, capped at `rounds`; the early
     * exit is free parity-wise (the oracle's fixed unroll runs ≥ as
     * many rounds, post-fixpoint rounds are identities). Returns
@@ -1450,28 +1330,20 @@ object Graph {
     * bounded by the cap, checkpoints released deterministically.
     */
   def crawlDepth(spark: SparkSession, d: String,
-                 rounds: Int = BfsRounds): DataFrame = {
-    val docs = Tables.fanOut(Tables.documents(spark, d))
-    val d0 = docs.select(col("doc_id"),
-      when(col("source") === lit("src0"), lit(0L))
-        .otherwise(lit(BfsUnreached)).as("depth"))
-    crawlDepthTail(hopDistancesOn(d0, sessionEdges(spark, d), rounds))
-  }
+                 rounds: Int = BfsRounds): DataFrame =
+    crawlDepthOn(Tables.fanOut(Tables.documents(spark, d)), sessionEdges(spark, d),
+      col("source") === lit("src0"), rounds)
 
-  def crawlDepthDf(docs: DataFrame, seed: Column,
-                   rounds: Int = BfsRounds): DataFrame = {
-    val e = linkEdgesDf(docs).localCheckpoint()
+  /** BFS from the `seed` documents over an ALREADY-CHECKPOINTED edge
+    * table, then the reached-only rows + the per-depth histogram off
+    * the final state.
+    */
+  private[graft] def crawlDepthOn(docs: DataFrame, edges: DataFrame, seed: Column,
+                                  rounds: Int): DataFrame = {
     val d0 = docs.select(col("doc_id"),
       when(seed, lit(0L)).otherwise(lit(BfsUnreached)).as("depth"))
-    val dist = hopDistancesOn(d0, e, rounds)
-    // the final state is checkpointed — the edge table is dead
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(e)
-    crawlDepthTail(dist)
-  }
-
-  /** Reached-only rows + the per-depth histogram off the final state. */
-  private def crawlDepthTail(dist: DataFrame): DataFrame = {
-    val reached = dist.filter(col("depth") < lit(BfsUnreached))
+    val reached = hopDistancesOn(d0, edges, rounds)
+      .filter(col("depth") < lit(BfsUnreached))
     val hist = reached.groupBy(col("depth"))
       .agg(count(lit(1)).as("n_at_depth"))
     reached.join(hist, Seq("depth"))
@@ -1542,7 +1414,7 @@ object Graph {
     * pair-DISTINCT + gate join (backward), each peel two semi-join
     * subgraph restrictions — per-round cost is proportional to the
     * LIVE edge set, which collapses after peel 1 (the giant core
-    * leaves). State is (doc_id, label): the [[rankLoop]] footprint.
+    * leaves). State is (doc_id, label): the [[rankLoopOn]] footprint.
     *
     * Fusion adjudicated (the crawl-priority dual-column precedent,
     * r13 verdict #3): NOT applied. That precedent halved cost because
@@ -1661,19 +1533,14 @@ object Graph {
           .otherwise(lit("other")).as("region"))
   }
 
-  def linkSccDf(docs: DataFrame, peels: Int = SccPeels,
-                rounds: Int = ComponentRounds): DataFrame =
-    sccDf(docs.select(col("doc_id")), linkEdgesDf(docs).localCheckpoint(),
-      peels, rounds)
-
   /** The peel loop over an explicit (src, dst) edge table — the core
-    * [[linkSccDf]] binds to the synthetic link edges; tests run it on
+    * [[linkScc]] binds to the session link edges; tests run it on
     * planted cycle/path graphs. `edges` must arrive materialized (a
     * checkpoint leaf): every peel and round joins it.
     */
-  private[ext] def sccDf(nodes: DataFrame, edges: DataFrame,
-                         peels: Int = SccPeels,
-                         rounds: Int = ComponentRounds): DataFrame = {
+  private[graft] def sccDf(nodes: DataFrame, edges: DataFrame,
+                           peels: Int = SccPeels,
+                           rounds: Int = ComponentRounds): DataFrame = {
     // (doc_id, scc_id), scc_id null until confirmed
     val state0 = nodes.select(col("doc_id"), lit(null).cast("long").as("scc_id"))
     // what a peel builds besides its state: dead once the next peel
@@ -1799,20 +1666,12 @@ object Graph {
           sessionUndirected(spark, d), LabelPropRounds))
     }
 
-  def labelPropagationDf(docs: DataFrame, rounds: Int = LabelPropRounds): DataFrame = {
-    val (und, _) = undirectedWithDegrees(docs)
-    val out = labelPropagationOn(docs, und, rounds)
-    // the returned frame reads the final label state only
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
-    out
-  }
-
   /** The propagation loop over an ALREADY-CHECKPOINTED undirected
     * table, which stays the caller's: the registered query passes the
     * shared [[sessionUndirected]].
     */
-  private def labelPropagationOn(docs: DataFrame, und: DataFrame,
-                                 rounds: Int): DataFrame = {
+  private[graft] def labelPropagationOn(docs: DataFrame, und: DataFrame,
+                                        rounds: Int): DataFrame = {
     val st0 = docs.select(col("doc_id"), col("lang"),
         (col("doc_id") % 3 === 0).as("is_seed"))
       .select(col("doc_id"), col("lang"), col("is_seed"),
@@ -1892,20 +1751,12 @@ object Graph {
           sessionUndirected(spark, d), KcoreRounds))
     }
 
-  def kcoreMembershipDf(docs: DataFrame, rounds: Int = KcoreRounds): DataFrame = {
-    val (und, _) = undirectedWithDegrees(docs)
-    val out = kcoreMembershipOn(docs, und, rounds)
-    // the returned frame reads the degree, threshold and alive tables only
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
-    out
-  }
-
   /** The peel loop over an ALREADY-CHECKPOINTED undirected table, which
     * stays the caller's: the registered query passes the shared
     * [[sessionUndirected]].
     */
-  private def kcoreMembershipOn(docs: DataFrame, und: DataFrame,
-                                rounds: Int): DataFrame = {
+  private[graft] def kcoreMembershipOn(docs: DataFrame, und: DataFrame,
+                                       rounds: Int): DataFrame = {
     require(rounds >= 1, s"kcore needs >= 1 round, got $rounds")
     val udeg = und.groupBy(col("src").as("doc_id"))
       .agg(count(lit(1)).as("udeg"))
@@ -1975,46 +1826,19 @@ object Graph {
     * + one ≤1e6-row score histogram — no per-pair state, no windows
     * over the corpus.
     */
-  def linkPredictionAuc(spark: SparkSession, d: String): DataFrame = {
-    // reuse the session's trained embedding table ([[trainedNodeEmbeddings]]):
-    // the eval needs only the edge table (one corpus pass) on top of it
-    val docs = Tables.fanOut(Tables.documents(spark, d))
-    val em = trainedNodeEmbeddings(spark, d)
-      .select(col("doc_id"), col("x0"), col("x1"), col("x2"), col("x3"))
-    linkPredictionAucOnEmb(docs, em, docs.count())
-  }
+  def linkPredictionAuc(spark: SparkSession, d: String): DataFrame =
+    // both inputs are session pins: the trained embedding table
+    // ([[trainedNodeEmbeddings]]) and the edge table the labels read
+    linkPredictionAucOnEdges(sessionEdges(spark, d), trainedNodeEmbeddings(spark, d),
+      Tables.fanOut(Tables.documents(spark, d)).count())
 
-  /** Fixture-path variant that trains inline (no session cache) — the
-    * GraphSpec determinism/planted-structure harness drives this with
-    * non-default walk densities.
+  /** The evaluation core: scores pos/neg candidate links of an
+    * ALREADY-CHECKPOINTED edge table `e` against the embedding table
+    * `em` (doc_id, x0..x3; other columns are ignored). `nTotal` is the
+    * frontier size the negative targets are bucketed into.
     */
-  def linkPredictionAucDf(docs: DataFrame,
-                          startEvery: Int = WalkStartEvery): DataFrame = {
-    val nTotal = docs.count()
-    val e = linkEdgesDf(docs).localCheckpoint()
-    // the walk chain probes the SAME edge checkpoint the pos/neg labels
-    // read — the corpus-sized bigram derivation runs exactly once
-    val pairs = walkContextPairsUnorderedOnEdges(docs, e, startEvery = startEvery)
-      .localCheckpoint()
-    val em = nodeEmbeddingsOnPairs(pairs, nTotal)
-      .select(col("doc_id"), col("x0"), col("x1"), col("x2"), col("x3"))
-      .localCheckpoint()
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(pairs)
-    val out = linkPredictionAucOnEdges(e, em, nTotal)
-    out
-  }
-
-  /** The evaluation core over an explicit embedding table: derives the
-    * edge set and scores pos/neg candidate links against `em`.
-    */
-  private def linkPredictionAucOnEmb(docs: DataFrame, em: DataFrame,
-                                     nTotal: Long): DataFrame = {
-    val e = linkEdgesDf(docs).localCheckpoint()
-    linkPredictionAucOnEdges(e, em, nTotal)
-  }
-
-  private def linkPredictionAucOnEdges(e: DataFrame, em: DataFrame,
-                                       nTotal: Long): DataFrame = {
+  private[graft] def linkPredictionAucOnEdges(e: DataFrame, em: DataFrame,
+                                              nTotal: Long): DataFrame = {
     val pos = e.select(col("src"), col("dst"), lit(1L).as("pos"))
     val neg = e.select(col("src"),
         pmod(md5Bucket60(concat_ws(":", col("src"), col("dst"), lit("neg"))),
@@ -2036,27 +1860,6 @@ object Graph {
     TextAnalysis.aucOfScores(scored)
   }
 
-  /** The undirected simple edge table (both directions, distinct) and
-    * its per-node degree table — the triangle family's shared base.
-    * Returns (und, udeg) with und checkpointed; the caller owns the
-    * release.
-    */
-  private def undirectedWithDegrees(docs: DataFrame): (DataFrame, DataFrame) = {
-    val e = linkEdgesDf(docs).localCheckpoint()
-    // (the former bySrc repartition-before-checkpoint variant is gone:
-    // its premise — checkpoint preserves outputPartitioning — does not
-    // hold under AQE on 4.1.2, and its only consumer, the k-core peel,
-    // now iterates the shared src-KEYED sessionUndirected artifact)
-    val und = e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(e)
-    val udeg = und.groupBy(col("src").as("doc_id"))
-      .agg(count(lit(1)).as("udeg"))
-    (und, udeg)
-  }
-
   /** Degree-ordered orientation of the undirected edge set: each
     * undirected edge {u, v} survives exactly once, pointing from the
     * smaller to the larger endpoint in the (degree, id) total order.
@@ -2074,6 +1877,18 @@ object Graph {
       .filter(col("sdeg") < col("ddeg") ||
         (col("sdeg") === col("ddeg") && col("src") < col("dst")))
       .select(col("src"), col("dst"), col("sdeg"), col("ddeg"))
+
+  /** The triangle family's shared base over an ALREADY-CHECKPOINTED
+    * undirected edge table, which stays the caller's: the
+    * (oriented edges, undirected degrees) pair, both checkpointed and
+    * owned by the caller.
+    */
+  private[graft] def orientOn(und: DataFrame): (DataFrame, DataFrame) = {
+    val udeg = und.groupBy(col("src").as("doc_id"))
+      .agg(count(lit(1)).as("udeg"))
+      .localCheckpoint()
+    (orientEdges(und, udeg).localCheckpoint(), udeg)
+  }
 
   /** Per-triangle rows (a, b, c) of the undirected link graph, each
     * triangle exactly once (endpoints ascending in the degree-id
@@ -2117,19 +1932,16 @@ object Graph {
     * other replays — both oracles replay their own full chains, so
     * parity is unaffected. |E| + |V| rows pinned per (session, dir).
     */
-  private val orientedTriangleState = SessionArtifact.pair("triangle_state") { (spark, d) =>
+  private[ext] val orientedTriangleState = SessionArtifact.pair("triangle_state") { (spark, d) =>
     // two store entries (different schemas); the build derives both
-    // at once, so a cold store pays ONE derivation — its scratch
-    // checkpoints are released after the store copies materialize
+    // at once from the session undirected pin, so a cold store pays
+    // ONE orientation — its scratch checkpoints are released after the
+    // store copies materialize
     var scratch: Option[(DataFrame, DataFrame)] = None
     lazy val derived = {
-      val docs = Tables.fanOut(Tables.documents(spark, d))
-      val (und, udeg0) = undirectedWithDegrees(docs)
-      val udeg = udeg0.localCheckpoint()
-      val oe = orientEdges(und, udeg).localCheckpoint()
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
-      scratch = Some((oe, udeg))
-      (oe, udeg)
+      val oeAndUdeg = orientOn(sessionUndirected(spark, d))
+      scratch = Some(oeAndUdeg)
+      oeAndUdeg
     }
     val udeg = SessionArtifact.stored(spark, "triangle_udeg", d, Pin.Checkpoint)(derived._2)
     val oe = SessionArtifact.stored(spark, "triangle_oe", d, Pin.Checkpoint)(derived._1)
@@ -2147,29 +1959,15 @@ object Graph {
     clusteringCoefficientOn(Tables.fanOut(Tables.documents(spark, d)), oe, udeg)
   }
 
-  def clusteringCoefficientDf(docs: DataFrame): DataFrame = {
-    // udeg must be materialized before the und release, as in
-    // graphTransitivityDf — but unlike it (which collects its 1-row
-    // result and releases both), the returned per-node frame is lazy
-    // and reads udeg AND oe: EVERY call pins these two checkpoints
-    // (|V| + |E_und| rows) until the frame is garbage collected
-    val (und, udeg0) = undirectedWithDegrees(docs)
-    val udeg = udeg0.localCheckpoint()
-    val oe = orientEdges(und, udeg).localCheckpoint()
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
-    clusteringCoefficientOn(docs, oe, udeg)
-  }
-
   /** The per-node tail over the ALREADY-CHECKPOINTED (oriented edges,
-    * undirected degrees) pair — shared by the standalone Df form and
-    * the session-cached registered query. `udeg` is the degree table
+    * undirected degrees) pair of [[orientOn]]. `udeg` is the degree table
     * the orientation was built from: every node with degree >= 1
     * appears in it (and carries the same value the oriented table's
     * endpoint columns carry), so reading it directly replaces the
     * former 2|E|-row endpoint explode + max re-aggregation.
     */
-  private def clusteringCoefficientOn(docs: DataFrame, oe: DataFrame,
-                                      udeg: DataFrame): DataFrame = {
+  private[graft] def clusteringCoefficientOn(docs: DataFrame, oe: DataFrame,
+                                             udeg: DataFrame): DataFrame = {
     val perNode = triangleRows(oe)
       .select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
       .groupBy(col("doc_id"))
@@ -2211,19 +2009,10 @@ object Graph {
     // tail is a single agg over the checkpointed scan, nothing to pin.
     degreeAssortativityOn(orientedTriangleState(spark, d)._1)
 
-  def degreeAssortativityDf(docs: DataFrame): DataFrame = {
-    val (und, udeg) = undirectedWithDegrees(docs)
-    val oe = orientEdges(und, udeg)
-    val out = degreeAssortativityOn(oe).localCheckpoint()
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
-    out
-  }
-
-  /** The scalar tail over an ALREADY-MATERIALIZED oriented edge table —
-    * shared by the standalone Df form and the session-cached registered
-    * query (the graphTransitivityOn pattern).
+  /** The scalar tail over an ALREADY-MATERIALIZED oriented edge table
+    * (the graphTransitivityOn pattern).
     */
-  private def degreeAssortativityOn(oe: DataFrame): DataFrame = {
+  private[graft] def degreeAssortativityOn(oe: DataFrame): DataFrame = {
     val agg = oe.agg(
       count(lit(1)).as("n_und_edges"),
       sum(col("sdeg") * col("ddeg")).as("sum_jk"),
@@ -2249,28 +2038,17 @@ object Graph {
     */
   def graphTransitivity(spark: SparkSession, d: String): DataFrame = {
     val (oe, udeg) = orientedTriangleState(spark, d)
-    // materialize the 1-row result eagerly (the Df form's behavior):
-    // the scalar cross-joins collapse out of the presented plan
+    // materialize the 1-row result eagerly: the scalar cross-joins
+    // collapse out of the presented plan
     graphTransitivityOn(Tables.fanOut(Tables.documents(spark, d)), oe, udeg)
       .localCheckpoint()
   }
 
-  def graphTransitivityDf(docs: DataFrame): DataFrame = {
-    val (und, udeg0) = undirectedWithDegrees(docs)
-    val udeg = udeg0.localCheckpoint()
-    val oe = orientEdges(und, udeg).localCheckpoint()
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
-    val r = graphTransitivityOn(docs, oe, udeg).localCheckpoint()
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(oe)
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(udeg)
-    r
-  }
-
-  /** The scalar tail over ALREADY-CHECKPOINTED (oe, udeg) — shared by
-    * the standalone Df form and the session-cached registered query.
+  /** The scalar tail over ALREADY-CHECKPOINTED (oe, udeg) of
+    * [[orientOn]].
     */
-  private def graphTransitivityOn(docs: DataFrame, oe: DataFrame,
-                                  udeg: DataFrame): DataFrame = {
+  private[graft] def graphTransitivityOn(docs: DataFrame, oe: DataFrame,
+                                         udeg: DataFrame): DataFrame = {
     val nTri = triangleRows(oe).agg(count(lit(1)).as("n_triangles"))
     // W and |E_und| from the degree table: Σ k(k−1)/2 is exact (k(k−1)
     // always even), Σ k = 2|E|
@@ -2308,19 +2086,10 @@ object Graph {
   def graphReciprocity(spark: SparkSession, d: String): DataFrame =
     graphReciprocityOn(sessionEdges(spark, d))
 
-  def graphReciprocityDf(docs: DataFrame): DataFrame = {
-    val e = linkEdgesDf(docs).localCheckpoint()
-    // the 1-row result materializes before its edge copy is released
-    val r = graphReciprocityOn(e).localCheckpoint()
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(e)
-    r
-  }
-
   /** The two scalar aggregates over an ALREADY-CHECKPOINTED edge
-    * table — shared by the standalone Df form and the session-cached
-    * registered query.
+    * table.
     */
-  private def graphReciprocityOn(e: DataFrame): DataFrame = {
+  private[graft] def graphReciprocityOn(e: DataFrame): DataFrame = {
     val recip = e.join(
         e.select(col("dst").as("src"), col("src").as("dst")),
         Seq("src", "dst"), "left_semi")

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The session-artifact registry's two standing rules that need no
-  * Spark session: the build ledger bills each artifact its own time,
-  * and no module grows a private session cache beside the registry.
+/** The session-artifact registry's standing rules that need no Spark
+  * session: the build ledger bills each artifact its own time, no
+  * module grows a private session cache beside the registry, and no
+  * query derives its own copy of the session link graph.
   */
 class SessionRegistrySpec extends AnyFunSuite {
 
@@ -45,5 +46,31 @@ class SessionRegistrySpec extends AnyFunSuite {
       .toSeq
     assert(offenders.isEmpty,
       s"declare a SessionArtifact instead of a session-keyed map in: ${offenders.mkString(", ")}")
+  }
+
+  test("only the session edge build and trustRankSink derive the link graph") {
+    // one link graph per session: the graph cores take the edge table
+    // they are given, so a new linkEdgesDf( call site is a query
+    // building its own copy beside the session pins. trustRankSink's
+    // base is an arbitrary frame, not a corpus directory.
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    // an object member: `def`/`val` at the two-space member indent
+    val member = """^  (?:(?:private|protected)(?:\[\w+\])?\s+|lazy\s+|final\s+|override\s+)*(?:def|val)\s+(\w+)""".r
+    val callers = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        var enclosing = "<top>"
+        Files.readAllLines(p).asScala.flatMap { line =>
+          member.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
+          val code = line.trim
+          val isComment = code.startsWith("*") || code.startsWith("/*") || code.startsWith("//")
+          val calls = !isComment && code.split("//")(0).contains("linkEdgesDf(") &&
+            !code.contains("def linkEdgesDf(")
+          if (calls) Some(s"${p.getFileName}:$enclosing") else None
+        }
+      }.toSeq.sorted
+    assert(callers == Seq("Graph.scala:sessionEdges", "Graph.scala:trustRankSink"),
+      s"linkEdgesDf( is called from ${callers.size} places: ${callers.mkString(", ")}")
   }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Link-graph analytics: exactness of the integer PageRank recurrence
   * (against an independent driver-side replay), the dangling-mass path,
   * partition invariance, the contiguity assumption the edge derivation
-  * rests on, and plan shape.
+  * rests on, and plan shape. The cores run over a [[FixtureGraph]] the
+  * test owns; the registered queries over the session pins.
   */
 class GraphSpec extends SparkTestBase {
 
@@ -59,7 +60,8 @@ class GraphSpec extends SparkTestBase {
           snap(0.85 * (contrib.getOrElse(v, 0L) + snap(dang.toDouble / d)).toDouble))
       }
     }
-    val got = Graph.pagerankDf(fixture, iters = 4, topK = 10).collect()
+    val got = FixtureGraph.of(fixture)(g =>
+        Graph.rankLoopOn(fixture, g.edges, lit(true), iters = 4, topK = 10).collect())
       .map(row => row.getLong(0) -> row.getLong(1)).toMap
     assert(got == r, s"spark=$got replay=$r")
     // the dangling node's mass was redistributed, not dropped
@@ -69,7 +71,9 @@ class GraphSpec extends SparkTestBase {
 
   test("pagerank on fixture data: mass conserved, hubs outrank the base") {
     val n = docs.count().toInt
-    val all = Graph.pagerankDf(graft.Tables.documents(spark, sfDir), 4, n).collect()
+    val all = FixtureGraph.of(docs)(g =>
+      Graph.rankLoopOn(docs, g.edges, lit(true), 4, n)
+        .select("doc_id", "rank_nano", "out_deg", "in_deg").collect())
     assert(all.length == n)
     val total = all.map(_.getLong(1)).sum
     // snapping loses/gains < 0.5 nano per edge contribution per round
@@ -85,16 +89,15 @@ class GraphSpec extends SparkTestBase {
   }
 
   test("pagerank is partition-invariant (the integer-aggregate discipline)") {
-    val a = Graph.pagerankDf(docs.repartition(1), 3, 50).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val b = Graph.pagerankDf(docs.repartition(7), 3, 50).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(a.toSeq == b.toSeq)
+    def ranks(d: org.apache.spark.sql.DataFrame) = FixtureGraph.of(d)(g =>
+      Graph.rankLoopOn(d, g.edges, lit(true), 3, 50).collect()
+        .map(r => (r.getLong(0), r.getLong(1))))
+    assert(ranks(docs.repartition(1)).toSeq == ranks(docs.repartition(7)).toSeq)
   }
 
   test("degrees: out_deg sums to |E| and equals in_deg total; zero-filled nodes present") {
-    val deg = Graph.linkGraphDegreesDf(docs).collect()
-    val nEdges = Graph.linkEdgesDf(docs).count()
+    val (deg, nEdges) = FixtureGraph.of(docs)(g =>
+      (Graph.linkGraphDegreesOn(docs, g.edges).collect(), g.edges.count()))
     assert(deg.map(_.getLong(1)).sum == nEdges)
     assert(deg.map(_.getLong(2)).sum == nEdges)
     assert(deg.length == docs.count())
@@ -123,7 +126,8 @@ class GraphSpec extends SparkTestBase {
           snap(0.85 * (contrib.getOrElse(v, 0L) + sv * snap(dang.toDouble / nS)).toDouble))
       }
     }
-    val got = Graph.trustrankDf(fixture, col("doc_id") % 2 === 0, 4, 10).collect()
+    val got = FixtureGraph.of(fixture)(g =>
+        Graph.rankLoopOn(fixture, g.edges, col("doc_id") % 2 === 0, 4, 10).collect())
       .map(row => row.getLong(0) -> row.getLong(1)).toMap
     assert(got == r, s"spark=$got replay=$r")
   }
@@ -134,7 +138,8 @@ class GraphSpec extends SparkTestBase {
     // materialization inside the eager builder, surfacing as a Spark
     // job failure whose cause chain carries the message
     val e = intercept[Exception] {
-      Graph.trustrankDf(docs, col("source") === lit("no_such_source"), 2, 10)
+      FixtureGraph.of(docs)(g =>
+        Graph.rankLoopOn(docs, g.edges, col("source") === lit("no_such_source"), 2, 10))
     }
     val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
@@ -142,10 +147,18 @@ class GraphSpec extends SparkTestBase {
   }
 
   test("trustrank with the full frontier as seeds IS pagerank") {
-    val pr = Graph.pagerankDf(docs, 3, 50).collect().map(_.toSeq)
-    val tr = Graph.trustrankDf(docs, lit(true), 3, 50).collect()
-      .map(r => Seq(r.getLong(0), r.getLong(1), r.getLong(3), r.getLong(4)))
-    assert(pr.toSeq == tr.toSeq)
+    // the fused serve table's trust column, seeded with every node, is
+    // its vanilla rank column, and both are the seeded loop's ranks
+    val n = docs.count().toInt
+    FixtureGraph.of(docs) { g =>
+      val (serve, last) = Graph.rankServeStateOn(docs, g.edges, lit(true), 3)
+      last.foreach(g.own)
+      val fused = serve.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val loop = Graph.rankLoopOn(docs, g.edges, lit(true), 3, n).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(fused.values.forall { case (rank, trust) => rank == trust })
+      assert(fused.map { case (v, (rank, _)) => v -> rank } == loop)
+    }
   }
 
   test("edge derivation invariants hold across corpus shapes") {
@@ -170,7 +183,7 @@ class GraphSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1)))
       assert(edges.toSet == again.toSet)
       // degree table covers the whole frontier and balances
-      val deg = Graph.linkGraphDegreesDf(df).collect()
+      val deg = FixtureGraph.of(df)(g => Graph.linkGraphDegreesOn(df, g.edges).collect())
       assert(deg.length == d)
       assert(deg.map(_.getLong(1)).sum == edges.length)
       assert(deg.map(_.getLong(2)).sum == edges.length)
@@ -178,7 +191,8 @@ class GraphSpec extends SparkTestBase {
   }
 
   test("pagerank convergence audit: movement decays monotonically to near-fixpoint") {
-    val rows = Graph.pagerankConvergenceDf(spark, docs, iters = 4).collect()
+    val rows = FixtureGraph.of(docs)(g =>
+      Graph.pagerankConvergenceOn(spark, docs, g.edges, iters = 4).collect())
     assert(rows.length == 4)
     val l1 = rows.map(_.getLong(1))
     assert(l1.zip(l1.tail).forall { case (a, b) => b < a },
@@ -195,8 +209,8 @@ class GraphSpec extends SparkTestBase {
     val edges = Graph.linkEdgesDf(fixture).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val bySrc = edges.groupBy(_._1)
-    val walks = Graph.randomWalksDf(fixture, steps = 3, seeds = 2, startEvery = 1)
-      .collect()
+    val walks = FixtureGraph.of(fixture)(g => Graph.randomWalksUnorderedOnEdges(
+        fixture, g.edges, steps = 3, seeds = 2, startEvery = 1).collect())
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2), r.getLong(3)))
     val byWalk = walks.groupBy(_._1).map { case (w, rs) =>
       w -> rs.sortBy(_._2).map(_._3).toSeq }
@@ -247,8 +261,11 @@ class GraphSpec extends SparkTestBase {
       auth = (0L to 9L).map(i => i -> aN.getOrElse(i, 0L)).toMap
       hub = (0L to 9L).map(i => i -> hN.getOrElse(i, 0L)).toMap
     }
-    val got = Graph.hitsDf(fixture, iters = 4, topK = 10).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val got = FixtureGraph.of(fixture) { g =>
+      val (state, last) = Graph.hitsStateOn(fixture, g.edges, g.edges, iters = 4)
+      last.foreach(g.own)
+      state.collect()
+    }.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val expected = (0L to 9L).map(i => i -> (auth(i), hub(i))).toMap
     assert(got == expected, s"spark=$got replay=$expected")
     // the dangling solo doc is no hub; the best authority is max-normalized to 1e6
@@ -274,15 +291,19 @@ class GraphSpec extends SparkTestBase {
       i -> r
     }.toMap
     val sizes = expected.values.groupBy(identity).map { case (c, vs) => c -> vs.size.toLong }
-    val got = Graph.linkComponentsDf(fixture, rounds = 8).collect()
+    val got = FixtureGraph.of(fixture)(g =>
+        Graph.minLabelComponentsOn(fixture.select("doc_id"), g.undirected, 8).collect())
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == expected.map { case (d, c) => d -> (c, sizes(c)) },
       s"got=$got expected labels=$expected sizes=$sizes")
   }
 
   test("linkComponents converged at fixture scale (one more round is a fixpoint)") {
-    val a = Graph.linkComponentsDf(docs, rounds = 8).collect().map(_.toSeq).toSeq
-    val b = Graph.linkComponentsDf(docs, rounds = 9).collect().map(_.toSeq).toSeq
+    val (a, b) = FixtureGraph.of(docs) { g =>
+      def labels(rounds: Int) = Graph.minLabelComponentsOn(docs.select("doc_id"),
+        g.undirected, rounds).collect().map(_.toSeq).toSeq
+      (labels(8), labels(9))
+    }
     assert(a == b, "label propagation had not converged after 8 rounds")
     // every component is labelled by its own minimum doc_id
     val byComp = a.groupBy(_(1).asInstanceOf[Long])
@@ -296,10 +317,12 @@ class GraphSpec extends SparkTestBase {
     // depend on the join strategy
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
-    val normal = Graph.pagerankDf(docs, 3, 50).collect().map(_.toSeq).toSeq
+    def ranks() = FixtureGraph.of(docs)(g =>
+      Graph.rankLoopOn(docs, g.edges, lit(true), 3, 50).collect().map(_.toSeq).toSeq)
+    val normal = ranks()
     try {
       spark.conf.set(key, "-1")
-      val smj = Graph.pagerankDf(docs, 3, 50).collect().map(_.toSeq).toSeq
+      val smj = ranks()
       assert(smj == normal, "ranks changed under the no-broadcast regime")
     } finally spark.conf.set(key, prev)
   }
@@ -315,12 +338,12 @@ class GraphSpec extends SparkTestBase {
       l.contains("Exchange") && !l.contains("BroadcastExchange")
         && !l.contains("Reused") && !l.contains("RoundRobinPartitioning")
         && !l.contains("SinglePartition"))
-    // the corpus-sized distinct(src,dst) exchange must appear exactly
-    // once (degrees come from ONE unpivoted aggregation — a second copy
-    // means the edge subtree is being re-evaluated)
+    // the degrees read the session edge pin: the corpus-sized
+    // distinct(src,dst) exchange of the edge derivation must not appear
+    // at all (degrees come from ONE unpivoted aggregation over the pin)
     val distincts = pd.linesIterator.count(l =>
       l.contains("Exchange hashpartitioning(src") && l.contains("dst"))
-    assert(distincts == 1, s"edge subtree evaluated $distincts times:\n$pd")
+    assert(distincts == 0, s"edge subtree evaluated $distincts times:\n$pd")
     // + groupBy(node) + final sort (the node join broadcasts at fixture
     // scale; at 100 TB it is one more doc_id-keyed pair)
     val keyed = keyedExchanges(pd)
@@ -334,18 +357,19 @@ class GraphSpec extends SparkTestBase {
   }
 
   test("personalized pagerank specializes to vanilla pagerank and trustrank") {
-    val docs = plantedDocs
-    // topic = everything -> the vanilla recurrence term for term
-    val vanilla = Graph.pagerankDf(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val pprAll = Graph.personalizedPagerankDf(docs, lit(true)).collect()
-      .map(r => (r.getLong(0), r.getAs[Long]("rank_nano"))).toMap
-    assert(pprAll == vanilla)
-    // topic = a seed predicate -> trustrank IS personalized pagerank
-    val seed = col("doc_id") % 2 === 0
-    val tr = Graph.trustrankDf(docs, seed).collect().map(_.toSeq).toSet
-    val ppr = Graph.personalizedPagerankDf(docs, seed).collect().map(_.toSeq).toSet
-    assert(ppr == tr)
+    // the registered q_pagerank and q_trustrank (tails over the session
+    // serve table) are the personalized loop with topic = everything
+    // and topic = the trusted source
+    def registered(q: String) = graft.SparkEntry.queries(q)(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (vanilla, trust) = (registered("q_pagerank"), registered("q_trustrank"))
+    FixtureGraph.of(docs) { g =>
+      def ppr(topic: org.apache.spark.sql.Column) =
+        Graph.rankLoopOn(docs, g.edges, topic, Graph.RankIters, 100).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(ppr(lit(true)) == vanilla)
+      assert(ppr(col("source") === lit("src0")) == trust)
+    }
   }
 
   test("sccDf labels a planted cycle-vs-path graph exactly (SCC != WCC)") {
@@ -431,16 +455,20 @@ class GraphSpec extends SparkTestBase {
         }
       }
     }
-    val got = Graph.linkSccDf(docs).collect()
+    val got = FixtureGraph.of(docs)(g =>
+        Graph.sccDf(docs.select("doc_id"), g.edges).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == label.toMap, "peel labels must equal Tarjan's components")
   }
 
   test("node2vec with p = q = 1 degenerates to the uniform walk exactly") {
     val docs = plantedDocs
-    val uniform = Graph.randomWalksDf(docs, startEvery = 2).collect().map(_.toSeq).toSet
-    val unbiased = Graph.node2vecWalksDf(docs, p = 1.0, q = 1.0, startEvery = 2)
-      .collect().map(_.toSeq).toSet
+    val (uniform, unbiased) = FixtureGraph.of(docs) { g =>
+      (Graph.randomWalksUnorderedOnEdges(docs, g.edges, startEvery = 2)
+        .collect().map(_.toSeq).toSet,
+        Graph.node2vecWalksOn(docs, g.edges, p = 1.0, q = 1.0, Graph.WalkSteps,
+          Graph.WalkSeeds, startEvery = 2).collect().map(_.toSeq).toSet)
+    }
     assert(unbiased == uniform,
       "equal class weights must reproduce the md5-argmin uniform election")
   }
@@ -449,10 +477,16 @@ class GraphSpec extends SparkTestBase {
     val docs = plantedDocs
     val edges = Graph.linkEdgesDf(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def n2v(g: FixtureGraph, p: Double, q: Double) = Graph.node2vecWalksOn(docs,
+      g.edges, p, q, Graph.WalkSteps, Graph.WalkSeeds, startEvery = 2).collect()
     // p tiny -> return class has top priority: whenever cur -> prev is
-    // an edge, the elected hop MUST be prev
-    val walks = Graph.node2vecWalksDf(docs, p = 0.01, q = 1.0, startEvery = 2)
-      .collect()
+    // an edge, the elected hop MUST be prev; the DFS-like registered
+    // parameterization and the uniform walk are compared below
+    val (returning, dfs, uniform) = FixtureGraph.of(docs)(g =>
+      (n2v(g, 0.01, 1.0), n2v(g, 4.0, 0.25).map(_.toSeq).toSet,
+        Graph.randomWalksUnorderedOnEdges(docs, g.edges, startEvery = 2)
+          .collect().map(_.toSeq).toSet))
+    val walks = returning
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2) -> r.getLong(3)))
       .groupBy(_._1).map { case (k, vs) =>
         k -> vs.map(_._2).sortBy(_._1).map(_._2)
@@ -467,9 +501,6 @@ class GraphSpec extends SparkTestBase {
     assert(checked > 0, "fixture must exercise at least one return opportunity")
     // and the DFS-like registered parameterization must differ from
     // uniform on this graph (the bias is visible, not a no-op)
-    val uniform = Graph.randomWalksDf(docs, startEvery = 2).collect().map(_.toSeq).toSet
-    val dfs = Graph.node2vecWalksDf(docs, p = 4.0, q = 0.25, startEvery = 2)
-      .collect().map(_.toSeq).toSet
     assert(dfs != uniform, "outward bias must visibly shift the walks")
   }
 
@@ -515,13 +546,22 @@ class GraphSpec extends SparkTestBase {
   }
 
   test("link-prediction AUC: well-formed, partition-invariant, replayed driver-side") {
+    // dense walks (a start at every node) train the embeddings the
+    // evaluation scores the same edge checkpoint against
+    def aucOf(docs: org.apache.spark.sql.DataFrame) = FixtureGraph.of(docs) { g =>
+      val walks = g.own(Graph.randomWalksUnorderedOnEdges(docs, g.edges, startEvery = 1)
+        .localCheckpoint())
+      val pairs = g.own(Graph.walkPairsFrom(walks, Graph.WalkWindow).localCheckpoint())
+      val em = g.own(Graph.nodeEmbeddingsOnPairs(pairs, docs.count()).localCheckpoint())
+      Graph.linkPredictionAucOnEdges(g.edges, em, docs.count()).collect()
+    }
     val fixture = plantedDocs
-    val r = Graph.linkPredictionAucDf(fixture, startEvery = 1).collect()
+    val r = aucOf(fixture)
     assert(r.length == 1)
     val (np, nn, auc) = (r(0).getLong(0), r(0).getLong(1), r(0).getDouble(2))
     assert(np > 0, "dense walks must embed enough endpoints for positives")
     assert(auc >= 0.0 && auc <= 1.0)
-    val b = Graph.linkPredictionAucDf(fixture.repartition(7), startEvery = 1).head()
+    val b = aucOf(fixture.repartition(7)).head
     assert((b.getLong(0), b.getLong(1), b.getDouble(2)) == ((np, nn, auc)),
       "AUC must be partition-invariant (snapped scores, integer rank sums)")
   }
@@ -544,7 +584,12 @@ class GraphSpec extends SparkTestBase {
              if adj(ns(i)).contains(ns(j)) } yield 1L).sum
     }
     val expected = nodes.map(v => v -> tri(v)).toMap
-    val got = Graph.clusteringCoefficientDf(fixture).collect()
+    val (cc, g) = FixtureGraph.of(fixture) { fg =>
+      val (oe, udeg) = fg.oriented
+      (Graph.clusteringCoefficientOn(fixture, oe, udeg).collect(),
+        Graph.graphTransitivityOn(fixture, oe, udeg).head())
+    }
+    val got = cc
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(got.keySet == nodes.toSet)
     nodes.foreach { v =>
@@ -555,7 +600,6 @@ class GraphSpec extends SparkTestBase {
       assert(lcc == want, s"lcc of $v")
     }
     // global identities: Σ per-node T = 3 · total; transitivity = 3T/W
-    val g = Graph.graphTransitivityDf(fixture).head()
     assert(g.getLong(3) * 3 == expected.values.sum, "each triangle counted at 3 nodes")
     assert(g.getLong(1) == und.length / 2, "undirected edge count")
     val w = nodes.map(v => { val k = adj.getOrElse(v, Set.empty).size.toLong; k * (k - 1) / 2 }).sum
@@ -597,7 +641,8 @@ class GraphSpec extends SparkTestBase {
       }
       label = next
     }
-    val got = Graph.labelPropagationDf(fixture).collect()
+    val got = FixtureGraph.of(fixture)(g =>
+        Graph.labelPropagationOn(fixture, g.undirected, Graph.LabelPropRounds).collect())
       .map(r => r.getLong(0) ->
         ((r.getBoolean(2), Option(r.getString(3)),
           if (r.isNullAt(4)) None else Some(r.getBoolean(4))))).toMap
@@ -616,12 +661,16 @@ class GraphSpec extends SparkTestBase {
   test("fused dual-rank serve table equals the two single-seed loops bit-for-bit") {
     val docs = plantedDocs.withColumn("source",
       when(col("doc_id") < 3, lit("src0")).otherwise(lit("srcX")))
-    val serve = Graph.rankServeTableDf(docs, col("source") === lit("src0"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val pr = Graph.pagerankDf(docs, topK = 100).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val tr = Graph.trustrankDf(docs, col("source") === lit("src0"), topK = 100)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val trust = col("source") === lit("src0")
+    val (serve, pr, tr) = FixtureGraph.of(docs) { g =>
+      val (fused, last) = Graph.rankServeStateOn(docs, g.edges, trust, Graph.RankIters)
+      last.foreach(g.own)
+      def loop(seed: org.apache.spark.sql.Column) =
+        Graph.rankLoopOn(docs, g.edges, seed, Graph.RankIters, 100).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (fused.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap,
+        loop(lit(true)), loop(trust))
+    }
     assert(serve.keySet == pr.keySet && serve.keySet == tr.keySet)
     serve.foreach { case (v, (rp, rt)) =>
       assert(rp == pr(v), s"fused rank of $v drifted: $rp vs ${pr(v)}")
@@ -641,7 +690,7 @@ class GraphSpec extends SparkTestBase {
     val b = sjpk.toDouble / (2.0 * m)
     val want = math.floor((sjk.toDouble / m - b * b) /
       (ssq.toDouble / (2.0 * m) - b * b) * 1e6 + 0.5) / 1e6
-    val r = Graph.degreeAssortativityDf(fixture).head()
+    val r = FixtureGraph.of(fixture)(g => Graph.degreeAssortativityOn(g.oriented._1).head())
     assert(r.getLong(0) == m && r.getLong(1) == sjk &&
       r.getLong(2) == sjpk && r.getLong(3) == ssq)
     assert(r.getDouble(4) == want, s"got ${r.getDouble(4)} want $want")
@@ -661,7 +710,8 @@ class GraphSpec extends SparkTestBase {
       changed = next != alive
       alive = next
     }
-    val got = Graph.kcoreMembershipDf(fixture).collect()
+    val got = FixtureGraph.of(fixture)(g =>
+        Graph.kcoreMembershipOn(fixture, g.undirected, Graph.KcoreRounds).collect())
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3)))).toMap
     assert(got.keySet == (0L until fixture.count()).toSet)
     got.foreach { case (v, (ud, kt, in)) =>
@@ -681,13 +731,17 @@ class GraphSpec extends SparkTestBase {
 
   test("node embeddings on the planted corpus cover exactly the walk-pair centers") {
     val docs = plantedDocs
-    val pairs = Graph.walkContextPairsDf(docs, startEvery = 2).localCheckpoint()
-    val emb = Graph.nodeEmbeddingsOnPairs(pairs, nTotal = docs.count()).collect()
-    val centers = pairs.select("center").distinct().collect().map(_.getLong(0)).toSet
+    val (emb, centers, np) = FixtureGraph.of(docs) { g =>
+      val walks = g.own(Graph.randomWalksUnorderedOnEdges(docs, g.edges, startEvery = 2)
+        .localCheckpoint())
+      val pairs = g.own(Graph.walkPairsFrom(walks, Graph.WalkWindow).localCheckpoint())
+      (Graph.nodeEmbeddingsOnPairs(pairs, nTotal = docs.count()).collect(),
+        pairs.select("center").distinct().collect().map(_.getLong(0)).toSet,
+        // n_pairs is the node's total pair weight — the gradient normalizer
+        pairs.groupBy(col("center")).agg(sum(col("n_cooc")).as("n"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
     assert(emb.map(_.getLong(0)).toSet == centers, "one embedding row per pair center")
-    // n_pairs is the node's total pair weight — the gradient normalizer
-    val np = pairs.groupBy(col("center")).agg(sum(col("n_cooc")).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     emb.foreach(r => assert(r.getLong(1) == np(r.getLong(0))))
   }
 
@@ -728,7 +782,9 @@ class GraphSpec extends SparkTestBase {
     val uniform = (0L until d).map(i => i -> snap(1e9 / d)).toMap
     val base = rounds(uniform, baseEdges, Graph.RankIters)
     val warm = rounds(base, edges, Graph.IncrRefineIters)
-    val got = Graph.pagerankIncrementalDf(fixture).collect()
+    val got = FixtureGraph.of(fixture)(g =>
+        Graph.pagerankIncrementalTail(g.own(Graph.incrBaseState(fixture, g.edges)), g.edges,
+          Graph.IncrRefineIters, 100).collect())
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got.keySet == (0L until d).toSet)
     got.foreach { case (v, (rw, rb, dl)) =>
@@ -765,7 +821,7 @@ class GraphSpec extends SparkTestBase {
     val edges = Graph.linkEdgesDf(fixture).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantRecip = edges.count { case (s, d) => edges((d, s)) }.toLong
-    val r = Graph.graphReciprocityDf(fixture).collect()
+    val r = FixtureGraph.of(fixture)(g => Graph.graphReciprocityOn(g.edges).collect())
     assert(r.length == 1)
     val (ne, nr, rec) = (r(0).getLong(0), r(0).getLong(1), r(0).getDouble(2))
     assert(ne == edges.size.toLong, s"edge count: $ne vs ${edges.size}")
@@ -826,37 +882,40 @@ class GraphSpec extends SparkTestBase {
 
   /** (jobs, persisted RDDs left) per call of every loop that runs on
     * [[graft.Fixpoint]] (and the HITS loop beside them), measured on
-    * the planted graphs; `/1` is the one-round call. A moved job count
-    * means a round, a probe or a checkpoint was added or dropped; the
-    * checkpoints left are those the lazy result still reads, plus the
-    * edge tables some Df forms never release.
+    * the planted graphs; `/1` is the one-round call. The cores run over
+    * the test's [[FixtureGraph]], whose two builds are the first two
+    * entries: they are not billed to the cores. A moved job count means
+    * a round, a probe or a checkpoint was added or dropped; the
+    * checkpoints left are those the lazy result still reads.
     */
   private val loopPins: Map[String, (Int, Int)] = Map(
-    "pagerankDf" -> (37, 2),
-    "pagerankDf/1" -> (16, 2),
-    "trustrankDf" -> (37, 2),
-    "rankServeTableDf" -> (37, 2),
-    "rankServeTableDf/1" -> (16, 2),
-    "pagerankIncrementalDf" -> (57, 3),
-    "pagerankIncrementalDf/1" -> (29, 3),
-    "pagerankConvergenceDf" -> (55, 0),
-    "pagerankConvergenceDf/1" -> (19, 0),
-    "hitsDf" -> (43, 3),
+    "linkEdgesDf" -> (4, 1),
+    "undirectedOf" -> (2, 1),
+    "rankLoopOn" -> (33, 1),
+    "rankLoopOn/1" -> (12, 1),
+    "rankLoopOn/trust" -> (33, 1),
+    "rankServeStateOn" -> (33, 1),
+    "rankServeStateOn/1" -> (12, 1),
+    "pagerankIncrementalTail" -> (53, 2),
+    "pagerankIncrementalTail/1" -> (25, 2),
+    "pagerankConvergenceOn" -> (51, 0),
+    "pagerankConvergenceOn/1" -> (15, 0),
+    "hitsStateOn" -> (39, 2),
     "nodeEmbeddingsOnPairs" -> (29, 1),
     "nodeEmbeddingsOnPairs/1" -> (8, 1),
-    "linkComponentsDf" -> (24, 2),
-    "linkComponentsDf/1" -> (12, 2),
-    "mediaDedupClusters" -> (20, 2),
-    "crawlDepthDf" -> (28, 1),
+    "minLabelComponentsOn" -> (18, 1),
+    "minLabelComponentsOn/1" -> (6, 1),
+    "mediaDedupClusters" -> (20, 1),
+    "crawlDepthOn" -> (24, 1),
     "hopDistancesOn" -> (17, 1),
     "hopDistancesOn/1" -> (6, 1),
     "sccDf" -> (137, 1),
     "sccDf/1" -> (25, 1),
-    "linkSccDf" -> (94, 2),
-    "labelPropagationDf" -> (27, 1),
-    "labelPropagationDf/1" -> (13, 1),
-    "kcoreMembershipDf" -> (23, 3),
-    "kcoreMembershipDf/1" -> (14, 3))
+    "sccDf/links" -> (90, 1),
+    "labelPropagationOn" -> (21, 1),
+    "labelPropagationOn/1" -> (7, 1),
+    "kcoreMembershipOn" -> (17, 3),
+    "kcoreMembershipOn/1" -> (8, 3))
 
   test("fixpoint loops start the pinned jobs and leave the pinned checkpoints") {
     import spark.implicits._
@@ -875,43 +934,99 @@ class GraphSpec extends SparkTestBase {
     val pairs = (for { c <- cliques; x <- c; y <- c if x != y }
       yield (x, y, 25L)).toDF("center", "context", "n_cooc")
     graft.analytics.ExtraQueries.mediaDedupClusters(spark, sfDir).collect() // schema memo
-    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "pagerankDf" -> (() => Graph.pagerankDf(fx)),
-      "pagerankDf/1" -> (() => Graph.pagerankDf(fx, iters = 1)),
-      "trustrankDf" -> (() => Graph.trustrankDf(fx, trust)),
-      "rankServeTableDf" -> (() => Graph.rankServeTableDf(fx, trust)),
-      "rankServeTableDf/1" -> (() => Graph.rankServeTableDf(fx, trust, iters = 1)),
-      "pagerankIncrementalDf" -> (() => Graph.pagerankIncrementalDf(fx)),
-      "pagerankIncrementalDf/1" -> (() => Graph.pagerankIncrementalDf(fx, 1, 1)),
-      "pagerankConvergenceDf" -> (() => Graph.pagerankConvergenceDf(spark, fx)),
-      "pagerankConvergenceDf/1" -> (() => Graph.pagerankConvergenceDf(spark, fx, 1)),
-      "hitsDf" -> (() => Graph.hitsDf(fx)),
-      "nodeEmbeddingsOnPairs" -> (() => Graph.nodeEmbeddingsOnPairs(pairs, 8)),
-      "nodeEmbeddingsOnPairs/1" -> (() => Graph.nodeEmbeddingsOnPairs(pairs, 8, epochs = 1)),
-      "linkComponentsDf" -> (() => Graph.linkComponentsDf(fx)),
-      "linkComponentsDf/1" -> (() => Graph.linkComponentsDf(fx, rounds = 1)),
-      "mediaDedupClusters" -> (() => graft.analytics.ExtraQueries.mediaDedupClusters(spark, sfDir)),
-      "crawlDepthDf" -> (() => Graph.crawlDepthDf(fx, trust)),
-      "hopDistancesOn" -> (() => Graph.hopDistancesOn(depth0, paths, Graph.BfsRounds)),
-      "hopDistancesOn/1" -> (() => Graph.hopDistancesOn(depth0, paths, 1)),
-      "sccDf" -> (() => Graph.sccDf(cycleNodes, cycle)),
-      "sccDf/1" -> (() => Graph.sccDf(cycleNodes, cycle, 1, 1)),
-      "linkSccDf" -> (() => Graph.linkSccDf(fx)),
-      "labelPropagationDf" -> (() => Graph.labelPropagationDf(fx)),
-      "labelPropagationDf/1" -> (() => Graph.labelPropagationDf(fx, rounds = 1)),
-      "kcoreMembershipDf" -> (() => Graph.kcoreMembershipDf(fx)),
-      "kcoreMembershipDf/1" -> (() => Graph.kcoreMembershipDf(fx, rounds = 1)))
-    val got = calls.map { case (name, call) => name -> loopCost(call()) }
+    val got = FixtureGraph.of(fx) { g =>
+      val (e, und) = (g.edges, g.undirected)
+      val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "linkEdgesDf" -> (() => g.own(Graph.linkEdgesDf(fx).localCheckpoint())),
+        "undirectedOf" -> (() => g.own(Graph.undirectedOf(e).localCheckpoint())),
+        "rankLoopOn" -> (() => Graph.rankLoopOn(fx, e, lit(true), Graph.RankIters, 100)),
+        "rankLoopOn/1" -> (() => Graph.rankLoopOn(fx, e, lit(true), 1, 100)),
+        "rankLoopOn/trust" -> (() => Graph.rankLoopOn(fx, e, trust, Graph.RankIters, 100)),
+        "rankServeStateOn" -> (() => Graph.rankServeStateOn(fx, e, trust, Graph.RankIters)._1),
+        "rankServeStateOn/1" -> (() => Graph.rankServeStateOn(fx, e, trust, 1)._1),
+        "pagerankIncrementalTail" -> (() => Graph.pagerankIncrementalTail(
+          Graph.incrBaseState(fx, e), e, Graph.IncrRefineIters, 100)),
+        "pagerankIncrementalTail/1" -> (() => Graph.pagerankIncrementalTail(
+          Graph.incrBaseState(fx, e, 1), e, 1, 100)),
+        "pagerankConvergenceOn" -> (() => Graph.pagerankConvergenceOn(spark, fx, e, Graph.RankIters)),
+        "pagerankConvergenceOn/1" -> (() => Graph.pagerankConvergenceOn(spark, fx, e, 1)),
+        "hitsStateOn" -> (() => Graph.hitsStateOn(fx, e, e, Graph.HitsIters)._1),
+        "nodeEmbeddingsOnPairs" -> (() => Graph.nodeEmbeddingsOnPairs(pairs, 8)),
+        "nodeEmbeddingsOnPairs/1" -> (() => Graph.nodeEmbeddingsOnPairs(pairs, 8, epochs = 1)),
+        "minLabelComponentsOn" -> (() =>
+          Graph.minLabelComponentsOn(fx.select("doc_id"), und, Graph.ComponentRounds)),
+        "minLabelComponentsOn/1" -> (() => Graph.minLabelComponentsOn(fx.select("doc_id"), und, 1)),
+        "mediaDedupClusters" -> (() => graft.analytics.ExtraQueries.mediaDedupClusters(spark, sfDir)),
+        "crawlDepthOn" -> (() => Graph.crawlDepthOn(fx, e, trust, Graph.BfsRounds)),
+        "hopDistancesOn" -> (() => Graph.hopDistancesOn(depth0, paths, Graph.BfsRounds)),
+        "hopDistancesOn/1" -> (() => Graph.hopDistancesOn(depth0, paths, 1)),
+        "sccDf" -> (() => Graph.sccDf(cycleNodes, cycle)),
+        "sccDf/1" -> (() => Graph.sccDf(cycleNodes, cycle, 1, 1)),
+        "sccDf/links" -> (() => Graph.sccDf(fx.select("doc_id"), e)),
+        "labelPropagationOn" -> (() => Graph.labelPropagationOn(fx, und, Graph.LabelPropRounds)),
+        "labelPropagationOn/1" -> (() => Graph.labelPropagationOn(fx, und, 1)),
+        "kcoreMembershipOn" -> (() => Graph.kcoreMembershipOn(fx, und, Graph.KcoreRounds)),
+        "kcoreMembershipOn/1" -> (() => Graph.kcoreMembershipOn(fx, und, 1)))
+      calls.map { case (name, call) => name -> loopCost(call()) }
+    }
     got.foreach { case (name, cost) =>
       assert(cost == loopPins(name), s"$name: (jobs, pins left) $cost, pinned ${loopPins(name)}")
     }
   }
 
   test("the convergence audit leaves nothing pinned") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = Graph.pagerankConvergenceDf(spark, plantedDocs)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
-    assert(out.count() == Graph.RankIters)
+    val fixture = plantedDocs
+    FixtureGraph.of(fixture) { g =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = Graph.pagerankConvergenceOn(spark, fixture, g.edges, Graph.RankIters)
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+      assert(out.count() == Graph.RankIters)
+    }
+  }
+
+  /** Runs `body` and returns its result, the jobs it started and how
+    * many of its actions evaluated a link-graph derivation — the bigram
+    * explode of [[Graph.linkEdgesDf]] — instead of reading a checkpoint
+    * of one (a checkpointed frame's plan is a leaf).
+    */
+  private def derivationsIn[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.sql.catalyst.expressions.ZipWith
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val derived = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit =
+        if (qe.analyzed.exists {
+              case g: Generate => g.generator.exists(_.isInstanceOf[ZipWith])
+              case _ => false
+            }) derived.incrementAndGet()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // jobsStartedBy drains the listener bus, so every action's
+      // execution-end event has reached the listener when it returns
+      val (out, jobs) = org.apache.spark.sql.GraftSql.jobsStartedBy(spark)(body)
+      (out, jobs, derived.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("warm graph queries read the session pins: no edge derivation, nothing left pinned") {
+    // persisted RDDs a warm run may leave: the AUC's lazy score
+    // histogram reads one range checkpoint (GlobalOrder.strictPrefix)
+    val mayLeave = Map("q_link_prediction_auc" -> 1, "q_pagerank_converge" -> 0)
+    val runs = mayLeave.map { case (q, pinned) =>
+      def run() = graft.SparkEntry.queries(q)(spark, sfDir).collect()
+      val first = run()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val (again, jobs, derived) = derivationsIn(run())
+      val left = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      assert(again.toSeq == first.toSeq, s"$q: a warm run must replay the first")
+      (q, derived == 0 && left == pinned,
+        s"$q: $jobs jobs, $derived edge derivations, $left RDDs left (may leave $pinned)")
+    }
+    assert(runs.forall(_._2), runs.map(_._3).mkString("warm runs: ", "; ", ""))
   }
 
   test("the incremental refine never releases the shared base pin") {

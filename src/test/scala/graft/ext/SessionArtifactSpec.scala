@@ -6,14 +6,18 @@ import org.apache.spark.sql.DataFrame
 /** The session-artifact contract: every (spark, dir) entry point that
   * consumes a session-scoped cached artifact (shared edge tables, the
   * oriented-triangle pair, the SCC labels, the 5-gram LM blocks, the
-  * bigram counts) must return BIT-IDENTICAL rows to the standalone Df
-  * form that builds its own artifacts — the caches change where the
-  * work happens, never what is computed. The tri-scale DuckDB oracles
-  * gate the same property end-to-end; this spec pins it directly at
-  * unit granularity so a cache-keying or release bug fails here first,
-  * with a readable diff, instead of as a hash mismatch in the driver.
+  * bigram counts) must return BIT-IDENTICAL rows to a reference that
+  * builds its own artifacts — the caches change where the work happens,
+  * never what is computed. For the link-graph family the reference is
+  * the query's core run over a FRESH edge checkpoint ([[FixtureGraph]])
+  * so it stays independent of the session pins; elsewhere it is the
+  * standalone Df form. The tri-scale DuckDB oracles gate the same
+  * property end-to-end; this spec pins it directly at unit granularity
+  * so a cache-keying or release bug fails here first, with a readable
+  * diff, instead of as a hash mismatch in the oracle gate.
   */
 class SessionArtifactSpec extends SparkTestBase {
+  import org.apache.spark.sql.functions.{col, lit}
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq.map {
@@ -25,33 +29,68 @@ class SessionArtifactSpec extends SparkTestBase {
   private def rawDocs = graft.Tables.documents(spark, sfDir)
 
   test("pagerank via sessionEdges equals the standalone Df form") {
-    val cached = Graph.pagerank(spark, sfDir)
-    val standalone = Graph.pagerankDf(docs)
-    assert(rows(cached) == rows(standalone))
+    val core = FixtureGraph.of(docs)(g => rows(
+      Graph.rankLoopOn(docs, g.edges, lit(true), Graph.RankIters, 100)
+        .select("doc_id", "rank_nano", "out_deg", "in_deg")))
+    assert(rows(Graph.pagerank(spark, sfDir)) == core)
   }
 
   test("link components via sessionUndirected equal the standalone Df form") {
-    assert(rows(Graph.linkComponents(spark, sfDir)) ==
-      rows(Graph.linkComponentsDf(docs)))
+    val core = FixtureGraph.of(docs)(g => rows(Graph.minLabelComponentsOn(
+      docs.select("doc_id"), g.undirected, Graph.ComponentRounds)))
+    assert(rows(Graph.linkComponents(spark, sfDir)) == core)
   }
 
   test("SCC via the session label cache equals the standalone Df form") {
-    assert(rows(Graph.linkScc(spark, sfDir)) == rows(Graph.linkSccDf(docs)))
+    val core = FixtureGraph.of(docs)(g => rows(Graph.sccDf(docs.select("doc_id"), g.edges)))
+    assert(rows(Graph.linkScc(spark, sfDir)) == core)
   }
 
   test("transitivity and clustering coefficient via the shared triangle pair equal Df forms") {
-    assert(rows(Graph.graphTransitivity(spark, sfDir)) ==
-      rows(Graph.graphTransitivityDf(docs)))
-    assert(rows(Graph.clusteringCoefficient(spark, sfDir)) ==
-      rows(Graph.clusteringCoefficientDf(docs)))
+    val (transitivity, cc) = FixtureGraph.of(docs) { g =>
+      val (oe, udeg) = g.oriented
+      (rows(Graph.graphTransitivityOn(docs, oe, udeg)),
+        rows(Graph.clusteringCoefficientOn(docs, oe, udeg)))
+    }
+    assert(rows(Graph.graphTransitivity(spark, sfDir)) == transitivity)
+    assert(rows(Graph.clusteringCoefficient(spark, sfDir)) == cc)
   }
 
   test("crawl depth and reciprocity via sessionEdges equal Df forms") {
-    import org.apache.spark.sql.functions._
-    assert(rows(Graph.crawlDepth(spark, sfDir)) ==
-      rows(Graph.crawlDepthDf(docs, col("source") === lit("src0"))))
-    assert(rows(Graph.graphReciprocity(spark, sfDir)) ==
-      rows(Graph.graphReciprocityDf(docs)))
+    val (depth, reciprocity) = FixtureGraph.of(docs)(g =>
+      (rows(Graph.crawlDepthOn(docs, g.edges, col("source") === lit("src0"), Graph.BfsRounds)),
+        rows(Graph.graphReciprocityOn(g.edges))))
+    assert(rows(Graph.crawlDepth(spark, sfDir)) == depth)
+    assert(rows(Graph.graphReciprocity(spark, sfDir)) == reciprocity)
+  }
+
+  test("node embeddings and link-prediction AUC via the session walk table equal the cores") {
+    val (emb, auc) = FixtureGraph.of(docs) { g =>
+      val walks = g.own(Graph.randomWalksUnorderedOnEdges(docs, g.edges).localCheckpoint())
+      val pairs = g.own(Graph.walkPairsFrom(walks, Graph.WalkWindow).localCheckpoint())
+      val em = g.own(Graph.nodeEmbeddingsOnPairs(pairs, docs.count()).localCheckpoint())
+      (rows(em), rows(Graph.linkPredictionAucOnEdges(g.edges, em, docs.count())))
+    }
+    assert(rows(Graph.nodeEmbeddings(spark, sfDir)) == emb)
+    assert(rows(Graph.linkPredictionAuc(spark, sfDir)) == auc)
+  }
+
+  test("the triangle pair and assortativity via sessionUndirected equal the core orientation") {
+    val (oe, udeg) = Graph.orientedTriangleState(spark, sfDir)
+    val (coreOe, coreUdeg, assortativity) = FixtureGraph.of(docs) { g =>
+      val (foe, fudeg) = g.oriented
+      (rows(foe), rows(fudeg), rows(Graph.degreeAssortativityOn(foe)))
+    }
+    assert(rows(oe) == coreOe && rows(udeg) == coreUdeg)
+    assert(rows(Graph.degreeAssortativity(spark, sfDir)) == assortativity)
+  }
+
+  test("convergence audit and degrees via sessionEdges equal the cores") {
+    val (audit, degrees) = FixtureGraph.of(docs)(g =>
+      (rows(Graph.pagerankConvergenceOn(spark, docs, g.edges, Graph.RankIters)),
+        rows(Graph.linkGraphDegreesOn(docs, g.edges))))
+    assert(rows(Graph.pagerankConvergence(spark, sfDir)) == audit)
+    assert(rows(Graph.linkGraphDegrees(spark, sfDir)) == degrees)
   }
 
   test("KN and WB scoring via the session LM blocks equal the Df forms") {

@@ -1290,15 +1290,17 @@ class StreamingSpec extends SparkTestBase {
     val arrivals = Seq(
       100L -> "alpha beta gamma delta", // base bigrams: resolvable targets
       101L -> "solo")                   // one token, no bigrams: zero row
-    // the batch expectation runs FIRST: as a lazy caller of the serve
-    // table it legitimately keeps its rank-loop finals checkpointed, so
-    // the sink's leak baseline is captured after it
-    val serve = graft.ext.Graph.rankServeTableDf(
-      base, $"source" === lit("src0"))
-    val batch = graft.ext.Graph
-      .crawlPriorityAgainst(arrivals.toDF("doc_id", "text"), serve)
-      .collect().map(_.toSeq).toSet
-    val trustTotal = serve.agg(sum($"trust_nano")).collect()(0).getLong(0)
+    // the batch expectation runs FIRST, over the base's own fixture
+    // graph (released when it is done), so the sink's leak baseline is
+    // captured after it
+    val (batch, trustTotal) = graft.ext.FixtureGraph.of(base) { g =>
+      val (serve, last) = graft.ext.Graph.rankServeStateOn(
+        base, g.edges, $"source" === lit("src0"), graft.ext.Graph.RankIters)
+      last.foreach(g.own)
+      (graft.ext.Graph.crawlPriorityAgainst(arrivals.toDF("doc_id", "text"), serve)
+        .collect().map(_.toSeq).toSet,
+        serve.agg(sum($"trust_nano")).collect()(0).getLong(0))
+    }
     assert(trustTotal > 0L, "seeded serve table must carry trust mass")
     val input = MemoryStream[(Long, String)]
     val out = Files.createTempDirectory("tr_out").toString
