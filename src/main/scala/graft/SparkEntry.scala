@@ -212,7 +212,7 @@ object SparkEntry {
     // interning choice; identical scores are the whole point) — the
     // oracle-checked half of the wide-key policy (chooseWideKeys)
     "q_kn_logprob_wide"   -> ((s: SparkSession, d: String) =>
-      TextAnalysis.knLogProbDf(graft.Tables.documents(s, d), wideKeys = true)),
+      TextAnalysis.knLogProb(s, d, wide = true)),
     "q_winnow_span_dedup" -> ((s: SparkSession, d: String) => Cleaning.winnowSpanDedupStats(s, d)),
     "q_hot_terms_guarantee" -> ((s: SparkSession, d: String) => TextAnalysis.hotTermsGuarantee(s, d)),
     "q_pack_invariants"   -> ((s: SparkSession, d: String) => ext.Corpus.packInvariants(s, d)),

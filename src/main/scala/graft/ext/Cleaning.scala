@@ -1053,9 +1053,9 @@ object Cleaning {
     * string ever materialized); the DuckDB oracle re-derives anchors
     * from gram STRINGS, so an xxhash collision changes the span set
     * and fails the driver hash gate loudly instead of passing
-    * silently (the backoffLogProbDf contract). The span_md5 output
-    * column re-hashes the ACTUAL span text on both engines, proving
-    * the boundaries delimit identical content.
+    * silently (the [[TextAnalysis.trigramCountTable]] contract). The
+    * span_md5 output column re-hashes the ACTUAL span text on both
+    * engines, proving the boundaries delimit identical content.
     *
     * Scale shape: the anchor stream is |token positions| narrow rows
     * (8 B hash + id + pos); ONE map-side-combined aggregate on the

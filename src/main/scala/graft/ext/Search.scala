@@ -42,16 +42,15 @@ object Search {
     * bench/verify invocation pinned a new block-manager entry for the
     * session lifetime). Each materializes (persist + count) inside its
     * ledger-timed build, so the one-time build is sidecar-priced;
-    * cached frames are READ-ONLY — consumers never unpersist them. The
-    * registered (spark, dir) query forms ride these; the DataFrame
-    * (fixture) forms stay fully lazy and build their own per-call
-    * frames, keeping the zero-jobs listener test and planted-fixture
-    * tests untouched.
+    * cached frames are READ-ONLY — consumers never unpersist them.
+    * Every registered (spark, dir) query reads these pins; each query's
+    * core takes the frames it is given, so tests run the same core
+    * over a fresh, uncached build of their own fixture docs.
     *
     * The contribution frame is the session [[bm25ContribAll]] frame
     * over the probe postings — shared by the registered bound-table,
-    * MaxScore and block-max evaluators (one tokenize + snap per
-    * session, not per call).
+    * MaxScore, block-max, hard-negative, eval-audit and MMR queries
+    * (one tokenize + snap per session, not per call).
     */
   private[graft] val sessionContrib = SessionArtifact.frame("bm25_contrib", Pin.Persist) {
     (spark, d) => bm25ContribAll(Tables.fanOut(Tables.documents(spark, d)))
@@ -72,8 +71,8 @@ object Search {
     * q_section_dedup previously each re-ran the splitter's generate +
     * window + section aggregate from the raw scan; one split per
     * session is the [[sessionContrib]] discipline at section
-    * granularity). The DataFrame (fixture) forms stay fully lazy and
-    * split their own inputs.
+    * granularity). The section serving sink splits its own frozen base
+    * ([[sectionServePlans]]).
     */
   private[graft] val sessionSections = SessionArtifact.frame("section_chunks", Pin.Persist) {
     (spark, d) => sectionChunksDf(sectionMdFrame(Tables.fanOut(Tables.documents(spark, d))))
@@ -114,11 +113,12 @@ object Search {
   /** Per-probe-term postings audit: document frequency, total term
     * frequency, and the top 3 documents by (tf, doc_id) — the bounded
     * summary a pipeline reads to sanity-check an index build (posting
-    * skew, stopword-like terms, empty terms).
+    * skew, stopword-like terms, empty terms). Reads the session probe
+    * postings ([[sessionQlPostings]]), which feed both the df aggregate
+    * and the rank window.
     */
   def termPostings(spark: SparkSession, d: String): DataFrame = {
-    val p = postingsDf(Tables.fanOut(Tables.documents(spark, d)), Some(ProbeTerms))
-      .localCheckpoint() // feeds the df aggregate AND the rank window
+    val p = sessionQlPostings(spark, d)
     val stats = p.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"))
     val w = org.apache.spark.sql.expressions.Window
@@ -207,16 +207,18 @@ object Search {
           .orderBy(col("score_micro").desc, col("doc_id"))).cast("long"))
   }
 
-  /** The registered BM25 query: the probe term set, top 10. Fully
-    * lazy — the corpus stats ride as a broadcast scalar
-    * ([[corpusStatsDf]]); SearchSpec asserts zero jobs at build.
+  /** Result bound of the registered probe rankers (BM25, query
+    * likelihood, MaxScore, block-max) — the oracles' `LIMIT 10`.
     */
-  def bm25TopK(spark: SparkSession, d: String, k: Int = 10): DataFrame =
-    bm25TopKDf(Tables.fanOut(Tables.documents(spark, d)), k)
+  private[graft] val ProbeTopK = 10
 
-  def bm25TopKDf(docs: DataFrame, k: Int = 10): DataFrame =
-    bm25AgainstStats(postingsDf(docs, Some(ProbeTerms)), ProbeTerms,
-      corpusStatsDf(docs), k)
+  /** The registered BM25 query: the probe term set, top
+    * [[ProbeTopK]], over the session probe postings and corpus stats
+    * ([[sessionQlPostings]], [[sessionCorpusStats]]).
+    */
+  def bm25TopK(spark: SparkSession, d: String): DataFrame =
+    bm25AgainstStats(sessionQlPostings(spark, d), ProbeTerms,
+      sessionCorpusStats(spark, d), ProbeTopK)
 
   /** Dirichlet smoothing mass of [[queryLikelihoodTopK]]. */
   private[graft] val Mu = 300.0
@@ -238,9 +240,8 @@ object Search {
     * is candidates × |terms| (a broadcast of the |terms|-row
     * cf table), the final a bounded top-k.
     */
-  def queryLikelihoodTopK(spark: SparkSession, d: String, k: Int = 10): DataFrame =
-    queryLikelihoodTopKOn(sessionQlPostings(spark, d),
-      sessionCorpusStats(spark, d), k)
+  def queryLikelihoodTopK(spark: SparkSession, d: String): DataFrame =
+    queryLikelihoodTopKOn(sessionQlPostings(spark, d), sessionCorpusStats(spark, d))
 
   /** The 1-row corpus-stats frame as a session artifact — without it
     * the registered QL re-ran a full corpus tokenize+sum per
@@ -250,27 +251,20 @@ object Search {
     (spark, d) => corpusStatsDf(Tables.fanOut(Tables.documents(spark, d)))
   }
 
-  def queryLikelihoodTopKDf(docs: DataFrame, k: Int = 10): DataFrame =
-    queryLikelihoodTopKOn(postingsDf(docs, Some(ProbeTerms)),
-      corpusStatsDf(docs), k)
-
-  /** The session probed-postings artifact backing the registered
-    * [[queryLikelihoodTopK]] — its three consumers (cf aggregate,
-    * candidate distinct, tf lookup) read one pinned copy instead of a
-    * fresh per-call `.persist()` (the r15 advisor's pin-leak finding).
+  /** The session probed-postings artifact — one pinned copy read by
+    * the registered BM25, query-likelihood, parameter-sweep, postings
+    * audit and postings size-model queries instead of a per-call
+    * derivation (the r15 advisor's pin-leak finding).
     */
   private[graft] val sessionQlPostings = SessionArtifact.frame("ql_postings", Pin.Persist) {
     (spark, d) => postingsDf(Tables.fanOut(Tables.documents(spark, d)), Some(ProbeTerms))
   }
 
-  /** The QL chain over an explicit postings frame: the registered form
-    * passes the pinned session artifact; the DataFrame (fixture) form
-    * passes the lazy per-call plan — zero jobs at build either way,
-    * and the fixture path recomputes the tiny probed table per
-    * consumer instead of pinning a leak-prone per-call copy.
+  /** The QL chain over a probe-postings frame and its corpus stats:
+    * the registered query passes the session pins, tests a fresh
+    * build of their own docs. Zero jobs at build.
     */
-  private def queryLikelihoodTopKOn(p: DataFrame, stats: DataFrame,
-                                    k: Int): DataFrame = {
+  private[graft] def queryLikelihoodTopKOn(p: DataFrame, stats: DataFrame): DataFrame = {
     val cf = p.groupBy(col("term")).agg(sum(col("tf")).as("cf_t"))
     val cand = p.select(col("doc_id"), col("dl")).distinct()
     val contrib = log((coalesce(col("tf"), lit(0L)) +
@@ -284,7 +278,7 @@ object Search {
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("score_micro"))
       .orderBy(col("score_micro").desc, col("doc_id"))
-      .limit(k)
+      .limit(ProbeTopK)
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("score_micro").desc, col("doc_id"))).cast("long"))
@@ -641,7 +635,7 @@ object Search {
     val dfAll = post.groupBy(col("term")).agg(count(lit(1)).as("df_t"))
     val store = secs.select(col("doc_id"), col("section_id").as("chunk_id"),
       col("heading_path"), col("section_text").as("ct"), col("cl"))
-    // N/avgdl count ALL sections incl. empty (the sectionBm25TopKDf
+    // N/avgdl count ALL sections incl. empty (the sectionBm25Ranked
     // stats rule) — derived from the store plan, which carries them
     val stats = store.agg(count(lit(1)).as("cs_n"), sum(col("cl")).as("cs_s"))
     (post, dfAll, stats, store)
@@ -654,8 +648,8 @@ object Search {
     * the heading path and KWIC snippet as payload, tagged with the
     * batch id. Scoring is [[chunkBm25ScoreBatch]] over the
     * section-as-chunk index (shared kernel, no drift); SearchSpec
-    * asserts parity against [[sectionBm25TopKDf]] run with the
-    * query's own terms.
+    * asserts parity against [[sectionBm25Ranked]] over a fresh split,
+    * run with the query's own terms.
     */
   def sectionBm25ServeSink(queryStream: DataFrame, baseDocs: DataFrame,
                            outPath: String, checkpoint: String,
@@ -693,10 +687,7 @@ object Search {
   def bm25TermBounds(spark: SparkSession, d: String): DataFrame =
     bm25TermBoundsOn(sessionContrib(spark, d))
 
-  def bm25TermBoundsDf(docs: DataFrame): DataFrame =
-    bm25TermBoundsOn(bm25ContribAll(docs))
-
-  private def bm25TermBoundsOn(ca: DataFrame): DataFrame =
+  private[graft] def bm25TermBoundsOn(ca: DataFrame): DataFrame =
     ca.groupBy(col("term"))
       .agg(first(col("df_t")).as("df_t"), max(col("c")).as("u_micro"))
       .orderBy(col("term"))
@@ -704,9 +695,10 @@ object Search {
   /** The per-(doc, term) snapped BM25 contribution frame over the
     * probed postings — (doc_id, term, df_t, c) — shared by the bound
     * table, the pruned evaluator and (arithmetically) the exhaustive
-    * ranker: one expression tree, no drift.
+    * ranker: one expression tree, no drift. The build of the
+    * [[sessionContrib]] pin; tests call it for a fresh, uncached copy.
     */
-  private def bm25ContribAll(docs: DataFrame): DataFrame = {
+  private[graft] def bm25ContribAll(docs: DataFrame): DataFrame = {
     val p = postingsDf(docs, Some(ProbeTerms))
     val dfT = p.groupBy(col("term")).agg(count(lit(1)).as("df_t"))
     val idf = log(lit(1.0) + (csNDocs - col("df_t") + lit(0.5)) /
@@ -743,22 +735,17 @@ object Search {
     * per-term U and the skip test is identical — this operator is the
     * provably-exact kernel of that discipline.
     */
-  def bm25MaxScoreTopK(spark: SparkSession, d: String,
-                       k: Int = 10): DataFrame =
-    bm25MaxScoreTopKOn(sessionContrib(spark, d), k)
+  def bm25MaxScoreTopK(spark: SparkSession, d: String): DataFrame =
+    bm25MaxScoreTopKOn(sessionContrib(spark, d), ProbeTopK)
 
-  def bm25MaxScoreTopKDf(docs: DataFrame, k: Int = 10): DataFrame =
-    bm25MaxScoreTopKOn(bm25ContribAll(docs), k)
-
-  /** The pruned evaluator over an explicit contribution frame: the
-    * registered form passes the pinned [[sessionContrib]] artifact
-    * (one tokenize+snap per session, shared with the bound-table and
-    * block-max evaluators); the DataFrame form passes the lazy
-    * per-call plan — its three consumers (bounds, seed, final)
-    * recompute the tiny probed frame at fixture scale instead of
-    * pinning a per-call persist for the session lifetime.
+  /** The pruned evaluator over a contribution frame: the registered
+    * query passes the pinned [[sessionContrib]] artifact (one
+    * tokenize+snap per session, shared with the bound-table and
+    * block-max evaluators). Its three consumers (bounds, seed, final)
+    * read that one frame; over a lazy fresh build, as in the fixture
+    * tests, each recomputes it.
     */
-  private def bm25MaxScoreTopKOn(ca: DataFrame, k: Int): DataFrame = {
+  private[graft] def bm25MaxScoreTopKOn(ca: DataFrame, k: Int): DataFrame = {
     val kept = bm25MaxScoreBounds(ca, k)
       .filter(col("bound_micro") >= col("theta"))
       .select(col("doc_id"))
@@ -790,7 +777,7 @@ object Search {
 
   /** The (doc_id, bound_micro, theta) frame over a [[bm25ContribAll]]
     * output — every candidate document's present-term bound sum beside
-    * the seed threshold. [[bm25MaxScoreTopKDf]] filters it; SearchSpec
+    * the seed threshold. [[bm25MaxScoreTopKOn]] filters it; SearchSpec
     * reads it to assert the pruning actually BITES (bound < theta for
     * some candidate) on a fixture where parity still holds.
     */
@@ -801,9 +788,6 @@ object Search {
       .groupBy(col("doc_id")).agg(sum(col("u_micro")).as("bound_micro"))
       .crossJoin(broadcast(seedTheta(ca, k)))
   }
-
-  private[graft] def bm25ContribFrame(docs: DataFrame): DataFrame =
-    bm25ContribAll(docs)
 
   /** Documents per posting block: block id = doc_id >> 8 (256-doc
     * ranges) — arithmetic shift, exact floor division in both engines.
@@ -823,20 +807,17 @@ object Search {
   def bm25BlockMaxBounds(spark: SparkSession, d: String): DataFrame =
     sessionBlockMax(spark, d).orderBy(col("term"), col("block"))
 
-  def bm25BlockMaxBoundsDf(docs: DataFrame): DataFrame =
-    blockMaxTable(bm25ContribAll(docs)).orderBy(col("term"), col("block"))
-
   /** The (term, block, n_docs, bmax_micro) aggregate off a
     * contribution frame — ONE definition for the registered bound
     * table, the session artifact and the pruned evaluator's bound
     * frame, so the skip metadata cannot drift from what the audit
     * query publishes.
     */
-  private def blockMaxTable(ca: DataFrame): DataFrame =
+  private[graft] def blockMaxTable(ca: DataFrame): DataFrame =
     ca.groupBy(col("term"), shiftright(col("doc_id"), BlockShift).as("block"))
       .agg(count(lit(1)).as("n_docs"), max(col("c")).as("bmax_micro"))
 
-  /** BLOCK-MAX pruned BM25 top-k: the [[bm25MaxScoreTopKDf]] pipeline
+  /** BLOCK-MAX pruned BM25 top-k: the [[bm25MaxScoreTopK]] pipeline
     * with each document bounded by its own BLOCK's per-term maxima
     * instead of the global ones — B_d = Σ_t bmax(t, block(d)) over the
     * document's present terms, a bound that is never looser and
@@ -847,24 +828,18 @@ object Search {
     * is index metadata, and a block whose bound sum cannot reach θ is
     * never decompressed.
     */
-  def bm25BlockMaxTopK(spark: SparkSession, d: String,
-                       k: Int = 10): DataFrame =
-    bm25BlockMaxTopKOn(sessionContrib(spark, d), sessionBlockMax(spark, d), k)
+  def bm25BlockMaxTopK(spark: SparkSession, d: String): DataFrame =
+    bm25BlockMaxTopKOn(sessionContrib(spark, d), sessionBlockMax(spark, d), ProbeTopK)
 
-  def bm25BlockMaxTopKDf(docs: DataFrame, k: Int = 10): DataFrame = {
-    val ca = bm25ContribAll(docs)
-    bm25BlockMaxTopKOn(ca, blockMaxTable(ca), k)
-  }
-
-  /** The block-max pruned evaluator over explicit contribution +
-    * bound-table frames: the registered form passes the two pinned
-    * session artifacts (the bound table is built ONCE per session and
-    * shared with [[bm25BlockMaxBounds]] — the r15 judge's computed-
-    * twice finding); the DataFrame form derives both lazily per call.
+  /** The block-max pruned evaluator over contribution + bound-table
+    * frames: the registered query passes the two pinned session
+    * artifacts (the bound table is built ONCE per session and shared
+    * with [[bm25BlockMaxBounds]] — the r15 judge's computed-twice
+    * finding).
     */
-  private def bm25BlockMaxTopKOn(ca: DataFrame, bmax: DataFrame,
-                                 k: Int): DataFrame = {
-    val kept = bm25BlockMaxBoundFrameOn(ca, bmax, k)
+  private[graft] def bm25BlockMaxTopKOn(ca: DataFrame, bmax: DataFrame,
+                                        k: Int): DataFrame = {
+    val kept = bm25BlockMaxBoundFrame(ca, bmax, k)
       .filter(col("bound_micro") >= col("theta"))
       .select(col("doc_id"))
     ca.join(kept, Seq("doc_id"), "left_semi")
@@ -877,12 +852,11 @@ object Search {
           .orderBy(col("score_micro").desc, col("doc_id"))).cast("long"))
   }
 
-  /** (doc_id, bound_micro, theta) under BLOCK-granular maxima. */
-  private[graft] def bm25BlockMaxBoundFrame(ca: DataFrame, k: Int): DataFrame =
-    bm25BlockMaxBoundFrameOn(ca, blockMaxTable(ca), k)
-
-  private def bm25BlockMaxBoundFrameOn(ca: DataFrame, bmax: DataFrame,
-                                       k: Int): DataFrame =
+  /** (doc_id, bound_micro, theta) under the BLOCK-granular maxima of a
+    * [[blockMaxTable]].
+    */
+  private[graft] def bm25BlockMaxBoundFrame(ca: DataFrame, bmax: DataFrame,
+                                            k: Int): DataFrame =
     ca.select(col("doc_id"), col("term"),
         shiftright(col("doc_id"), BlockShift).as("block"))
       .join(bmax.select(col("term"), col("block"), col("bmax_micro")),
@@ -927,8 +901,7 @@ object Search {
     * semi-join prune below the second scan (the [[queryExpansion]]
     * pattern) — the corpus-sized path never carries chunk text.
     */
-  def chunkBm25TopK(spark: SparkSession, d: String,
-                    k: Int = ChunkTopK): DataFrame =
+  def chunkBm25TopK(spark: SparkSession, d: String): DataFrame =
     // stays on raw-text tokenization BY MEASUREMENT (r20): routing the
     // registered form through the tokenized_docs artifact was tried
     // and measured SLOWER (idle min-of-3 1.669 → 2.140 s at sf0.1) —
@@ -936,23 +909,16 @@ object Search {
     // explodes ctoks to terms, the consumer class the tokenized_docs
     // routing adjudication already measured as faster re-splitting at
     // parquet-scan speed (decoding the fat array column costs more
-    // than the regex). chunkFrame keeps the toks-aware head for
-    // callers that already hold the artifact.
-    chunkBm25TopKDf(Tables.fanOut(Tables.documents(spark, d)), k)
+    // than the regex)
+    chunkBm25TopKDf(Tables.fanOut(Tables.documents(spark, d)))
 
-  /** The (doc_id, chunk_id, cl, ctoks) sliding-window chunk frame —
-    * the docChunks arithmetic with the token slice kept (narrow
-    * generate, no shuffle). Accepts a raw document frame (tokenizes
-    * in place) or the pre-tokenized session artifact (`toks` column —
-    * stored as exactly `tokens(text)` of the non-null-text fan-out,
-    * so the two paths are bit-identical).
+  /** The (doc_id, chunk_id, cl, ctoks) sliding-window chunk frame of a
+    * raw document frame — the docChunks arithmetic with the token
+    * slice kept (narrow generate, no shuffle).
     */
   private def chunkFrame(docs: DataFrame): DataFrame = {
-    val head =
-      if (docs.columns.contains("toks"))
-        docs.select(col("doc_id"), col("toks").as("t"))
-      else docs.filter(col("text").isNotNull)
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
+    val head = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
     val nChunks = when(col("n") <= ChunkTok, lit(1L))
       .otherwise(floor((col("n") - ChunkTok + (ChunkStride - 1)).cast("double")
         / ChunkStride).cast("long") + 1)
@@ -1149,42 +1115,20 @@ object Search {
     * window pass ([[sectionChunksDf]]); postings restrict to the
     * probed terms before the (doc, section, term) aggregate; stats
     * ride a lazy broadcast 1-row frame; the roll-up is one keyed
-    * aggregate; path/snippet re-derive section text for the k winners
-    * only via a broadcast semi-join below the second pass (the
-    * [[chunkBm25TopKDf]] winners-only rule).
+    * aggregate; path/snippet read the k winners' sections only, via a
+    * broadcast semi-join against the same section frame.
     */
-  def sectionBm25TopK(spark: SparkSession, d: String,
-                      k: Int = SectionTopK): DataFrame = {
-    // registered form: the scoring pass AND the winners-only payload
-    // read the session section artifact (one splitter run per session);
-    // the payload is a broadcast semi-join against the cached frame —
-    // the same rows the fixture form's winner-only re-derivation yields
-    val secs = sessionSections(spark, d)
-    sectionBm25Ranked(secs, k, ProbeTerms, winDocs =>
-      secs.join(broadcast(winDocs), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("section_id"), col("heading_path"),
-          col("section_text")))
-  }
+  def sectionBm25TopK(spark: SparkSession, d: String): DataFrame =
+    sectionBm25Ranked(sessionSections(spark, d), SectionTopK, ProbeTerms)
 
-  def sectionBm25TopKDf(docs: DataFrame, k: Int = SectionTopK,
-                        terms: Seq[String] = ProbeTerms): DataFrame =
-    // fixture form: fully lazy; the payload re-derives sections for the
-    // k winner documents only (semi-join BELOW the splitter), so the
-    // full split runs once in this plan
-    sectionBm25Ranked(sectionChunksDf(sectionMdFrame(docs)), k, terms,
-      winDocs => sectionChunksDf(sectionMdFrame(
-          docs.join(broadcast(winDocs), Seq("doc_id"), "left_semi")))
-        .select(col("doc_id"), col("section_id"), col("heading_path"),
-          col("section_text")))
-
-  /** The shared section-BM25 ranking core: score sections, roll up the
-    * per-document best section, rank the bounded top-k, and join the
-    * winners' payload (heading path + KWIC snippet) from `winSecs` —
-    * the payload SOURCE is the only difference between the registered
-    * (cached-artifact) and fixture (lazy re-derive) forms.
+  /** The section-BM25 ranking core over a section frame: score
+    * sections, roll up the per-document best section, rank the bounded
+    * top-k, and join the winners' payload (heading path + KWIC
+    * snippet) from the same frame. The registered query passes the
+    * [[sessionSections]] pin, so scoring and payload read one split.
     */
-  private def sectionBm25Ranked(secs: DataFrame, k: Int, terms: Seq[String],
-                                winSecs: DataFrame => DataFrame): DataFrame = {
+  private[graft] def sectionBm25Ranked(secs: DataFrame, k: Int,
+                                       terms: Seq[String]): DataFrame = {
     val stats = secs.agg(count(lit(1)).as("cs_n"), sum(col("cl")).as("cs_s"))
     val post = secs.filter(col("cl") > 0)
       .select(col("doc_id"), col("section_id"), col("cl"),
@@ -1212,9 +1156,9 @@ object Search {
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("score_micro").desc, col("doc_id"))).cast("long"))
-    // payload: the k winner docs' sections only (source per form)
-    val winDocs = top.select(col("doc_id"))
-    val ws = winSecs(winDocs)
+    // payload: the k winner docs' sections only
+    val ws = secs.join(broadcast(top.select(col("doc_id"))), Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), col("section_id"), col("heading_path"), col("section_text"))
     val lc = lower(col("section_text"))
     val hit = coalesce(terms.map(tm =>
       when(instr(lc, tm.toLowerCase) > 0,
@@ -1269,14 +1213,10 @@ object Search {
     * Scale shape: the section split is narrow; ONE keyed exchange on
     * the md5; the final is a bounded top-k.
     */
-  def sectionDedup(spark: SparkSession, d: String,
-                   k: Int = SectionDedupTopK): DataFrame =
-    sectionDedupOn(sessionSections(spark, d), k)
+  def sectionDedup(spark: SparkSession, d: String): DataFrame =
+    sectionDedupOn(sessionSections(spark, d))
 
-  def sectionDedupDf(docs: DataFrame, k: Int = SectionDedupTopK): DataFrame =
-    sectionDedupOn(sectionChunksDf(sectionMdFrame(docs)), k)
-
-  private def sectionDedupOn(secs: DataFrame, k: Int): DataFrame =
+  private[graft] def sectionDedupOn(secs: DataFrame): DataFrame =
     secs
       .filter(col("section_text") =!= "")
       .groupBy(md5(col("section_text")).as("clause_md5"))
@@ -1286,7 +1226,7 @@ object Search {
         max(col("section_text")).as("clause"))
       .filter(col("n_docs") > 1)
       .orderBy(col("n_occurrences").desc, col("n_docs").desc, col("clause"))
-      .limit(k)
+      .limit(SectionDedupTopK)
 
   /** Negative-per-query cap of [[hardNegatives]] — shared with the
     * oracle.
@@ -1312,10 +1252,7 @@ object Search {
   def hardNegatives(spark: SparkSession, d: String): DataFrame =
     hardNegativesOn(sessionContrib(spark, d))
 
-  def hardNegativesDf(docs: DataFrame): DataFrame =
-    hardNegativesOn(bm25ContribAll(docs))
-
-  private def hardNegativesOn(contrib: DataFrame): DataFrame = {
+  private[graft] def hardNegativesOn(contrib: DataFrame): DataFrame = {
     // c fits doubles exactly (micro-scores ≪ 2^53), so the double-keyed
     // bounded aggregator ranks identically to (c DESC, doc_id ASC)
     val top = contrib.groupBy(col("term"))
@@ -1379,10 +1316,7 @@ object Search {
   def retrievalEvalAudit(spark: SparkSession, d: String): DataFrame =
     retrievalEvalAuditOn(sessionContrib(spark, d))
 
-  def retrievalEvalAuditDf(docs: DataFrame): DataFrame =
-    retrievalEvalAuditOn(bm25ContribAll(docs))
-
-  private def retrievalEvalAuditOn(contrib: DataFrame): DataFrame = {
+  private[graft] def retrievalEvalAuditOn(contrib: DataFrame): DataFrame = {
     val cand = contrib.groupBy(col("doc_id"))
       .agg(sum(col("c")).as("score_micro"), count(lit(1)).as("rel"))
     val disc = NdcgDiscounts.zipWithIndex.foldLeft(lit(0.0)) {
@@ -1462,10 +1396,7 @@ object Search {
   def bm25ParamSweep(spark: SparkSession, d: String): DataFrame =
     bm25ParamSweepOn(sessionQlPostings(spark, d), sessionCorpusStats(spark, d))
 
-  def bm25ParamSweepDf(docs: DataFrame): DataFrame =
-    bm25ParamSweepOn(postingsDf(docs, Some(ProbeTerms)), corpusStatsDf(docs))
-
-  private def bm25ParamSweepOn(p: DataFrame, stats: DataFrame): DataFrame = {
+  private[graft] def bm25ParamSweepOn(p: DataFrame, stats: DataFrame): DataFrame = {
     val spark = p.sparkSession
     import spark.implicits._
     val grid = BmSweepGrid.toDF("gid", "k1", "b")
@@ -1549,10 +1480,7 @@ object Search {
     mmrDiversifyOn(sessionContrib(spark, d),
       Tables.fanOut(Tables.documents(spark, d)))
 
-  def mmrDiversifyDf(docs: DataFrame): DataFrame =
-    mmrDiversifyOn(bm25ContribAll(docs), docs)
-
-  private def mmrDiversifyOn(contrib: DataFrame, docs: DataFrame): DataFrame = {
+  private[graft] def mmrDiversifyOn(contrib: DataFrame, docs: DataFrame): DataFrame = {
     // GREEDY-RECURRENCE SHAPE: the corpus-scale stages (scoring, the
     // winners-only shingle derivation, the pairwise grid) run
     // distributed; the k-round greedy itself runs on the DRIVER over
@@ -1595,6 +1523,9 @@ object Search {
           .otherwise(lit(0L)).as("sim_micro"))
     val simRows: Map[(Long, Long), Long] = sim.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap // ≤ pool²
+    // the result is a LocalRelation of the selected rows: nothing reads
+    // the shingle checkpoint again
+    org.apache.spark.sql.GraftSql.releaseCheckpoint(poolSh)
     var selected = Vector.empty[(Long, Long, Long, Long, Long)]
     for (i <- 1 to MmrK) {
       val cand = poolRows.filterNot(p => selected.exists(_._2 == p._1))
@@ -1626,10 +1557,12 @@ object Search {
     * |terms| rows.
     */
   def postingsSizeModel(spark: SparkSession, d: String): DataFrame =
-    postingsSizeModelDf(Tables.fanOut(Tables.documents(spark, d)))
+    postingsSizeModelOn(sessionQlPostings(spark, d))
 
-  def postingsSizeModelDf(docs: DataFrame): DataFrame = {
-    val p = postingsDf(docs, Some(ProbeTerms))
+  /** The size model over a probe-postings frame ([[sessionQlPostings]]
+    * for the registered query).
+    */
+  private[graft] def postingsSizeModelOn(p: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("term")).orderBy(col("doc_id"))
     val gap = col("doc_id") - coalesce(lag(col("doc_id"), 1).over(w), lit(-1L))
@@ -1680,8 +1613,7 @@ object Search {
     * the probed-postings shape with a data-derived probe set. Finals
     * are bounded top-k.
     */
-  def queryExpansion(spark: SparkSession, d: String,
-                     m: Int = FbDocs, topK: Int = FbTerms): DataFrame =
+  def queryExpansion(spark: SparkSession, d: String, m: Int = FbDocs): DataFrame =
     // the registered form rides the session FULL-POSTINGS index (the
     // artifact lexicalServePlans freezes for serving) + the ql_stats
     // 1-row frame: per run the query is keyed joins/aggregates over
@@ -1689,16 +1621,12 @@ object Search {
     // corpus tokenize+explode three times per execution: probe-term
     // postings, feedback postings, candidate-term dfs)
     queryExpansionOn(sessionPostingsIndex(spark, d),
-      sessionCorpusStats(spark, d), m, topK, ProbeTerms)
+      sessionCorpusStats(spark, d), m, FbTerms, ProbeTerms)
 
-  def queryExpansionDf(docs: DataFrame,
-                       m: Int = FbDocs, topK: Int = FbTerms,
-                       terms: Seq[String] = ProbeTerms): DataFrame =
-    queryExpansionOn(postingsDf(docs), corpusStatsDf(docs), m, topK, terms)
-
-  /** The expansion chain over an explicit (possibly pinned) full
-    * postings index — shared by the registered artifact form and the
-    * lazy DataFrame (fixture) form. Row-equivalence to the former
+  /** The expansion chain over a full postings index and its corpus
+    * stats — the registered query passes the session pins
+    * ([[sessionPostingsIndex]], [[sessionCorpusStats]]), the serving
+    * sink's parity test a fresh build. Row-equivalence to the former
     * corpus-pass shape, term by term: probed postings = the index
     * filtered to the probe terms (filter-before-groupBy ≡
     * filter-after, dl constant per doc); feedback postings = the index
@@ -1706,9 +1634,9 @@ object Search {
     * candidate df_t = index rows per term (one row per (doc, distinct
     * term) ≡ the explode(array_distinct) census).
     */
-  private def queryExpansionOn(post: DataFrame, stats: DataFrame,
-                               m: Int, topK: Int,
-                               terms: Seq[String]): DataFrame = {
+  private[graft] def queryExpansionOn(post: DataFrame, stats: DataFrame,
+                                      m: Int, topK: Int,
+                                      terms: Seq[String]): DataFrame = {
     val fb = bm25AgainstStats(post.filter(col("term").isin(terms: _*)),
         terms, stats, m)
       .select(col("doc_id"))
@@ -1744,7 +1672,7 @@ object Search {
     * postings (minus the query's terms, a per-query anti join) score
     * candidates idf·Σtf with the frozen document-frequency table; the
     * top-`topK` per query are the expansion terms. All arithmetic is
-    * the [[queryExpansionDf]] tree with the probe set replaced by the
+    * the [[queryExpansionOn]] tree with the probe set replaced by the
     * query's terms, so stream and batch expansions cannot drift.
     */
   private[graft] def queryExpansionScoreBatch(batch: DataFrame, index: DataFrame,

@@ -1325,28 +1325,6 @@ object TextAnalysis {
       .select(idCols ++ Seq(col("bg.w1").as("w1"), col("bg.w2").as("w2")): _*)
   }
 
-  /** Bigram conditional LM scoring — the next rung of the perplexity
-    * proxy above [[unigramLogProb]] (CCNet's real filter is a 5-gram
-    * KenLM; the bigram conditional ln p(w2|w1) = ln(c(w1 w2) / c(w1 ·))
-    * captures word-ORDER surprisal that a unigram model cannot: a
-    * shuffled document scores like its unshuffled twin under unigrams
-    * but much lower here). Docs with < 2 tokens have no bigrams and are
-    * excluded on both sides.
-    *
-    * Scale shape: one (w1, w2)-keyed count shuffle over the pair
-    * stream; the left-context totals derive from the bigram counts
-    * (vocabulary-sized second aggregation — never a second corpus
-    * scan), FOLDED INTO the count table as a window sum over w1 — so
-    * the pair stream meets ONE scoring table on (w1, w2), its
-    * count-shuffle partitioning, instead of being re-shuffled a second
-    * time on w1 to meet c1 after the first join (the r8 form did
-    * exactly that; the saved exchange is corpus-sized). The window
-    * form also computes c2 ONCE — a groupBy+join-back would duplicate
-    * the c2 subtree (AQE exchange reuse across the branches is not
-    * guaranteed). PlanShapeSpec pins the reduced exchange count on the
-    * final adaptive plan. Same FP discipline: per-pair ln snaps to
-    * integer micro-nats, per-doc aggregation is exact BIGINT math.
-    */
   /** Session-scoped cache of the TOKENIZED CORPUS — the (doc_id,
     * source, toks) frame the n-gram/LM/textrank families' first move
     * re-derived from raw text every query (the r16 judge's
@@ -1393,23 +1371,46 @@ object TextAnalysis {
     */
   private val sessionBigramCounts =
     SessionArtifact.frame("lm_bigram_counts", Pin.Checkpoint) { (spark, d) =>
-      bigramPairStream(sessionTokens(spark, d), Seq.empty)
-        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
+      bigramCountTable(sessionTokens(spark, d))
     }
 
+  /** The (w1, w2, c2) bigram count table of a token or document frame —
+    * the build of [[sessionBigramCounts]].
+    */
+  private[graft] def bigramCountTable(docs: DataFrame): DataFrame =
+    bigramPairStream(docs, Seq.empty)
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
+
+  /** Bigram conditional LM scoring — the next rung of the perplexity
+    * proxy above [[unigramLogProb]] (CCNet's real filter is a 5-gram
+    * KenLM; the bigram conditional ln p(w2|w1) = ln(c(w1 w2) / c(w1 ·))
+    * captures word-ORDER surprisal that a unigram model cannot: a
+    * shuffled document scores like its unshuffled twin under unigrams
+    * but much lower here). Docs with < 2 tokens have no bigrams and are
+    * excluded on both sides.
+    *
+    * Scale shape: one (w1, w2)-keyed count shuffle over the pair
+    * stream; the left-context totals derive from the bigram counts
+    * (vocabulary-sized second aggregation — never a second corpus
+    * scan), FOLDED INTO the count table as a window sum over w1 — so
+    * the pair stream meets ONE scoring table on (w1, w2), its
+    * count-shuffle partitioning, instead of being re-shuffled a second
+    * time on w1 to meet c1 after the first join (the r8 form did
+    * exactly that; the saved exchange is corpus-sized). The window
+    * form also computes c2 ONCE — a groupBy+join-back would duplicate
+    * the c2 subtree (AQE exchange reuse across the branches is not
+    * guaranteed). PlanShapeSpec pins the reduced exchange count on the
+    * final adaptive plan. Same FP discipline: per-pair ln snaps to
+    * integer micro-nats, per-doc aggregation is exact BIGINT math.
+    */
   def bigramLogProb(spark: SparkSession, d: String): DataFrame =
-    bigramScoreCore(
-      bigramPairStream(sessionTokens(spark, d), Seq(col("doc_id"))),
-      sessionBigramCounts(spark, d))
+    bigramScoreOn(sessionTokens(spark, d), sessionBigramCounts(spark, d))
 
-  /** DataFrame form (docs must have doc_id + text). */
-  def bigramLogProbDf(docs: DataFrame): DataFrame = {
+  /** The bigram scorer over a token or document frame (doc_id + toks,
+    * or doc_id + text) and a [[bigramCountTable]].
+    */
+  private[graft] def bigramScoreOn(docs: DataFrame, c2: DataFrame): DataFrame = {
     val pairs = bigramPairStream(docs, Seq(col("doc_id")))
-    bigramScoreCore(pairs,
-      pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")))
-  }
-
-  private def bigramScoreCore(pairs: DataFrame, c2: DataFrame): DataFrame = {
     // left-context totals as a WINDOW over the count table — not a
     // groupBy+join back, which would recompute the c2 subtree (exchange
     // reuse across the two branches is not guaranteed under AQE) and
@@ -1475,20 +1476,20 @@ object TextAnalysis {
     * derive from the trigram count table as window sums —
     * vocabulary-sized exchanges, never a second corpus-sized
     * aggregation, and no groupBy+join-back that would duplicate the
-    * count subtree (the [[bigramLogProbDf]] lesson). The scalar N
+    * count subtree (the [[bigramScoreOn]] lesson). The scalar N
     * rides a 1-row broadcast ([[unigramLogProb]] design). The doc
     * stream then meets ONE fully-resolved score table on its own
     * count-shuffle key. FP parity: per-trigram ln snaps to integer
     * micro-nats; per-doc aggregation is exact BIGINT math.
     *
-    * Cost note (r10 restructure): the batch scorer now derives the
-    * count table and the scoring stream from ONE hash-keyed explode
-    * subtree ([[trigramCounts]], the [[fivegramCounts]] shape at
-    * order 3) — the count shuffle and the scoring join both run on the
-    * 8-byte h3 key, and no gram string ever leaves the scan stage.
-    * This replaced the r9 form whose two string-keyed branches each
-    * exploded ~3 string copies per corpus token (10× smoke ratio 3.3
-    * then; the 5-gram family's measured win motivated the change).
+    * Cost note (r10 restructure): the count table is ONE hash-keyed
+    * explode subtree ([[trigramCountTable]], the
+    * [[fivegramTypeTable]] shape at order 3) — the count shuffle and
+    * the scoring join both run on the 8-byte h3 key, and no gram
+    * string ever leaves the scan stage. This replaced the r9 form
+    * whose two string-keyed branches each exploded ~3 string copies
+    * per corpus token (10× smoke ratio 3.3 then; the 5-gram family's
+    * measured win motivated the change).
     */
   def backoffLogProb(spark: SparkSession, d: String): DataFrame =
     // the fully-resolved h3 → mlp score table is parameter-free given
@@ -1498,24 +1499,29 @@ object TextAnalysis {
     // stream + rollup. The scoring explode computes ONE hash per
     // position instead of the count pass's five (8 bytes/position on
     // the wire, §2.3).
-    gramRollup(trigramH3Stream(sessionTokens(spark, d)),
-      sessionBackoffScores(spark, d), "h3", "n_trigrams")
+    backoffScoreOn(sessionTokens(spark, d), sessionBackoffScores(spark, d))
 
-  /** The registered form's fixed hyper-parameters (other values go
-    * through [[backoffLogProbDf]], the [[MlMinCount]] discipline).
+  /** The trigram scorer over a token or document frame and an
+    * (h3, mlp) score table ([[backoffMlpTable]]).
+    */
+  private[graft] def backoffScoreOn(docs: DataFrame, scores: DataFrame): DataFrame =
+    gramRollup(trigramH3Stream(docs), scores, "h3", "n_trigrams")
+
+  /** The stupid-backoff hyper-parameters of every registered trigram
+    * and 5-gram backoff LM, Moore–Lewis included — the oracles'
+    * literals (singleton pruning, alpha = 0.5).
     */
   private val BackoffMinCount = 2
   private val BackoffAlpha = 0.5
 
   /** The fully-resolved (w1, w2, w3, mlp) stupid-backoff score table of
     * a counting corpus — every observed trigram type with its
-    * micro-nat-snapped backoff log-score. Shared by the batch scorer
-    * ([[backoffLogProbDf]]) and the streaming form
+    * micro-nat-snapped backoff log-score, string-keyed. The model
+    * table of [[mooreLewisSelect]] and of the streaming form
     * ([[backoffScoreAgainst]] / [[backoffScoreSink]]), which scores
     * ARRIVALS against the frozen table of a base corpus.
     */
-  def backoffScoreTable(docs: DataFrame,
-                        minCount: Int = 2, alpha: Double = 0.5): DataFrame = {
+  def backoffScoreTable(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tris = trigramStream(docs, Seq.empty)
     val c3 = tris.groupBy(col("w1"), col("w2"), col("w3"))
@@ -1526,15 +1532,21 @@ object TextAnalysis {
       .withColumn("ctx1", sum(col("c3")).over(Window.partitionBy(col("w2"))))
       .withColumn("cu", sum(col("c3")).over(Window.partitionBy(col("w3"))))
     val n = c3.agg(sum(col("c3")).as("n")) // scalar; broadcast below
-    val score = when(col("c3") >= minCount,
-      col("c3").cast("double") / col("ctx2"))
-      .when(col("cb") >= minCount,
-        lit(alpha) * col("cb").cast("double") / col("ctx1"))
-      .otherwise(lit(alpha) * lit(alpha) * col("cu").cast("double") / col("n"))
     withCounts.crossJoin(broadcast(n))
       .select(col("w1"), col("w2"), col("w3"),
-        floor(log(score) * 1e6 + 0.5).cast("long").as("mlp"),
+        floor(log(backoff3Score) * 1e6 + 0.5).cast("long").as("mlp"),
         col("n"))
+  }
+
+  /** The stupid-backoff trigram probability over a count row carrying
+    * c3, ctx2, cb, ctx1, cu and the corpus total n — one expression
+    * for the string-keyed and the hash-keyed score tables.
+    */
+  private def backoff3Score: Column = {
+    val a = lit(BackoffAlpha)
+    when(col("c3") >= BackoffMinCount, col("c3").cast("double") / col("ctx2"))
+      .when(col("cb") >= BackoffMinCount, a * col("cb").cast("double") / col("ctx1"))
+      .otherwise(a * a * col("cu").cast("double") / col("n"))
   }
 
   /** MOORE–LEWIS cross-entropy-difference selection (Moore & Lewis
@@ -1552,8 +1564,8 @@ object TextAnalysis {
     * grams the target never saw, so the OOV branch is load-bearing
     * here, unlike the self-scoring batch form). Target slice =
     * `doc_id % 20 = 7`, the [[graft.ext.Corpus.dsirWeights]] /
-    * decontamination eval-slice convention (a stand-in for a
-    * caller-supplied target corpus; the Df form takes the predicate).
+    * decontamination eval-slice convention ([[mlTarget]], a stand-in
+    * for a caller-supplied target corpus).
     *
     * Exactness: both avg log-probs are the backoff scorer's exact
     * micro-nat means (BIGINT sums, one snapped division); ce_diff
@@ -1581,91 +1593,81 @@ object TextAnalysis {
     // pool scoring pass only, previously two full count chains per run
     // (the subword-trainer discipline)
     val (lm, ns) = sessionMooreLewisLm(spark, d)
-    mooreLewisTail(
-      sessionTokens(spark, d).filter(!(col("doc_id") % 20 === 7)),
-      lm.select(col("w1"), col("w2"), col("w3"),
-        col("in_mlp"), col("gen_mlp")),
-      ns, MlAlpha)
+    mooreLewisOn(sessionTokens(spark, d), lm, ns)
   }
 
-  /** The registered form's fixed LM hyper-parameters (other values go
-    * through [[mooreLewisSelectDf]]).
-    */
-  private val MlMinCount = 2
-  private val MlAlpha = 0.5
+  /** The Moore–Lewis target slice: the eval-slice convention. */
+  private def mlTarget: Column = col("doc_id") % 20 === 7
 
   /** The session (merged score table, model-size scalars) pair of the
-    * registered Moore–Lewis query: both stupid-backoff trigram LMs
-    * (in-domain slice + general pool) merged into ONE gram-keyed
-    * (w1, w2, w3, in_mlp, gen_mlp) table with each model's N stamped on
-    * every row, built once per (session, dir) and billed to the
-    * `artifact_builds` sidecar; ArtifactStore-backed so warm sessions
-    * load instead of re-counting, and the cold ledger prices the true
-    * rebuild. ~|trigram vocabulary| rows pinned per (session, dir).
+    * registered Moore–Lewis query: the [[mooreLewisLm]] table built
+    * once per (session, dir) and billed to the `artifact_builds`
+    * sidecar; ArtifactStore-backed so warm sessions load instead of
+    * re-counting, and the cold ledger prices the true rebuild.
+    * ~|trigram vocabulary| rows pinned per (session, dir).
     */
   private val sessionMooreLewisLm = SessionArtifact.pair("moore_lewis_lm") { (spark, d) =>
-    var inT: DataFrame = null
-    var genT: DataFrame = null
+    var tables = Seq.empty[DataFrame]
     val lm = SessionArtifact.stored(spark, "moore_lewis_lm", d, Pin.Checkpoint) {
-      val docs = sessionTokens(spark, d)
-      val target = docs.filter(col("doc_id") % 20 === 7)
-      require(!tokStream(target, Seq(col("doc_id")))
-          .filter(size(col("t")) >= 3).isEmpty,
-        "mooreLewisSelect: target slice has no document with >= 3 tokens — " +
-          "no in-domain trigram LM can be trained")
-      inT = backoffScoreTable(target, MlMinCount, MlAlpha)
-        .localCheckpoint(false)
-      genT = backoffScoreTable(docs.filter(!(col("doc_id") % 20 === 7)),
-        MlMinCount, MlAlpha).localCheckpoint(false)
-      // the N scalars ride every row (constant columns, RLE-free in
-      // the store) so ONE artifact carries the whole frozen state
-      mlMergedTable(inT, genT).crossJoin(broadcast(mlNsRow(inT, genT)))
+      val (merged, parts) = mooreLewisLm(sessionTokens(spark, d))
+      tables = parts
+      merged
     }
     // the store copy (or the outer pin) is materialized — the
     // builder's score-table checkpoints have no reader left
-    if (inT ne null) {
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(inT)
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(genT)
-    }
-    // 1-row scalar frame for the scoring tail's OOV floors — kept
-    // loud on the (store-roundtrip) empty-table edge exactly like
-    // the inline nRow guard
-    def guarded(c: String) = coalesce(max(col(c)),
-      raise_error(lit("mooreLewisSelect: empty pinned score table — " +
-        "rebuild the moore_lewis_lm artifact from a non-empty corpus"))
-        .cast("long")).as(c)
-    val ns = lm.agg(guarded("n_in"), guarded("n_gen")).localCheckpoint()
-    (lm, ns)
+    tables.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
+    (lm, mooreLewisNs(lm).localCheckpoint())
   }
 
-  /** DataFrame form (docs must have doc_id + text, or the pre-tokenized
-    * artifact schema).
+  /** Both stupid-backoff trigram LMs of a token or document frame (the
+    * [[mlTarget]] slice and the general pool) merged into ONE
+    * gram-keyed (w1, w2, w3, in_mlp, gen_mlp, n_in, n_gen) table, each
+    * model's N stamped on every row so one frame carries the whole
+    * frozen state — the build of [[sessionMooreLewisLm]]. The two score
+    * tables are vocabulary-sized and each read twice (the merge and
+    * its N), so they are lazy checkpoints that share one window-chain
+    * evaluation per table (measured 21 keyed exchanges without, 13
+    * with); they are returned beside the merged frame for the caller
+    * to release once that frame is materialized.
     */
-  def mooreLewisSelectDf(docs: DataFrame, targetPred: Column,
-                         minCount: Int = 2, alpha: Double = 0.5): DataFrame = {
-    val target = docs.filter(targetPred)
-    val pool = docs.filter(!targetPred)
+  private[graft] def mooreLewisLm(docs: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    val target = docs.filter(mlTarget)
     // a trigram-free target slice is a degenerate selection problem,
-    // and the two engines would otherwise diverge on it (Spark's
-    // backoffScoreAgainst raise_errors on the empty score table; the
-    // oracle's SUM propagates NULL rows) — fail loudly and identically
-    // HERE instead (ADVICE r17). The probe job is target-slice-sized.
+    // and the two engines would otherwise diverge on it (the oracle's
+    // SUM propagates NULL rows) — fail loudly instead (ADVICE r17). The
+    // probe job is target-slice-sized.
     require(!tokStream(target, Seq(col("doc_id")))
         .filter(size(col("t")) >= 3).isEmpty,
-      "mooreLewisSelectDf: target slice has no document with >= 3 tokens — " +
-        "no in-domain trigram LM can be trained; widen targetPred")
-    // the two score tables are vocabulary-sized and each referenced
-    // twice by the Against scorer (scalar-N aggregate + the gram join);
-    // lazy checkpoints share one window-chain evaluation per table
-    // (measured 21 keyed exchanges without, 13 with)
-    val inTable = backoffScoreTable(target, minCount, alpha).localCheckpoint(false)
-    val genTable = backoffScoreTable(pool, minCount, alpha).localCheckpoint(false)
-    mooreLewisTail(pool, mlMergedTable(inTable, genTable),
-      mlNsRow(inTable, genTable), alpha)
+      "mooreLewisSelect: target slice has no document with >= 3 tokens — " +
+        "no in-domain trigram LM can be trained")
+    val inT = backoffScoreTable(target).localCheckpoint(false)
+    val genT = backoffScoreTable(docs.filter(!mlTarget)).localCheckpoint(false)
+    val ns = inT.agg(max(col("n")).as("n_in"))
+      .crossJoin(genT.agg(max(col("n")).as("n_gen")))
+    (mlMergedTable(inT, genT).crossJoin(broadcast(ns)), Seq(inT, genT))
   }
 
+  /** The 1-row (n_in, n_gen) model-size frame of a [[mooreLewisLm]]
+    * table, loud on an empty model — the OOV floors' inputs.
+    */
+  private[graft] def mooreLewisNs(lm: DataFrame): DataFrame = {
+    def guarded(c: String) = coalesce(max(col(c)),
+      raise_error(lit("mooreLewisSelect: empty score table — " +
+        "build the Moore–Lewis LM from a non-empty corpus"))
+        .cast("long")).as(c)
+    lm.agg(guarded("n_in"), guarded("n_gen"))
+  }
+
+  /** Moore–Lewis selection over a token or document frame: its pool
+    * (everything outside [[mlTarget]]) scored against a
+    * [[mooreLewisLm]] table and its [[mooreLewisNs]] frame.
+    */
+  private[graft] def mooreLewisOn(docs: DataFrame, lm: DataFrame, ns: DataFrame): DataFrame =
+    mooreLewisTail(docs.filter(!mlTarget),
+      lm.select(col("w1"), col("w2"), col("w3"), col("in_mlp"), col("gen_mlp")), ns)
+
   /** The two models merged into ONE gram-keyed table so the pool is
-    * exploded/joined once (see [[mooreLewisSelectDf]]'s scaladoc).
+    * exploded/joined once (see [[mooreLewisSelect]]'s scaladoc).
     * Either side's missing gram stays NULL through the full outer join
     * and the scoring left join, then coalesces to that side's OOV
     * floor — bit-identical to two backoffScoreAgainst passes.
@@ -1677,26 +1679,14 @@ object TextAnalysis {
           .select(col("w1"), col("w2"), col("w3"), col("mlp").as("gen_mlp")),
         Seq("w1", "w2", "w3"), "full_outer")
 
-  /** The 1-row (n_in, n_gen) model-size frame — the Against scorer's
-    * loud empty-table guard, one per model.
-    */
-  private def mlNsRow(inTable: DataFrame, genTable: DataFrame): DataFrame = {
-    def nRow(t: DataFrame, out: String) = t.agg(
-      coalesce(max(col("n")),
-        raise_error(lit("mooreLewisSelectDf: empty score table — " +
-          "build backoffScoreTable from a non-empty base corpus"))
-          .cast("long")).as(out))
-    nRow(inTable, "n_in").crossJoin(nRow(genTable, "n_gen"))
-  }
-
   /** The scoring pass: explode the pool once against the merged
     * (w1, w2, w3, in_mlp, gen_mlp) table, roll both sums up map-side
     * in one aggregate. `ns` is the 1-row (n_in, n_gen) frame.
     */
   private def mooreLewisTail(pool: DataFrame, merged: DataFrame,
-                             ns: DataFrame, alpha: Double): DataFrame = {
+                             ns: DataFrame): DataFrame = {
     def oovFloor(n: Column) =
-      floor(log(lit(alpha) * lit(alpha) / (n + 1)) * 1e6 + 0.5).cast("long")
+      floor(log(lit(BackoffAlpha) * lit(BackoffAlpha) / (n + 1)) * 1e6 + 0.5).cast("long")
     def avgLp(s: Column) =
       floor(s.cast("double") / col("n_trigrams") + 0.5) / 1e6
     trigramStream(pool, Seq(col("doc_id")))
@@ -1764,65 +1754,36 @@ object TextAnalysis {
     */
   private val sessionBackoffScores =
     SessionArtifact.frame("lm_backoff_scores", Pin.KeyedBy("h3")) { (spark, d) =>
-      val (_, withCounts, n) = trigramCounts(sessionTokens(spark, d))
-      backoffMlpTable(withCounts, n, BackoffMinCount, BackoffAlpha)
+      backoffMlpTable(trigramCountTable(sessionTokens(spark, d)))
     }
 
-  /** The score→micro-nat projection shared by the pinned builder and
-    * the self-building Df form (one definition, no drift).
+  /** The (h3, mlp) score projection of a [[trigramCountTable]]: the
+    * [[backoff3Score]] snapped to micro-nats, with the corpus total N
+    * broadcast.
     */
-  private def backoffMlpTable(withCounts: DataFrame, n: DataFrame,
-                              minCount: Int, alpha: Double): DataFrame = {
-    val score = when(col("c3") >= minCount,
-      col("c3").cast("double") / col("ctx2"))
-      .when(col("cb") >= minCount,
-        lit(alpha) * col("cb").cast("double") / col("ctx1"))
-      .otherwise(lit(alpha) * lit(alpha) * col("cu").cast("double") / col("n"))
-    withCounts.crossJoin(broadcast(n))
-      .select(col("h3"), floor(log(score) * 1e6 + 0.5).cast("long").as("mlp"))
-  }
+  private[graft] def backoffMlpTable(withCounts: DataFrame): DataFrame =
+    withCounts.crossJoin(broadcast(withCounts.agg(sum(col("c3")).as("n"))))
+      .select(col("h3"), floor(log(backoff3Score) * 1e6 + 0.5).cast("long").as("mlp"))
 
-  /** The doc-keyed trigram key stream plus the fully-counted type table
-    * (c3 with all four backoff totals attached as window sums) and the
-    * scalar-N aggregate — the [[fivegramCounts]] shape at order 3. The
-    * doc stream and the count table derive from ONE explode subtree, so
-    * the count shuffle and the scoring join run on the same 8-byte h3
-    * key (the single-explode restructure the 5-gram family proved out;
-    * previously the batch scorer exploded the corpus twice, once per
-    * string-keyed branch).
+  /** The hash-keyed trigram TYPE table of a token or document frame: c3
+    * per h3 with all four backoff totals attached as window sums — the
+    * count shuffle of [[sessionBackoffScores]], on the 8-byte h3 key
+    * (the single-explode restructure the 5-gram family proved out).
+    * The DuckDB oracle computes over gram STRINGS, so a hash collision
+    * here would fail the hash-compare loudly rather than pass silently.
     */
-  private def trigramCounts(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def trigramCountTable(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val stream = trigramHashStream(docs, Seq(col("doc_id")))
-      .select(col("doc_id"), col("g.*"))
     // h3 determines every slice hash (modulo collision), so first() is
     // deterministic within a group
-    val c3 = stream.groupBy(col("h3"))
+    val c3 = trigramHashStream(docs, Seq.empty).select(col("g.*"))
+      .groupBy(col("h3"))
       .agg(count(lit(1)).as("c3"),
         first(col("hc2")).as("hc2"), first(col("hb")).as("hb"),
         first(col("hc1")).as("hc1"), first(col("hu")).as("hu"))
     def wsum(key: String) = sum(col("c3")).over(Window.partitionBy(col(key)))
-    val withCounts = c3
-      .withColumn("ctx2", wsum("hc2")).withColumn("cb", wsum("hb"))
+    c3.withColumn("ctx2", wsum("hc2")).withColumn("cb", wsum("hb"))
       .withColumn("ctx1", wsum("hc1")).withColumn("cu", wsum("hu"))
-    val n = c3.agg(sum(col("c3")).as("n")) // scalar; broadcast by callers
-    (stream, withCounts, n)
-  }
-
-  /** DataFrame form (docs must have doc_id + text). Batch scoring runs
-    * on the hash-keyed single-explode shape ([[trigramCounts]]); the
-    * string-keyed [[backoffScoreTable]] remains the streaming-scorer
-    * artifact ([[backoffScoreAgainst]] left-joins arrivals on words so
-    * unseen trigrams fall to the OOV floor, and a frozen table you can
-    * read is worth the string columns there). The DuckDB oracle
-    * computes over gram STRINGS, so a hash collision here would fail
-    * the hash-compare loudly rather than pass silently.
-    */
-  def backoffLogProbDf(docs: DataFrame,
-                       minCount: Int = 2, alpha: Double = 0.5): DataFrame = {
-    val (stream, withCounts, n) = trigramCounts(docs)
-    gramRollup(stream, backoffMlpTable(withCounts, n, minCount, alpha),
-      "h3", "n_trigrams")
   }
 
   /** xxhash64 of the `len`-token slice starting at 1-based `from` —
@@ -1855,11 +1816,11 @@ object TextAnalysis {
     *
     * For pipelines that cannot accept even that tail (or for n beyond
     * ~10^13, where pairs turn material), every 5-gram-family scorer
-    * takes `wideKeys = true`: the same API and plan shape with each
-    * key widened to a 128-bit (x1, x2) struct — two independent
-    * xxhash64 streams (the second salted), collision expectation
-    * n²/2^129 ~ 10^-15 at n = 10^12 — at twice the key bytes per
-    * exchange. CleaningSpec asserts the two key widths produce
+    * runs on a type table built with `wide = true`: the same plan
+    * shape with each key widened to a 128-bit (x1, x2) struct — two
+    * independent xxhash64 streams (the second salted), collision
+    * expectation n²/2^129 ~ 10^-15 at n = 10^12 — at twice the key
+    * bytes per exchange. CleaningSpec asserts the two key widths produce
     * identical scores on collision-free data. The same argument covers
     * [[graft.ext.Cleaning.spanDedupStatsDf]]'s span hashes, where a
     * collision wrongly REMOVES one n-gram span of one document
@@ -1926,13 +1887,26 @@ object TextAnalysis {
     * exchanges; the trigram operator's honest-cost note applies one
     * order harder — this is why the keys are hashes here.
     */
-  def fivegramLogProb(spark: SparkSession, d: String,
-                      minCount: Int = 2, alpha: Double = 0.5): DataFrame = {
-    val docs = Tables.documents(spark, d)
-    val wide = chooseWideKeys(docs)
-    val n = sessionC5(spark, d, wide).agg(sum(col("c5")).as("n"))
-    fivegramScoreCore(docStream5(sessionTokens(spark, d), wide),
-      sessionWindowCounts(spark, d, wide), n, minCount, alpha)
+  def fivegramLogProb(spark: SparkSession, d: String): DataFrame = {
+    val wide = lmWide(spark, d)
+    fivegramScoreOn(sessionTokens(spark, d), sessionC5(spark, d, wide),
+      sessionWindowCounts(spark, d, wide))
+  }
+
+  /** The stupid-backoff 5-gram scorer over a token or document frame,
+    * its [[fivegramTypeTable]] and that table's
+    * [[fivegramWindowCounts]].
+    */
+  private[graft] def fivegramScoreOn(docs: DataFrame, c5: DataFrame,
+                                     windows: DataFrame): DataFrame = {
+    val a = lit(BackoffAlpha)
+    val mc = BackoffMinCount
+    val score = when(col("c5") >= mc, col("c5").cast("double") / col("ctx4"))
+      .when(col("c4s") >= mc, a * col("c4s").cast("double") / col("ctx3"))
+      .when(col("c3s") >= mc, a * a * col("c3s").cast("double") / col("ctx2"))
+      .when(col("c2s") >= mc, a * a * a * col("c2s").cast("double") / col("ctx1"))
+      .otherwise(a * a * a * a * col("c1s").cast("double") / col("n"))
+    fivegramRollup(docs, c5, snapScores(windows, fivegramN(c5), score))
   }
 
   /** Key-width POLICY for the whole 5-gram scorer family — the piece
@@ -1960,10 +1934,12 @@ object TextAnalysis {
     * policy needs) and then applies grams ≤ tokens ≈ raw bytes / 6.
     * UNKNOWN stats read as defaultSizeInBytes (≈ Long.MaxValue) and
     * select wide keys — the safe side, since only correctness is at
-    * stake when the size is unknowable. The Df forms keep the explicit
-    * `wideKeys` flag for callers that know better, and the two widths
-    * are asserted score-identical in CleaningSpec with the wide chain
-    * oracle-checked end-to-end as `q_kn_logprob_wide`.
+    * stake when the size is unknowable. Each scorer core reads the key
+    * width off the type table it is given, and the frozen-base score
+    * tables ([[wbScoreTableDf]], [[knScoreTableDf]]) take an explicit
+    * `wideKeys` flag. The two widths are asserted score-identical in
+    * CleaningSpec, and the wide chain is oracle-checked end-to-end as
+    * `q_kn_logprob_wide`, which reads the `_wide` session pins.
     */
   val WideKeyGramThreshold: Double = 1e12
 
@@ -1975,42 +1951,33 @@ object TextAnalysis {
     (BigDecimal(docs.queryExecution.analyzed.stats.sizeInBytes) *
       compressionRatio / bytesPerToken) >= WideKeyGramThreshold
 
-  /** The doc-keyed 5-gram key stream plus the fully-counted type table
-    * (c5 with all eight backoff totals attached) and the scalar-N
-    * aggregate — shared by the stupid-backoff and interpolated scorers,
-    * which differ only in the score expression they fold over it.
+  /** The registered 5-gram scorers' key width: the
+    * [[chooseWideKeys]] policy over the corpus directory.
     */
-  /** The doc-keyed 5-gram key stream plus the distinct-5-gram TYPE
-    * table (h5, c5, all eight slice hashes) — the shared base of every
-    * order-5 scorer (backoff / interpolated / Witten-Bell /
-    * Kneser-Ney).
+  private def lmWide(spark: SparkSession, d: String): Boolean =
+    chooseWideKeys(Tables.documents(spark, d))
+
+  /** The distinct-5-gram TYPE table (h5, c5, all eight slice hashes) of
+    * a token or document frame — the ONE corpus count shuffle every
+    * order-5 scorer (backoff / interpolated / Witten-Bell / Kneser-Ney)
+    * builds on: the build of [[sessionC5]] and of the frozen-base
+    * score tables.
     */
-  private def fivegramTypeTable(docs: DataFrame,
-                                wide: Boolean = false): (DataFrame, DataFrame) = {
-    val stream = fivegramStream(docs, Seq(col("doc_id")), wide)
-      .select(col("doc_id"), col("g.*"))
+  private[graft] def fivegramTypeTable(docs: DataFrame, wide: Boolean = false): DataFrame =
     // h5 determines every slice hash (modulo collision), so first() is
     // deterministic within a group
-    val c5 = stream.groupBy(col("h5"))
+    fivegramStream(docs, Seq.empty, wide).select(col("g.*"))
+      .groupBy(col("h5"))
       .agg(count(lit(1)).as("c5"),
         first(col("hc4")).as("hc4"), first(col("hs4")).as("hs4"),
         first(col("hm3")).as("hm3"), first(col("hs3")).as("hs3"),
         first(col("hm2")).as("hm2"), first(col("hs2")).as("hs2"),
         first(col("hm1")).as("hm1"), first(col("hs1")).as("hs1"))
-    (stream, c5)
-  }
-
-  private def fivegramCounts(docs: DataFrame, wide: Boolean = false)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (stream, c5) = fivegramTypeTable(docs, wide)
-    val n = c5.agg(sum(col("c5")).as("n")) // scalar; broadcast by callers
-    (stream, fivegramWindowCounts(c5), n)
-  }
 
   /** The stupid-backoff/JM window block over the type table — split
     * out so the session cache can run it over the checkpointed c5.
     */
-  private def fivegramWindowCounts(c5: DataFrame): DataFrame = {
+  private[graft] def fivegramWindowCounts(c5: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def wsum(key: String) = sum(col("c5")).over(Window.partitionBy(col(key)))
     c5
@@ -2028,7 +1995,7 @@ object TextAnalysis {
     * and its smoothed stat block (q_wb/q_kn) are identical
     * deterministic artifacts every scorer consumed yet re-built per
     * query — and at deployment they ARE the frozen model tables the
-    * score sinks ship ([[wbScoreTable]]'s contract). Whichever scorer
+    * score sinks ship ([[wbScoreTableDf]]'s contract). Whichever scorer
     * runs first bills each block; the occurrence STREAM is re-derived
     * narrowly per query (it is token-sized — the one thing a pipeline
     * does NOT freeze). Checkpointing c5 also retires the scalar
@@ -2041,7 +2008,7 @@ object TextAnalysis {
       wide => if (wide) name + "_wide" else name)(build)
 
   private val sessionC5 = lm5("lm_5gram_types") { (spark, d, wide) =>
-    fivegramTypeTable(sessionTokens(spark, d), wide)._2
+    fivegramTypeTable(sessionTokens(spark, d), wide)
   }
 
   private val sessionWindowCounts = lm5("lm_5gram_windows") { (spark, d, wide) =>
@@ -2052,12 +2019,32 @@ object TextAnalysis {
     smoothedStatTable(sessionC5(spark, d, wide))
   }
 
-  /** The per-query occurrence stream — narrow tokenize + hash, no
-    * shuffle; the join side of [[gramRollup]].
+  /** True iff a 5-gram table's h5 key is the 128-bit struct of
+    * [[gramHashWide]].
     */
-  private def docStream5(docs: DataFrame, wide: Boolean): DataFrame =
-    fivegramStream(docs, Seq(col("doc_id")), wide)
-      .select(col("doc_id"), col("g.*"))
+  private def wideKeyed(table: DataFrame): Boolean =
+    table.schema("h5").dataType.isInstanceOf[org.apache.spark.sql.types.StructType]
+
+  /** The 1-row corpus total (n) of a 5-gram type table. */
+  private def fivegramN(c5: DataFrame): DataFrame = c5.agg(sum(col("c5")).as("n"))
+
+  /** An (h5, mlp) score table: per-type probability `p` over a
+    * type-table block with the 1-row scalar frame `n` broadcast,
+    * snapped to integer micro-nats.
+    */
+  private def snapScores(block: DataFrame, n: DataFrame, p: Column): DataFrame =
+    block.crossJoin(broadcast(n))
+      .select(col("h5"), floor(log(p) * 1e6 + 0.5).cast("long").as("mlp"))
+
+  /** The 5-gram scorers' tail: the per-query occurrence stream (narrow
+    * tokenize + hash at the type table's key width, no shuffle) joined
+    * to an (h5, mlp) score table and rolled up per document.
+    */
+  private def fivegramRollup(docs: DataFrame, c5: DataFrame,
+                             scoreTable: DataFrame): DataFrame =
+    gramRollup(fivegramStream(docs, Seq(col("doc_id")), wideKeyed(c5))
+        .select(col("doc_id"), col("g.h5").as("h5")),
+      scoreTable, "h5", "n_fivegrams")
 
   /** Shared tail: score-table join on the gram-hash key + exact-BIGINT
     * per-doc rollup (the trigram and 5-gram scorers differ only in key
@@ -2074,28 +2061,6 @@ object TextAnalysis {
           .as("avg_logprob"))
       .orderBy(col("doc_id"))
 
-  /** DataFrame form (docs must have doc_id + text). */
-  def fivegramLogProbDf(docs: DataFrame, minCount: Int = 2,
-                        alpha: Double = 0.5, wideKeys: Boolean = false): DataFrame = {
-    val (stream, withCounts, n) = fivegramCounts(docs, wideKeys)
-    fivegramScoreCore(stream, withCounts, n, minCount, alpha)
-  }
-
-  private def fivegramScoreCore(stream: DataFrame, withCounts: DataFrame,
-                                n: DataFrame, minCount: Int,
-                                alpha: Double): DataFrame = {
-    val a = lit(alpha)
-    val score = when(col("c5") >= minCount,
-      col("c5").cast("double") / col("ctx4"))
-      .when(col("c4s") >= minCount, a * col("c4s").cast("double") / col("ctx3"))
-      .when(col("c3s") >= minCount, a * a * col("c3s").cast("double") / col("ctx2"))
-      .when(col("c2s") >= minCount, a * a * a * col("c2s").cast("double") / col("ctx1"))
-      .otherwise(a * a * a * a * col("c1s").cast("double") / col("n"))
-    val scoreTable = withCounts.crossJoin(broadcast(n))
-      .select(col("h5"), floor(log(score) * 1e6 + 0.5).cast("long").as("mlp"))
-    gramRollup(stream, scoreTable, "h5", "n_fivegrams")
-  }
-
   /** JELINEK-MERCER interpolated 5-gram scoring: instead of stupid
     * backoff's CASE ladder, every maximum-likelihood level contributes
     * ALWAYS, mixed with fixed weight lambda per order:
@@ -2110,28 +2075,26 @@ object TextAnalysis {
     * why production LMs fit λ per context (Witten-Bell, the count-of-
     * counts recursion of Kneser-Ney) — the ladder's named next rung.
     * Same count table, hash keys, micro-nat snap, and oracle
-    * discipline as [[fivegramLogProb]]; the two scorers share
-    * [[fivegramCounts]], so plan cost is identical.
+    * discipline as [[fivegramLogProb]]; the two scorers share the
+    * type table and its window block, so plan cost is identical.
     */
-  def interpLogProb(spark: SparkSession, d: String,
-                    lambda: Double = 0.5): DataFrame = {
-    val docs = Tables.documents(spark, d)
-    val wide = chooseWideKeys(docs)
-    val n = sessionC5(spark, d, wide).agg(sum(col("c5")).as("n"))
-    interpScoreCore(docStream5(sessionTokens(spark, d), wide),
-      sessionWindowCounts(spark, d, wide), n, lambda)
+  def interpLogProb(spark: SparkSession, d: String): DataFrame = {
+    val wide = lmWide(spark, d)
+    interpScoreOn(sessionTokens(spark, d), sessionC5(spark, d, wide),
+      sessionWindowCounts(spark, d, wide))
   }
 
-  /** DataFrame form (docs must have doc_id + text). */
-  def interpLogProbDf(docs: DataFrame, lambda: Double = 0.5,
-                      wideKeys: Boolean = false): DataFrame = {
-    val (stream, withCounts, n) = fivegramCounts(docs, wideKeys)
-    interpScoreCore(stream, withCounts, n, lambda)
-  }
+  /** The fixed interpolation weight λ of [[interpLogProb]] — the
+    * oracle's 0.5.
+    */
+  private val InterpLambda = 0.5
 
-  private def interpScoreCore(stream: DataFrame, withCounts: DataFrame,
-                              n: DataFrame, lambda: Double): DataFrame = {
-    val l = lit(lambda)
+  /** The interpolated 5-gram scorer over a token or document frame,
+    * its type table and that table's window block.
+    */
+  private[graft] def interpScoreOn(docs: DataFrame, c5: DataFrame,
+                                   windows: DataFrame): DataFrame = {
+    val l = lit(InterpLambda)
     val om = lit(1.0) - l
     def ml(c: String, ctx: String) = col(c).cast("double") / col(ctx)
     // innermost-out, each level written as lambda*ML + (1-lambda)*rest —
@@ -2140,9 +2103,7 @@ object TextAnalysis {
     val p321 = l * ml("c3s", "ctx2") + om * p21
     val p4321 = l * ml("c4s", "ctx3") + om * p321
     val score = l * ml("c5", "ctx4") + om * p4321
-    val scoreTable = withCounts.crossJoin(broadcast(n))
-      .select(col("h5"), floor(log(score) * 1e6 + 0.5).cast("long").as("mlp"))
-    gramRollup(stream, scoreTable, "h5", "n_fivegrams")
+    fivegramRollup(docs, c5, snapScores(windows, fivegramN(c5), score))
   }
 
   /** Every WB/KN level statistic attached to the ONE distinct-5-gram
@@ -2183,7 +2144,7 @@ object TextAnalysis {
     * the level-table form, so scores are bit-identical (the tri-scale
     * DuckDB oracle gates this).
     */
-  private def smoothedStatTable(c5t: DataFrame): DataFrame = {
+  private[graft] def smoothedStatTable(c5t: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def w(key: String) = Window.partitionBy(col(key))
     def marker(key: String) = when(row_number().over(
@@ -2247,28 +2208,19 @@ object TextAnalysis {
     * per-doc rollup.
     */
   def wbLogProb(spark: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(spark, d)
-    val wide = chooseWideKeys(docs)
-    val n = sessionC5(spark, d, wide).agg(sum(col("c5")).as("n"))
-    gramRollup(docStream5(sessionTokens(spark, d), wide),
-      wbScoreFrom(sessionSmoothedStats(spark, d, wide), n),
-      "h5", "n_fivegrams")
+    val wide = lmWide(spark, d)
+    wbScoreOn(sessionTokens(spark, d), sessionC5(spark, d, wide),
+      sessionSmoothedStats(spark, d, wide))
   }
 
-  /** DataFrame form (docs must have doc_id + text). */
-  def wbLogProbDf(docs: DataFrame, wideKeys: Boolean = false): DataFrame = {
-    val (stream, scoreTable) = wbParts(docs, wideKeys)
-    gramRollup(stream, scoreTable, "h5", "n_fivegrams")
-  }
+  /** The Witten-Bell scorer over a token or document frame, its type
+    * table and that table's [[smoothedStatTable]].
+    */
+  private[graft] def wbScoreOn(docs: DataFrame, c5: DataFrame,
+                               smoothed: DataFrame): DataFrame =
+    fivegramRollup(docs, c5, wbScoreFrom(c5, smoothed))
 
-  private def wbParts(docs: DataFrame, wideKeys: Boolean)
-      : (DataFrame, DataFrame) = {
-    val (stream, c5t) = fivegramTypeTable(docs, wideKeys)
-    val n = c5t.agg(sum(col("c5")).as("n")) // scalar; broadcast below
-    (stream, wbScoreFrom(smoothedStatTable(c5t), n))
-  }
-
-  private def wbScoreFrom(smoothed: DataFrame, n: DataFrame): DataFrame = {
+  private def wbScoreFrom(c5: DataFrame, smoothed: DataFrame): DataFrame = {
     def wb(c: Column, cc: Column, tt: Column, p: Column) =
       (c.cast("double") + tt.cast("double") * p) /
         (cc.cast("double") + tt.cast("double"))
@@ -2280,23 +2232,19 @@ object TextAnalysis {
     val p3 = wb(col("c3s"), col("ccw3"), col("tt3"), p2)
     val p4 = wb(col("c4s"), col("ccw4"), col("tt4"), p3)
     val p5 = wb(col("c5"), col("cc5"), col("tt5"), p4)
-    smoothed.crossJoin(broadcast(n))
-      .select(col("h5"), floor(log(p5) * 1e6 + 0.5).cast("long").as("mlp"))
+    snapScores(smoothed, fivegramN(c5), p5)
   }
 
-  /** The Witten-Bell model AS A TABLE — (h5, mlp) over the base
-    * corpus's distinct 5-grams, the artifact [[smoothedScoreSink]]
-    * freezes to score a stream (the CCNet frozen-KenLM shape at the
-    * ladder's top). Same construction as [[wbLogProbDf]]; only the
-    * per-doc rollup is omitted.
+  /** The Witten-Bell model AS A TABLE — (h5, mlp) over a base frame's
+    * distinct 5-grams, the artifact [[smoothedScoreSink]] freezes to
+    * score a stream (the CCNet frozen-KenLM shape at the ladder's top).
+    * Same construction as [[wbLogProb]]; only the per-doc rollup is
+    * omitted. Docs must have doc_id + text.
     */
-  def wbScoreTable(spark: SparkSession, d: String,
-                   wideKeys: Boolean = false): DataFrame =
-    wbScoreTableDf(Tables.documents(spark, d), wideKeys)
-
-  /** DataFrame form (docs must have doc_id + text). */
-  def wbScoreTableDf(docs: DataFrame, wideKeys: Boolean = false): DataFrame =
-    wbParts(docs, wideKeys)._2
+  def wbScoreTableDf(docs: DataFrame, wideKeys: Boolean = false): DataFrame = {
+    val c5 = fivegramTypeTable(docs, wideKeys)
+    wbScoreFrom(c5, smoothedStatTable(c5))
+  }
 
   /** Interpolated KNESER-NEY 5-gram scoring (Kneser & Ney 1995, in the
     * interpolated single-discount form of Chen & Goodman 1999 eq. 18):
@@ -2321,42 +2269,31 @@ object TextAnalysis {
     * strictly below corpus-typical text (the spec asserts the
     * inversion flips).
     *
-    * Scale shape: identical to [[wbLogProbDf]] — the continuation
+    * Scale shape: identical to [[wbLogProb]] — the continuation
     * counts are marker sums in the same [[smoothedStatTable]] window
     * chain (COUNT-of-types instead of SUM-of-occurrences); the scalar
-    * bigram-type total rides a 1-row broadcast.
+    * bigram-type total rides a 1-row broadcast. `wide` picks the gram
+    * key width; the registered `q_kn_logprob_wide` sets it.
     */
-  def knLogProb(spark: SparkSession, d: String,
-                discount: Double = 0.75): DataFrame = {
-    val docs = Tables.documents(spark, d)
-    val wide = chooseWideKeys(docs)
-    val nBi = sessionC5(spark, d, wide)
-      .agg(count_distinct(col("hs2")).as("n_bi"))
-    gramRollup(docStream5(sessionTokens(spark, d), wide),
-      knScoreFrom(sessionSmoothedStats(spark, d, wide), nBi, discount),
-      "h5", "n_fivegrams")
-  }
+  def knLogProb(spark: SparkSession, d: String): DataFrame =
+    knLogProb(spark, d, lmWide(spark, d))
 
-  /** DataFrame form (docs must have doc_id + text). */
-  def knLogProbDf(docs: DataFrame, discount: Double = 0.75,
-                  wideKeys: Boolean = false): DataFrame = {
-    val (stream, scoreTable) = knParts(docs, discount, wideKeys)
-    gramRollup(stream, scoreTable, "h5", "n_fivegrams")
-  }
+  def knLogProb(spark: SparkSession, d: String, wide: Boolean): DataFrame =
+    knScoreOn(sessionTokens(spark, d), sessionC5(spark, d, wide),
+      sessionSmoothedStats(spark, d, wide))
 
-  private def knParts(docs: DataFrame, discount: Double, wideKeys: Boolean)
-      : (DataFrame, DataFrame) = {
-    val (stream, c5t) = fivegramTypeTable(docs, wideKeys)
-    // continuation-unigram denominator: total distinct bigram types
-    // (the one scalar; its branch re-derives the type table once — the
-    // same duplicate-count-exchange budget as the other LM scalars)
-    val nBi = c5t.agg(count_distinct(col("hs2")).as("n_bi"))
-    (stream, knScoreFrom(smoothedStatTable(c5t), nBi, discount))
-  }
+  /** Absolute discount D of the Kneser-Ney scorer — the oracle's 0.75. */
+  private val KnDiscount = 0.75
 
-  private def knScoreFrom(smoothed: DataFrame, nBi: DataFrame,
-                          discount: Double): DataFrame = {
-    val dd = lit(discount)
+  /** The Kneser-Ney scorer over a token or document frame, its type
+    * table and that table's [[smoothedStatTable]].
+    */
+  private[graft] def knScoreOn(docs: DataFrame, c5: DataFrame,
+                               smoothed: DataFrame): DataFrame =
+    fivegramRollup(docs, c5, knScoreFrom(c5, smoothed))
+
+  private def knScoreFrom(c5: DataFrame, smoothed: DataFrame): DataFrame = {
+    val dd = lit(KnDiscount)
     def kn(c: Column, cc: Column, tt: Column, p: Column) =
       (greatest(c.cast("double") - dd, lit(0.0)) +
         dd * tt.cast("double") * p) / cc.cast("double")
@@ -2368,22 +2305,18 @@ object TextAnalysis {
     val p3 = kn(col("k3"), col("cck3"), col("tt3"), p2)
     val p4 = kn(col("k4"), col("cck4"), col("tt4"), p3)
     val p5 = kn(col("c5"), col("cc5"), col("tt5"), p4)
-    smoothed.crossJoin(broadcast(nBi))
-      .select(col("h5"), floor(log(p5) * 1e6 + 0.5).cast("long").as("mlp"))
+    // continuation-unigram denominator: total distinct bigram types
+    snapScores(smoothed, c5.agg(count_distinct(col("hs2")).as("n_bi")), p5)
   }
 
-  /** The Kneser-Ney model AS A TABLE — (h5, mlp) over the base
-    * corpus's distinct 5-grams ([[wbScoreTable]]'s KN sibling, same
-    * frozen-scoring contract).
+  /** The Kneser-Ney model AS A TABLE — (h5, mlp) over a base frame's
+    * distinct 5-grams ([[wbScoreTableDf]]'s KN sibling, same
+    * frozen-scoring contract). Docs must have doc_id + text.
     */
-  def knScoreTable(spark: SparkSession, d: String, discount: Double = 0.75,
-                   wideKeys: Boolean = false): DataFrame =
-    knScoreTableDf(Tables.documents(spark, d), discount, wideKeys)
-
-  /** DataFrame form (docs must have doc_id + text). */
-  def knScoreTableDf(docs: DataFrame, discount: Double = 0.75,
-                     wideKeys: Boolean = false): DataFrame =
-    knParts(docs, discount, wideKeys)._2
+  def knScoreTableDf(docs: DataFrame, wideKeys: Boolean = false): DataFrame = {
+    val c5 = fivegramTypeTable(docs, wideKeys)
+    knScoreFrom(c5, smoothedStatTable(c5))
+  }
 
   /** Score a batch of documents against a FROZEN backoff score table
     * (built by [[backoffScoreTable]] on the base corpus). Trigrams the
@@ -2442,7 +2375,7 @@ object TextAnalysis {
   }
 
   /** Score a batch of documents against a FROZEN smoothed score table
-    * ([[wbScoreTable]] / [[knScoreTable]]) — the [[backoffScoreAgainst]]
+    * ([[wbScoreTableDf]] / [[knScoreTableDf]]) — the [[backoffScoreAgainst]]
     * contract lifted to the ladder's top: each of the batch's 5-grams
     * looks up its hash in the table, and 5-grams the base corpus never
     * saw get the deterministic OOV floor `min(mlp) + floor(ln(0.5)·1e6)`
@@ -2460,14 +2393,12 @@ object TextAnalysis {
     * [[backoffScoreAgainst]] empty-base discipline).
     */
   def smoothedScoreAgainst(docs: DataFrame, scoreTable: DataFrame): DataFrame = {
-    val wide = scoreTable.schema("h5").dataType
-      .isInstanceOf[org.apache.spark.sql.types.StructType]
-    val grams = fivegramStream(docs, Seq(col("doc_id")), wide)
+    val grams = fivegramStream(docs, Seq(col("doc_id")), wideKeyed(scoreTable))
       .select(col("doc_id"), col("g.h5").as("h5"))
     val floorRow = scoreTable.agg(
       coalesce(min(col("mlp")),
         raise_error(lit("smoothedScoreAgainst: empty score table — " +
-          "build wbScoreTable/knScoreTable from a non-empty base corpus"))
+          "build wbScoreTableDf/knScoreTableDf from a non-empty base corpus"))
           .cast("long")).as("mlp_min"))
     val oovNotch = math.floor(math.log(0.5) * 1e6 + 0.5).toLong
     grams.join(scoreTable, Seq("h5"), "left")
@@ -2484,7 +2415,7 @@ object TextAnalysis {
 
   /** Streaming smoothed-LM scoring (foreachBatch stage): the
     * [[backoffScoreSink]] contract for the ladder's top rungs — freeze
-    * a [[wbScoreTable]]/[[knScoreTable]] once, score each micro-batch
+    * a [[wbScoreTableDf]]/[[knScoreTableDf]] once, score each micro-batch
     * against it via [[smoothedScoreAgainst]], append per-doc rows
     * tagged with the batch id. Without the freeze every trigger would
     * re-run the whole suffix-chain smoothing pipeline against live
@@ -2702,17 +2633,18 @@ object TextAnalysis {
     * a top-k sort over surviving pairs). PMI snaps to micro-nats so the
     * (pmi desc, w1, w2) ranking is engine-exact.
     */
-  def topCollocations(spark: SparkSession, d: String,
-                      k: Int = 20, minCount: Int = 5): DataFrame =
-    topCollocationsCore(sessionBigramCounts(spark, d), k, minCount)
+  def topCollocations(spark: SparkSession, d: String): DataFrame =
+    topCollocationsOn(sessionBigramCounts(spark, d), CollocTopK, CollocMinCount)
 
-  /** DataFrame form (docs must have text). */
-  def topCollocationsDf(docs: DataFrame, k: Int = 20, minCount: Int = 5): DataFrame =
-    topCollocationsCore(bigramPairStream(docs, Seq.empty)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")), k, minCount)
+  /** Result bound and pair-count floor of [[topCollocations]] — the
+    * oracle's `LIMIT 20` and `c2 >= 5`.
+    */
+  private[graft] val CollocTopK = 20
+  private[graft] val CollocMinCount = 5
 
-  private def topCollocationsCore(c2: DataFrame, k: Int,
-                                  minCount: Int): DataFrame = {
+  /** The PMI ranking over a [[bigramCountTable]]. */
+  private[graft] def topCollocationsOn(c2: DataFrame, k: Int,
+                                       minCount: Int): DataFrame = {
     val r1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("r1"))
     val r2 = c2.groupBy(col("w2")).agg(sum(col("c2")).as("r2"))
     val n = c2.agg(sum(col("c2")).as("n")) // scalar; broadcast below

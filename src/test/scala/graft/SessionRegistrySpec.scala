@@ -48,16 +48,16 @@ class SessionRegistrySpec extends AnyFunSuite {
       s"declare a SessionArtifact instead of a session-keyed map in: ${offenders.mkString(", ")}")
   }
 
-  test("only the session edge build and trustRankSink derive the link graph") {
-    // one link graph per session: the graph cores take the edge table
-    // they are given, so a new linkEdgesDf( call site is a query
-    // building its own copy beside the session pins. trustRankSink's
-    // base is an arbitrary frame, not a corpus directory.
+  /** The `File.scala:member` places under `src/main/scala` whose
+    * non-comment lines call `fn(` — the enclosing member is the last
+    * `def`/`val` at the two-space object-member indent.
+    */
+  private def callersOf(fn: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (no $root)")
-    // an object member: `def`/`val` at the two-space member indent
     val member = """^  (?:(?:private|protected)(?:\[\w+\])?\s+|lazy\s+|final\s+|override\s+)*(?:def|val)\s+(\w+)""".r
-    val callers = Files.walk(root).iterator().asScala
+    val call = (s"\\b${java.util.regex.Pattern.quote(fn)}\\(").r
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         var enclosing = "<top>"
@@ -65,12 +65,38 @@ class SessionRegistrySpec extends AnyFunSuite {
           member.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
           val code = line.trim
           val isComment = code.startsWith("*") || code.startsWith("/*") || code.startsWith("//")
-          val calls = !isComment && code.split("//")(0).contains("linkEdgesDf(") &&
-            !code.contains("def linkEdgesDf(")
+          val calls = !isComment && call.findFirstIn(code.split("//")(0)).isDefined &&
+            !code.contains(s"def $fn(")
           if (calls) Some(s"${p.getFileName}:$enclosing") else None
         }
       }.toSeq.sorted
+  }
+
+  test("only the session edge build and trustRankSink derive the link graph") {
+    // one link graph per session: the graph cores take the edge table
+    // they are given, so a new linkEdgesDf( call site is a query
+    // building its own copy beside the session pins. trustRankSink's
+    // base is an arbitrary frame, not a corpus directory.
+    val callers = callersOf("linkEdgesDf")
     assert(callers == Seq("Graph.scala:sessionEdges", "Graph.scala:trustRankSink"),
       s"linkEdgesDf( is called from ${callers.size} places: ${callers.mkString(", ")}")
+  }
+
+  test("only the session artifacts and the frozen serving bases build the LM and retrieval tables") {
+    // one path per query: the LM and retrieval cores take the frames
+    // they are given, so a new call to one of these builds is a query
+    // re-deriving a session pin. The serving sinks' frozen bases are
+    // arbitrary frames, not corpus directories.
+    val allowed = Map(
+      "bm25ContribAll" -> Seq("Search.scala:sessionContrib"),
+      "sectionMdFrame" -> Seq("Search.scala:sectionServePlans", "Search.scala:sessionSections"),
+      "fivegramTypeTable" -> Seq("TextAnalysis.scala:knScoreTableDf",
+        "TextAnalysis.scala:sessionC5", "TextAnalysis.scala:wbScoreTableDf"),
+      "trigramCountTable" -> Seq("TextAnalysis.scala:sessionBackoffScores"),
+      "bigramCountTable" -> Seq("TextAnalysis.scala:sessionBigramCounts"))
+    val found = allowed.keys.toSeq.sorted.map(fn => fn -> callersOf(fn))
+    val extra = found.filter { case (fn, cs) => cs != allowed(fn) }
+    assert(extra.isEmpty, s"${found.map(_._2.size).sum} call sites; unexpected: " +
+      extra.map { case (fn, cs) => s"$fn( from ${cs.mkString(", ")}" }.mkString("; "))
   }
 }

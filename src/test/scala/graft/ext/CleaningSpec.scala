@@ -12,6 +12,14 @@ class CleaningSpec extends SparkTestBase {
   private def docsDf(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
 
+  /** A fresh, uncached 5-gram type table of `df` with its window block
+    * and its smoothed-stat block — the 5-gram scorer cores' inputs.
+    */
+  private def lm5(df: org.apache.spark.sql.DataFrame, wide: Boolean = false) = {
+    val c5 = TextAnalysis.fivegramTypeTable(df, wide)
+    (c5, TextAnalysis.fivegramWindowCounts(c5), TextAnalysis.smoothedStatTable(c5))
+  }
+
   test("gopher filters: each rule fires on a hand-built violating doc") {
     val longOk = (Seq("the", "a") ++ Seq.fill(40)("word")).mkString(" ")
     val rows = Map(
@@ -508,7 +516,7 @@ class CleaningSpec extends SparkTestBase {
 
   test("bigram logprob: hand-computed conditionals; word order matters") {
     val df = docsDf(1L -> "a b a b", 2L -> "a c")
-    val out = TextAnalysis.bigramLogProbDf(df)
+    val out = TextAnalysis.bigramScoreOn(df, TextAnalysis.bigramCountTable(df))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     // c2: (a,b)=2 (b,a)=1 (a,c)=1; c1: a=3, b=1
     // doc1: ln(2/3), ln(1/1), ln(2/3) -> micro -405465 x2 + 0
@@ -520,7 +528,8 @@ class CleaningSpec extends SparkTestBase {
     // corpus would make every conditional 1.0 — needs three tokens)
     val majority = Seq.tabulate(8)(i => (i.toLong, "x y x y x z"))
     val contrarian = (99L, "x z x z x y")
-    val scores = TextAnalysis.bigramLogProbDf(docsDf((majority :+ contrarian): _*))
+    val order = docsDf((majority :+ contrarian): _*)
+    val scores = TextAnalysis.bigramScoreOn(order, TextAnalysis.bigramCountTable(order))
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(scores(99L) < scores(0L),
       s"against-the-grain doc must score lower: ${scores(99L)} vs ${scores(0L)}")
@@ -536,10 +545,11 @@ class CleaningSpec extends SparkTestBase {
         (11L to 15L).map(i => i -> "y a c") ++
         Seq(21L -> "x a b", 22L -> "x a c", 31L -> "p q r")
     val df = docsDf(docs: _*)
-    val bg = TextAnalysis.bigramLogProbDf(df).collect()
+    val bg = TextAnalysis.bigramScoreOn(df, TextAnalysis.bigramCountTable(df)).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(bg(21L) == bg(22L), s"bigram must tie: ${bg(21L)} vs ${bg(22L)}")
-    val out = TextAnalysis.backoffLogProbDf(df).collect()
+    val out = TextAnalysis.backoffScoreOn(df,
+        TextAnalysis.backoffMlpTable(TextAnalysis.trigramCountTable(df))).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     def snap(x: Double) = math.floor(math.log(x) * 1e6 + 0.5) / 1e6
     // known trigram: c3(x a b) = 6 >= minCount over ctx2(x, a) = 7
@@ -563,8 +573,9 @@ class CleaningSpec extends SparkTestBase {
       assert(r.getDouble(2) <= 0.0, s"log-prob must be <= 0: $r")
     }
     // two-token docs open no trigram and must be absent
-    val withShort = TextAnalysis.backoffLogProbDf(
-      docsDf(1L -> "only two", 2L -> "three token doc")).collect()
+    val shortDocs = docsDf(1L -> "only two", 2L -> "three token doc")
+    val withShort = TextAnalysis.backoffScoreOn(shortDocs,
+      TextAnalysis.backoffMlpTable(TextAnalysis.trigramCountTable(shortDocs))).collect()
     assert(withShort.map(_.getLong(0)).toSet == Set(2L))
   }
 
@@ -578,7 +589,9 @@ class CleaningSpec extends SparkTestBase {
           22L -> "x y c d e",   // suffix-3 known (11)
           23L -> "x y z d e",   // suffix-2 known (12)
           31L -> "p q r s t")   // all levels singleton -> unigram floor
-    val out = TextAnalysis.fivegramLogProbDf(docsDf(docs: _*)).collect()
+    val df = docsDf(docs: _*)
+    val (c5, windows, _) = lm5(df)
+    val out = TextAnalysis.fivegramScoreOn(df, c5, windows).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     def snap(x: Double) = math.floor(math.log(x) * 1e6 + 0.5) / 1e6
     assert(out(1L) == snap(6.0 / 7), s"known 5-gram: ${out(1L)}")
@@ -590,8 +603,9 @@ class CleaningSpec extends SparkTestBase {
     assert(out(1L) > out(21L) && out(21L) > out(22L) &&
       out(22L) > out(23L) && out(23L) > out(31L))
     // docs under five tokens open no 5-gram and are absent
-    val short = TextAnalysis.fivegramLogProbDf(
-      docsDf(1L -> "only four tokens here", 2L -> "this one has five tokens")).collect()
+    val shortDocs = docsDf(1L -> "only four tokens here", 2L -> "this one has five tokens")
+    val (s5, sWindows, _) = lm5(shortDocs)
+    val short = TextAnalysis.fivegramScoreOn(shortDocs, s5, sWindows).collect()
     assert(short.map(_.getLong(0)).toSet == Set(2L))
   }
 
@@ -603,7 +617,9 @@ class CleaningSpec extends SparkTestBase {
         (11L to 13L).map(i => i -> "z b c d e") ++
         Seq(21L -> "x b c d e", 22L -> "x y c d e",
           23L -> "x y z d e", 31L -> "p q r s t")
-    val out = TextAnalysis.interpLogProbDf(docsDf(docs: _*)).collect()
+    val df = docsDf(docs: _*)
+    val (c5, windows, _) = lm5(df)
+    val out = TextAnalysis.interpScoreOn(df, c5, windows).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     def mix(p5: Double, p4: Double, p3: Double, p2: Double, p1: Double) =
       0.5 * p5 + 0.5 * (0.5 * p4 + 0.5 * (0.5 * p3 + 0.5 * (0.5 * p2 + 0.5 * p1)))
@@ -625,15 +641,16 @@ class CleaningSpec extends SparkTestBase {
     // (proven by the string-keyed oracles) both widths must produce
     // byte-identical scores across the whole 5-gram scorer family
     val docs = graft.Tables.documents(spark, sfDir)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    assert(rows(TextAnalysis.fivegramLogProbDf(docs, wideKeys = true)) ==
-      rows(TextAnalysis.fivegramLogProbDf(docs)))
-    assert(rows(TextAnalysis.interpLogProbDf(docs, wideKeys = true)) ==
-      rows(TextAnalysis.interpLogProbDf(docs)))
-    assert(rows(TextAnalysis.wbLogProbDf(docs, wideKeys = true)) ==
-      rows(TextAnalysis.wbLogProbDf(docs)))
-    assert(rows(TextAnalysis.knLogProbDf(docs, wideKeys = true)) ==
-      rows(TextAnalysis.knLogProbDf(docs)))
+    def scores(wide: Boolean) = {
+      val (c5, windows, smoothed) = lm5(docs, wide)
+      Seq(TextAnalysis.fivegramScoreOn(docs, c5, windows),
+        TextAnalysis.interpScoreOn(docs, c5, windows),
+        TextAnalysis.wbScoreOn(docs, c5, smoothed),
+        TextAnalysis.knScoreOn(docs, c5, smoothed)).map(_.collect().map(_.toSeq).toSeq)
+    }
+    scores(wide = true).zip(scores(wide = false)).zipWithIndex.foreach {
+      case ((wide, narrow), i) => assert(wide == narrow, s"scorer $i differs by key width")
+    }
     // the selection policy: fixture-scale corpora stay on 8-byte keys;
     // shrinking the per-token byte estimate pushes the same corpus's
     // estimated gram cardinality over WideKeyGramThreshold and selects
@@ -654,7 +671,9 @@ class CleaningSpec extends SparkTestBase {
         (11L to 13L).map(i => i -> "z b c d e") ++
         Seq(21L -> "x b c d e", 22L -> "x y c d e",
           23L -> "x y z d e", 31L -> "p q r s t")
-    val out = TextAnalysis.wbLogProbDf(docsDf(docs: _*)).collect()
+    val df = docsDf(docs: _*)
+    val (c5, _, smoothed) = lm5(df)
+    val out = TextAnalysis.wbScoreOn(df, c5, smoothed).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     def wb(c: Double, cc: Double, tt: Double, p: Double) = (c + tt * p) / (cc + tt)
     def snapLn(x: Double) = math.floor(math.log(x) * 1e6 + 0.5) / 1e6
@@ -689,7 +708,9 @@ class CleaningSpec extends SparkTestBase {
         (11L to 13L).map(i => i -> "z b c d e") ++
         Seq(21L -> "x b c d e", 22L -> "x y c d e",
           23L -> "x y z d e", 31L -> "p q r s t")
-    val out = TextAnalysis.knLogProbDf(docsDf(docs: _*)).collect()
+    val df = docsDf(docs: _*)
+    val (c5, _, smoothed) = lm5(df)
+    val out = TextAnalysis.knScoreOn(df, c5, smoothed).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     def kn(c: Double, cc: Double, tt: Double, p: Double) =
       (math.max(c - 0.75, 0.0) + 0.75 * tt * p) / cc
@@ -713,8 +734,9 @@ class CleaningSpec extends SparkTestBase {
     assert(out(1L) > out(31L),
       s"KN must score corpus-typical text above the all-novel doc: ${out(1L)} vs ${out(31L)}")
     // short docs open no 5-gram and are absent
-    val short = TextAnalysis.knLogProbDf(
-      docsDf(1L -> "only four tokens here", 2L -> "this one has five tokens")).collect()
+    val shortDocs = docsDf(1L -> "only four tokens here", 2L -> "this one has five tokens")
+    val (s5, _, sSmoothed) = lm5(shortDocs)
+    val short = TextAnalysis.knScoreOn(shortDocs, s5, sSmoothed).collect()
     assert(short.map(_.getLong(0)).toSet == Set(2L))
   }
 
@@ -724,8 +746,9 @@ class CleaningSpec extends SparkTestBase {
     val docs = (1 to 6).map { i =>
       (i.toLong, s"new york f$i g$i new york g$i f$i new york")
     } :+ (7L, "rare pair")
-    val out = TextAnalysis.topCollocationsDf(docsDf(docs: _*), k = 5, minCount = 5)
-      .collect()
+    val df = docsDf(docs: _*)
+    val out = TextAnalysis
+      .topCollocationsOn(TextAnalysis.bigramCountTable(df), k = 5, minCount = 5).collect()
     assert(out.nonEmpty)
     val top = out.head
     assert(top.getString(0) == "new" && top.getString(1) == "york",
@@ -1449,7 +1472,6 @@ class CleaningSpec extends SparkTestBase {
 
 
   test("moore-lewis: in-domain lookalikes select, off-domain documents reject") {
-    import org.apache.spark.sql.functions.col
     val domain = "neural language model training data selection pipeline"
     // target slice (doc_id % 20 == 7 under the default predicate):
     // a deterministic trigram chain — the in-domain model assigns its
@@ -1464,8 +1486,10 @@ class CleaningSpec extends SparkTestBase {
       1L  -> (domain + " ") * 4,
       3L  -> "language model training nonsense data selection banana pipeline neural junk things",
       2L  -> ("completely unrelated cooking recipe with garlic butter onions " * 4))
-    val out = TextAnalysis.mooreLewisSelectDf(docs, col("doc_id") % 20 === 7)
+    val (lm, tables) = TextAnalysis.mooreLewisLm(docs)
+    val out = TextAnalysis.mooreLewisOn(docs, lm, TextAnalysis.mooreLewisNs(lm))
       .collect().map(r => r.getLong(0) -> r).toMap
+    tables.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
     assert(out.keySet == Set(1L, 2L, 3L), "target-slice docs are the model, not the pool")
     assert(out(1L).getDouble(4) > 0 && out(1L).getBoolean(5),
       s"domain lookalike must score above the general model: ${out(1L)}")
@@ -1474,11 +1498,12 @@ class CleaningSpec extends SparkTestBase {
   }
 
   test("moore-lewis: corpus run — session artifact form equals the Df form") {
-    import org.apache.spark.sql.functions.col
     val viaSession = TextAnalysis.mooreLewisSelect(spark, sfDir).collect()
-    val viaDf = TextAnalysis.mooreLewisSelectDf(
-      graft.Tables.documents(spark, sfDir), col("doc_id") % 20 === 7).collect()
-    assert(viaSession.map(_.toString).toSeq == viaDf.map(_.toString).toSeq)
+    val docs = graft.Tables.documents(spark, sfDir)
+    val (lm, tables) = TextAnalysis.mooreLewisLm(docs)
+    val viaCore = TextAnalysis.mooreLewisOn(docs, lm, TextAnalysis.mooreLewisNs(lm)).collect()
+    tables.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
+    assert(viaSession.map(_.toString).toSeq == viaCore.map(_.toString).toSeq)
     assert(viaSession.nonEmpty)
     val sel = viaSession.count(_.getBoolean(5))
     assert(sel < viaSession.length, "selection must discriminate, not pass everything")

@@ -298,7 +298,8 @@ class SearchSpec extends SparkTestBase {
     // query's own terms as the probe set
     val expect = queries.flatMap { case (qid, qtext) =>
       val terms = qtext.split("\\s+").toSeq.distinct
-      Search.queryExpansionDf(base, m = 2, topK = 5, terms = terms)
+      Search.queryExpansionOn(Search.postingsDf(base), Search.corpusStatsDf(base),
+          m = 2, topK = 5, terms = terms)
         .collect().map(r => (qid, r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5)))
     }.toSet
@@ -404,7 +405,8 @@ class SearchSpec extends SparkTestBase {
       " table " + passage + " table " + (1 to 40).map(i => s"g$i").mkString(" ")
     val docs = ((1L -> buried) +:
       (2L to 6L).map(i => i -> ("hash " + (1 to 30).map(j => s"s$j").mkString(" ")))).toDF("doc_id", "text")
-    val sec = Search.sectionBm25TopKDf(docs, k = 3).collect()
+    val sec = Search.sectionBm25Ranked(
+      Search.sectionChunksDf(Search.sectionMdFrame(docs)), 3, Search.ProbeTerms).collect()
     assert(sec.head.getAs[Long]("doc_id") == 1L, "section ranking must surface the buried passage")
     val winPath = sec.head.getAs[String]("heading_path")
     assert(winPath == s"DOC 1 > ${Search.SectionH2Term}",
@@ -449,7 +451,7 @@ class SearchSpec extends SparkTestBase {
     val queries = Seq((40L, "hash join"), (41L, "join"), (42L, "zzz nohit"))
     val expect = queries.flatMap { case (qid, qtext) =>
       val terms = qtext.split("\\s+").toSeq.distinct
-      Search.sectionBm25TopKDf(base, k = 4, terms = terms)
+      Search.sectionBm25Ranked(Search.sectionChunksDf(Search.sectionMdFrame(base)), 4, terms)
         .collect().map(r => (qid, r.getLong(0), r.getLong(1), r.getLong(2),
           r.getString(3), r.getLong(4), r.getLong(5), r.getString(6)))
     }.toSet
@@ -555,7 +557,8 @@ class SearchSpec extends SparkTestBase {
     val shorts = (2L to 12L).map(i =>
       i -> ("hash join " + (1 to 28).map(j => s"s$j").mkString(" ")))
     val docs = ((1L -> longDoc) +: shorts).toDF("doc_id", "text")
-    val docTop = Search.bm25TopKDf(docs, 10).collect().map(_.getLong(0)).toSet
+    val docTop = Search.bm25AgainstStats(Search.postingsDf(docs, Some(Search.ProbeTerms)),
+      Search.ProbeTerms, Search.corpusStatsDf(docs), 10).collect().map(_.getLong(0)).toSet
     assert(!docTop.contains(1L),
       s"fixture broken: the long doc must miss the doc-level top-10: $docTop")
     val chunkTop = Search.chunkBm25TopKDf(docs, 10).collect()
@@ -584,13 +587,14 @@ class SearchSpec extends SparkTestBase {
       i -> ("merge " + (1 to 30).map(j => s"f$j").mkString(" ")))
     val docs = (strong ++ weak).toDF("doc_id", "text")
     val k = 3
-    val pruned = Search.bm25MaxScoreTopKDf(docs, k).collect().toSeq
-    val exhaustive = Search.bm25TopKDf(docs, k).collect().toSeq
+    val ca = Search.bm25ContribAll(docs)
+    val pruned = Search.bm25MaxScoreTopKOn(ca, k).collect().toSeq
+    val exhaustive = Search.bm25AgainstStats(Search.postingsDf(docs, Some(Search.ProbeTerms)),
+      Search.ProbeTerms, Search.corpusStatsDf(docs), k).collect().toSeq
     assert(pruned == exhaustive,
       s"pruned and exhaustive rankings must be identical:\n$pruned\n$exhaustive")
     // the pruning is not vacuous: some candidate's bound < theta
-    val bounds = Search.bm25MaxScoreBounds(Search.bm25ContribFrame(docs), k)
-      .collect()
+    val bounds = Search.bm25MaxScoreBounds(ca, k).collect()
     val nPruned = bounds.count(r => r.getLong(1) < r.getLong(2))
     assert(nPruned >= 20,
       s"the weak docs must be pruned by the bound filter, pruned=$nPruned")
@@ -612,14 +616,15 @@ class SearchSpec extends SparkTestBase {
       i -> ("merge " + (1 to 30).map(j => s"f$j").mkString(" ")))
     val docs = (strong ++ weak).toDF("doc_id", "text")
     val k = 3
-    val pruned = Search.bm25BlockMaxTopKDf(docs, k).collect().toSeq
-    val exhaustive = Search.bm25TopKDf(docs, k).collect().toSeq
+    val ca = Search.bm25ContribAll(docs)
+    val pruned = Search.bm25BlockMaxTopKOn(ca, Search.blockMaxTable(ca), k).collect().toSeq
+    val exhaustive = Search.bm25AgainstStats(Search.postingsDf(docs, Some(Search.ProbeTerms)),
+      Search.ProbeTerms, Search.corpusStatsDf(docs), k).collect().toSeq
     assert(pruned == exhaustive,
       s"block-max pruned ranking must equal exhaustive:\n$pruned\n$exhaustive")
-    val ca = Search.bm25ContribFrame(docs)
     val global = Search.bm25MaxScoreBounds(ca, k).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val block = Search.bm25BlockMaxBoundFrame(ca, k).collect()
+    val block = Search.bm25BlockMaxBoundFrame(ca, Search.blockMaxTable(ca), k).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(global.keySet == block.keySet, "same candidate sets")
     block.foreach { case (id, (b, _)) =>
@@ -652,9 +657,8 @@ class SearchSpec extends SparkTestBase {
 
   test("retrieval query builders launch zero Spark jobs at plan build") {
     // the r6 decontamination discipline (CorpusSpec's laziness test):
-    // corpus stats ride as broadcast 1-row frames, the shared probed
-    // postings persist (lazily) instead of checkpointing — building
-    // any of the four registered retrieval queries runs nothing
+    // corpus stats ride as broadcast 1-row frames — building any
+    // retrieval core over a fresh, lazy build runs nothing
     val tracker = spark.sparkContext.statusTracker
     def jobIds: Set[Int] = tracker.getJobIdsForGroup(null).toSet
     def awaitNewJob(base: Set[Int]): Unit = {
@@ -670,15 +674,20 @@ class SearchSpec extends SparkTestBase {
     val emb = graft.Tables.embeddings(spark, sfDir)
     locally { val b = jobIds; spark.range(1).collect(); awaitNewJob(b) }
     val before = jobIds
-    Search.bm25TopKDf(docs)
-    Search.queryLikelihoodTopKDf(docs)
+    val probed = Search.postingsDf(docs, Some(Search.ProbeTerms))
+    val stats = Search.corpusStatsDf(docs)
+    val ca = Search.bm25ContribAll(docs)
+    val secs = Search.sectionChunksDf(Search.sectionMdFrame(docs))
+    Search.bm25AgainstStats(probed, Search.ProbeTerms, stats, Search.ProbeTopK)
+    Search.queryLikelihoodTopKOn(probed, stats)
     Search.hybridRrfDf(docs, emb)
-    Search.queryExpansionDf(docs)
-    Search.bm25TermBoundsDf(docs)
-    Search.bm25MaxScoreTopKDf(docs)
+    Search.queryExpansionOn(Search.postingsDf(docs), stats,
+      Search.FbDocs, Search.FbTerms, Search.ProbeTerms)
+    Search.bm25TermBoundsOn(ca)
+    Search.bm25MaxScoreTopKOn(ca, Search.ProbeTopK)
     Search.chunkBm25TopKDf(docs)
-    Search.bm25BlockMaxBoundsDf(docs)
-    Search.bm25BlockMaxTopKDf(docs)
+    Search.blockMaxTable(ca)
+    Search.bm25BlockMaxTopKOn(ca, Search.blockMaxTable(ca), Search.ProbeTopK)
     // the serving sinks' artifact PLANS (index/df/stats/store) must
     // also be lazy — construction jobs are the freezes alone, so a
     // future constructor `.head()` (the r15 judge's eager-stats
@@ -686,12 +695,12 @@ class SearchSpec extends SparkTestBase {
     Search.lexicalServePlans(docs)
     Search.chunkServePlans(docs)
     Search.sectionServePlans(docs)
-    Search.sectionBm25TopKDf(docs)
-    Search.sectionDedupDf(docs)
-    Search.hardNegativesDf(docs)
-    Search.retrievalEvalAuditDf(docs)
-    Search.postingsSizeModelDf(docs)
-    Search.bm25ParamSweepDf(docs)
+    Search.sectionBm25Ranked(secs, Search.SectionTopK, Search.ProbeTerms)
+    Search.sectionDedupOn(secs)
+    Search.hardNegativesOn(ca)
+    Search.retrievalEvalAuditOn(ca)
+    Search.postingsSizeModelOn(probed)
+    Search.bm25ParamSweepOn(probed, stats)
     spark.range(1).collect() // sentinel: shuffle-free -> exactly 1 job
     awaitNewJob(before)
     val ran = (jobIds -- before).size
@@ -758,7 +767,7 @@ class SearchSpec extends SparkTestBase {
             (t, (i + 1).toLong, id, c, posId, posC)
         }
       }.toSet
-    val got = Search.hardNegativesDf(docs).collect().map(r =>
+    val got = Search.hardNegativesOn(Search.bm25ContribAll(docs)).collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSet
     assert(got == expected, s"got $got want $expected")
@@ -799,7 +808,7 @@ class SearchSpec extends SparkTestBase {
       } else 0L
     }.sum
     val nRel = cand.count(_._3 >= Search.RelGrade).toLong
-    val row = Search.retrievalEvalAuditDf(docs).collect().head
+    val row = Search.retrievalEvalAuditOn(Search.bm25ContribAll(docs)).collect().head
     assert(row.getLong(0) == cand.size.toLong, "n_candidates")
     assert(row.getLong(1) == nRel, "n_relevant")
     assert(row.getLong(2) == dcg, s"dcg ${row.getLong(2)} != $dcg")
@@ -840,7 +849,8 @@ class SearchSpec extends SparkTestBase {
       val mrr = minr.map(r => math.floor(1e6 / r + 0.5).toLong).getOrElse(0L).toDouble / 1e6
       (dcg, idcg, ndcg, mrr)
     }
-    val got = Search.bm25ParamSweepDf(docs).collect()
+    val got = Search.bm25ParamSweepOn(Search.postingsDf(docs, Some(Search.ProbeTerms)),
+      Search.corpusStatsDf(docs)).collect()
     assert(got.length == Search.BmSweepGrid.size)
     got.foreach { r =>
       val (dcg, idcg, ndcg, mrr) = metrics(r.getDouble(0), r.getDouble(1))
@@ -849,7 +859,7 @@ class SearchSpec extends SparkTestBase {
         s"cell (${r.getDouble(0)}, ${r.getDouble(1)}): got $r want ($dcg, $idcg, $ndcg, $mrr)")
     }
     // the default cell must reproduce the standalone audit's metrics
-    val audit = Search.retrievalEvalAuditDf(docs).collect().head
+    val audit = Search.retrievalEvalAuditOn(Search.bm25ContribAll(docs)).collect().head
     val dflt = got.find(r =>
       r.getDouble(0) == Search.K1 && r.getDouble(1) == Search.B).get
     assert(dflt.getLong(2) == audit.getLong(2) &&
@@ -896,7 +906,7 @@ class SearchSpec extends SparkTestBase {
         selected :+= ((r.toLong, pick._1, pick._2, pick._3, pick._4))
       }
     }
-    val got = Search.mmrDiversifyDf(docs).collect().map(r =>
+    val got = Search.mmrDiversifyOn(Search.bm25ContribAll(docs), docs).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toVector
     assert(got == selected, s"got $got want $selected")
@@ -913,7 +923,8 @@ class SearchSpec extends SparkTestBase {
     // gaps: 0-(-1)=1, 127, 1, 16272 -> 1+1+1+2 bytes; tfs 1,1,1,2 -> 4 bytes
     val docs = Seq(0L -> "hash", 127L -> "hash", 128L -> "hash",
       16400L -> "hash hash").toDF("doc_id", "text")
-    val rows = Search.postingsSizeModelDf(docs).collect()
+    val rows = Search.postingsSizeModelOn(Search.postingsDf(docs, Some(Search.ProbeTerms)))
+      .collect()
     assert(rows.length == 1, s"only 'hash' posts: ${rows.mkString}")
     val r = rows.head
     assert(r.getString(0) == "hash")
@@ -922,5 +933,48 @@ class SearchSpec extends SparkTestBase {
     assert(r.getLong(3) == 4L, "tf_bytes")
     assert(r.getLong(4) == 64L, "raw_bytes")
     assert(r.getDouble(5) == 0.140625, s"frac ${r.getDouble(5)}")
+  }
+
+  /** Runs `body` and returns its result, the jobs it started and how
+    * many of its actions derived tokens from the raw document scan — an
+    * explode over a file relation in the cache-substituted plan — where
+    * a session pin holds the derived frame (a pin's plan is a leaf).
+    */
+  private def rawDerivationsIn[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val derived = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.optimizedPlan.exists {
+              case g: Generate => g.child.exists(_.isInstanceOf[LogicalRelation])
+              case _ => false
+            }) derived.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // jobsStartedBy drains the listener bus, so every action's
+      // execution-end event has reached the listener when it returns
+      val (out, jobs) = org.apache.spark.sql.GraftSql.jobsStartedBy(spark)(body)
+      (out, jobs, derived.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("warm retrieval and LM queries read the session pins: no raw-scan derivation, nothing left pinned") {
+    val queries = Seq("q_bm25_topk", "q_postings_size_model", "q_term_postings",
+      "q_kn_logprob_wide", "q_mmr_diversify")
+    val runs = queries.map { q =>
+      def run() = graft.SparkEntry.queries(q)(spark, sfDir).collect()
+      val first = run()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val (again, jobs, derived) = rawDerivationsIn(run())
+      val left = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      assert(again.toSeq == first.toSeq, s"$q: a warm run must replay the first")
+      (derived == 0 && left == 0,
+        s"$q: $jobs jobs, $derived raw-scan derivations, $left RDDs left")
+    }
+    assert(runs.forall(_._1), runs.map(_._2).mkString("warm runs: ", "; ", ""))
   }
 }

@@ -8,13 +8,15 @@ import org.apache.spark.sql.DataFrame
   * oriented-triangle pair, the SCC labels, the 5-gram LM blocks, the
   * bigram counts) must return BIT-IDENTICAL rows to a reference that
   * builds its own artifacts — the caches change where the work happens,
-  * never what is computed. For the link-graph family the reference is
-  * the query's core run over a FRESH edge checkpoint ([[FixtureGraph]])
-  * so it stays independent of the session pins; elsewhere it is the
-  * standalone Df form. The tri-scale DuckDB oracles gate the same
-  * property end-to-end; this spec pins it directly at unit granularity
-  * so a cache-keying or release bug fails here first, with a readable
-  * diff, instead of as a hash mismatch in the oracle gate.
+  * never what is computed. The reference is the query's core run over
+  * a FRESH, uncached build (for the link-graph family a fresh edge
+  * checkpoint, [[FixtureGraph]]) so it stays independent of the session
+  * pins; the semantic-dedup fits compare against a standalone refit.
+  * Some test names still say "Df form(s)" so the suite's test ids stay
+  * stable. The tri-scale DuckDB oracles gate the same property
+  * end-to-end; this spec pins it directly at unit granularity so a
+  * cache-keying or release bug fails here first, with a readable diff,
+  * instead of as a hash mismatch in the oracle gate.
   */
 class SessionArtifactSpec extends SparkTestBase {
   import org.apache.spark.sql.functions.{col, lit}
@@ -94,18 +96,35 @@ class SessionArtifactSpec extends SparkTestBase {
   }
 
   test("KN and WB scoring via the session LM blocks equal the Df forms") {
-    val wide = TextAnalysis.chooseWideKeys(rawDocs)
+    // the registered 5-gram scorers (both key widths for KN) against
+    // their cores over a fresh type table of the raw corpus
+    def fresh(wide: Boolean) = {
+      val c5 = TextAnalysis.fivegramTypeTable(rawDocs, wide)
+      (c5, TextAnalysis.fivegramWindowCounts(c5), TextAnalysis.smoothedStatTable(c5))
+    }
+    val (c5, windows, smoothed) = fresh(TextAnalysis.chooseWideKeys(rawDocs))
     assert(rows(TextAnalysis.knLogProb(spark, sfDir)) ==
-      rows(TextAnalysis.knLogProbDf(rawDocs, wideKeys = wide)))
+      rows(TextAnalysis.knScoreOn(rawDocs, c5, smoothed)))
     assert(rows(TextAnalysis.wbLogProb(spark, sfDir)) ==
-      rows(TextAnalysis.wbLogProbDf(rawDocs, wide)))
+      rows(TextAnalysis.wbScoreOn(rawDocs, c5, smoothed)))
+    assert(rows(TextAnalysis.fivegramLogProb(spark, sfDir)) ==
+      rows(TextAnalysis.fivegramScoreOn(rawDocs, c5, windows)))
+    assert(rows(TextAnalysis.interpLogProb(spark, sfDir)) ==
+      rows(TextAnalysis.interpScoreOn(rawDocs, c5, windows)))
+    val (w5, _, wSmoothed) = fresh(wide = true)
+    assert(rows(graft.SparkEntry.queries("q_kn_logprob_wide")(spark, sfDir)) ==
+      rows(TextAnalysis.knScoreOn(rawDocs, w5, wSmoothed)))
   }
 
   test("bigram scorer and collocations via the shared count table equal the Df forms") {
+    val c2 = TextAnalysis.bigramCountTable(rawDocs)
     assert(rows(TextAnalysis.bigramLogProb(spark, sfDir)) ==
-      rows(TextAnalysis.bigramLogProbDf(rawDocs)))
-    assert(rows(TextAnalysis.topCollocations(spark, sfDir)) ==
-      rows(TextAnalysis.topCollocationsDf(rawDocs)))
+      rows(TextAnalysis.bigramScoreOn(rawDocs, c2)))
+    assert(rows(TextAnalysis.topCollocations(spark, sfDir)) == rows(TextAnalysis
+      .topCollocationsOn(c2, TextAnalysis.CollocTopK, TextAnalysis.CollocMinCount)))
+    assert(rows(TextAnalysis.backoffLogProb(spark, sfDir)) ==
+      rows(TextAnalysis.backoffScoreOn(rawDocs,
+        TextAnalysis.backoffMlpTable(TextAnalysis.trigramCountTable(rawDocs)))))
   }
 
   test("semantic dedup drop lists via the session fit caches equal standalone fits") {
@@ -124,30 +143,31 @@ class SessionArtifactSpec extends SparkTestBase {
   }
 
   test("retrieval session frames equal the standalone Df forms") {
-    // r16: the registered bound-table/pruned evaluators ride the
-    // pinned contribution + block-max artifacts
-    assert(rows(Search.bm25TermBounds(spark, sfDir)) ==
-      rows(Search.bm25TermBoundsDf(docs)))
+    // each registered retrieval query against its core over a fresh
+    // build: the contribution frame, the probe postings + corpus
+    // stats, and the section split
+    val ca = Search.bm25ContribAll(docs)
+    assert(rows(Search.bm25TermBounds(spark, sfDir)) == rows(Search.bm25TermBoundsOn(ca)))
     assert(rows(Search.bm25MaxScoreTopK(spark, sfDir)) ==
-      rows(Search.bm25MaxScoreTopKDf(docs)))
-    assert(rows(Search.bm25BlockMaxBounds(spark, sfDir)) ==
-      rows(Search.bm25BlockMaxBoundsDf(docs)))
+      rows(Search.bm25MaxScoreTopKOn(ca, Search.ProbeTopK)))
+    assert(rows(Search.bm25BlockMaxBounds(spark, sfDir)) == rows(Search.blockMaxTable(ca)))
     assert(rows(Search.bm25BlockMaxTopK(spark, sfDir)) ==
-      rows(Search.bm25BlockMaxTopKDf(docs)))
-    assert(rows(Search.queryLikelihoodTopK(spark, sfDir)) ==
-      rows(Search.queryLikelihoodTopKDf(docs)))
-    // r16 amendment: the registered section family (ranking AND the
-    // winners-only payload) rides the session section-chunks artifact
-    assert(rows(Search.sectionBm25TopK(spark, sfDir)) ==
-      rows(Search.sectionBm25TopKDf(docs)))
-    assert(rows(Search.sectionDedup(spark, sfDir)) ==
-      rows(Search.sectionDedupDf(docs)))
-    // r16 amendment: hard negatives + eval audit ride the session
-    // contribution frame
-    assert(rows(Search.hardNegatives(spark, sfDir)) ==
-      rows(Search.hardNegativesDf(docs)))
+      rows(Search.bm25BlockMaxTopKOn(ca, Search.blockMaxTable(ca), Search.ProbeTopK)))
+    assert(rows(Search.hardNegatives(spark, sfDir)) == rows(Search.hardNegativesOn(ca)))
     assert(rows(Search.retrievalEvalAudit(spark, sfDir)) ==
-      rows(Search.retrievalEvalAuditDf(docs)))
+      rows(Search.retrievalEvalAuditOn(ca)))
+    val probed = Search.postingsDf(docs, Some(Search.ProbeTerms))
+    val stats = Search.corpusStatsDf(docs)
+    assert(rows(Search.queryLikelihoodTopK(spark, sfDir)) ==
+      rows(Search.queryLikelihoodTopKOn(probed, stats)))
+    assert(rows(Search.bm25TopK(spark, sfDir)) ==
+      rows(Search.bm25AgainstStats(probed, Search.ProbeTerms, stats, Search.ProbeTopK)))
+    assert(rows(Search.postingsSizeModel(spark, sfDir)) ==
+      rows(Search.postingsSizeModelOn(probed)))
+    val secs = Search.sectionChunksDf(Search.sectionMdFrame(docs))
+    assert(rows(Search.sectionBm25TopK(spark, sfDir)) ==
+      rows(Search.sectionBm25Ranked(secs, Search.SectionTopK, Search.ProbeTerms)))
+    assert(rows(Search.sectionDedup(spark, sfDir)) == rows(Search.sectionDedupOn(secs)))
   }
 
   /** One consumer query per declared session artifact (artifact name →
@@ -277,7 +297,7 @@ class SessionArtifactSpec extends SparkTestBase {
     // one map) — rebuild it first-thing after a clear
     graft.SessionCaches.clearAll(spark)
     assert(rows(Search.bm25BlockMaxBounds(spark, sfDir)) ==
-      rows(Search.bm25BlockMaxBoundsDf(docs)))
+      rows(Search.blockMaxTable(Search.bm25ContribAll(docs))))
   }
 
   test("trained subword tables: session cache hit is bit-identical to a retrain (r19)") {
