@@ -3750,8 +3750,8 @@ object SparkEntry {
     // the w + n - 1 winnowing guarantee; this oracle replays the
     // RELAXED candidate gate itself, so sub-guarantee misses match too
     // (the pinned CleaningSpec miss fixture keeps the relaxation
-    // visible; planted-fixture parity with spanDedupStatsDf covers the
-    // guarantee regime).
+    // visible; planted-fixture parity with the exact span-dedup core
+    // covers the guarantee regime).
     "q_winnow_stats" ->
       (s"WITH ${winnowCteSql("")}, " +
         "wnf AS (SELECT doc_id, COUNT(*) AS nf FROM wfp GROUP BY doc_id) " +

@@ -29,6 +29,17 @@ object Cleaning {
   private[graft] val WinnowIdLimit = 200
   private[graft] val SpanMaxDupFrac = 0.2
 
+  /** Span width of the exact span-dedup operator (the oracle's 5-gram
+    * spans).
+    */
+  private val SpanN = 5
+
+  /** (doc_id, t): the token stream of a [[TextAnalysis.tokenized]]
+    * frame — the head every span, winnow and substring core reads.
+    */
+  private def spanTokens(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), col("toks").as("t"))
+
   /** Rule-based document filter battery (Gopher-style): per-document
     * features — word count, mean word length, alphabetic-word fraction,
     * distinct-stopword hits, symbol ratio — each thresholded into a
@@ -323,9 +334,8 @@ object Cleaning {
     * (ROW_NUMBER over (gram) ordered by (doc_id, pos)) — hashing changes
     * the grouping key, not the groups, short of an xxhash64 collision.
     */
-  def spanDedupStats(spark: SparkSession, d: String, n: Int = 5,
-                     maxDupFrac: Double = 0.2): DataFrame =
-    spanDedupCore(packGuardedSessionTokens(spark, d, n), n, maxDupFrac)
+  def spanDedupStats(spark: SparkSession, d: String): DataFrame =
+    spanDedupCore(TextAnalysis.sessionTokens(spark, d))
 
   /** Cross-SOURCE n-gram overlap matrix: for every source pair, how many
     * distinct token n-grams they share, and the Jaccard similarity of
@@ -462,7 +472,7 @@ object Cleaning {
     * hash — md5 exists in both, xxhash64 only in Spark (the same trade
     * [[Dedup]]'s minhash kernel made in round 13). Still a codegen'd
     * builtin expression chain over the token slice; the exact span
-    * ELECTIONS ([[spanDedupStatsDf]] and winnow stage 3) keep the
+    * ELECTIONS ([[spanDedupStats]] and winnow stage 3) keep the
     * cheaper xxhash64 spans — their verdicts depend only on hash
     * EQUALITY and their oracles replay on gram strings.
     */
@@ -476,9 +486,8 @@ object Cleaning {
     * streaming form of span dedup checks arrivals against. One corpus
     * pass, one distinct on the 8-byte hash.
     */
-  def keeperSpanHashes(docs: DataFrame, n: Int = 5): DataFrame =
-    Tables.fanOut(docs).filter(col("text").isNotNull)
-      .select(TextAnalysis.tokens(col("text")).as("t"))
+  def keeperSpanHashes(docs: DataFrame, n: Int = SpanN): DataFrame =
+    spanTokens(TextAnalysis.tokenized(Tables.fanOut(docs)))
       .select(explode(spanHashesOf(col("t"), n)).as("h"))
       .distinct()
 
@@ -487,7 +496,7 @@ object Cleaning {
     * base corpus. There is no within-batch keeper election — the base
     * corpus owns all its spans, the streaming analogue of the batch
     * operator's earliest-(doc_id, pos) rule (first writer wins across
-    * time). Per-doc output schema matches [[spanDedupStatsDf]], and
+    * time). Per-doc output schema matches [[spanDedupStats]], and
     * per-doc results depend only on the doc and the keeper set, so the
     * union of per-batch outputs equals the one-shot batch result on
     * the same documents (asserted in StreamingSpec).
@@ -499,9 +508,8 @@ object Cleaning {
     * [[graft.functions.BloomPrefilter]] applies in front).
     */
   def spanDedupStatsAgainst(docs: DataFrame, keeperSpans: DataFrame,
-                            n: Int = 5, maxDupFrac: Double = 0.2): DataFrame = {
-    val spans = Tables.fanOut(docs).filter(col("text").isNotNull)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
+                            n: Int = SpanN, maxDupFrac: Double = SpanMaxDupFrac): DataFrame = {
+    val spans = spanTokens(TextAnalysis.tokenized(Tables.fanOut(docs)))
       .select(col("doc_id"), explode(spanHashesOf(col("t"), n)).as("h"))
     val marked = spans
       .join(keeperSpans.select(col("h")).distinct().withColumn("dup", lit(1L)),
@@ -529,8 +537,8 @@ object Cleaning {
     * [[Corpus.decontaminationSink]].
     */
   def spanDedupSink(docStream: DataFrame, keeperSpans: DataFrame,
-                    outPath: String, checkpoint: String, n: Int = 5,
-                    maxDupFrac: Double = 0.2, triggerMs: Long = 10000L)
+                    outPath: String, checkpoint: String, n: Int = SpanN,
+                    maxDupFrac: Double = SpanMaxDupFrac, triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     // freeze the keeper set NOW: a lazy keeperSpans would re-run the
     // full base-corpus span pass (and re-read the base files) on every
@@ -583,16 +591,15 @@ object Cleaning {
     * [[spanHashesOf]] expression, selection a per-doc kernel) — zero
     * shuffles above the scan beyond the presentation sort.
     */
-  def winnowFingerprintStats(spark: SparkSession, d: String,
-                             n: Int = WinnowN, w: Int = WinnowW): DataFrame =
-    winnowFingerprintStatsDf(Tables.documents(spark, d), n, w)
+  def winnowFingerprintStats(spark: SparkSession, d: String): DataFrame =
+    winnowFingerprintStatsDf(Tables.documents(spark, d))
 
   /** DataFrame form (docs must have doc_id + text). */
-  def winnowFingerprintStatsDf(docs: DataFrame, n: Int = WinnowN, w: Int = WinnowW): DataFrame =
-    Tables.fanOut(docs).filter(col("text").isNotNull)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
-      .select(col("doc_id"), nSpansOf(col("t"), n).as("n_spans"),
-        size(winnowFps(winnowSpanHashesOf(col("t"), n), w)).cast("long").as("n_fingerprints"))
+  def winnowFingerprintStatsDf(docs: DataFrame): DataFrame =
+    spanTokens(TextAnalysis.tokenized(Tables.fanOut(docs)))
+      .select(col("doc_id"), nSpansOf(col("t"), WinnowN).as("n_spans"),
+        size(winnowFps(winnowSpanHashesOf(col("t"), WinnowN), WinnowW))
+          .cast("long").as("n_fingerprints"))
       .withColumn("density",
         when(col("n_spans") > 0,
           round(col("n_fingerprints").cast("double") / col("n_spans"), 6))
@@ -608,21 +615,18 @@ object Cleaning {
     * Scale shape mirrors [[Dedup.ngramJaccardPairs]]: the bounded id
     * range keeps this the oracle-checkable verification kernel; at
     * corpus scale the fingerprint stream joins on the 8-byte hash
-    * exactly like [[spanDedupStatsDf]]'s span stream (selected
+    * exactly like [[spanDedupStats]]'s span stream (selected
     * fingerprints are ~2/(w+1) of spans — winnowing IS the payload
     * reduction).
     */
-  def winnowMatches(spark: SparkSession, d: String, n: Int = WinnowN, w: Int = WinnowW,
-                    idLimit: Int = WinnowIdLimit): DataFrame =
-    winnowMatchesDf(Tables.documents(spark, d), n, w, idLimit)
+  def winnowMatches(spark: SparkSession, d: String): DataFrame =
+    winnowMatchesDf(Tables.documents(spark, d))
 
   /** DataFrame form (docs must have doc_id + text). */
-  def winnowMatchesDf(docs: DataFrame, n: Int = WinnowN, w: Int = WinnowW,
-                      idLimit: Int = WinnowIdLimit): DataFrame = {
-    val fps = docs
-      .filter(col("text").isNotNull && col("doc_id") < idLimit)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
-      .select(col("doc_id"), explode(winnowFps(winnowSpanHashesOf(col("t"), n), w)).as("h"))
+  def winnowMatchesDf(docs: DataFrame): DataFrame = {
+    val fps = spanTokens(TextAnalysis.tokenized(docs).filter(col("doc_id") < WinnowIdLimit))
+      .select(col("doc_id"),
+        explode(winnowFps(winnowSpanHashesOf(col("t"), WinnowN), WinnowW)).as("h"))
       .distinct()
     val a = fps.as("a")
     val b = fps.as("b")
@@ -632,38 +636,19 @@ object Cleaning {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** DataFrame form (docs must have doc_id + text). */
-  /** Tokenized docs with the packing bounds ENFORCED (not just the
-    * documented contract): a doc opening >= 2^20 spans, or a doc_id
-    * outside [0, 2^43), would silently alias into a neighboring
-    * document's packed key space and corrupt keeper selection — wrong
-    * answers with no error. Cheap per-row predicate in the scan stage;
-    * raise_error is codegen'd. Tokens are MATERIALIZED as an attribute
-    * before any span lambda (the Dedup.shinglesOfTokens trap). Shared
-    * by [[spanDedupStatsDf]] and [[winnowSpanDedupStatsDf]].
+  /** The (doc_id, t) stream of a [[TextAnalysis.tokenized]] frame with
+    * the packing bounds ENFORCED (not just the documented contract): a
+    * doc opening >= 2^20 spans, or a doc_id outside [0, 2^43), would
+    * silently alias into a neighboring document's packed key space and
+    * corrupt keeper selection — wrong answers with no error. Cheap
+    * per-row predicate in the scan stage; raise_error is codegen'd.
+    * Tokens are MATERIALIZED as an attribute before any span lambda
+    * (the Dedup.shinglesOfTokens trap). Both span-dedup cores read the
+    * token arrays three times per run (candidates / spans / n_spans
+    * legs), so the registered queries pass the session tokenized pin.
     */
-  private def packGuardedTokens(docs: DataFrame, n: Int): DataFrame =
-    packGuardOf(Tables.fanOut(docs).filter(col("text").isNotNull)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t")), n)
-
-  /** The registered-path (doc_id, t) stream off the SESSION tokenized
-    * artifact — both span-dedup queries consume the token arrays three
-    * times per run (candidates / spans / n_spans legs), so reading the
-    * columnar cache replaces three parquet scans + three fanOut
-    * round-robin exchanges + three tokenize passes. The artifact stores
-    * exactly `tokens(text)` over the same not-null-text corpus, so the
-    * stream is bit-identical to the raw-text form.
-    */
-  private def packGuardedSessionTokens(spark: SparkSession, d: String,
-                                       n: Int): DataFrame =
-    packGuardOf(TextAnalysis.sessionTokens(spark, d)
-      .select(col("doc_id"), col("toks").as("t")), n)
-
-  /** The packing-bounds guard over an already-tokenized (doc_id, t)
-    * frame — shared by the raw-text and session-artifact heads.
-    */
-  private def packGuardOf(toksed: DataFrame, n: Int): DataFrame =
-    toksed
+  private def packGuardOf(toks: DataFrame, n: Int): DataFrame =
+    spanTokens(toks)
       .withColumn("t",
         when(col("doc_id") < 0 || col("doc_id") >= lit(1L << 43) ||
           (size(col("t")) - (n - 1)).cast("long") >= lit(1L << 20),
@@ -675,12 +660,12 @@ object Cleaning {
             lit(" spans. Densify ids / pre-split pathological docs upstream."))))
           .otherwise(col("t")))
 
-  def spanDedupStatsDf(docs: DataFrame, n: Int = 5,
-                       maxDupFrac: Double = 0.2): DataFrame =
-    spanDedupCore(packGuardedTokens(docs, n), n, maxDupFrac)
-
-  private def spanDedupCore(toksed: DataFrame, n: Int,
-                            maxDupFrac: Double): DataFrame = {
+  /** The exact span-dedup core over a [[TextAnalysis.tokenized]] frame
+    * (see [[spanDedupStats]]).
+    */
+  private[graft] def spanDedupCore(toks: DataFrame): DataFrame = {
+    val n = SpanN
+    val toksed = packGuardOf(toks, n)
     val t = col("t")
     val spanHashes = spanHashesOf(t, n)
     // (doc_id, pos) packed into one BIGINT BELOW the exchange: the span
@@ -709,7 +694,7 @@ object Cleaning {
       .select(col("doc_id"),
         coalesce(col("n_spans"), lit(0L)).as("n_spans"),
         coalesce(col("n_removed"), lit(0L)).as("n_removed"))
-    spanVerdict(full, maxDupFrac)
+    spanVerdict(full, SpanMaxDupFrac)
   }
 
   /** A PARAGRAPH-STRUCTURED view of a flat document table, built
@@ -740,7 +725,7 @@ object Cleaning {
           .otherwise(col("body")).as("text"))
   }
 
-  /** PARAGRAPH-level cross-document dedup — [[spanDedupStatsDf]]'s
+  /** PARAGRAPH-level cross-document dedup — [[spanDedupStats]]'s
     * first-writer-wins election lifted from sliding token n-grams to
     * the document's OWN structural units: text splits on blank lines,
     * each trimmed non-empty paragraph hashes once, and a paragraph is
@@ -752,7 +737,7 @@ object Cleaning {
     * this bills exactly one unit per paragraph and never crosses
     * paragraph boundaries.
     *
-    * Scale shape: identical to [[spanDedupStatsDf]] — the paragraph
+    * Scale shape: identical to [[spanDedupStats]] — the paragraph
     * stream rides ONE (hash-keyed) window exchange as 16 bytes/row
     * ((doc_id, pos) packed into a BIGINT below the exchange; same
     * 20-bit position / 43-bit doc_id bounds, here bounding paragraphs
@@ -886,7 +871,7 @@ object Cleaning {
 
   /** WINNOW-ACCELERATED span dedup: [[winnowSelect]] fingerprints as
     * the CANDIDATE GENERATOR in front of the exact keeper election of
-    * [[spanDedupStatsDf]]. Three stages:
+    * [[spanDedupStats]]. Three stages:
     *
     *  1. narrow pass — per doc, the span count and the winnowed
     *     fingerprint selection (density ~2/(w+1));
@@ -895,7 +880,7 @@ object Cleaning {
     *     corpus-sized exchange, at ~2/(w+1) of the span stream — the
     *     1/w cut on the library's highest bytes-per-input-byte
     *     shuffle);
-    *  3. exact election — the full [[spanDedupStatsDf]] window, but
+    *  3. exact election — the full [[spanDedupStats]] window, but
     *     only over CANDIDATE documents' spans; non-candidates report
     *     n_removed = 0 from the narrow pass.
     *
@@ -905,7 +890,7 @@ object Cleaning {
     * one is a candidate and stage 3 reproduces the exact operator's
     * verdict for it — on corpora whose duplication is passage-level
     * (boilerplate, licence blocks, quoted text), output EQUALS
-    * [[spanDedupStatsDf]] row for row (CleaningSpec asserts this on
+    * [[spanDedupStats]] row for row (CleaningSpec asserts this on
     * planted fixtures). Duplicated spans shorter than w + n − 1 tokens
     * whose documents share nothing longer can escape candidacy — the
     * sf0.01 documents table has 7 such docs (measured r10), which is
@@ -914,17 +899,15 @@ object Cleaning {
     * that regime (the spec pins one such miss so the relaxation stays
     * visible).
     */
-  def winnowSpanDedupStats(spark: SparkSession, d: String, n: Int = WinnowN,
-                           w: Int = WinnowW, maxDupFrac: Double = SpanMaxDupFrac): DataFrame =
-    winnowSpanDedupCore(packGuardedSessionTokens(spark, d, n), n, w, maxDupFrac)
+  def winnowSpanDedupStats(spark: SparkSession, d: String): DataFrame =
+    winnowSpanDedupCore(TextAnalysis.sessionTokens(spark, d))
 
-  /** DataFrame form (docs must have doc_id + text). */
-  def winnowSpanDedupStatsDf(docs: DataFrame, n: Int = WinnowN, w: Int = WinnowW,
-                             maxDupFrac: Double = SpanMaxDupFrac): DataFrame =
-    winnowSpanDedupCore(packGuardedTokens(docs, n), n, w, maxDupFrac)
-
-  private def winnowSpanDedupCore(toksed: DataFrame, n: Int, w: Int,
-                                  maxDupFrac: Double): DataFrame = {
+  /** The winnow-accelerated span-dedup core over a
+    * [[TextAnalysis.tokenized]] frame (see [[winnowSpanDedupStats]]).
+    */
+  private[graft] def winnowSpanDedupCore(toks: DataFrame): DataFrame = {
+    val (n, w) = (WinnowN, WinnowW)
+    val toksed = packGuardOf(toks, n)
     val wh = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
     // the explode is FUSED over the winnow expression (no intermediate
     // fps attribute): InferFiltersFromGenerate turns an attribute-bound
@@ -938,7 +921,7 @@ object Cleaning {
       .withColumn("cnt", count(lit(1)).over(wh))
       .filter(col("cnt") > 1)
       .select(col("doc_id")).distinct()
-    // exact election, candidate docs only — the spanDedupStatsDf window
+    // exact election, candidate docs only — the spanDedupCore window
     // on the same 16-byte packed keys (packing bounds already enforced)
     val spans = toksed.join(candidates, Seq("doc_id"))
       .select(col("doc_id"), posexplode(spanHashesOf(col("t"), n)).as(Seq("pos0", "h")))
@@ -953,7 +936,7 @@ object Cleaning {
       .join(removedPerDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_spans"),
         coalesce(col("n_removed"), lit(0L)).as("n_removed"))
-    spanVerdict(full, maxDupFrac)
+    spanVerdict(full, SpanMaxDupFrac)
   }
 
   /** DISTINCT winnowed fingerprint hashes of a static base corpus —
@@ -962,8 +945,7 @@ object Cleaning {
     * [[keeperSpanHashes]]).
     */
   def winnowKeeperFingerprints(docs: DataFrame, n: Int = WinnowN, w: Int = WinnowW): DataFrame =
-    Tables.fanOut(docs).filter(col("text").isNotNull)
-      .select(TextAnalysis.tokens(col("text")).as("t"))
+    spanTokens(TextAnalysis.tokenized(Tables.fanOut(docs)))
       .select(explode(winnowFps(winnowSpanHashesOf(col("t"), n), w)).as("h"))
       .distinct()
 
@@ -974,16 +956,15 @@ object Cleaning {
     * ([[keeperSpanHashes]]), non-candidates report n_removed = 0 from
     * the narrow pass. Same schema and keeper rule as
     * [[spanDedupStatsAgainst]] (base owns all its spans; no
-    * within-batch election), with the [[winnowSpanDedupStatsDf]]
+    * within-batch election), with the [[winnowSpanDedupStats]]
     * contract: equality whenever shared passages span >= w + n − 1
     * tokens (asserted in StreamingSpec).
     */
   def winnowSpanDedupStatsAgainst(docs: DataFrame, baseFps: DataFrame,
                                   keeperSpans: DataFrame, n: Int = WinnowN,
                                   w: Int = WinnowW, maxDupFrac: Double = SpanMaxDupFrac): DataFrame = {
-    val toksed = Tables.fanOut(docs).filter(col("text").isNotNull)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
-    // fused explode — see winnowSpanDedupStatsDf's candidates note
+    val toksed = spanTokens(TextAnalysis.tokenized(Tables.fanOut(docs)))
+    // fused explode — see winnowSpanDedupCore's candidates note
     val candidates = toksed
       .select(col("doc_id"), explode(winnowFps(winnowSpanHashesOf(col("t"), n), w)).as("h"))
       .join(baseFps.select(col("h")), Seq("h"), "left_semi")
@@ -1041,8 +1022,8 @@ object Cleaning {
     * anchor positions finds the ExactSubstr spans without a suffix
     * array (a single-node structure; this is the distributed shape:
     * one keyed aggregate + one keyed semi-join + one per-document
-    * window). The shingle/winnow span family ([[spanDedupStatsDf]],
-    * [[winnowSpanDedupStatsDf]]) reports per-document duplicated-mass
+    * window). The shingle/winnow span family ([[spanDedupStats]],
+    * [[winnowSpanDedupStats]]) reports per-document duplicated-mass
     * fractions only; THIS operator localizes each repeat and its
     * [start_tok, end_tok] boundaries — the cut list a Lee-et-al-style
     * pipeline feeds to the span excision step.
@@ -1070,22 +1051,18 @@ object Cleaning {
     // the registered-width span table is a session artifact: the
     // excerpt columns derive from the pinned rows alone (n_tokens is
     // span arithmetic; span_md5 is stored) — no anchor-chain pass
-    sessionSubstrSpans(spark, d)
+    substringDedupOf(sessionSubstrSpans(spark, d))
+
+  /** The cut list over a [[spansWithMd5]] table. */
+  private[graft] def substringDedupOf(spans: DataFrame): DataFrame =
+    spans
       .select(col("doc_id"), col("start_tok"), col("end_tok"),
         (col("end_tok") - col("start_tok") + 1).as("n_tokens"), col("span_md5"))
       .orderBy(col("doc_id"), col("start_tok"))
 
-  /** DataFrame form (docs must have doc_id + text). */
-  def substringDedupDf(docs: DataFrame, k: Int = SubstrK): DataFrame = {
-    val toksed = Tables.fanOut(docs).filter(col("text").isNotNull)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
-    spanExcerpts(toksed, substringSpans(toksed, k))
-  }
-
-  /** The excerpt tail shared by the cross-document, incremental and
-    * self-repeat span queries: join each span back to its document's
-    * tokens, emit exact boundaries + the md5 of the actual span text
-    * (the content proof both engines replay).
+  /** The excerpt tail of the self-repeat span query: join each span
+    * back to its document's tokens, emit exact boundaries + the md5 of
+    * the actual span text (the content proof both engines replay).
     */
   private def spanExcerpts(toksed: DataFrame, spans: DataFrame): DataFrame =
     spans.join(toksed, Seq("doc_id"))
@@ -1138,22 +1115,18 @@ object Cleaning {
   private[graft] val SelfPlantTokens = 12
   private[graft] val SelfPlantMinTokens = 20
 
-  def substringSelfRepeat(spark: SparkSession, d: String,
-                          k: Int = SelfRepeatK): DataFrame =
+  def substringSelfRepeat(spark: SparkSession, d: String): DataFrame =
     substringSelfRepeatOn(
       TextAnalysis.sessionTokens(spark, d)
         .select(col("doc_id"),
           when(col("doc_id") % 3 === 0 && size(col("toks")) >= SelfPlantMinTokens,
             concat(col("toks"), slice(col("toks"), 1, SelfPlantTokens)))
-            .otherwise(col("toks")).as("t")), k)
+            .otherwise(col("toks")).as("toks")))
 
-  /** DataFrame form (docs must have doc_id + text). */
-  def substringSelfRepeatDf(docs: DataFrame, k: Int = SelfRepeatK): DataFrame =
-    substringSelfRepeatOn(
-      Tables.fanOut(docs).filter(col("text").isNotNull)
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t")), k)
-
-  private def substringSelfRepeatOn(toksed: DataFrame, k: Int): DataFrame = {
+  /** The self-repeat core over a [[TextAnalysis.tokenized]] frame. */
+  private[graft] def substringSelfRepeatOn(toks: DataFrame): DataFrame = {
+    val k = SelfRepeatK
+    val toksed = spanTokens(toks)
     val anchors = anchorStream(toksed, k)
     val selfDup = anchors.groupBy(col("doc_id"), col("h"))
       .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
@@ -1218,9 +1191,7 @@ object Cleaning {
     * applied to the ExactSubstr family).
     */
   def substringGramIndex(docs: DataFrame, k: Int = SubstrK): DataFrame =
-    anchorStream(
-      Tables.fanOut(docs).filter(col("text").isNotNull)
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t")), k)
+    anchorStream(spanTokens(TextAnalysis.tokenized(Tables.fanOut(docs))), k)
       .select(col("h")).distinct()
 
   /** The cross-document ExactSubstr span table (doc_id, start_tok,
@@ -1235,9 +1206,7 @@ object Cleaning {
     */
   private[ext] val sessionSubstrSpans =
     SessionArtifact.frame("substr_spans", Pin.Checkpoint) { (spark, d) =>
-      val toksed = TextAnalysis.sessionTokens(spark, d)
-        .select(col("doc_id"), col("toks").as("t"))
-      spansWithMd5(toksed, SubstrK)
+      spansWithMd5(TextAnalysis.sessionTokens(spark, d))
     }
 
   /** The frozen-base duplicated-gram index at the registered width —
@@ -1252,9 +1221,8 @@ object Cleaning {
   private[ext] val sessionSubstrBaseGrams =
     SessionArtifact.frame("substr_base_grams", Pin.Checkpoint) { (spark, d) =>
       anchorStream(
-        TextAnalysis.sessionTokens(spark, d)
-          .filter(col("doc_id") % 4 =!= 0)
-          .select(col("doc_id"), col("toks").as("t")), SubstrK)
+        spanTokens(TextAnalysis.sessionTokens(spark, d).filter(col("doc_id") % 4 =!= 0)),
+        SubstrK)
         .select(col("h")).distinct()
     }
 
@@ -1267,8 +1235,7 @@ object Cleaning {
     */
   def substringDedupAgainst(arrivals: DataFrame, baseGrams: DataFrame,
                             k: Int = SubstrK): DataFrame = {
-    val toksed = Tables.fanOut(arrivals).filter(col("text").isNotNull)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
+    val toksed = spanTokens(TextAnalysis.tokenized(Tables.fanOut(arrivals)))
     val spans = islandsOf(
       anchorStream(toksed, k).join(baseGrams, Seq("h"), "left_semi"), k)
     spans.join(toksed, Seq("doc_id"))
@@ -1320,48 +1287,38 @@ object Cleaning {
   def substringExcised(spark: SparkSession, d: String): DataFrame =
     // keeper election + excise tail over the PINNED span table — the
     // anchor chain (the expensive half) bills to the sidecar once
-    excisedFromSpans(
-      TextAnalysis.sessionTokens(spark, d).select(col("doc_id"), col("toks").as("t")),
-      sessionSubstrSpans(spark, d))
-
-  /** DataFrame form (docs must have doc_id + text). */
-  def substringExcisedDf(docs: DataFrame, k: Int = SubstrK): DataFrame =
-    substringExcisedOn(
-      Tables.fanOut(docs).filter(col("text").isNotNull)
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t")), k)
+    excisedFromSpans(TextAnalysis.sessionTokens(spark, d), sessionSubstrSpans(spark, d))
 
   /** The (doc_id, start_tok, end_tok, span_md5) cross-document span
-    * table — the [[substringSpans]] boundaries with the content md5
-    * attached (one excerpt join). Shared by the excision chain and the
-    * session pin so the two cannot drift.
+    * table of a [[TextAnalysis.tokenized]] frame at the registered
+    * anchor width — the [[substringSpans]] boundaries with the content
+    * md5 attached (one excerpt join). The build of
+    * [[sessionSubstrSpans]], which both the cut list and the excision
+    * read.
     */
-  private def spansWithMd5(toksed: DataFrame, k: Int): DataFrame =
-    substringSpans(toksed, k)
+  private[graft] def spansWithMd5(toks: DataFrame): DataFrame = {
+    val toksed = spanTokens(toks)
+    substringSpans(toksed, SubstrK)
       .join(toksed, Seq("doc_id"))
       .select(col("doc_id"), col("start_tok"), col("end_tok"),
         md5(concat_ws(" ",
           slice(col("t"), col("start_tok").cast("int"),
             (col("end_tok") - col("start_tok") + 1).cast("int")))).as("span_md5"))
+  }
 
-  private def substringExcisedOn(toksed: DataFrame, k: Int): DataFrame =
-    // spans and the cut list are span-count-sized (<< corpus); lazy
-    // localCheckpoints let their many consumers below share ONE
-    // evaluation of the anchor chain instead of re-running it per
-    // reference (the mmrDiversify poolSh discipline) — measured 17
-    // keyed exchanges without, <= 8 with
-    excisedFromSpans(toksed, spansWithMd5(toksed, k).localCheckpoint(false))
-
-  /** Keeper election + excision over an already-materialized span
-    * table (`spans` must be checkpointed/pinned by the caller — it is
-    * referenced twice).
+  /** Keeper election + excision of a [[TextAnalysis.tokenized]] frame
+    * over an already-materialized span table (`spans` must be
+    * checkpointed/pinned by the caller — it is referenced twice, and a
+    * lazy frame would re-run the anchor chain per reference: measured
+    * 17 keyed exchanges without a checkpoint, <= 8 with).
     */
-  private def excisedFromSpans(toksed: DataFrame, spans: DataFrame): DataFrame = {
+  private[graft] def excisedFromSpans(toks: DataFrame, spans: DataFrame): DataFrame = {
     val keepers = spans.groupBy(col("span_md5")).agg(min(col("doc_id")).as("keeper"))
     val excised = spans.join(keepers, Seq("span_md5"))
       .filter(col("doc_id") =!= col("keeper"))
       .select(col("doc_id"), col("start_tok"), col("end_tok"))
       .localCheckpoint(false)
-    exciseTail(toksed, excised)
+    exciseTail(spanTokens(toks), excised)
   }
 
   /** The excision tail shared by the batch keeper-elected form and the
@@ -1413,8 +1370,7 @@ object Cleaning {
     */
   def substringExciseAgainst(arrivals: DataFrame, baseGrams: DataFrame,
                              k: Int = SubstrK): DataFrame = {
-    val toksed = Tables.fanOut(arrivals).filter(col("text").isNotNull)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
+    val toksed = spanTokens(TextAnalysis.tokenized(Tables.fanOut(arrivals)))
     // no checkpoint: this is a sink's per-batch plan, built once per
     // query; the three readers of the islands share their exchanges
     val excised = islandsOf(
@@ -1542,7 +1498,7 @@ object Cleaning {
     * path slash stripped; tracking parameters (utm_*, fbclid, gclid)
     * removed; surviving query parameters sorted. Documents sharing a
     * canonical URL collapse to the smallest doc_id (first-writer-wins,
-    * the [[spanDedupStatsDf]] election at URL granularity).
+    * the [[spanDedupStats]] election at URL granularity).
     *
     * Scale shape: canonicalization is a per-row chain of regex /
     * higher-order builtin expressions (codegen'd, no UDF); the
@@ -1879,13 +1835,6 @@ object Cleaning {
           .as("removed_lines"),
         array_join(col("kept"), "\n").as("clean_text"))
 
-  /** Streaming form (foreachBatch stage): the base corpus's
-    * boilerplate dictionary is FROZEN once; each micro-batch rewrites
-    * its documents against it and appends, tagged with the batch id.
-    * Same frozen-artifact discipline as [[urlDedupSink]]: a daily
-    * ingest cleans arrivals against the *snapshot's* dictionary and
-    * re-mines the dictionary only when the snapshot rolls.
-    */
   // ------------------------------------ acquisition funnel
 
   /** The ACQUISITION-side curation funnel — the hygiene stages a crawl
@@ -1943,11 +1892,10 @@ object Cleaning {
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), funnelUrlCol.as("url"))
 
-  /** DataFrame form (docs: doc_id + source + text). */
-  def acquisitionFunnelDf(docs: DataFrame): DataFrame =
-    acquisitionFunnelCore(docs, boilerplateDictDf(c4StructuredDocs(docs)))
-
-  private def acquisitionFunnelCore(docs: DataFrame, dict: DataFrame): DataFrame = {
+  /** The funnel core over a document frame (doc_id + source + text) and
+    * a [[boilerplateDictDf]] dictionary.
+    */
+  private[graft] def acquisitionFunnelCore(docs: DataFrame, dict: DataFrame): DataFrame = {
     val bl = array(DomainBlocklist.map(lit): _*)
     val base = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"), funnelUrlCol.as("url"),
@@ -1984,6 +1932,13 @@ object Cleaning {
       .orderBy(col("stage"))
   }
 
+  /** Streaming form (foreachBatch stage): the base corpus's
+    * boilerplate dictionary is FROZEN once; each micro-batch rewrites
+    * its documents against it and appends, tagged with the batch id.
+    * Same frozen-artifact discipline as [[urlDedupSink]]: a daily
+    * ingest cleans arrivals against the *snapshot's* dictionary and
+    * re-mines the dictionary only when the snapshot rolls.
+    */
   def boilerplateCleanSink(docStream: DataFrame, baseDocs: DataFrame,
                            outPath: String, checkpoint: String,
                            triggerMs: Long = 10000L)

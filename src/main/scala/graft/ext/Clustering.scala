@@ -229,22 +229,22 @@ object Clustering {
         snap6(col("s").cast("double") / col("n_vectors") / lit(1e12))
           .as("mean_sq_dist"))
 
-  /** (cluster, d2) assignment frame under fixed centroids — ONE fused
-    * kernel pass (argmin cell and its squared distance fall out of the
-    * same centroid loop; separate cell/distance UDFs would double the
-    * dominant O(k×dim) per-vector cost of every consumer). d2 is the
-    * exact BIGINT micro² distance.
-    */
   /** (vec_id, cell) under a fitted centroid set — the narrow assignment
-    * projection [[Similarity.qualityPropagationDf]] buckets its kNN
-    * candidates with (exact integer argmin, ties to the lower cell —
-    * the oracle's kfa CTE replays it bit-for-bit).
+    * projection [[Similarity.knnGraphDf]] and the semantic-dedup drop
+    * lists bucket their candidates with (exact integer argmin, ties to
+    * the lower cell — the oracle's kfa CTE replays it bit-for-bit).
     */
   private[ext] def cellAssignments(vecs: DataFrame,
                                    cents: Array[Array[Long]]): DataFrame =
     assigned(vecs, cents, keepId = true)
       .select(col("vec_id"), col("cluster").as("cell"))
 
+  /** (cluster, d2) assignment frame under fixed centroids — ONE fused
+    * kernel pass (argmin cell and its squared distance fall out of the
+    * same centroid loop; separate cell/distance UDFs would double the
+    * dominant O(k×dim) per-vector cost of every consumer). d2 is the
+    * exact BIGINT micro² distance.
+    */
   private def assigned(vecs: DataFrame, cents: Array[Array[Long]],
                        keepId: Boolean = false): DataFrame = {
     val a = assignUdf(cents)(col("embedding"))

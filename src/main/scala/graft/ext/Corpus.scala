@@ -1085,33 +1085,43 @@ object Corpus {
         i => substring(md5(concat(element_at(t, i), lit(" "), element_at(t, i + 1))), 1, 3)))
       .otherwise(array().cast("array<string>"))
 
-  /** Per-bucket importance table for DSIR: one corpus pass counts each
-    * bucket's occurrences on the target slice and the raw slice
-    * simultaneously (conditional sums under one groupBy — two separate
-    * passes would scan the corpus twice for the same ≤[[DsirBuckets]]-row
-    * result), then the add-1-smoothed log-likelihood ratio
-    * ln θ_target(b) − ln θ_raw(b) snaps each term to integer micro-nats
-    * (the [[graft.ext.TextAnalysis.unigramLogProb]] FP discipline) so
-    * downstream per-doc sums are exact BIGINT math.
+  /** The DSIR target slice: the `doc_id % 20 = 7` eval-slice
+    * convention of [[decontaminationStats]] (a stand-in for a
+    * caller-supplied target corpus) — the oracle's predicate.
+    */
+  private[graft] val DsirTarget: Column = col("doc_id") % 20 === 7
+
+  /** Per-bucket (bkt, ct, cr) occurrence counts of a corpus: one corpus
+    * pass counts each bucket's occurrences on the [[DsirTarget]] slice
+    * and the raw slice simultaneously (conditional sums under one
+    * groupBy — two separate passes would scan the corpus twice for the
+    * same ≤[[DsirBuckets]]-row result).
     *
     * Scale shape: the gram stream aggregates by bucket id with map-side
     * combine — at most [[DsirBuckets]] rows reach the exchange per
-    * partition, and the totals window runs over the bucket-level rows.
+    * partition.
     */
-  def dsirDeltaTable(docs: DataFrame, targetPred: Column): DataFrame = {
-    val counts = Tables.fanOut(docs).filter(col("text").isNotNull)
-      .select(targetPred.as("is_target"),
+  private[graft] def dsirBucketCounts(docs: DataFrame): DataFrame =
+    Tables.fanOut(docs).filter(col("text").isNotNull)
+      .select(DsirTarget.as("is_target"),
         explode(bigramBuckets(TextAnalysis.tokens(col("text")))).as("bkt"))
       .groupBy(col("bkt"))
       .agg(sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"),
         sum(when(col("is_target"), 0L).otherwise(1L)).as("cr"))
-    // totals ride a broadcast 1-row aggregate over the (lazily
-    // checkpointed, ≤ DsirBuckets-row) count table instead of an
-    // unpartitioned full-frame window — same values (an ORDER-free
-    // sum over every row), no "No Partition Defined" single-partition
-    // WindowExec, and the checkpoint makes the single evaluation of
-    // the corpus-sized count aggregate structural
-    val cts = counts.localCheckpoint(false)
+
+  /** Per-bucket importance table for DSIR over MATERIALIZED
+    * [[dsirBucketCounts]] (checkpointed or frozen by the caller — they
+    * are read twice): the add-1-smoothed log-likelihood ratio
+    * ln θ_target(b) − ln θ_raw(b) snaps each term to integer micro-nats
+    * (the [[graft.ext.TextAnalysis.unigramLogProb]] FP discipline) so
+    * downstream per-doc sums are exact BIGINT math. The totals ride a
+    * broadcast 1-row aggregate over the ≤ DsirBuckets-row counts
+    * instead of an unpartitioned full-frame window — same values (an
+    * ORDER-free sum over every row), no "No Partition Defined"
+    * single-partition WindowExec, and the materialized counts make the
+    * single evaluation of the corpus-sized count aggregate structural.
+    */
+  def dsirDeltaTable(cts: DataFrame): DataFrame = {
     val tot = cts.agg(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))
     cts.crossJoin(broadcast(tot))
       .select(col("bkt"),
@@ -1121,6 +1131,34 @@ object Corpus {
             .cast("long")).as("dm"))
   }
 
+  /** The session CDC chunk-keeper set of the %4 base slice —
+    * parameter-free given (session, dir), rebuilt per run by
+    * q_cdc_incremental AND q_ingest_gate before r20 (the
+    * [[Dedup.sessionBaseBandIndex]] family). Keyed on chunk_md5, the
+    * containment probe's join key; ArtifactStore-backed, sidecar-
+    * billed, cold-cleared.
+    */
+  private[ext] val sessionBaseChunkKeepers =
+    SessionArtifact.frame("base_chunk_keepers", Pin.KeyedBy("chunk_md5")) {
+      (spark, d) => keeperChunkFingerprints(Dedup.baseSlice(spark, d))
+    }
+
+  /** The session DSIR weight table (unordered) — parameter-free given
+    * the corpus (the fixed [[DsirTarget]] slice), and consumed whole by
+    * TWO registered queries: q_dsir_weights reads it sorted,
+    * q_dsir_select re-ran the entire two-pass build (delta table +
+    * scoring explode) per run just to keep its top-k. One build per
+    * session, billed to the `artifact_builds` sidecar;
+    * ArtifactStore-backed; ~|pool| rows × 4 BIGINT columns pinned per
+    * (session, dir). The build's bucket-count checkpoint is released
+    * once the pinned copy materializes.
+    */
+  private[ext] val sessionDsirWeights =
+    SessionArtifact.frameWithScratch("dsir_weights", Pin.Checkpoint) { (spark, d) =>
+      val (weights, cts) = dsirWeightsOf(Tables.documents(spark, d))
+      (weights, Seq(cts))
+    }
+
   /** DSIR importance weights (Data Selection via Importance Resampling,
     * Xie et al. 2023): score every RAW document by how much more likely
     * its hashed-bigram features are under the TARGET slice's bucket
@@ -1128,8 +1166,8 @@ object Corpus {
     * cheap-feature proxy for "select raw data that looks like the
     * high-quality target". The target slice here is the same
     * `doc_id % 20 = 7` convention as [[decontaminationStats]]'s eval
-    * slice (a stand-in for a caller-supplied target corpus; the
-    * DataFrame form takes an arbitrary predicate).
+    * slice ([[DsirTarget]], a stand-in for a caller-supplied target
+    * corpus).
     *
     * Output per raw doc: gram count, the exact micro-nat LLR sum, and a
     * length-normalized per-gram average in nano-nats (raw sums reward
@@ -1146,45 +1184,19 @@ object Corpus {
     * with no OOV branch; the streaming form [[dsirScoreAgainst]] adds
     * the OOV constant for unseen-bucket arrivals.
     */
-  /** The session CDC chunk-keeper set of the %4 base slice —
-    * parameter-free given (session, dir), rebuilt per run by
-    * q_cdc_incremental AND q_ingest_gate before r20 (the
-    * [[Dedup.sessionBaseBandIndex]] family). Keyed on chunk_md5, the
-    * containment probe's join key; ArtifactStore-backed, sidecar-
-    * billed, cold-cleared.
-    */
-  private[ext] val sessionBaseChunkKeepers =
-    SessionArtifact.frame("base_chunk_keepers", Pin.KeyedBy("chunk_md5")) {
-      (spark, d) => keeperChunkFingerprints(Dedup.baseSlice(spark, d))
-    }
-
-  /** The session DSIR weight table (unordered) — parameter-free given
-    * the corpus (the registered target predicate is the fixed
-    * doc_id % 20 = 7 eval-slice convention), and consumed whole by TWO
-    * registered queries: q_dsir_weights reads it sorted, q_dsir_select
-    * re-ran the entire two-pass build (delta table + scoring explode)
-    * per run just to keep its top-k. One build per session, billed to
-    * the `artifact_builds` sidecar; ArtifactStore-backed; ~|pool| rows
-    * × 4 BIGINT columns pinned per (session, dir).
-    */
-  private[ext] val sessionDsirWeights =
-    SessionArtifact.frame("dsir_weights", Pin.Checkpoint) { (spark, d) =>
-      val docs = Tables.documents(spark, d)
-      val targetPred = col("doc_id") % 20 === 7
-      val delta = dsirDeltaTable(docs, targetPred)
-      org.apache.spark.sql.GraftSql.unordered(scoreBuckets(
-        Tables.fanOut(docs).filter(col("text").isNotNull).filter(!targetPred),
-        broadcast(delta), oovDm = None))
-    }
-
   def dsirWeights(spark: SparkSession, d: String): DataFrame =
     sessionDsirWeights(spark, d).orderBy(col("doc_id"))
 
-  def dsirWeightsDf(docs: DataFrame, targetPred: Column): DataFrame = {
-    val delta = dsirDeltaTable(docs, targetPred)
-    scoreBuckets(
-      Tables.fanOut(docs).filter(col("text").isNotNull).filter(!targetPred),
-      broadcast(delta), oovDm = None)
+  /** The (unordered) DSIR weight table of a corpus frame, with the
+    * lazily checkpointed [[dsirBucketCounts]] it reads — the build of
+    * [[sessionDsirWeights]]. The caller releases the checkpoint once
+    * the weights are materialized.
+    */
+  private[graft] def dsirWeightsOf(docs: DataFrame): (DataFrame, DataFrame) = {
+    val cts = dsirBucketCounts(docs).localCheckpoint(false)
+    (org.apache.spark.sql.GraftSql.unordered(scoreBuckets(
+      Tables.fanOut(docs).filter(col("text").isNotNull).filter(!DsirTarget),
+      broadcast(dsirDeltaTable(cts)), oovDm = None)), cts)
   }
 
   /** Shared scoring tail: explode bigram buckets, join the delta table,
@@ -1252,16 +1264,13 @@ object Corpus {
                     outPath: String, checkpoint: String,
                     triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val targetPred = col("doc_id") % 20 === 7
-    val frozen = Freeze.scoped(checkpoint, dsirDeltaTable(baseDocs, targetPred))
+    // the bucket counts are frozen in the sink's scope beside the delta
+    // table, so Freeze.release(checkpoint) drops both
+    val counts = Freeze.scoped(checkpoint, dsirBucketCounts(baseDocs))
+    val frozen = Freeze.scoped(checkpoint, dsirDeltaTable(counts))
     // OOV constant from the base totals: ct = cr = 0 in the delta
     // formula. One bounded collect (2 scalars) at sink-construction time.
-    val tot = Tables.fanOut(baseDocs).filter(col("text").isNotNull)
-      .select(targetPred.as("is_target"),
-        explode(bigramBuckets(TextAnalysis.tokens(col("text")))).as("bkt"))
-      .agg(sum(when(col("is_target"), 1L).otherwise(0L)),
-        sum(when(col("is_target"), 0L).otherwise(1L)))
-      .collect()(0)
+    val tot = counts.agg(sum(col("ct")), sum(col("cr"))).collect()(0)
     // an empty base corpus makes both SUMs null — fail with the
     // backoffScoreAgainst discipline instead of an opaque NPE below
     require(!tot.isNullAt(0) && !tot.isNullAt(1),

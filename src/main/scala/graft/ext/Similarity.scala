@@ -1110,14 +1110,19 @@ object Similarity {
     trainPqCodebooksInt(residualVecs(spark, d, nlist).select(col("vec_id"), col("rv")), m, kSub)
   }
 
-  /** …and the raw-vector fit of [[semanticDedupPqDropList]], keyed
-    * (m, kSub).
+  /** …and the raw-vector fit of [[semanticDedupPqDropList]] at the
+    * registered (PqM, PqKSub).
     */
-  private val rawPqCodebooks = SessionArtifact.value[(Int, Int),
-      Array[Array[Array[Long]]]]("pq_codebooks") { case (spark, d, (m, kSub)) =>
-    trainPqCodebooksInt(snappedVecs(Tables.embeddings(spark, d)
-      .filter(col("embedding").isNotNull)), m, kSub)
+  private val rawPqCodebooks = SessionArtifact.value[Unit,
+      Array[Array[Array[Long]]]]("pq_codebooks") { (spark, d, _) =>
+    rawPqFit(Tables.embeddings(spark, d))
   }
+
+  /** The integer PQ codebooks of `emb`'s raw snapped vectors — the build
+    * of the raw-vector `pq_codebooks` fit.
+    */
+  private[graft] def rawPqFit(emb: DataFrame): Array[Array[Array[Long]]] =
+    trainPqCodebooksInt(snappedVecs(emb), PqM, PqKSub)
 
   /** (vec_id, cell, rv): every embedded vector's integer residual
     * against the session coarse fit at `nlist` cells.
@@ -1751,7 +1756,7 @@ object Similarity {
     * the [[cosineTopK]] snap discipline — so the whole graph replays
     * in DuckDB (the sampled quantizer remains the ANN-serving family's
     * scale seam, where the model only routes a handful of queries).
-    * [[qualityPropagationDf]] rides this same graph: ONE neighbor
+    * [[qualityPropagation]] rides this same graph: ONE neighbor
     * definition, no drift.
     */
   /** Shared with the q_knn_graph / q_quality_propagation oracle
@@ -1767,8 +1772,9 @@ object Similarity {
     * graph (same Lloyd fit, same probes, same top-k), so building it
     * twice per session buys nothing (~4 s duplicated at sf0.1). The
     * pinned frame is localCheckpoint-materialized (corpus × k rows);
-    * a cache hit is bit-identical to a rebuild. Other parameters go
-    * through [[knnGraphDf]].
+    * a cache hit is bit-identical to a rebuild. Its build is
+    * [[knnGraphDf]], which the serving sinks also run over their frozen
+    * bases.
     */
   def knnGraph(spark: SparkSession, d: String): DataFrame = sessionKnnGraph(spark, d)
 
@@ -1806,6 +1812,12 @@ object Similarity {
     topKFinal(scored, "cos_sim_r", k)
   }
 
+  /** Shared with the q_quality_propagation oracle builder (one
+    * definition, no drift — the SeqMinSupport discipline).
+    */
+  private[graft] val QualityPropK = 3
+  private[graft] val QualityPropAlpha = 0.5
+
   /** Graph-based QUALITY PROPAGATION over the kNN graph: each embedded
     * document's heuristic quality score blends with the mean score of
     * its k nearest semantic neighbors (smoothed = α·own +
@@ -1839,36 +1851,18 @@ object Similarity {
     * nprobe=2) — one definition shared with q_knn_graph, both
     * oracle-replayed.
     */
-  /** Shared with the q_quality_propagation oracle builder (one
-    * definition, no drift — the SeqMinSupport discipline).
-    */
-  private[graft] val QualityPropK = 3
-  private[graft] val QualityPropAlpha = 0.5
-
-  def qualityPropagation(spark: SparkSession, d: String,
-                         alpha: Double = QualityPropAlpha): DataFrame =
+  def qualityPropagation(spark: SparkSession, d: String): DataFrame =
     // rides the session's registered-parameter kNN graph (shared with
     // q_knn_graph — one build per session; QualityPropK == KnnK)
-    qualityPropagationOnGraph(graft.Tables.documents(spark, d),
-      knnGraph(spark, d), alpha)
+    qualityPropagationOnGraph(graft.Tables.documents(spark, d), knnGraph(spark, d))
 
-  /** DataFrame form (docs: doc_id + text; emb: vec_id + embedding;
-    * vec_id keys into doc_id — the [[embeddingCoverage]] correspondence).
-    * `nlist` > 0 pins the cell count (tests); 0 derives it from corpus
-    * size exactly as [[knnGraphDf]] does.
+  /** The blend core over a document frame (doc_id + text) and a
+    * prebuilt (query_id, neighbor_id, ...) [[knnGraphDf]] frame whose
+    * vec_ids key into doc_id — the [[embeddingCoverage]]
+    * correspondence.
     */
-  def qualityPropagationDf(docs: DataFrame, emb: DataFrame, k: Int = 3,
-                           alpha: Double = 0.5, nlist: Int = 0,
-                           targetCellSize: Int = 512): DataFrame =
-    // the ONE neighbor definition: the oracle-exact kNN graph
-    // ([[knnGraphDf]] — Lloyd cells, nprobe=2, cosine-topk discipline)
-    qualityPropagationOnGraph(docs, knnGraphDf(emb, k, nlist, targetCellSize), alpha)
-
-  /** The blend core over a prebuilt (query_id, neighbor_id, ...) kNN
-    * graph frame.
-    */
-  private def qualityPropagationOnGraph(docs: DataFrame, g: DataFrame,
-                                        alpha: Double): DataFrame = {
+  private[graft] def qualityPropagationOnGraph(docs: DataFrame, g: DataFrame): DataFrame = {
+    val alpha = QualityPropAlpha
     // quality rides as its exact micro-unit integer so the neighbor
     // mean is an order-free BIGINT sum (the exactness-ladder rule)
     val q = docs.filter(col("text").isNotNull && length(col("text")) > 0)
@@ -1906,27 +1900,14 @@ object Similarity {
     * engine-identical — the cosineTopK rank discipline applied to a
     * filter). The PQ variant below rides the same fit with integer
     * codebooks — full oracle since r15.
+    *
+    * The drop list of `emb` under fitted cell centroids `cents`: the
+    * registered queries pass the session fit of [[semDedupCells]]
+    * cells (deterministic, so bit-identical to a refit), and tests pass
+    * a fresh [[Clustering.kmeansCentroids]] fit of their own vectors.
     */
-  def semanticDedupDropList(emb: DataFrame, threshold: Double = SemDedupThreshold,
-                            nlist: Int = 0, targetCellSize: Int = 512,
-                            fitKey: Option[(SparkSession, String)] = None): DataFrame = {
+  def semanticDedupDropList(emb: DataFrame, cents: Array[Array[Long]]): DataFrame = {
     val embN = emb.filter(col("embedding").isNotNull)
-    val k =
-      if (nlist > 0) nlist
-      else {
-        val n = embN.count()
-        require(n > 0, "semantic dedup needs a non-empty embedding corpus")
-        val derived = (n + targetCellSize - 1) / targetCellSize
-        (derived max 1L min 1024L min n).toInt
-      }
-    // the derived-k cells fit is deterministic and shared by both
-    // dedup variants — the registered wrappers ride the session fit
-    // cache (bit-identical to a refit); Df-form callers keep their
-    // standalone fits for planted fixtures
-    val cents = fitKey match {
-      case Some((sp, dd)) => Clustering.fittedCentroids(sp, dd, k)
-      case None => Clustering.kmeansCentroids(emb, k)
-    }
     val cells = embN
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       .join(Clustering.cellAssignments(embN, cents), Seq("vec_id"))
@@ -1934,7 +1915,7 @@ object Similarity {
     val b = cells.as("b")
     a.join(b, col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .filter(round(dot(col("a.embedding"), col("b.embedding"))
-        / (col("a.nrm") * col("b.nrm")), 6) > threshold)
+        / (col("a.nrm") * col("b.nrm")), 6) > SemDedupThreshold)
       .select(col("b.vec_id").as("vec_id")).distinct()
   }
 
@@ -1957,39 +1938,21 @@ object Similarity {
     * float-vector drop list and exact-duplicate capture are asserted
     * in DedupSimilaritySpec. Same keep policy (lowest id per near-dup
     * group survives), same corpus-derived nlist rule, no RNG.
+    *
+    * Takes the fitted cell centroids and the [[rawPqFit]] codebooks:
+    * the registered query passes the session fits, tests fresh ones.
     */
-  def semanticDedupPqDropList(emb: DataFrame, threshold: Double = SemDedupThreshold,
-                              nlist: Int = 0, targetCellSize: Int = 512,
-                              m: Int = PqM, kSub: Int = PqKSub,
-                              fitKey: Option[(SparkSession, String)] = None): DataFrame = {
+  def semanticDedupPqDropList(emb: DataFrame, cents: Array[Array[Long]],
+                              cbs: Array[Array[Array[Long]]],
+                              threshold: Double = SemDedupThreshold): DataFrame = {
     val embN = emb.filter(col("embedding").isNotNull)
-    val k =
-      if (nlist > 0) nlist
-      else {
-        val n = embN.count()
-        require(n > 0, "semantic dedup needs a non-empty embedding corpus")
-        val derived = (n + targetCellSize - 1) / targetCellSize
-        (derived max 1L min 1024L min n).toInt
-      }
     // FULL ORACLE since r15: cells from the full-corpus integer
     // Lloyd's (the semanticDedupDropList fit — the oracle reuses its
     // qpv/kfa replay), codes from the per-subspace integer Lloyd's
     // codebooks, SDC scores exact BIGINT dots of the integer
     // reconstructions; the only float ops are the final
     // sqrt/divide/round-6 per pair, engine-identical.
-    val cents = fitKey match {
-      case Some((sp, dd)) => Clustering.fittedCentroids(sp, dd, k)
-      case None => Clustering.kmeansCentroids(emb, k)
-    }
     val snapped = snappedVecs(embN)
-    // the raw-vector codebook fit is deterministic, so the registered
-    // (session, dir) wrapper shares it through the session fit cache
-    // (a hit is bit-identical to a refit; Df-form callers keep their
-    // standalone fits so planted-fixture tests are untouched)
-    val cbs = fitKey match {
-      case Some((sp, dd)) => rawPqCodebooks(sp, dd, (m, kSub))
-      case None => trainPqCodebooksInt(snapped, m, kSub)
-    }
     val enc = pqEncodeIntUdf(cbs, None)
     val cells = snapped
       .join(Clustering.cellAssignments(embN, cents), Seq("vec_id"))
@@ -2020,22 +1983,36 @@ object Similarity {
     * SDC replay end-to-end in DuckDB; float-path parity additionally
     * test-asserted).
     */
-  def semanticDedupStatsPq(spark: SparkSession, d: String,
-                           threshold: Double = SemDedupThreshold,
-                           nlist: Int = 0): DataFrame = {
+  def semanticDedupStatsPq(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    val dropped = semanticDedupPqDropList(emb, threshold, nlist,
-        fitKey = Some((spark, d)))
-      .withColumn("is_dropped", lit(1L))
+    val cents = Clustering.fittedCentroids(spark, d, semDedupCells(emb))
+    semDedupLabelStats(emb,
+      semanticDedupPqDropList(emb, cents, rawPqCodebooks(spark, d)))
+  }
+
+  /** The derived cell count of both semantic-dedup fits: one cell per
+    * [[KnnTargetCellSize]] embedded vectors, at most 1024 — the
+    * [[knnGraphDf]] nlist rule (one counting job).
+    */
+  private[graft] def semDedupCells(emb: DataFrame): Int = {
+    val n = emb.filter(col("embedding").isNotNull).count()
+    require(n > 0, "semantic dedup needs a non-empty embedding corpus")
+    val derived = (n + KnnTargetCellSize - 1) / KnnTargetCellSize
+    (derived max 1L min 1024L min n).toInt
+  }
+
+  /** Per-label (n_vecs, n_dropped, n_kept) of `emb` against a drop list —
+    * the shared tail of both semantic-dedup audits.
+    */
+  private[graft] def semDedupLabelStats(emb: DataFrame, dropList: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("label"))
-      .join(dropped, Seq("vec_id"), "left")
+      .join(dropList.withColumn("is_dropped", lit(1L)), Seq("vec_id"), "left")
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(coalesce(col("is_dropped"), lit(0L))).as("n_dropped"))
       .select(col("label"), col("n_vecs"), col("n_dropped"),
         (col("n_vecs") - col("n_dropped")).as("n_kept"))
       .orderBy(col("label"))
-  }
 
   /** Per-label audit of [[semanticDedupDropList]] over the embeddings
     * table: how many vectors each label keeps/drops at the threshold.
@@ -2045,20 +2022,10 @@ object Similarity {
     * picks from actual size estimates, and at scale this is a plain
     * shuffle join on vec_id rather than a driver-sized broadcast.
     */
-  def semanticDedupStats(spark: SparkSession, d: String,
-                         threshold: Double = 0.4, nlist: Int = 0): DataFrame = {
+  def semanticDedupStats(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    val dropped = semanticDedupDropList(emb, threshold, nlist,
-        fitKey = Some((spark, d)))
-      .withColumn("is_dropped", lit(1L))
-    emb.select(col("vec_id"), col("label"))
-      .join(dropped, Seq("vec_id"), "left")
-      .groupBy(col("label"))
-      .agg(count(lit(1)).as("n_vecs"),
-        sum(coalesce(col("is_dropped"), lit(0L))).as("n_dropped"))
-      .select(col("label"), col("n_vecs"), col("n_dropped"),
-        (col("n_vecs") - col("n_dropped")).as("n_kept"))
-      .orderBy(col("label"))
+    semDedupLabelStats(emb, semanticDedupDropList(emb,
+      Clustering.fittedCentroids(spark, d, semDedupCells(emb))))
   }
 
   /** Embedding-cosine near-duplicate pairs above a threshold, within a
@@ -2342,23 +2309,14 @@ object Similarity {
     * navigability is the honest cost of the layer-0-only analogue —
     * production HNSW seeds from upper layers).
     */
-  def graphAnnTopK(spark: SparkSession, d: String, nQueries: Int = 8,
-                   k: Int = 5, beamWidth: Int = GraphAnnBeamWidth,
-                   rounds: Int = GraphAnnRounds): DataFrame =
-    graphAnnOn(
-      Tables.embeddings(spark, d),
-      undirectedEdges(knnGraph(spark, d)),
-      nQueries, k, beamWidth, rounds)
+  def graphAnnTopK(spark: SparkSession, d: String): DataFrame =
+    graphAnnOn(Tables.embeddings(spark, d), knnGraph(spark, d))
 
-  /** DataFrame form (embRaw must have vec_id + embedding); builds its
-    * own kNN edges via [[knnGraphDf]].
+  /** The registered query set and result size of [[graphAnnTopK]]: the
+    * ids below 8 query, top-5 each (the oracle's literals).
     */
-  def graphAnnTopKDf(embRaw: DataFrame, nQueries: Int = 8, k: Int = 5,
-                     beamWidth: Int = GraphAnnBeamWidth,
-                     rounds: Int = GraphAnnRounds): DataFrame =
-    graphAnnOn(embRaw,
-      undirectedEdges(knnGraphDf(embRaw)),
-      nQueries, k, beamWidth, rounds)
+  private val GraphAnnQueries = 8
+  private val GraphAnnK = 5
 
   /** Both directions of the kNN edge table (k rows per node each
     * way, duplicates possible when i and j are mutual neighbors — the
@@ -2369,24 +2327,29 @@ object Similarity {
     fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  private def graphAnnOn(embRaw: DataFrame, edges: DataFrame, nQueries: Int,
-                         k: Int, beamWidth: Int, rounds: Int): DataFrame = {
+  /** The registered beam search of `embRaw` (vec_id + embedding) over
+    * its [[knnGraphDf]] graph `knn`.
+    */
+  private[graft] def graphAnnOn(embRaw: DataFrame, knn: DataFrame): DataFrame = {
     // the recurrence gathers candidate embeddings rounds+1 times; a
     // lazy checkpoint makes every gather probe ONE materialized narrow
     // frame instead of rescanning the embeddings table per round
     val emb = embRaw.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       .localCheckpoint(false)
-    val queries = emb.filter(col("vec_id") < nQueries)
+    val queries = emb.filter(col("vec_id") < GraphAnnQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
     // deterministic entry point: the minimum embedded id (1-row scalar
     // collect — part of the documented recurrence exemption)
     val entry = emb.agg(min(col("vec_id"))).head().getLong(0)
     // batch self-queries exclude their own id from the neighbor list;
-    // the serve sink's EXTERNAL queries keep it (annServeSink contract)
-    graphAnnCore(emb, edges, queries, entry, k, beamWidth, rounds,
-      excludeSelf = true)
+    // the serve sink's EXTERNAL queries keep it (annServeSink contract).
+    // The core returns a driver-built local frame, so the checkpoint
+    // has no reader left once it returns.
+    try graphAnnCore(emb, undirectedEdges(knn), queries, entry, GraphAnnK,
+      GraphAnnBeamWidth, GraphAnnRounds, excludeSelf = true)
+    finally org.apache.spark.sql.GraftSql.releaseCheckpoint(emb)
   }
 
   /** The beam recurrence over an ALREADY-NARROWED (vec_id, embedding,

@@ -15,46 +15,32 @@ object TextAnalysis {
   /** Whitespace tokens of a text column. */
   def tokens(c: Column): Column = split(trim(c), "\\s+")
 
-  /** True iff `docs` is (or derives from) the pre-tokenized
-    * [[sessionTokens]] artifact rather than a raw document frame.
+  /** The tokenized form of a document frame: null-text rows dropped,
+    * `tokens(text)` stored as `toks`, and the id columns `ids` carried
+    * through. It does not fan out; a caller over a narrow scan fans out
+    * first. The n-gram, textrank, span and substring cores take this
+    * shape, and [[sessionTokens]] pins it over the corpus with both
+    * ids. A raw caller carries only the ids it reads: a build whose
+    * plan equals the pin's would be answered from the pin by the cache
+    * manager, re-routing a query the routing adjudication below keeps
+    * on scan-speed tokenization.
     */
-  private def hasToks(docs: DataFrame): Boolean =
-    docs.columns.contains("toks")
+  def tokenized(docs: DataFrame, ids: Seq[String] = Seq("doc_id")): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(ids.map(col) :+ tokens(col("text")).as("toks"): _*)
 
-  /** Token-array column of a corpus frame: the pre-tokenized session
-    * artifact passes its STORED array through; raw document frames
-    * tokenize in place — bit-identical output either way (the artifact
-    * stores exactly `tokens(text)`).
+  /** (idCols..., t): the per-document token-ARRAY stream of a
+    * [[tokenized]] frame — the shared head of every n-gram/window
+    * kernel.
     */
-  private def toksOf(docs: DataFrame): Column =
-    if (hasToks(docs)) col("toks") else tokens(col("text"))
+  private def tokStream(toks: DataFrame, idCols: Seq[Column]): DataFrame =
+    toks.select(idCols :+ col("toks").as("t"): _*)
 
-  /** Drop null-text rows of a raw frame; the artifact is pre-filtered
-    * (and carries no text column to test).
+  /** (idCols..., term): the exploded token stream of a [[tokenized]]
+    * frame.
     */
-  private def nonNullText(docs: DataFrame): DataFrame =
-    if (hasToks(docs)) docs else docs.filter(col("text").isNotNull)
-
-  /** (idCols..., t): the per-document token-ARRAY stream — the shared
-    * head of every n-gram/window kernel. Raw frames fan out, drop null
-    * text, and tokenize (the historical in-place shape); the
-    * [[sessionTokens]] artifact passes through WITHOUT re-scanning,
-    * re-filtering, or re-shuffling (its checkpoint already carries the
-    * session's fan-out partitioning).
-    */
-  private def tokStream(docs: DataFrame, idCols: Seq[Column]): DataFrame =
-    if (hasToks(docs)) docs.select(idCols :+ col("toks").as("t"): _*)
-    else Tables.fanOut(docs).filter(col("text").isNotNull)
-      .select(idCols :+ tokens(col("text")).as("t"): _*)
-
-  /** (idCols..., term): the exploded token stream. Null text explodes
-    * to zero rows on both paths (split(NULL) is NULL and explode drops
-    * it; the artifact filtered the row at build), so no extra filter
-    * is needed — bit-identical either way.
-    */
-  private def termStream(docs: DataFrame, idCols: Seq[Column]): DataFrame =
-    if (hasToks(docs)) docs.select(idCols :+ explode(col("toks")).as("term"): _*)
-    else docs.select(idCols :+ explode(tokens(col("text"))).as("term"): _*)
+  private def termStream(toks: DataFrame, idCols: Seq[Column]): DataFrame =
+    toks.select(idCols :+ explode(col("toks")).as("term"): _*)
 
   /** BPE-ish subword-count heuristic: word chunks + digits + punctuation
     * each count as a token (a cl100k-style regex approximation).
@@ -295,7 +281,7 @@ object TextAnalysis {
   private[graft] case class TextrankKeyword(rk: Int, term: String,
                                             rank_nano: Long)
 
-  /** DataFrame form (docs must have doc_id + text).
+  /** The keyword core over a [[tokenized]] frame.
     *
     * Execution shape (r19): the recurrence is PER-DOCUMENT
     * self-contained — every join and aggregate of the former
@@ -319,12 +305,11 @@ object TextAnalysis {
     * equivalence is asserted by the tri-scale oracle gate and the
     * kernel edge-case spec rather than trusted.
     */
-  def textrankKeywordsDf(docs: DataFrame, iters: Int = Graph.RankIters,
+  def textrankKeywordsDf(toks: DataFrame, iters: Int = Graph.RankIters,
                          topK: Int = TextrankTopK,
                          minLen: Int = TextrankMinLen): DataFrame = {
     require(iters >= 1, s"textrank needs >= 1 iteration, got $iters")
-    val toksed = nonNullText(docs)
-      .select(col("doc_id"), toksOf(docs).as("t"))
+    val toksed = tokStream(toks, Seq(col("doc_id")))
     val kern = udf { toks: scala.collection.Seq[String] =>
       textrankKernel(toks, iters, topK, minLen)
     }
@@ -449,7 +434,7 @@ object TextAnalysis {
                    triggerMs: Long = 10000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
-      textrankKeywordsDf(batch)
+      textrankKeywordsDf(tokenized(batch))
     }
 
   /** Per-doc (n_bigrams, top_count, dup_count) over adjacent word
@@ -1288,8 +1273,8 @@ object TextAnalysis {
     // array to an attribute first lets InferFiltersFromGenerate push a
     // size()>0 filter below the projection, where alias substitution
     // re-expands it to a SECOND split() per document (2.3× on this
-    // stage at sf0.1) — see Cleaning.winnowSpanDedupStatsDf's note
-    val toks = termStream(docs, Seq(col("doc_id")))
+    // stage at sf0.1) — see Cleaning.winnowSpanDedupCore's note
+    val toks = docs.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
     val counts = toks.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("tot")) // scalar; broadcast below
     val scaled = toks.join(counts, "term")
@@ -1305,7 +1290,7 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** The (w1, w2) bigram-pair stream of a documents frame, with the
+  /** The (w1, w2) bigram-pair stream of a [[tokenized]] frame, with the
     * given id columns carried through. Tokens are materialized as an
     * attribute INSIDE this helper — the per-element lambda may only
     * reference that attribute, so the [[Dedup.shinglesOfTokens]] trap
@@ -1333,10 +1318,11 @@ object TextAnalysis {
     * tokenizing so the cache carries the session's parallelism,
     * null-text rows dropped (they explode to zero rows on every
     * consumer path anyway), READ-ONLY to consumers (the [[Graph]]
-    * edge-cache discipline). Consumers route through
-    * [[tokStream]]/[[termStream]]/[[toksOf]], which pass the stored
-    * array through bit-identically; every oracle replays its own full
-    * tokenize chain, so parity is unaffected.
+    * edge-cache discipline). It is [[tokenized]] over the fanned-out
+    * corpus: the cores that take a tokenized frame read this pin, and
+    * their tests read a fresh [[tokenized]] build of their own docs,
+    * which stores the same `tokens(text)`; every oracle replays its own
+    * full tokenize chain, so parity is unaffected.
     *
     * MEASURED ROUTING ADJUDICATION (sf0.1, min-of-3): the cached
     * array pays off ONLY where the consumer does heavy per-array work
@@ -1347,10 +1333,11 @@ object TextAnalysis {
     * unigram, KL, vocab-coverage, entropy-rate +21%) are FASTER
     * re-splitting at parquet-scan speed — decoding the fat cached
     * array column costs more than the regex — so those stay on raw
-    * text by measurement, not oversight. The same trade governs a
-    * 100 TB run: materialize the tokenized table for the n-gram
-    * index-building passes; keep scan-speed tokenization for
-    * single-explode statistics.
+    * text by measurement, not oversight: their cores take the raw
+    * document frame and tokenize it in the fused explode. The same
+    * trade governs a 100 TB run: materialize the tokenized table for
+    * the n-gram index-building passes; keep scan-speed tokenization
+    * for single-explode statistics.
     */
   private[graft] val sessionTokens =
     // columnar cache, not localCheckpoint: consumers re-READ this
@@ -1358,9 +1345,7 @@ object TextAnalysis {
     // column batches scan much faster than a checkpointed row-RDD
     // (measured on the first form of this artifact)
     SessionArtifact.frame("tokenized_docs", Pin.Persist) { (spark, d) =>
-      Tables.fanOut(Tables.documents(spark, d))
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
+      tokenized(Tables.fanOut(Tables.documents(spark, d)), Seq("doc_id", "source"))
     }
 
   /** The session corpus bigram count table — the ONE (w1, w2) count
@@ -1374,7 +1359,7 @@ object TextAnalysis {
       bigramCountTable(sessionTokens(spark, d))
     }
 
-  /** The (w1, w2, c2) bigram count table of a token or document frame —
+  /** The (w1, w2, c2) bigram count table of a [[tokenized]] frame —
     * the build of [[sessionBigramCounts]].
     */
   private[graft] def bigramCountTable(docs: DataFrame): DataFrame =
@@ -1406,8 +1391,8 @@ object TextAnalysis {
   def bigramLogProb(spark: SparkSession, d: String): DataFrame =
     bigramScoreOn(sessionTokens(spark, d), sessionBigramCounts(spark, d))
 
-  /** The bigram scorer over a token or document frame (doc_id + toks,
-    * or doc_id + text) and a [[bigramCountTable]].
+  /** The bigram scorer over a [[tokenized]] frame and a
+    * [[bigramCountTable]].
     */
   private[graft] def bigramScoreOn(docs: DataFrame, c2: DataFrame): DataFrame = {
     val pairs = bigramPairStream(docs, Seq(col("doc_id")))
@@ -1429,7 +1414,7 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** The (w1, w2, w3) trigram stream of a documents frame — the order-3
+  /** The (w1, w2, w3) trigram stream of a [[tokenized]] frame — the order-3
     * sibling of [[bigramPairStream]], same materialized-token-attribute
     * discipline (the shinglesOfTokens lambda trap cannot reappear) and
     * the same descending-sequence guard for docs under three tokens.
@@ -1501,7 +1486,7 @@ object TextAnalysis {
     // the wire, §2.3).
     backoffScoreOn(sessionTokens(spark, d), sessionBackoffScores(spark, d))
 
-  /** The trigram scorer over a token or document frame and an
+  /** The trigram scorer over a [[tokenized]] frame and an
     * (h3, mlp) score table ([[backoffMlpTable]]).
     */
   private[graft] def backoffScoreOn(docs: DataFrame, scores: DataFrame): DataFrame =
@@ -1519,7 +1504,8 @@ object TextAnalysis {
     * micro-nat-snapped backoff log-score, string-keyed. The model
     * table of [[mooreLewisSelect]] and of the streaming form
     * ([[backoffScoreAgainst]] / [[backoffScoreSink]]), which scores
-    * ARRIVALS against the frozen table of a base corpus.
+    * ARRIVALS against the frozen table of a base corpus. Takes a
+    * [[tokenized]] frame.
     */
   def backoffScoreTable(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1619,7 +1605,7 @@ object TextAnalysis {
     (lm, mooreLewisNs(lm).localCheckpoint())
   }
 
-  /** Both stupid-backoff trigram LMs of a token or document frame (the
+  /** Both stupid-backoff trigram LMs of a [[tokenized]] frame (the
     * [[mlTarget]] slice and the general pool) merged into ONE
     * gram-keyed (w1, w2, w3, in_mlp, gen_mlp, n_in, n_gen) table, each
     * model's N stamped on every row so one frame carries the whole
@@ -1658,7 +1644,7 @@ object TextAnalysis {
     lm.agg(guarded("n_in"), guarded("n_gen"))
   }
 
-  /** Moore–Lewis selection over a token or document frame: its pool
+  /** Moore–Lewis selection over a [[tokenized]] frame: its pool
     * (everything outside [[mlTarget]]) scored against a
     * [[mooreLewisLm]] table and its [[mooreLewisNs]] frame.
     */
@@ -1765,7 +1751,7 @@ object TextAnalysis {
     withCounts.crossJoin(broadcast(withCounts.agg(sum(col("c3")).as("n"))))
       .select(col("h3"), floor(log(backoff3Score) * 1e6 + 0.5).cast("long").as("mlp"))
 
-  /** The hash-keyed trigram TYPE table of a token or document frame: c3
+  /** The hash-keyed trigram TYPE table of a [[tokenized]] frame: c3
     * per h3 with all four backoff totals attached as window sums — the
     * count shuffle of [[sessionBackoffScores]], on the 8-byte h3 key
     * (the single-explode restructure the 5-gram family proved out).
@@ -1822,7 +1808,7 @@ object TextAnalysis {
     * expectation n²/2^129 ~ 10^-15 at n = 10^12 — at twice the key
     * bytes per exchange. CleaningSpec asserts the two key widths produce
     * identical scores on collision-free data. The same argument covers
-    * [[graft.ext.Cleaning.spanDedupStatsDf]]'s span hashes, where a
+    * [[graft.ext.Cleaning.spanDedupStats]]'s span hashes, where a
     * collision wrongly REMOVES one n-gram span of one document
     * (bounded by the same ~n/2^64 per-span probability; its oracle is
     * likewise string-keyed).
@@ -1836,7 +1822,7 @@ object TextAnalysis {
     * plus the eight backoff-slice hashes (ctx4/suffix4/ctx3/suffix3/
     * ctx2/suffix2/ctx1/unigram), all computed at explode time — gram
     * STRINGS never leave the scan stage (the hash-not-string trick of
-    * [[graft.ext.Cleaning.spanDedupStatsDf]] applied to LM counting,
+    * [[graft.ext.Cleaning.spanDedupStats]] applied to LM counting,
     * exactly as the trigram scaladoc's cost note prescribes: 72 bytes
     * of fixed-width keys per position instead of five strings). With
     * `wide`, every key is the 128-bit struct of [[gramHashWide]] (the
@@ -1893,7 +1879,7 @@ object TextAnalysis {
       sessionWindowCounts(spark, d, wide))
   }
 
-  /** The stupid-backoff 5-gram scorer over a token or document frame,
+  /** The stupid-backoff 5-gram scorer over a [[tokenized]] frame,
     * its [[fivegramTypeTable]] and that table's
     * [[fivegramWindowCounts]].
     */
@@ -1958,7 +1944,7 @@ object TextAnalysis {
     chooseWideKeys(Tables.documents(spark, d))
 
   /** The distinct-5-gram TYPE table (h5, c5, all eight slice hashes) of
-    * a token or document frame — the ONE corpus count shuffle every
+    * a [[tokenized]] frame — the ONE corpus count shuffle every
     * order-5 scorer (backoff / interpolated / Witten-Bell / Kneser-Ney)
     * builds on: the build of [[sessionC5]] and of the frozen-base
     * score tables.
@@ -2089,7 +2075,7 @@ object TextAnalysis {
     */
   private val InterpLambda = 0.5
 
-  /** The interpolated 5-gram scorer over a token or document frame,
+  /** The interpolated 5-gram scorer over a [[tokenized]] frame,
     * its type table and that table's window block.
     */
   private[graft] def interpScoreOn(docs: DataFrame, c5: DataFrame,
@@ -2213,7 +2199,7 @@ object TextAnalysis {
       sessionSmoothedStats(spark, d, wide))
   }
 
-  /** The Witten-Bell scorer over a token or document frame, its type
+  /** The Witten-Bell scorer over a [[tokenized]] frame, its type
     * table and that table's [[smoothedStatTable]].
     */
   private[graft] def wbScoreOn(docs: DataFrame, c5: DataFrame,
@@ -2242,7 +2228,7 @@ object TextAnalysis {
     * omitted. Docs must have doc_id + text.
     */
   def wbScoreTableDf(docs: DataFrame, wideKeys: Boolean = false): DataFrame = {
-    val c5 = fivegramTypeTable(docs, wideKeys)
+    val c5 = fivegramTypeTable(tokenized(Tables.fanOut(docs)), wideKeys)
     wbScoreFrom(c5, smoothedStatTable(c5))
   }
 
@@ -2285,7 +2271,7 @@ object TextAnalysis {
   /** Absolute discount D of the Kneser-Ney scorer — the oracle's 0.75. */
   private val KnDiscount = 0.75
 
-  /** The Kneser-Ney scorer over a token or document frame, its type
+  /** The Kneser-Ney scorer over a [[tokenized]] frame, its type
     * table and that table's [[smoothedStatTable]].
     */
   private[graft] def knScoreOn(docs: DataFrame, c5: DataFrame,
@@ -2314,14 +2300,14 @@ object TextAnalysis {
     * frozen-scoring contract). Docs must have doc_id + text.
     */
   def knScoreTableDf(docs: DataFrame, wideKeys: Boolean = false): DataFrame = {
-    val c5 = fivegramTypeTable(docs, wideKeys)
+    val c5 = fivegramTypeTable(tokenized(Tables.fanOut(docs)), wideKeys)
     knScoreFrom(c5, smoothedStatTable(c5))
   }
 
-  /** Score a batch of documents against a FROZEN backoff score table
-    * (built by [[backoffScoreTable]] on the base corpus). Trigrams the
-    * base never saw (no table row, or a w3 whose unigram fallback never
-    * existed) get the deterministic OOV floor alpha² / (N + 1) — one
+  /** Score a [[tokenized]] batch of documents against a FROZEN backoff
+    * score table (built by [[backoffScoreTable]] on the base corpus).
+    * Trigrams the base never saw (no table row, or a w3 whose unigram
+    * fallback never existed) get the deterministic OOV floor alpha² / (N + 1) — one
     * notch below every real unigram fallback, so out-of-domain text
     * scores strictly lower instead of being silently dropped. Per-doc
     * results depend only on the doc and the table, so the union of
@@ -2370,12 +2356,12 @@ object TextAnalysis {
     // files, so the table would track live data instead of being static)
     val frozen = Freeze.scoped(checkpoint, scoreTable)
     Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
-      backoffScoreAgainst(batch, frozen, alpha)
+      backoffScoreAgainst(tokenized(Tables.fanOut(batch)), frozen, alpha)
     }
   }
 
-  /** Score a batch of documents against a FROZEN smoothed score table
-    * ([[wbScoreTableDf]] / [[knScoreTableDf]]) — the [[backoffScoreAgainst]]
+  /** Score a [[tokenized]] batch of documents against a FROZEN smoothed
+    * score table ([[wbScoreTableDf]] / [[knScoreTableDf]]) — the [[backoffScoreAgainst]]
     * contract lifted to the ladder's top: each of the batch's 5-grams
     * looks up its hash in the table, and 5-grams the base corpus never
     * saw get the deterministic OOV floor `min(mlp) + floor(ln(0.5)·1e6)`
@@ -2428,7 +2414,7 @@ object TextAnalysis {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val frozen = Freeze.scoped(checkpoint, scoreTable)
     Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
-      smoothedScoreAgainst(batch, frozen)
+      smoothedScoreAgainst(tokenized(Tables.fanOut(batch)), frozen)
     }
   }
 
@@ -2603,7 +2589,8 @@ object TextAnalysis {
   /** DataFrame form (docs must have source + text). */
   def entropyRateDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairs = bigramPairStream(docs, Seq(col("source")))
+    val pairs = bigramPairStream(tokenized(Tables.fanOut(docs), Seq("source")),
+      Seq(col("source")))
     val c2 = pairs.groupBy(col("source"), col("w1"), col("w2"))
       .agg(count(lit(1)).as("c2"))
     val totals = c2.groupBy(col("source")).agg(sum(col("c2")).as("nn"))
@@ -2961,7 +2948,7 @@ object TextAnalysis {
 
   /** DataFrame form (docs must have source + text). */
   def zipfSlopeDf(docs: DataFrame): DataFrame = {
-    val counts = termStream(docs, Seq(col("source")))
+    val counts = docs.select(col("source"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term"))
       .agg(count(lit(1)).as("cnt"))
     val w = org.apache.spark.sql.expressions.Window
@@ -3007,8 +2994,8 @@ object TextAnalysis {
 
   /** DataFrame form (docs must have source + text). */
   def lengthModelDf(docs: DataFrame): DataFrame = {
-    val micro = nonNullText(docs)
-      .select(col("source"), size(toksOf(docs)).cast("long").as("nt"))
+    val micro = docs.filter(col("text").isNotNull)
+      .select(col("source"), size(tokens(col("text"))).cast("long").as("nt"))
       .filter(col("nt") > 0)
       .select(col("source"), col("nt"),
         floor(log(col("nt").cast("double")) * 1e6 + 0.5)
@@ -3055,10 +3042,11 @@ object TextAnalysis {
 
   /** DataFrame form (docs must have source + doc_id + text). */
   def heapsLawDf(docs: DataFrame): DataFrame = {
-    val base = nonNullText(docs)
+    val base = docs.filter(col("text").isNotNull)
     val perDoc = base.select(col("source"), col("doc_id"),
-      size(toksOf(docs)).cast("long").as("n_toks"))
-    val firstOcc = termStream(base, Seq(col("source"), col("doc_id")))
+      size(tokens(col("text"))).cast("long").as("n_toks"))
+    val firstOcc = base
+      .select(col("source"), col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term"))
       .agg(min(col("doc_id")).as("first_doc"))
     val newTypes = firstOcc
@@ -3114,7 +3102,7 @@ object TextAnalysis {
 
   /** DataFrame form (docs must have source + text). */
   def sourceKlDivergenceDf(docs: DataFrame): DataFrame = {
-    val toks = termStream(docs, Seq(col("source")))
+    val toks = docs.select(col("source"), explode(tokens(col("text"))).as("term"))
     val srcCounts = toks.groupBy(col("source"), col("term"))
       .agg(count(lit(1)).as("c"))
     val srcTotals = srcCounts.groupBy(col("source")).agg(sum(col("c")).as("ts"))
@@ -3167,17 +3155,25 @@ object TextAnalysis {
     * (source, term)-level count table — everything downstream (the
     * global vocab's top-k via TakeOrderedAndProject, the per-source
     * rollup against the broadcast vocab) runs over vocabulary-sized
-    * rows, not tokens. `vocabSize` defaults to 16 because the fixture
-    * vocabulary has 31 distinct terms (counts 26..964, measured r10) —
-    * a production V of 10⁴–10⁵ broadcasts the same way.
+    * rows, not tokens. The registered vocabulary is [[VocabCoverageSize]]
+    * = 16 terms because the fixture vocabulary has 31 distinct terms
+    * (counts 26..964, measured r10) — a production V of 10⁴–10⁵
+    * broadcasts the same way.
     */
-  def vocabCoverage(spark: SparkSession, d: String, vocabSize: Int = 16): DataFrame =
-    vocabCoverageDf(Tables.documents(spark, d), vocabSize)
+  def vocabCoverage(spark: SparkSession, d: String): DataFrame =
+    vocabCoverageDf(Tables.documents(spark, d), VocabCoverageSize)
 
-  /** DataFrame form (docs must have source + text). */
+  /** The registered vocabulary size of [[vocabCoverage]] — the oracle's
+    * `LIMIT 16`.
+    */
+  private val VocabCoverageSize = 16
+
+  /** DataFrame form (docs must have source + text); raw text, fanned
+    * out and tokenized at scan speed.
+    */
   def vocabCoverageDf(docs: DataFrame, vocabSize: Int): DataFrame = {
-    val st = termStream(if (hasToks(docs)) docs else Tables.fanOut(docs),
-        Seq(col("source")))
+    val st = Tables.fanOut(docs)
+      .select(col("source"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term"))
       .agg(count(lit(1)).as("cnt"))
     val vocab = st.groupBy(col("term")).agg(sum(col("cnt")).as("tot"))

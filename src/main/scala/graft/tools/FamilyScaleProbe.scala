@@ -132,9 +132,11 @@ object FamilyScaleProbe {
     def want(n: String): Boolean = famFilter.forall(_.contains(n))
     case class Family(name: String, prepare: Int => DataFrame,
                       op: DataFrame => DataFrame)
+    // the token-consuming cores run over the replica's tokenized build
+    def toks(in: DataFrame) = graft.ext.TextAnalysis.tokenized(graft.Tables.fanOut(in))
     val families = Seq(
       Family("substring", r => docReplicas(r),
-        in => graft.ext.Cleaning.substringDedupDf(in)),
+        in => graft.ext.Cleaning.substringDedupOf(graft.ext.Cleaning.spansWithMd5(toks(in)))),
       // minhash: token-suffix replicas are exactly right here (shingle
       // identities scatter per replica — no byte-alignment concern,
       // shingles are token-level), so true near-dup mass replicates R×
@@ -148,18 +150,18 @@ object FamilyScaleProbe {
       Family("docchunks", r => docReplicas(r),
         in => graft.ext.Corpus.docChunksDf(in, 64, 48)),
       Family("spandedup", r => docReplicas(r),
-        in => graft.ext.Cleaning.spanDedupStatsDf(in)),
+        in => graft.ext.Cleaning.spanDedupCore(toks(in))),
       Family("paragraph", r => docReplicas(r),
         in => graft.ext.Cleaning.paragraphDedupStatsDf(in)),
       Family("winnow", r => docReplicas(r),
-        in => graft.ext.Cleaning.winnowSpanDedupStatsDf(in)),
+        in => graft.ext.Cleaning.winnowSpanDedupCore(toks(in))),
       Family("containment", r => docReplicas(r),
         in => graft.ext.Dedup.ngramContainmentCorpusDf(in)),
       Family("audio", r => audioReplicas(r),
         in => graft.ext.Multimodal.audioNearDupPairs(
           graft.ext.Multimodal.plantedShiftedAudio(in, offset = 100000000L))),
       Family("graph_ann", r => embReplicas(r),
-        in => graft.ext.Similarity.graphAnnTopKDf(in)))
+        in => graft.ext.Similarity.graphAnnOn(in, graft.ext.Similarity.knnGraphDf(in))))
     println(f"${"family"}%-12s ${"R"}%4s ${"rows"}%10s ${"sec"}%8s ${"ratio"}%8s")
     families.filter(f => want(f.name)).foreach { fam =>
       var base = -1.0

@@ -48,15 +48,15 @@ class SessionRegistrySpec extends AnyFunSuite {
       s"declare a SessionArtifact instead of a session-keyed map in: ${offenders.mkString(", ")}")
   }
 
-  /** The `File.scala:member` places under `src/main/scala` whose
-    * non-comment lines call `fn(` — the enclosing member is the last
-    * `def`/`val` at the two-space object-member indent.
+  /** The `File.scala:member` places under `src/main/scala` with a
+    * non-comment line whose code (trailing `//` comment dropped) passes
+    * `hit` — the enclosing member is the last `def`/`val` at the
+    * two-space object-member indent.
     */
-  private def callersOf(fn: String): Seq[String] = {
+  private def placesWhere(hit: String => Boolean): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (no $root)")
     val member = """^  (?:(?:private|protected)(?:\[\w+\])?\s+|lazy\s+|final\s+|override\s+)*(?:def|val)\s+(\w+)""".r
-    val call = (s"\\b${java.util.regex.Pattern.quote(fn)}\\(").r
     Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
@@ -65,11 +65,24 @@ class SessionRegistrySpec extends AnyFunSuite {
           member.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
           val code = line.trim
           val isComment = code.startsWith("*") || code.startsWith("/*") || code.startsWith("//")
-          val calls = !isComment && call.findFirstIn(code.split("//")(0)).isDefined &&
-            !code.contains(s"def $fn(")
-          if (calls) Some(s"${p.getFileName}:$enclosing") else None
+          if (!isComment && hit(code.split("//")(0))) Some(s"${p.getFileName}:$enclosing")
+          else None
         }
       }.toSeq.sorted
+  }
+
+  /** The places whose code calls `fn(` (its definition excluded). */
+  private def callersOf(fn: String): Seq[String] = {
+    val call = (s"\\b${java.util.regex.Pattern.quote(fn)}\\(").r
+    placesWhere(code => call.findFirstIn(code).isDefined && !code.contains(s"def $fn("))
+  }
+
+  /** Fails naming every build whose callers differ from `allowed`. */
+  private def assertCallers(allowed: Map[String, Seq[String]]): Unit = {
+    val found = allowed.keys.toSeq.sorted.map(fn => fn -> callersOf(fn))
+    val extra = found.filter { case (fn, cs) => cs != allowed(fn) }
+    assert(extra.isEmpty, s"${found.map(_._2.size).sum} call sites; unexpected: " +
+      extra.map { case (fn, cs) => s"$fn( from ${cs.mkString(", ")}" }.mkString("; "))
   }
 
   test("only the session edge build and trustRankSink derive the link graph") {
@@ -87,16 +100,34 @@ class SessionRegistrySpec extends AnyFunSuite {
     // they are given, so a new call to one of these builds is a query
     // re-deriving a session pin. The serving sinks' frozen bases are
     // arbitrary frames, not corpus directories.
-    val allowed = Map(
+    assertCallers(Map(
       "bm25ContribAll" -> Seq("Search.scala:sessionContrib"),
       "sectionMdFrame" -> Seq("Search.scala:sectionServePlans", "Search.scala:sessionSections"),
       "fivegramTypeTable" -> Seq("TextAnalysis.scala:knScoreTableDf",
         "TextAnalysis.scala:sessionC5", "TextAnalysis.scala:wbScoreTableDf"),
       "trigramCountTable" -> Seq("TextAnalysis.scala:sessionBackoffScores"),
-      "bigramCountTable" -> Seq("TextAnalysis.scala:sessionBigramCounts"))
-    val found = allowed.keys.toSeq.sorted.map(fn => fn -> callersOf(fn))
-    val extra = found.filter { case (fn, cs) => cs != allowed(fn) }
-    assert(extra.isEmpty, s"${found.map(_._2.size).sum} call sites; unexpected: " +
-      extra.map { case (fn, cs) => s"$fn( from ${cs.mkString(", ")}" }.mkString("; "))
+      "bigramCountTable" -> Seq("TextAnalysis.scala:sessionBigramCounts")))
+  }
+
+  test("only the session artifacts, the serving sinks and the scale probe build the cleaning and similarity tables") {
+    // the boilerplate dictionary, the kNN graph and the substring span
+    // table each have one build: a registered query reads its session
+    // pin, a sink freezes the build over its base frame, and the scale
+    // probe times the build over replicated input
+    assertCallers(Map(
+      "boilerplateDictDf" -> Seq("Cleaning.scala:boilerplateCleanSink",
+        "Cleaning.scala:sessionBoilerDict"),
+      "knnGraphDf" -> Seq("FamilyScaleProbe.scala:main", "Similarity.scala:bucketedAnnState",
+        "Similarity.scala:graphAnnServeOnce", "Similarity.scala:graphAnnServeSink",
+        "Similarity.scala:sessionKnnGraph"),
+      "spansWithMd5" -> Seq("Cleaning.scala:sessionSubstrSpans", "FamilyScaleProbe.scala:main")))
+  }
+
+  test("no engine code picks a token path by testing a frame's columns for toks") {
+    // each token core takes one input shape, fixed by its call sites:
+    // a tokenized frame or raw text, never a schema-sniffed either
+    val schemaTest = """\b(?:columns|schema|fieldNames)\b.*"toks"""".r
+    val sniffers = placesWhere(code => schemaTest.findFirstIn(code).isDefined)
+    assert(sniffers.isEmpty, s"schema tests for toks in: ${sniffers.mkString(", ")}")
   }
 }

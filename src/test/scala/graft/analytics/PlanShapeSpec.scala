@@ -283,6 +283,13 @@ class PlanShapeSpec extends SparkTestBase {
         l.contains("Filter") && l.contains("split(trim")),
         s"$q: tokenizer duplicated into a Filter:\n$p")
     }
+    // a raw frame tokenized lazily (TextAnalysis.tokenized, no pin)
+    // binds the token array to an attribute before the n-gram explode:
+    // the tokenizer must still run once, never re-expanded into a Filter
+    val pt = graft.ext.TextAnalysis.bigramCountTable(graft.ext.TextAnalysis.tokenized(
+      graft.Tables.documents(spark, sfDir))).queryExecution.executedPlan.toString
+    assert("split\\(trim".r.findAllIn(pt).length == 1,
+      s"tokenizer must appear exactly once over a lazily tokenized frame:\n$pt")
     // and the winnow composition's exchange budget: the fingerprint
     // window (~2/(w+1) of the span stream — the operator's reason to
     // exist), the candidate-doc distinct, the candidate span window,

@@ -12,6 +12,9 @@ class CleaningSpec extends SparkTestBase {
   private def docsDf(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
 
+  /** A fresh tokenized build of `rows` — the token cores' input. */
+  private def toks(rows: (Long, String)*) = TextAnalysis.tokenized(docsDf(rows: _*))
+
   /** A fresh, uncached 5-gram type table of `df` with its window block
     * and its smoothed-stat block — the 5-gram scorer cores' inputs.
     */
@@ -57,11 +60,11 @@ class CleaningSpec extends SparkTestBase {
 
   test("span dedup: planted duplicated passage removed from the later doc only") {
     val passage = "alpha beta gamma delta epsilon zeta eta"
-    val df = docsDf(
+    val df = toks(
       10L -> s"$passage unique1 unique2 unique3",
       20L -> s"other tokens here entirely $passage",
       30L -> "fully distinct text with nothing shared at all here")
-    val out = Cleaning.spanDedupStatsDf(df, n = 5)
+    val out = Cleaning.spanDedupCore(df)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
     val byDoc = out.map(t => t._1 -> (t._2, t._3)).toMap
     // passage = 7 tokens -> 3 five-grams; doc 10 owns the min (doc,pos)
@@ -111,10 +114,10 @@ class CleaningSpec extends SparkTestBase {
 
   test("span dedup: within-doc repetition removes later copies; short docs report zero spans") {
     val rep = "a b c d e" // 5 tokens = 1 span
-    val df = docsDf(
+    val df = toks(
       1L -> s"$rep $rep $rep",  // 15 tokens = 11 spans; span at pos 1 repeats at 6, 11
       2L -> "tiny doc")         // < 5 tokens
-    val out = Cleaning.spanDedupStatsDf(df, n = 5)
+    val out = Cleaning.spanDedupCore(df)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(4))).toList
     val byDoc = out.map(t => t._1 -> t).toMap
     assert(byDoc(1L)._2 == 11)
@@ -144,12 +147,12 @@ class CleaningSpec extends SparkTestBase {
     val sevenTokens = "alpha beta gamma delta epsilon zeta eta"
     // doc_id >= 2^43 would alias across documents in the packed key
     val e1 = intercept[Exception] {
-      Cleaning.spanDedupStatsDf(docsDf((1L << 43) -> sevenTokens), n = 5).collect()
+      Cleaning.spanDedupCore(toks((1L << 43) -> sevenTokens)).collect()
     }
     assert(causeChain(e1).contains("packing overflow"), causeChain(e1))
     // negative doc_id corrupts the shiftleft pack the same way
     val e2 = intercept[Exception] {
-      Cleaning.spanDedupStatsDf(docsDf(-1L -> sevenTokens), n = 5).collect()
+      Cleaning.spanDedupCore(toks(-1L -> sevenTokens)).collect()
     }
     assert(causeChain(e2).contains("packing overflow"), causeChain(e2))
     // a doc opening >= 2^20 spans (a ~1M-token concatenated doc) would
@@ -157,13 +160,11 @@ class CleaningSpec extends SparkTestBase {
     val million = new StringBuilder
     (0 until (1 << 20) + 8).foreach(i => million.append("t").append(i % 97).append(' '))
     val e3 = intercept[Exception] {
-      Cleaning.spanDedupStatsDf(
-        docsDf(1L -> million.result(), 2L -> sevenTokens), n = 5).collect()
+      Cleaning.spanDedupCore(toks(1L -> million.result(), 2L -> sevenTokens)).collect()
     }
     assert(causeChain(e3).contains("packing overflow"), causeChain(e3))
     // in-bounds inputs are untouched by the guard
-    val ok = Cleaning.spanDedupStatsDf(
-      docsDf(((1L << 43) - 1L) -> sevenTokens), n = 5).collect()
+    val ok = Cleaning.spanDedupCore(toks(((1L << 43) - 1L) -> sevenTokens)).collect()
     assert(ok.length == 1 && ok.head.getLong(1) == 3L)
   }
 
@@ -196,7 +197,7 @@ class CleaningSpec extends SparkTestBase {
   }
 
   test("textrank keywords: hub word wins; isolated nodes keep teleport mass; filtered docs absent") {
-    val df = docsDf(
+    val df = toks(
       // 'nexus' is adjacent to five distinct long words — highest
       // degree, must out-rank every peripheral word
       1L -> "alpha nexus bravo nexus charlie nexus delta nexus echoes",
@@ -268,17 +269,17 @@ class CleaningSpec extends SparkTestBase {
   test("winnow-accelerated span dedup: planted-passage parity with the exact operator") {
     // every duplicated passage spans >= w + n - 1 = 8 tokens, so by the
     // winnowing guarantee the candidate generator must not lose any
-    // verdict: output equals spanDedupStatsDf ROW FOR ROW
+    // verdict: output equals the exact core's ROW FOR ROW
     val passage = (1 to 12).map(i => s"boiler$i").mkString(" ")
     val inner = (1 to 9).map(i => s"quoted$i").mkString(" ")
-    val df = docsDf(
+    val df = toks(
       1L -> s"$passage alpha beta gamma delta epsilon",     // keeper doc
       2L -> s"zeta eta theta iota kappa $passage",          // cross-doc dup
       3L -> s"$inner lambda mu nu $inner",                  // within-doc repeat
       4L -> "wholly distinct content with nothing shared anywhere here today",
       5L -> "tiny doc")                                     // opens no span
-    val exact = Cleaning.spanDedupStatsDf(df).collect().toSeq
-    val winnowed = Cleaning.winnowSpanDedupStatsDf(df).collect().toSeq
+    val exact = Cleaning.spanDedupCore(df).collect().toSeq
+    val winnowed = Cleaning.winnowSpanDedupCore(df).collect().toSeq
     assert(winnowed == exact,
       s"planted-passage parity broke:\nwinnow=$winnowed\nexact =$exact")
     // sanity on content, not just parity: doc 2's copied passage lost
@@ -300,12 +301,12 @@ class CleaningSpec extends SparkTestBase {
     // the documented relaxation: winnow-accelerated output may undercount
     // sub-guarantee duplication, and the exact operator audits that.
     val short = "s0a s0b s0c s0d s0e"
-    val df = docsDf(
+    val df = toks(
       1L -> s"$short a1 a2 a3 a4 a5 a6 a7 a8 a9",
       2L -> s"b1 b2 b3 b4 b5 b6 b7 b8 b9 $short")
-    val exact = Cleaning.spanDedupStatsDf(df).collect()
+    val exact = Cleaning.spanDedupCore(df).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val win = Cleaning.winnowSpanDedupStatsDf(df).collect()
+    val win = Cleaning.winnowSpanDedupCore(df).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(exact(2L) == 1L, s"exact operator must remove the short dup: $exact")
     assert(win(2L) == 0L,
@@ -515,7 +516,7 @@ class CleaningSpec extends SparkTestBase {
   }
 
   test("bigram logprob: hand-computed conditionals; word order matters") {
-    val df = docsDf(1L -> "a b a b", 2L -> "a c")
+    val df = toks(1L -> "a b a b", 2L -> "a c")
     val out = TextAnalysis.bigramScoreOn(df, TextAnalysis.bigramCountTable(df))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     // c2: (a,b)=2 (b,a)=1 (a,c)=1; c1: a=3, b=1
@@ -528,7 +529,7 @@ class CleaningSpec extends SparkTestBase {
     // corpus would make every conditional 1.0 — needs three tokens)
     val majority = Seq.tabulate(8)(i => (i.toLong, "x y x y x z"))
     val contrarian = (99L, "x z x z x y")
-    val order = docsDf((majority :+ contrarian): _*)
+    val order = toks((majority :+ contrarian): _*)
     val scores = TextAnalysis.bigramScoreOn(order, TextAnalysis.bigramCountTable(order))
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(scores(99L) < scores(0L),
@@ -544,7 +545,7 @@ class CleaningSpec extends SparkTestBase {
       (1L to 5L).map(i => i -> "x a b") ++
         (11L to 15L).map(i => i -> "y a c") ++
         Seq(21L -> "x a b", 22L -> "x a c", 31L -> "p q r")
-    val df = docsDf(docs: _*)
+    val df = toks(docs: _*)
     val bg = TextAnalysis.bigramScoreOn(df, TextAnalysis.bigramCountTable(df)).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(bg(21L) == bg(22L), s"bigram must tie: ${bg(21L)} vs ${bg(22L)}")
@@ -573,7 +574,7 @@ class CleaningSpec extends SparkTestBase {
       assert(r.getDouble(2) <= 0.0, s"log-prob must be <= 0: $r")
     }
     // two-token docs open no trigram and must be absent
-    val shortDocs = docsDf(1L -> "only two", 2L -> "three token doc")
+    val shortDocs = toks(1L -> "only two", 2L -> "three token doc")
     val withShort = TextAnalysis.backoffScoreOn(shortDocs,
       TextAnalysis.backoffMlpTable(TextAnalysis.trigramCountTable(shortDocs))).collect()
     assert(withShort.map(_.getLong(0)).toSet == Set(2L))
@@ -589,7 +590,7 @@ class CleaningSpec extends SparkTestBase {
           22L -> "x y c d e",   // suffix-3 known (11)
           23L -> "x y z d e",   // suffix-2 known (12)
           31L -> "p q r s t")   // all levels singleton -> unigram floor
-    val df = docsDf(docs: _*)
+    val df = toks(docs: _*)
     val (c5, windows, _) = lm5(df)
     val out = TextAnalysis.fivegramScoreOn(df, c5, windows).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
@@ -603,7 +604,7 @@ class CleaningSpec extends SparkTestBase {
     assert(out(1L) > out(21L) && out(21L) > out(22L) &&
       out(22L) > out(23L) && out(23L) > out(31L))
     // docs under five tokens open no 5-gram and are absent
-    val shortDocs = docsDf(1L -> "only four tokens here", 2L -> "this one has five tokens")
+    val shortDocs = toks(1L -> "only four tokens here", 2L -> "this one has five tokens")
     val (s5, sWindows, _) = lm5(shortDocs)
     val short = TextAnalysis.fivegramScoreOn(shortDocs, s5, sWindows).collect()
     assert(short.map(_.getLong(0)).toSet == Set(2L))
@@ -617,7 +618,7 @@ class CleaningSpec extends SparkTestBase {
         (11L to 13L).map(i => i -> "z b c d e") ++
         Seq(21L -> "x b c d e", 22L -> "x y c d e",
           23L -> "x y z d e", 31L -> "p q r s t")
-    val df = docsDf(docs: _*)
+    val df = toks(docs: _*)
     val (c5, windows, _) = lm5(df)
     val out = TextAnalysis.interpScoreOn(df, c5, windows).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
@@ -641,12 +642,13 @@ class CleaningSpec extends SparkTestBase {
     // (proven by the string-keyed oracles) both widths must produce
     // byte-identical scores across the whole 5-gram scorer family
     val docs = graft.Tables.documents(spark, sfDir)
+    val t = TextAnalysis.tokenized(docs)
     def scores(wide: Boolean) = {
-      val (c5, windows, smoothed) = lm5(docs, wide)
-      Seq(TextAnalysis.fivegramScoreOn(docs, c5, windows),
-        TextAnalysis.interpScoreOn(docs, c5, windows),
-        TextAnalysis.wbScoreOn(docs, c5, smoothed),
-        TextAnalysis.knScoreOn(docs, c5, smoothed)).map(_.collect().map(_.toSeq).toSeq)
+      val (c5, windows, smoothed) = lm5(t, wide)
+      Seq(TextAnalysis.fivegramScoreOn(t, c5, windows),
+        TextAnalysis.interpScoreOn(t, c5, windows),
+        TextAnalysis.wbScoreOn(t, c5, smoothed),
+        TextAnalysis.knScoreOn(t, c5, smoothed)).map(_.collect().map(_.toSeq).toSeq)
     }
     scores(wide = true).zip(scores(wide = false)).zipWithIndex.foreach {
       case ((wide, narrow), i) => assert(wide == narrow, s"scorer $i differs by key width")
@@ -671,7 +673,7 @@ class CleaningSpec extends SparkTestBase {
         (11L to 13L).map(i => i -> "z b c d e") ++
         Seq(21L -> "x b c d e", 22L -> "x y c d e",
           23L -> "x y z d e", 31L -> "p q r s t")
-    val df = docsDf(docs: _*)
+    val df = toks(docs: _*)
     val (c5, _, smoothed) = lm5(df)
     val out = TextAnalysis.wbScoreOn(df, c5, smoothed).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
@@ -708,7 +710,7 @@ class CleaningSpec extends SparkTestBase {
         (11L to 13L).map(i => i -> "z b c d e") ++
         Seq(21L -> "x b c d e", 22L -> "x y c d e",
           23L -> "x y z d e", 31L -> "p q r s t")
-    val df = docsDf(docs: _*)
+    val df = toks(docs: _*)
     val (c5, _, smoothed) = lm5(df)
     val out = TextAnalysis.knScoreOn(df, c5, smoothed).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
@@ -734,7 +736,7 @@ class CleaningSpec extends SparkTestBase {
     assert(out(1L) > out(31L),
       s"KN must score corpus-typical text above the all-novel doc: ${out(1L)} vs ${out(31L)}")
     // short docs open no 5-gram and are absent
-    val shortDocs = docsDf(1L -> "only four tokens here", 2L -> "this one has five tokens")
+    val shortDocs = toks(1L -> "only four tokens here", 2L -> "this one has five tokens")
     val (s5, _, sSmoothed) = lm5(shortDocs)
     val short = TextAnalysis.knScoreOn(shortDocs, s5, sSmoothed).collect()
     assert(short.map(_.getLong(0)).toSet == Set(2L))
@@ -746,7 +748,7 @@ class CleaningSpec extends SparkTestBase {
     val docs = (1 to 6).map { i =>
       (i.toLong, s"new york f$i g$i new york g$i f$i new york")
     } :+ (7L, "rare pair")
-    val df = docsDf(docs: _*)
+    val df = toks(docs: _*)
     val out = TextAnalysis
       .topCollocationsOn(TextAnalysis.bigramCountTable(df), k = 5, minCount = 5).collect()
     assert(out.nonEmpty)
@@ -1263,7 +1265,8 @@ class CleaningSpec extends SparkTestBase {
     // %31 poison doc; url groups of four give real stage-2 dups
     val ids = Seq(21L, 22L, 25L, 26L, 28L, 29L, 33L, 34L)
     val docs = ids.map(i => (i, "srcT", text)).toDF("doc_id", "source", "text")
-    val f = Cleaning.acquisitionFunnelDf(docs).collect()
+    val f = Cleaning.acquisitionFunnelCore(docs,
+        Cleaning.boilerplateDictDf(Cleaning.c4StructuredDocs(docs))).collect()
       .map(r => r.getString(1) -> r.getLong(2)).toMap
     assert(f("c4_pages") > 0, s"templated pages pass c4 on their own: $f")
     assert(f("boilerplate") == 0L,
@@ -1314,8 +1317,8 @@ class CleaningSpec extends SparkTestBase {
     val short = (0 until Cleaning.SubstrK - 1).map(i => s"s$i")    // k-1 shared: below anchor width
     val d4 = ((1 to 6).map(i => s"f$i") ++ short).mkString(" ")
     val d5 = ((1 to 6).map(i => s"g$i") ++ short).mkString(" ")
-    val out = Cleaning.substringDedupDf(
-      docsDf(1L -> d1, 2L -> d2, 3L -> d3, 4L -> d4, 5L -> d5)).collect()
+    val out = Cleaning.substringDedupOf(Cleaning.spansWithMd5(
+      toks(1L -> d1, 2L -> d2, 3L -> d3, 4L -> d4, 5L -> d5))).collect()
     assert(out.length == 2, s"exactly the two planted spans, got ${out.mkString("; ")}")
     val m = out.map(r => r.getLong(0) -> r).toMap
     // exact boundaries: 1-based token positions of the 60-token block
@@ -1337,7 +1340,7 @@ class CleaningSpec extends SparkTestBase {
     // fusion of a 2k run that is not itself repeated anywhere.
     val d1 = ((1 to 3).map(i => s"x$i") ++ rep ++ rep).mkString(" ")
     val d2 = ((1 to 11).map(i => s"y$i") ++ rep ++ (1 to 4).map(i => s"z$i")).mkString(" ")
-    val out = Cleaning.substringDedupDf(docsDf(1L -> d1, 2L -> d2))
+    val out = Cleaning.substringDedupOf(Cleaning.spansWithMd5(toks(1L -> d1, 2L -> d2)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val k = Cleaning.SubstrK.toLong
     assert(out == Set((1L, 4L, 3L + k), (1L, 4L + k, 3L + 2 * k), (2L, 12L, 11L + k)),
@@ -1346,7 +1349,7 @@ class CleaningSpec extends SparkTestBase {
     // window is cross-duplicated and the run fuses into one maximal
     // island of 2k tokens on both carriers
     val d3 = ((1 to 5).map(i => s"w$i") ++ rep ++ rep).mkString(" ")
-    val fused = Cleaning.substringDedupDf(docsDf(1L -> d1, 2L -> d2, 3L -> d3))
+    val fused = Cleaning.substringDedupOf(Cleaning.spansWithMd5(toks(1L -> d1, 2L -> d2, 3L -> d3)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(fused == Set((1L, 4L, 3L + 2 * k), (2L, 12L, 11L + k), (3L, 6L, 5L + 2 * k)),
       s"got $fused")
@@ -1354,7 +1357,8 @@ class CleaningSpec extends SparkTestBase {
 
   test("substring dedup: corpus run — session artifact form equals the Df form, spans well-formed") {
     val viaSession = Cleaning.substringDedup(spark, sfDir).collect()
-    val viaDf = Cleaning.substringDedupDf(graft.Tables.documents(spark, sfDir)).collect()
+    val viaDf = Cleaning.substringDedupOf(Cleaning.spansWithMd5(
+      TextAnalysis.tokenized(graft.Tables.documents(spark, sfDir)))).collect()
     assert(viaSession.map(_.toString).toSeq == viaDf.map(_.toString).toSeq)
     assert(viaSession.nonEmpty, "the fixture corpus carries natural cross-doc repeats")
     viaSession.foreach { r =>
@@ -1382,8 +1386,8 @@ class CleaningSpec extends SparkTestBase {
     val shared = (0 until k + 1).map(i => s"s$i")
     val d3 = ((1 to 2).map(i => s"b$i") ++ shared).mkString(" ")
     val d4 = ((1 to 6).map(i => s"c$i") ++ shared).mkString(" ")
-    val out = Cleaning.substringSelfRepeatDf(
-      docsDf(1L -> d1, 2L -> d2, 3L -> d3, 4L -> d4)).collect()
+    val out = Cleaning.substringSelfRepeatOn(
+      toks(1L -> d1, 2L -> d2, 3L -> d3, 4L -> d4)).collect()
     assert(out.forall(_.getLong(0) == 1L),
       s"only the self-repeating doc may report: ${out.mkString("; ")}")
     val spans = out.map(r => (r.getLong(1), r.getLong(2))).toSet
@@ -1401,7 +1405,7 @@ class CleaningSpec extends SparkTestBase {
     // exactly "block block": only the two block-aligned windows repeat,
     // so the faithful output is two abutting k-token spans
     val d1 = ((1 to 2).map(i => s"w$i") ++ block ++ block).mkString(" ")
-    val out = Cleaning.substringSelfRepeatDf(docsDf(1L -> d1))
+    val out = Cleaning.substringSelfRepeatOn(toks(1L -> d1))
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
     assert(out == Set((3L, 2L + k), (3L + k, 2L + 2 * k)), s"got $out")
   }
@@ -1410,7 +1414,8 @@ class CleaningSpec extends SparkTestBase {
     val rep = (0 until 60).map(i => s"rep$i")
     val d1 = ((1 to 7).map(i => s"a$i") ++ rep ++ (1 to 5).map(i => s"b$i")).mkString(" ")
     val d2 = ((1 to 13).map(i => s"c$i") ++ rep ++ (1 to 9).map(i => s"e$i")).mkString(" ")
-    val out = Cleaning.substringExcisedDf(docsDf(1L -> d1, 2L -> d2)).collect()
+    val t = toks(1L -> d1, 2L -> d2)
+    val out = Cleaning.excisedFromSpans(t, Cleaning.spansWithMd5(t).localCheckpoint()).collect()
     // doc 1 is the keeper (min doc_id over the shared first anchor):
     // only doc 2 appears in the cut list
     assert(out.length == 1 && out.head.getLong(0) == 2L, s"got ${out.mkString(";")}")
@@ -1428,7 +1433,8 @@ class CleaningSpec extends SparkTestBase {
     val rep = (0 until Cleaning.SubstrK).map(i => s"q$i")
     val d1 = ((1 to 4).map(i => s"h$i") ++ rep).mkString(" ")
     val d2 = rep.mkString(" ") // the ENTIRE doc is the duplicated span
-    val out = Cleaning.substringExcisedDf(docsDf(1L -> d1, 2L -> d2))
+    val t = toks(1L -> d1, 2L -> d2)
+    val out = Cleaning.excisedFromSpans(t, Cleaning.spansWithMd5(t).localCheckpoint())
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out.keySet == Set(2L), "doc 1 is the keeper")
     assert(out(2L).getLong(3) == 0L, "every token cut")
@@ -1439,7 +1445,8 @@ class CleaningSpec extends SparkTestBase {
 
   test("substring excision: corpus run — session form equals Df form, removal accounting exact") {
     val viaSession = Cleaning.substringExcised(spark, sfDir).collect()
-    val viaDf = Cleaning.substringExcisedDf(graft.Tables.documents(spark, sfDir)).collect()
+    val t = TextAnalysis.tokenized(graft.Tables.documents(spark, sfDir))
+    val viaDf = Cleaning.excisedFromSpans(t, Cleaning.spansWithMd5(t).localCheckpoint()).collect()
     assert(viaSession.map(_.toString).toSeq == viaDf.map(_.toString).toSeq)
     assert(viaSession.nonEmpty)
     viaSession.foreach { r =>
@@ -1476,7 +1483,7 @@ class CleaningSpec extends SparkTestBase {
     // target slice (doc_id % 20 == 7 under the default predicate):
     // a deterministic trigram chain — the in-domain model assigns its
     // own continuations probability 1
-    val docs = docsDf(
+    val docs = toks(
       7L  -> (domain + " ") * 6,
       27L -> (domain + " ") * 5,
       // pool: doc 1 IS the target chain; doc 3 reuses its contexts with
@@ -1499,7 +1506,7 @@ class CleaningSpec extends SparkTestBase {
 
   test("moore-lewis: corpus run — session artifact form equals the Df form") {
     val viaSession = TextAnalysis.mooreLewisSelect(spark, sfDir).collect()
-    val docs = graft.Tables.documents(spark, sfDir)
+    val docs = TextAnalysis.tokenized(graft.Tables.documents(spark, sfDir))
     val (lm, tables) = TextAnalysis.mooreLewisLm(docs)
     val viaCore = TextAnalysis.mooreLewisOn(docs, lm, TextAnalysis.mooreLewisNs(lm)).collect()
     tables.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
@@ -1546,11 +1553,11 @@ class CleaningSpec extends SparkTestBase {
     // island whose FIRST anchor is X's. A first-anchor election would
     // crown doc 1 keeper of the X·Y spans and cut Y from the corpus;
     // the content election keeps X·Y in doc 5
-    val docs = docsDf(
+    val t = toks(
       1L -> ((1 to 3).map(i => s"a$i") ++ x).mkString(" "),
       5L -> ((1 to 2).map(i => s"b$i") ++ x ++ y).mkString(" "),
       7L -> ((1 to 4).map(i => s"c$i") ++ x ++ y).mkString(" "))
-    val out = Cleaning.substringExcisedDf(docs)
+    val out = Cleaning.excisedFromSpans(t, Cleaning.spansWithMd5(t).localCheckpoint())
       .collect().map(r => r.getLong(0) -> r).toMap
     // doc 1 keeps X (its span content's min doc); doc 5 keeps X·Y
     // (min doc of that content); ONLY doc 7 is cut

@@ -333,8 +333,7 @@ class CorpusSpec extends SparkTestBase {
       (27L, "beta gamma alpha beta gamma"),
       (1L, "alpha beta gamma alpha"),
       (2L, "zig zag zig zag zig")).toDF("doc_id", "text")
-    val pred = $"doc_id" % 20 === 7
-    val w = Corpus.dsirWeightsDf(docs, pred).collect()
+    val w = Corpus.dsirWeightsOf(docs)._1.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(3))).toMap
     assert(w.keySet == Set(1L, 2L), "exactly the raw docs are scored")
     assert(w(1L)._1 == 3 && w(2L)._1 == 4, "n_grams = tokens - 1")
@@ -343,7 +342,7 @@ class CorpusSpec extends SparkTestBase {
     // target-slice grams dominate doc 1's buckets -> its average LLR is
     // positive; doc 2's buckets are raw-only -> negative
     assert(w(1L)._2 > 0 && w(2L)._2 < 0, s"LLR signs: $w")
-    val w2 = Corpus.dsirWeightsDf(docs, pred).collect()
+    val w2 = Corpus.dsirWeightsOf(docs)._1.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(3))).toMap
     assert(w == w2, "weights must be deterministic")
   }

@@ -339,7 +339,7 @@ class DedupSimilaritySpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val emb = (0L to 4L).map(i =>
       (i, Array(1.0f, 0.001f * i, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val out = Similarity.qualityPropagationDf(docs, emb, k = 3, nlist = 1)
+    val out = Similarity.qualityPropagationOnGraph(docs, Similarity.knnGraphDf(emb, k = 3, nlist = 1))
       .collect().map(r => r.getLong(0) ->
         ((r.getDouble(1), r.getDouble(2), r.getDouble(4), r.getBoolean(5)))).toMap
     val (q4, nq4, s4, _) = out(4L)
@@ -621,7 +621,8 @@ class DedupSimilaritySpec extends SparkTestBase {
     val withDups = base ++ Seq(
       (100L, base(3)._2.clone()), (101L, base(17)._2.clone()))
     val emb = withDups.toDF("vec_id", "embedding")
-    val dropped = Similarity.semanticDedupPqDropList(emb, threshold = 0.95, nlist = 1)
+    val dropped = Similarity.semanticDedupPqDropList(emb, Clustering.kmeansCentroids(emb, 1),
+        Similarity.rawPqFit(emb), threshold = 0.95)
       .collect().map(_.getLong(0)).toSet
     assert(Set(100L, 101L).subsetOf(dropped),
       s"planted exact duplicates must drop: $dropped")
@@ -629,16 +630,17 @@ class DedupSimilaritySpec extends SparkTestBase {
       "the lower-id original survives")
     // on the fixture, the PQ path must track the float path
     val embFx = graft.Tables.embeddings(spark, sfDir)
-    val floatDrop = Similarity.semanticDedupDropList(embFx)
+    val centsFx = Clustering.kmeansCentroids(embFx, Similarity.semDedupCells(embFx))
+    val floatDrop = Similarity.semanticDedupDropList(embFx, centsFx)
       .collect().map(_.getLong(0)).toSet
-    val pqDrop = Similarity.semanticDedupPqDropList(embFx)
+    val pqDrop = Similarity.semanticDedupPqDropList(embFx, centsFx, Similarity.rawPqFit(embFx))
       .collect().map(_.getLong(0)).toSet
     if (floatDrop.nonEmpty) {
       val recall = floatDrop.intersect(pqDrop).size.toDouble / floatDrop.size
       assert(recall >= 0.5, s"PQ dedup diverged from the float path: $recall")
     }
     // determinism
-    val again = Similarity.semanticDedupPqDropList(embFx)
+    val again = Similarity.semanticDedupPqDropList(embFx, centsFx, Similarity.rawPqFit(embFx))
       .collect().map(_.getLong(0)).toSet
     assert(again == pqDrop)
   }
@@ -754,7 +756,7 @@ class DedupSimilaritySpec extends SparkTestBase {
       22L -> Array(0f, 0f, 0f, 1f), 23L -> Array(0f, -1f, 0f, 0f),
       24L -> Array(-1f, 0f, 0f, 0f)
     ).toDF("vec_id", "embedding")
-    val dropped = Similarity.semanticDedupDropList(planted, nlist = 2)
+    val dropped = Similarity.semanticDedupDropList(planted, Clustering.kmeansCentroids(planted, 2))
       .collect().map(_.getLong(0)).toSet
     assert(dropped == Set(11L, 12L),
       s"expected exactly the non-min ids of the planted cluster, got $dropped")
@@ -769,7 +771,8 @@ class DedupSimilaritySpec extends SparkTestBase {
     val emb = graft.Tables.embeddings(spark, sfDir)
     // derived nlist: 500 vectors fit one target-size cell -> ONE cell,
     // where within-cell pairing IS brute force -> exact result
-    val dropped = Similarity.semanticDedupDropList(emb)
+    val dropped = Similarity.semanticDedupDropList(emb,
+        Clustering.kmeansCentroids(emb, Similarity.semDedupCells(emb)))
       .collect().map(_.getLong(0)).toSet
     assert(dropped == shouldDrop,
       s"single-cell semantic dedup must equal brute force; " +
@@ -779,7 +782,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     // is inherent (cross-cell pairs are missed) but must not collapse.
     // The fixture's threshold-0.4 pairs are only weakly similar, so
     // k-means cells split many of them — measured ~0.27 at nlist=16.
-    val clustered = Similarity.semanticDedupDropList(emb, nlist = 16)
+    val clustered = Similarity.semanticDedupDropList(emb, Clustering.kmeansCentroids(emb, 16))
       .collect().map(_.getLong(0)).toSet
     assert(clustered.subsetOf(shouldDrop),
       s"false drops (not near-dups): ${clustered -- shouldDrop}")
@@ -790,7 +793,8 @@ class DedupSimilaritySpec extends SparkTestBase {
   test("semantic dedup stats: totals consistent with the drop list, deterministic") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val nVecs = emb.count()
-    val nDropped = Similarity.semanticDedupDropList(emb).count()
+    val nDropped = Similarity.semanticDedupDropList(emb,
+      Clustering.kmeansCentroids(emb, Similarity.semDedupCells(emb))).count()
     val stats = Similarity.semanticDedupStats(spark, sfDir).collect()
     assert(stats.map(_.getAs[Long]("n_vecs")).sum == nVecs)
     assert(stats.map(_.getAs[Long]("n_dropped")).sum == nDropped)

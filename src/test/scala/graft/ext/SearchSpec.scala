@@ -964,7 +964,7 @@ class SearchSpec extends SparkTestBase {
 
   test("warm retrieval and LM queries read the session pins: no raw-scan derivation, nothing left pinned") {
     val queries = Seq("q_bm25_topk", "q_postings_size_model", "q_term_postings",
-      "q_kn_logprob_wide", "q_mmr_diversify")
+      "q_kn_logprob_wide", "q_mmr_diversify", "q_graph_ann_topk")
     val runs = queries.map { q =>
       def run() = graft.SparkEntry.queries(q)(spark, sfDir).collect()
       val first = run()

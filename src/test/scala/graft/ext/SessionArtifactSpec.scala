@@ -98,48 +98,49 @@ class SessionArtifactSpec extends SparkTestBase {
   test("KN and WB scoring via the session LM blocks equal the Df forms") {
     // the registered 5-gram scorers (both key widths for KN) against
     // their cores over a fresh type table of the raw corpus
+    val toks = TextAnalysis.tokenized(rawDocs)
     def fresh(wide: Boolean) = {
-      val c5 = TextAnalysis.fivegramTypeTable(rawDocs, wide)
+      val c5 = TextAnalysis.fivegramTypeTable(toks, wide)
       (c5, TextAnalysis.fivegramWindowCounts(c5), TextAnalysis.smoothedStatTable(c5))
     }
     val (c5, windows, smoothed) = fresh(TextAnalysis.chooseWideKeys(rawDocs))
     assert(rows(TextAnalysis.knLogProb(spark, sfDir)) ==
-      rows(TextAnalysis.knScoreOn(rawDocs, c5, smoothed)))
+      rows(TextAnalysis.knScoreOn(toks, c5, smoothed)))
     assert(rows(TextAnalysis.wbLogProb(spark, sfDir)) ==
-      rows(TextAnalysis.wbScoreOn(rawDocs, c5, smoothed)))
+      rows(TextAnalysis.wbScoreOn(toks, c5, smoothed)))
     assert(rows(TextAnalysis.fivegramLogProb(spark, sfDir)) ==
-      rows(TextAnalysis.fivegramScoreOn(rawDocs, c5, windows)))
+      rows(TextAnalysis.fivegramScoreOn(toks, c5, windows)))
     assert(rows(TextAnalysis.interpLogProb(spark, sfDir)) ==
-      rows(TextAnalysis.interpScoreOn(rawDocs, c5, windows)))
+      rows(TextAnalysis.interpScoreOn(toks, c5, windows)))
     val (w5, _, wSmoothed) = fresh(wide = true)
     assert(rows(graft.SparkEntry.queries("q_kn_logprob_wide")(spark, sfDir)) ==
-      rows(TextAnalysis.knScoreOn(rawDocs, w5, wSmoothed)))
+      rows(TextAnalysis.knScoreOn(toks, w5, wSmoothed)))
   }
 
   test("bigram scorer and collocations via the shared count table equal the Df forms") {
-    val c2 = TextAnalysis.bigramCountTable(rawDocs)
+    val toks = TextAnalysis.tokenized(rawDocs)
+    val c2 = TextAnalysis.bigramCountTable(toks)
     assert(rows(TextAnalysis.bigramLogProb(spark, sfDir)) ==
-      rows(TextAnalysis.bigramScoreOn(rawDocs, c2)))
+      rows(TextAnalysis.bigramScoreOn(toks, c2)))
     assert(rows(TextAnalysis.topCollocations(spark, sfDir)) == rows(TextAnalysis
       .topCollocationsOn(c2, TextAnalysis.CollocTopK, TextAnalysis.CollocMinCount)))
     assert(rows(TextAnalysis.backoffLogProb(spark, sfDir)) ==
-      rows(TextAnalysis.backoffScoreOn(rawDocs,
-        TextAnalysis.backoffMlpTable(TextAnalysis.trigramCountTable(rawDocs)))))
+      rows(TextAnalysis.backoffScoreOn(toks,
+        TextAnalysis.backoffMlpTable(TextAnalysis.trigramCountTable(toks)))))
   }
 
   test("semantic dedup drop lists via the session fit caches equal standalone fits") {
-    // the r15 share: the registered wrappers take the derived-k cells
+    // the r15 share: the registered queries take the derived-k cells
     // fit (and the PQ raw codebooks) from the session caches; both
-    // fits are deterministic, so the drop lists must be IDENTICAL to
-    // a standalone refit — the fitKey=None path planted-fixture tests
-    // exercise
+    // fits are deterministic, so the queries must equal the cores over
+    // a fresh fit of the same vectors
     val emb = graft.Tables.embeddings(spark, sfDir)
-    assert(rows(Similarity.semanticDedupDropList(emb,
-        fitKey = Some((spark, sfDir)))) ==
-      rows(Similarity.semanticDedupDropList(emb)))
-    assert(rows(Similarity.semanticDedupPqDropList(emb,
-        fitKey = Some((spark, sfDir)))) ==
-      rows(Similarity.semanticDedupPqDropList(emb)))
+    val cents = Clustering.kmeansCentroids(emb, Similarity.semDedupCells(emb))
+    assert(rows(graft.SparkEntry.queries("q_semantic_dedup")(spark, sfDir)) ==
+      rows(Similarity.semDedupLabelStats(emb, Similarity.semanticDedupDropList(emb, cents))))
+    assert(rows(graft.SparkEntry.queries("q_semantic_dedup_pq")(spark, sfDir)) ==
+      rows(Similarity.semDedupLabelStats(emb,
+        Similarity.semanticDedupPqDropList(emb, cents, Similarity.rawPqFit(emb)))))
   }
 
   test("retrieval session frames equal the standalone Df forms") {

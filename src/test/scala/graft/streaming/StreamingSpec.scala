@@ -578,7 +578,7 @@ class StreamingSpec extends SparkTestBase {
     val base = ((1L to 5L).map(i => i -> "x a b") ++
       (11L to 15L).map(i => i -> "y a c") :+ (31L -> "p q r"))
       .toDF("doc_id", "text")
-    val table = graft.ext.TextAnalysis.backoffScoreTable(base)
+    val table = graft.ext.TextAnalysis.backoffScoreTable(graft.ext.TextAnalysis.tokenized(base))
     val arrivals = Seq(
       1L -> "x a b",    // known trigram: scored from the table
       2L -> "p q zzz",  // trigram the base never saw -> OOV floor
@@ -598,7 +598,7 @@ class StreamingSpec extends SparkTestBase {
     val streamed = spark.read.parquet(out).drop("batch_id")
       .collect().map(_.toSeq).toSet
     val batch = graft.ext.TextAnalysis
-      .backoffScoreAgainst(arrivals.toDF("doc_id", "text"), table)
+      .backoffScoreAgainst(graft.ext.TextAnalysis.tokenized(arrivals.toDF("doc_id", "text")), table)
       .collect().map(_.toSeq).toSet
     assert(streamed == batch, s"streamed $streamed != batch $batch")
     val byDoc = spark.read.parquet(out).collect()
@@ -645,7 +645,7 @@ class StreamingSpec extends SparkTestBase {
       val streamed = spark.read.parquet(out).drop("batch_id")
         .collect().map(_.toSeq).toSet
       val batch = graft.ext.TextAnalysis
-        .smoothedScoreAgainst(arrivals.toDF("doc_id", "text"), table)
+        .smoothedScoreAgainst(graft.ext.TextAnalysis.tokenized(arrivals.toDF("doc_id", "text")), table)
         .collect().map(_.toSeq).toSet
       assert(streamed == batch, s"$tag: streamed $streamed != batch $batch")
       val byDoc = spark.read.parquet(out).collect()
@@ -990,7 +990,7 @@ class StreamingSpec extends SparkTestBase {
     val streamed = spark.read.parquet(out).drop("batch_id")
       .collect().map(_.toSeq).toSet
     val batch = graft.ext.TextAnalysis
-      .textrankKeywordsDf(docs.toDF("doc_id", "text"))
+      .textrankKeywordsDf(graft.ext.TextAnalysis.tokenized(docs.toDF("doc_id", "text")))
       .collect().map(_.toSeq).toSet
     assert(streamed == batch, s"streamed $streamed != batch $batch")
     assert(streamed.nonEmpty && !streamed.exists(_.head == 3L),
@@ -1177,7 +1177,7 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(_.toSeq).toSet
     // batch reference: score the same arrivals against the same base
     // model + OOV constant via the public against-form
-    val delta = graft.ext.Corpus.dsirDeltaTable(base, $"doc_id" % 20 === 7)
+    val delta = graft.ext.Corpus.dsirDeltaTable(graft.ext.Corpus.dsirBucketCounts(base).localCheckpoint())
     val tot = 8L -> 7L // target/raw gram totals of the base fixture
     def snapLn(t: Long) = math.floor(math.log(1.0 / (t + 4096)) * 1e6 + 0.5).toLong
     val oov = snapLn(tot._1) - snapLn(tot._2)
