@@ -34,6 +34,11 @@ import org.apache.spark.sql.GraftSql
   *
   * Jobs: one checkpoint materialization per round plus whatever the
   * probe runs — the operator adds none.
+  *
+  * A loop with a real probe that reaches `maxRounds` while its probe
+  * still reports change logs a warning: its result is the capped
+  * state, not the fixpoint (for min-label components, a component
+  * wider than the cap is split across several labels).
   */
 object Fixpoint {
 
@@ -49,8 +54,24 @@ object Fixpoint {
       val next = step(prev).localCheckpoint()
       val stop = done(prev, next)
       if (ownsPrev) GraftSql.releaseCheckpoint(prev)
-      if (stop || k == maxRounds) next else round(next, ownsPrev = true, k + 1)
+      if (stop) next
+      else if (k == maxRounds) {
+        if (done ne Never) warnCapped(maxRounds)
+        next
+      } else round(next, ownsPrev = true, k + 1)
     }
     round(init, releaseInit, 1)
+  }
+
+  /** Logs a capped, unconverged loop, naming the first caller outside
+    * this object.
+    */
+  private def warnCapped(maxRounds: Int): Unit = {
+    val caller = Thread.currentThread.getStackTrace.iterator.drop(1)
+      .find(_.getClassName != getClass.getName)
+      .fold("<unknown>")(f => s"${f.getClassName.stripSuffix("$")}.${f.getMethodName}")
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"fixpoint loop in $caller stopped at its cap of $maxRounds rounds with its " +
+        "probe still reporting change; the result is the capped state, not the fixpoint")
   }
 }

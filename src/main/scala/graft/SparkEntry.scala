@@ -2879,7 +2879,7 @@ object SparkEntry {
       ("WITH g AS (SELECT doc_id, list_distinct(list_transform(" +
         "generate_series(1, greatest(len(" + toks + ") - 2, 1)), " +
         "i -> array_to_string((" + toks + ")[i:i+2], ' '))) AS sh " +
-        "FROM documents WHERE doc_id < 200) " +
+        s"FROM documents WHERE doc_id < ${ext.Dedup.PairIdLimit}) " +
         "SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
         "CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard " +
         "FROM g a JOIN g b ON a.doc_id < b.doc_id " +
@@ -3245,7 +3245,7 @@ object SparkEntry {
       ("WITH g AS (SELECT doc_id, list_distinct(list_transform(" +
         "generate_series(1, greatest(len(" + toks + ") - 2, 1)), " +
         "i -> array_to_string((" + toks + ")[i:i+2], ' '))) AS sh " +
-        "FROM documents WHERE doc_id < 200), " +
+        s"FROM documents WHERE doc_id < ${ext.Dedup.PairIdLimit}), " +
         "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
         "len(list_intersect(a.sh, b.sh)) AS ni, len(a.sh) AS na, len(b.sh) AS nb " +
         "FROM g a JOIN g b ON a.doc_id < b.doc_id) " +

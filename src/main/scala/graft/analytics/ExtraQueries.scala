@@ -478,19 +478,6 @@ object ExtraQueries {
       Multimodal.plantedNearDupMedia(Tables.documents(spark, d)))
   }
 
-  /** Media dedup clusters: min-label connected components over the
-    * [[mediaNearDupPairs]] near-dup graph — the multimodal analogue of
-    * the text-side q_neardup_clusters, sharing the graph family's ONE
-    * propagation loop ([[graft.ext.Graph.minLabelComponentsOn]]).
-    * Singleton media (nothing within the hamming radius) are their own
-    * clusters; planted copy-pairs form 2-clusters unless chained by a
-    * real near-dup.
-    *
-    * Scale shape: the pair table is banded (never all-pairs — the
-    * phashNearDups pigeonhole join); propagation is O(diameter) keyed
-    * rounds over pair-incident media only, frontier join-back at the
-    * end.
-    */
   /** Audio near-duplicate pairs over planted time-shifted media — the
     * chromaprint-style fingerprint dedup next to the image family's
     * dHash banding ([[mediaNearDupPairs]]): the corpus viewed as audio
@@ -509,21 +496,27 @@ object ExtraQueries {
       Multimodal.plantedShiftedAudio(Tables.documents(spark, d)))
   }
 
+  /** Media dedup clusters: min-label connected components over the
+    * [[mediaNearDupPairs]] near-dup graph — the multimodal analogue of
+    * the text-side q_neardup_clusters, sharing the graph family's ONE
+    * propagation loop ([[graft.ext.Graph.pairComponentsOn]], as the
+    * near-dup clusters run it).
+    * Singleton media (nothing within the hamming radius) are their own
+    * clusters; planted copy-pairs form 2-clusters unless chained by a
+    * real near-dup.
+    *
+    * Scale shape: the pair table is banded (never all-pairs — the
+    * phashNearDups pigeonhole join); propagation is O(diameter) keyed
+    * rounds over the media frontier.
+    */
   def mediaDedupClusters(spark: SparkSession, d: String): DataFrame = {
     import graft.ext.Multimodal
     val media = Multimodal.plantedNearDupMedia(Tables.documents(spark, d))
-    val pairs = Multimodal.phashNearDups(media)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .localCheckpoint() // feeds both union branches — one evaluation
-    val und = pairs
-      .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(pairs)
-    val clusters = graft.ext.Graph.minLabelComponentsOn(
-      media.select(col("media_id").as("doc_id")).toDF(), und,
-      graft.ext.Graph.ComponentRounds)
-    // the returned frame reads the final label checkpoint only
-    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
+    // the returned frame reads the final label checkpoint, which stays
+    // live: a query cannot release what its lazy result reads
+    val (clusters, _) = graft.ext.Graph.pairComponentsOn(
+      Multimodal.phashNearDups(media), graft.ext.Graph.ComponentRounds,
+      Some(media.select(col("media_id").as("doc_id")).toDF()))
     clusters.select(col("doc_id").as("media_id"), col("component").as("cluster"),
       col("component_size").as("cluster_size"))
   }

@@ -1794,21 +1794,22 @@ object Corpus {
     * and can straddle train/test — the contamination Lee et al. 2022
     * measure: eval loss on test members of a straddling cluster is
     * memorization, not generalization. Here every document inherits
-    * the split of its cluster's CANONICAL member (the min-id label out
-    * of [[Dedup.dedupClusters]]), computed from the canonical's
+    * the split of its cluster's CANONICAL member (the min-id label of
+    * [[Dedup.dedupClusters]]), computed from the canonical's
     * content hash with the exact [[splitAssignments]] thresholds — so
     * a cluster can never straddle (one canonical, one hash, one
     * split), and unclustered documents keep their plain content-hash
     * assignment bit-for-bit (canonical = self).
     *
-    * Scale shape: LSH candidates → min-label clusters (the
-    * [[Dedup.dedupClusters]] rounds), then one left join docs→labels
-    * on doc_id and one keyed join labels→canonical hash on
-    * canonical_id. The canonical side of that join is the skew point —
-    * a viral page's cluster joins its hash once per member — which is
-    * exactly the AQE skew-join shape (bounded further by LSH clusters
-    * being shallow). No union-find leaves the executors; the label
-    * table arrives materialized (localCheckpoint leaf).
+    * Scale shape: LSH candidates → min-label clusters
+    * ([[Dedup.dedupClusters]], one [[graft.Fixpoint]] round each),
+    * then one left join docs→labels on doc_id and one keyed join
+    * labels→canonical hash on canonical_id. The canonical side of that
+    * join is the skew point — a viral page's cluster joins its hash
+    * once per member — which is exactly the AQE skew-join shape
+    * (bounded further by LSH clusters being shallow). No union-find
+    * leaves the executors; the label table arrives materialized (the
+    * `neardup_clusters` session pin).
     */
   def leakageSafeSplits(spark: SparkSession, d: String): DataFrame =
     // the cluster table rides the session pin shared with the
@@ -1816,21 +1817,20 @@ object Corpus {
     leakageSafeSplitsFromClusters(Tables.documents(spark, d),
       Dedup.sessionNearDupClusters(spark, d))
 
-  /** DataFrame form (docs must have doc_id + text); see
-    * [[leakageSafeSplits]].
+  /** The [[leakageSafeSplits]] election over candidate pairs
+    * (id_a, id_b, est_jaccard) of `docs` (doc_id + text), clustered at
+    * `threshold` — for callers that derive pairs from a band index they
+    * hold ([[sessionBaseSplits]] / [[splitAssignSink]]). Returns the
+    * splits and the cluster loop's final round, which the lazy splits
+    * read (a caller that materializes them releases it).
     */
-  def leakageSafeSplitsDf(docs: DataFrame, threshold: Double): DataFrame =
-    leakageSafeSplitsFromPairs(docs,
-      Dedup.minhashCandidatePairsUnordered(docs), threshold)
-
-  /** [[leakageSafeSplitsDf]] over pre-built candidate pairs — for
-    * callers that already hold a band index and derive pairs from it
-    * ([[splitInheritance]] / [[splitAssignSink]]).
-    */
-  private[ext] def leakageSafeSplitsFromPairs(docs: DataFrame, pairs: DataFrame,
-                                              threshold: Double): DataFrame =
-    leakageSafeSplitsFromClusters(docs,
-      Dedup.dedupClusters(pairs.filter(col("est_jaccard") >= threshold)))
+  private[graft] def leakageSafeSplitsFromPairs(docs: DataFrame, pairs: DataFrame,
+                                                threshold: Double)
+      : (DataFrame, Seq[DataFrame]) = {
+    val (clusters, scratch) =
+      Dedup.dedupClusters(pairs.filter(col("est_jaccard") >= threshold))
+    (leakageSafeSplitsFromClusters(docs, clusters), scratch)
+  }
 
   /** The split election over an already-built cluster table — the seam
     * the session cluster pin enters through (one definition of the
@@ -1919,16 +1919,16 @@ object Corpus {
     * index's candidate pairs) plus the bucket election, parameter-free
     * given (session, dir) at the registered threshold. Keyed on
     * doc_id, the anchor join key; ArtifactStore-backed, sidecar-
-    * billed, cold-cleared. |base| rows pinned per (session, dir).
+    * billed, cold-cleared. |base| rows pinned per (session, dir); the
+    * cluster loop's final round is released once the pin materializes.
     */
   private[ext] val sessionBaseSplits =
-    SessionArtifact.frame("base_splits", Pin.KeyedBy("doc_id")) { (spark, d) =>
-      org.apache.spark.sql.GraftSql.unordered(
-          leakageSafeSplitsFromPairs(Dedup.baseSlice(spark, d),
-            Dedup.minhashCandidatePairsOfIndex(
-              Dedup.sessionBaseBandIndex(spark, d)),
-            Dedup.NearDupThreshold))
-        .select(col("doc_id"), col("split"))
+    SessionArtifact.frameWithScratch("base_splits", Pin.KeyedBy("doc_id")) { (spark, d) =>
+      val (splits, scratch) = leakageSafeSplitsFromPairs(Dedup.baseSlice(spark, d),
+        Dedup.minhashCandidatePairsOfIndex(Dedup.sessionBaseBandIndex(spark, d)),
+        Dedup.NearDupThreshold)
+      (org.apache.spark.sql.GraftSql.unordered(splits).select(col("doc_id"), col("split")),
+        scratch)
     }
 
   /** Streaming split assignment (foreachBatch stage): the base's band
@@ -1945,11 +1945,11 @@ object Corpus {
     // pairs from the frozen (cached) table — the base signature kernel
     // runs once for both artifacts
     val frozenIndex = Freeze.scoped(checkpoint, Dedup.minhashBandIndex(baseDocs))
+    val (splits, scratch) = leakageSafeSplitsFromPairs(baseDocs,
+      Dedup.minhashCandidatePairsOfIndex(frozenIndex), threshold)
     val frozenSplits = Freeze.scoped(checkpoint,
-      org.apache.spark.sql.GraftSql.unordered(
-        leakageSafeSplitsFromPairs(baseDocs,
-          Dedup.minhashCandidatePairsOfIndex(frozenIndex), threshold))
-        .select(col("doc_id"), col("split")))
+      org.apache.spark.sql.GraftSql.unordered(splits).select(col("doc_id"), col("split")))
+    scratch.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
     Freeze.sink(docStream, outPath, checkpoint, triggerMs) { batch =>
       splitAssignAgainst(batch, frozenIndex, frozenSplits, threshold)
     }

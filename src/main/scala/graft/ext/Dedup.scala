@@ -214,24 +214,6 @@ object Dedup {
     transform(idxs, i => concat_ws(" ", slice(toks, i, lit(n))))
   }
 
-  /** MinHash signatures for the whole corpus: one row per doc with a
-    * `numHashes`-element array `sig` where sig[s] = min over shingles
-    * of the universal hash (a_s·h + b_s) mod P of the 28-bit
-    * md5-prefix shingle hash h (see [[minhashSigUdf]] — md5, not
-    * xxhash64, is what makes the family DuckDB-oracle-checkable).
-    *
-    * Shape matters at scale: shingles are materialized ONCE (explode), and
-    * all `numHashes` min-hashes are computed in a single hash aggregate
-    * with map-side partial combine — so the shuffle carries one
-    * `numHashes × 8B` partial state per doc per mapper, never the shingle
-    * text. (The previous form inlined the shingle pipeline 32× into one
-    * projection; the resulting expression tree blew up optimizer/codegen
-    * time ~100×.)
-    */
-  def minhashSignatures(spark: SparkSession, d: String,
-                        numHashes: Int = 32): DataFrame =
-    minhashSignaturesDf(Tables.documents(spark, d), numHashes)
-
   /** Prime modulus of the minhash permutation family — largest prime
     * below 2^29, so `a·h + b` with a,b < P and the 28-bit shingle hash
     * h stays under 2^58: plain BIGINT arithmetic, overflow-free and
@@ -388,10 +370,12 @@ object Dedup {
   /** Column form of [[shingleHashesUdf]] over a bound token-array column. */
   def shingleHashes(toks: Column, n: Int): Column = shingleHashesUdf(n)(toks)
 
-  /** DataFrame form (docs must have doc_id + text). Null texts are
-    * dropped — the same visible behavior as the previous explode form
-    * (explode of a null array emits nothing), and the kernel UDF is not
-    * null-tolerant.
+  /** MinHash signatures of `docs` (doc_id + text): one row per doc
+    * with a `numHashes`-element array `sig` where sig[s] = min over
+    * shingles of the universal hash (a_s·h + b_s) mod P of the 28-bit
+    * md5-prefix shingle hash h (see [[minhashSigUdf]] — md5, not
+    * xxhash64, is what makes the family DuckDB-oracle-checkable). Null
+    * texts are dropped — the kernel UDF is not null-tolerant.
     */
   def minhashSignaturesDf(docs: DataFrame, numHashes: Int = 32): DataFrame =
     // signature kernel is CPU-bound; single-split scans would serialize it
@@ -409,10 +393,8 @@ object Dedup {
     * keyed on (band_idx, band_hash) — the only extra shuffle, and its
     * fan-out is the number of true near-duplicate candidates, never O(n²).
     */
-  def minhashCandidatePairs(
-      spark: SparkSession, d: String,
-      numHashes: Int = 32, bands: Int = 8): DataFrame =
-    minhashCandidatePairsDf(Tables.documents(spark, d), numHashes, bands)
+  def minhashCandidatePairs(spark: SparkSession, d: String): DataFrame =
+    minhashCandidatePairsDf(Tables.documents(spark, d))
 
   /** DataFrame form of the LSH candidate-pair pipeline (deterministic
     * presentation order for the oracle/driver check).
@@ -582,110 +564,27 @@ object Dedup {
 
   // ------------------------------------------- near-dup cluster resolution
 
-  /** Connected components over candidate pairs (id_a, id_b) by iterative
+  /** Connected components over candidate pairs (id_a, id_b) by
     * min-label propagation: every node repeatedly adopts the smallest
-    * doc_id reachable through its edges; after convergence each near-dup
-    * cluster is labeled by its minimum member, which becomes the
-    * canonical document to keep.
+    * doc_id reachable through its edges; each near-dup cluster is
+    * labeled by its minimum member, which becomes the canonical
+    * document to keep. Only pair endpoints appear in the result.
     *
-    * Scale shape: one shuffle per propagation round, converging in
-    * O(cluster diameter) rounds — near-dup clusters are shallow (pairs
-    * come from LSH bands), so a handful of rounds suffices. Rounds run
-    * in PAIRS between driver syncs: two propagation steps chain lazily
-    * into one job, so the loop pays half the blocking actions (each
-    * driver round-trip is a stall-exposure point — GC, async broadcast
-    * cleanup, or co-tenant load between jobs bills straight to the
-    * query). The span result is persisted and the previous span
-    * unpersisted, keeping lineage flat (at very large scale, swap
-    * persist for periodic checkpoints).
+    * The loop is the graph family's component core
+    * ([[Graph.pairComponentsOn]]): one keyed round per
+    * [[graft.Fixpoint]] round, converging in O(cluster diameter)
+    * rounds — near-dup clusters are shallow (pairs come from LSH
+    * bands). A cluster wider than `maxIter` rounds is split across
+    * several canonical ids, and the operator logs it. Returns
+    * (doc_id, canonical_id) and the final round's checkpoint, which the
+    * lazy result reads (a caller that materializes the result releases
+    * it).
     */
-  def dedupClusters(pairs: DataFrame, maxIter: Int = ClusterMaxIter): DataFrame = {
-    require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    // persist the edge list: every propagation round joins against it,
-    // and without the persist each round would re-run the whole upstream
-    // candidate-generation pipeline. Both directions come from ONE
-    // explode pass — a union of two selects would reference (and
-    // recompute) the candidate-generation subtree twice in the first
-    // materialization.
-    val edges = pairs.select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst")),
-        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
-    var labels: DataFrame = null // null until round 1 materializes below
-    val labelType = pairs.schema("id_a").dataType
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      val span = math.min(2, maxIter - it)
-      // each node proposes its label to neighbors; adopt the minimum.
-      // In the span's LAST round the node's own row carries its
-      // pre-round label through the aggregation (`old` — exactly one
-      // non-null per id, preserved by max() since proposals carry
-      // null), so `changed` counts labels moved by the FINAL round:
-      // zero means the propagation hit its fixpoint inside this span
-      // and no verification span is needed — on shallow LSH clusters
-      // the whole resolution is ONE action. Intermediate rounds are
-      // persisted (the round plan references its input twice — own
-      // rows + proposals — and an unpersisted intermediate would be
-      // recomputed per reference) but NOT acted on: the span's single
-      // count() job materializes the whole chain.
-      var cur = labels
-      val intermediates = scala.collection.mutable.Buffer.empty[DataFrame]
-      for (r <- 1 to span) {
-        val last = r == span
-        // round 1 needs no join: with initial label(x) = x, propagation
-        // degenerates to min(id, min of neighbor ids) — one groupBy over
-        // the (symmetric) edge list, which also enumerates every node.
-        val (own, proposals) =
-          if (cur == null)
-            (edges.select(col("dst").as("id"), col("dst").as("label")),
-             edges.select(col("dst").as("id"), least(col("src"), col("dst")).as("label")))
-          else
-            (cur,
-             edges.join(cur.select(col("id").as("pid"), col("label")),
-                 edges("src") === col("pid"))
-               .select(col("dst").as("id"), col("label")))
-        cur =
-          if (last)
-            own.select(col("id"), col("label"), col("label").as("old"))
-              .union(proposals.select(col("id"), col("label"),
-                lit(null).cast(labelType).as("old")))
-              .groupBy(col("id"))
-              .agg(min(col("label")).as("label"), max(col("old")).as("old"))
-          else {
-            val stepped =
-              (if (cur == null) proposals // round 1: `own` ⊆ proposals by construction
-               else own.union(proposals))
-                .groupBy(col("id"))
-                .agg(min(col("label")).as("label"))
-                .persist()
-            intermediates += stepped
-            stepped
-          }
-      }
-      // LAZY local checkpoint, materialized by the count below: the next
-      // span starts from a flat LogicalRDD leaf instead of the full
-      // propagation lineage. Each round references its input TWICE (own
-      // rows + proposals), so an uncut logical plan doubles per round and
-      // analysis cost grows 2^rounds — fine for shallow LSH clusters,
-      // pathological for long chains, and the classic failure mode of
-      // every iterative Spark algorithm at scale. Checkpoint blocks are
-      // label-table sized and freed by the ContextCleaner when the
-      // previous span's handle goes out of scope.
-      val next = cur.localCheckpoint(false)
-      changed = next.filter(col("label") =!= col("old")).count()
-      intermediates.foreach(_.unpersist())
-      labels = next.select(col("id"), col("label"))
-      it += span
-    }
-    edges.unpersist() // labels is materialized; edges would otherwise stay pinned
-    if (changed > 0)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"dedupClusters did not converge in $maxIter iterations " +
-          s"($changed labels still changing) — clusters with diameter > $maxIter " +
-          "are split across multiple canonical ids; raise maxIter")
-    labels.select(col("id").as("doc_id"), col("label").as("canonical_id"))
+  def dedupClusters(pairs: DataFrame, maxIter: Int = ClusterMaxIter)
+      : (DataFrame, Seq[DataFrame]) = {
+    val (labels, scratch) = Graph.pairComponentsOn(pairs, maxIter)
+    (org.apache.spark.sql.GraftSql.unordered(labels)
+      .select(col("doc_id"), col("component").as("canonical_id")), scratch)
   }
 
   /** The full near-dup keep-list: LSH candidates above an estimated-
@@ -701,10 +600,11 @@ object Dedup {
     * registered queries before r20 (q_neardup_clusters,
     * q_cluster_sizes, q_neardup_keepers, q_leakage_safe_splits).
     * ArtifactStore-backed, sidecar-billed, cold-cleared; implicated
-    * rows only (≤ |corpus|) pinned per (session, dir).
+    * rows only (≤ |corpus|) pinned per (session, dir); the loop's
+    * final round is released once the pin materializes.
     */
   private[ext] val sessionNearDupClusters =
-    SessionArtifact.frame("neardup_clusters", Pin.Checkpoint) { (spark, d) =>
+    SessionArtifact.frameWithScratch("neardup_clusters", Pin.Checkpoint) { (spark, d) =>
       dedupClusters(
         minhashCandidatePairsUnordered(Tables.documents(spark, d))
           .filter(col("est_jaccard") >= NearDupThreshold))
@@ -750,8 +650,8 @@ object Dedup {
     * themselves trivially; this is the drop/keep signal for docs
     * actually implicated in duplication).
     *
-    * Scale shape: the cluster table arrives MATERIALIZED (a
-    * localCheckpoint leaf out of [[dedupClusters]]), joins the per-doc
+    * Scale shape: the cluster table arrives MATERIALIZED (the
+    * `neardup_clusters` session pin), joins the per-doc
     * quality projection once on doc_id, and the election is ONE
     * cluster-keyed window max over a (quality, −doc_id) struct —
     * cluster partitions are LSH-candidate components, inherently
@@ -826,32 +726,24 @@ object Dedup {
     sig
   }
 
-  def simhashSignatures(spark: SparkSession, d: String): DataFrame =
-    simhashSignaturesDf(Tables.documents(spark, d))
-
-  /** DataFrame form (docs must have doc_id + text). */
+  /** SimHash signatures of `docs` (doc_id + text). */
   def simhashSignaturesDf(docs: DataFrame): DataFrame =
     Tables.fanOut(docs)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), simhashUdf(TextAnalysis.tokens(col("text"))).as("simhash"))
 
-  /** SimHash near-dup pairs: bucket by each of four 16-bit chunks
+  /** SimHash near-dup pairs: bucket by each of four 15-bit chunks
     * (pigeonhole guarantee for Hamming distance ≤ 3), verify exactly.
     */
-  def simhashNearDups(spark: SparkSession, d: String, maxDist: Int = 3): DataFrame =
-    simhashNearDupsOn(simhashSignatures(spark, d), maxDist)
+  def simhashNearDups(spark: SparkSession, d: String): DataFrame =
+    simhashNearDupsDf(Tables.documents(spark, d))
 
-  /** DataFrame form (docs must have doc_id + text) — the probe/fixture
-    * entry point, same chunk-keyed kernel.
-    */
-  def simhashNearDupsDf(docs: DataFrame, maxDist: Int = 3): DataFrame =
-    simhashNearDupsOn(simhashSignaturesDf(docs), maxDist)
-
-  private def simhashNearDupsOn(sigs: DataFrame, maxDist: Int): DataFrame = {
+  /** DataFrame form (docs must have doc_id + text). */
+  def simhashNearDupsDf(docs: DataFrame): DataFrame = {
     // 4 pigeonhole chunks of 15 bits each (60-bit signature): hamming
     // <= 3 implies at least one chunk is untouched, so the chunk-keyed
-    // bucket join is an EXACT candidate generator for maxDist <= 3
-    val chunked = sigs.select(
+    // bucket join is an EXACT candidate generator for the radius 3
+    val chunked = simhashSignaturesDf(docs).select(
       col("doc_id"), col("simhash"),
       explode(sequence(lit(0), lit(3))).as("chunk")
     ).withColumn("chunk_val",
@@ -866,25 +758,47 @@ object Dedup {
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         hamming.as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxDist)
+      .filter(col("hamming") <= 3)
       .orderBy(col("id_a"), col("id_b"))
   }
 
   // ------------------------------------------------- n-gram Jaccard (exact)
 
-  /** Exact token-3-gram Jaccard similarity for a bounded candidate set
-    * (doc_id < limit) — the verification kernel that LSH candidates feed at
-    * scale; bounded here so the all-pairs form is oracle-checkable.
+  /** The doc_id bound of the all-pairs n-gram verifiers — shared with
+    * the oracle.
     */
-  def ngramJaccardPairs(spark: SparkSession, d: String, idLimit: Int = 200): DataFrame = {
-    // shingle sets are sorted+distinct ONCE per doc below the join, so the
-    // per-pair cost is a single allocation-free codegen'd merge walk
-    // (graft.functions.JaccardSortedArrays) instead of two hash sets and
-    // two materialized arrays per pair.
-    val docs = Tables.fanOut(Tables.documents(spark, d))
-      .filter(col("doc_id") < idLimit)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
+  private[graft] val PairIdLimit = 200
+
+  /** Per doc, its sorted distinct token-3-shingle array `sh` — the
+    * input of the codegen'd merge walks
+    * ([[graft.functions.JaccardExpression]]): sorted and deduplicated
+    * ONCE per doc below the pair join, so the per-pair cost is a single
+    * allocation-free walk instead of two hash sets per pair.
+    */
+  private def shingleSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
       .select(col("doc_id"), array_sort(array_distinct(shinglesOfTokens(col("toks")))).as("sh"))
+
+  /** The three 6-dp ratios of a pair's (n_inter, n_a, n_b) overlap
+    * counts `oc`, kept when either containment clears `minContain`.
+    */
+  private def containmentRatios(oc: DataFrame, minContain: Double): DataFrame =
+    oc.select(col("id_a"), col("id_b"),
+        round(col("oc.n_inter").cast("double") / col("oc.n_a"), 6).as("contain_a"),
+        round(col("oc.n_inter").cast("double") / col("oc.n_b"), 6).as("contain_b"),
+        round(col("oc.n_inter").cast("double") /
+          (col("oc.n_a") + col("oc.n_b") - col("oc.n_inter")), 6).as("jaccard"))
+      .filter(col("contain_a") > minContain || col("contain_b") > minContain)
+      .orderBy(col("id_a"), col("id_b"))
+
+  /** Exact token-3-gram Jaccard similarity for a bounded candidate set
+    * (doc_id < [[PairIdLimit]]) — the verification kernel that LSH
+    * candidates feed at scale; bounded here so the all-pairs form is
+    * oracle-checkable.
+    */
+  def ngramJaccardPairs(spark: SparkSession, d: String): DataFrame = {
+    val docs = shingleSets(Tables.fanOut(Tables.documents(spark, d))
+      .filter(col("doc_id") < PairIdLimit))
     val a = docs.as("a")
     val b = docs.as("b")
     a.join(broadcast(b), col("a.doc_id") < col("b.doc_id"))
@@ -911,30 +825,21 @@ object Dedup {
     * ([[graft.functions.OverlapCountsSortedArrays]]), every ratio
     * derived arithmetic.
     */
-  def ngramContainmentPairs(spark: SparkSession, d: String, idLimit: Int = 200,
-                            minContain: Double = 0.5): DataFrame =
-    ngramContainmentPairsDf(Tables.documents(spark, d), idLimit, minContain)
+  def ngramContainmentPairs(spark: SparkSession, d: String): DataFrame =
+    ngramContainmentPairsDf(Tables.documents(spark, d))
 
   /** DataFrame form (docs must have doc_id + text). */
-  def ngramContainmentPairsDf(rawDocs: DataFrame, idLimit: Int = 200,
+  def ngramContainmentPairsDf(rawDocs: DataFrame, idLimit: Int = PairIdLimit,
                               minContain: Double = 0.5): DataFrame = {
-    val docs = Tables.fanOut(rawDocs)
-      .filter(col("doc_id") < idLimit)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      .select(col("doc_id"), array_sort(array_distinct(shinglesOfTokens(col("toks")))).as("sh"))
+    val docs = shingleSets(Tables.fanOut(rawDocs).filter(col("doc_id") < idLimit))
     val a = docs.as("a")
     val b = docs.as("b")
-    a.join(broadcast(b), col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        graft.functions.JaccardExpression.overlapCounts(col("a.sh"), col("b.sh")).as("oc"))
-      .select(col("id_a"), col("id_b"),
-        round(col("oc.n_inter").cast("double") / col("oc.n_a"), 6).as("contain_a"),
-        round(col("oc.n_inter").cast("double") / col("oc.n_b"), 6).as("contain_b"),
-        round(col("oc.n_inter").cast("double") /
-          (col("oc.n_a") + col("oc.n_b") - col("oc.n_inter")), 6).as("jaccard"))
-      .filter(col("contain_a") > minContain || col("contain_b") > minContain)
-      .orderBy(col("id_a"), col("id_b"))
+    containmentRatios(
+      a.join(broadcast(b), col("a.doc_id") < col("b.doc_id"))
+        .select(
+          col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+          graft.functions.JaccardExpression.overlapCounts(col("a.sh"), col("b.sh")).as("oc")),
+      minContain)
   }
 
   /** CORPUS-WIDE asymmetric containment: the [[ngramContainmentPairsDf]]
@@ -966,10 +871,8 @@ object Dedup {
     * auditor on its slice, and that every surfaced pair is a subset
     * of the exact all-pairs result.
     */
-  def ngramContainmentCorpus(spark: SparkSession, d: String,
-                             minContain: Double = 0.5,
-                             numHashes: Int = 32, bands: Int = 8): DataFrame =
-    ngramContainmentCorpusDf(Tables.documents(spark, d), minContain, numHashes, bands)
+  def ngramContainmentCorpus(spark: SparkSession, d: String): DataFrame =
+    ngramContainmentCorpusDf(Tables.documents(spark, d))
 
   /** DataFrame form (docs must have doc_id + text). */
   def ngramContainmentCorpusDf(docsIn: DataFrame, minContain: Double = 0.5,
@@ -992,31 +895,22 @@ object Dedup {
     */
   private def containmentScoreTail(cands: DataFrame, docsIn: DataFrame,
                                    minContain: Double): DataFrame = {
-    val sh = Tables.fanOut(docsIn)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      .select(col("doc_id"),
-        array_sort(array_distinct(shinglesOfTokens(col("toks")))).as("sh"))
+    val sh = shingleSets(Tables.fanOut(docsIn).filter(col("text").isNotNull))
     val membership = cands.select(col("id_a"), col("id_b"),
       explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-    membership.join(sh, Seq("doc_id"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(
-        max(when(col("doc_id") === col("id_a"), col("sh"))).as("sh_a"),
-        max(when(col("doc_id") === col("id_b"), col("sh"))).as("sh_b"))
-      // a pair whose member lost its text to the null filter keeps only
-      // one side; the two-join form dropped such pairs — preserve that
-      .filter(col("sh_a").isNotNull && col("sh_b").isNotNull)
-      .select(col("id_a"), col("id_b"),
-        graft.functions.JaccardExpression.overlapCounts(
-          col("sh_a"), col("sh_b")).as("oc"))
-      .select(col("id_a"), col("id_b"),
-        round(col("oc.n_inter").cast("double") / col("oc.n_a"), 6).as("contain_a"),
-        round(col("oc.n_inter").cast("double") / col("oc.n_b"), 6).as("contain_b"),
-        round(col("oc.n_inter").cast("double") /
-          (col("oc.n_a") + col("oc.n_b") - col("oc.n_inter")), 6).as("jaccard"))
-      .filter(col("contain_a") > minContain || col("contain_b") > minContain)
-      .orderBy(col("id_a"), col("id_b"))
+    containmentRatios(
+      membership.join(sh, Seq("doc_id"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(
+          max(when(col("doc_id") === col("id_a"), col("sh"))).as("sh_a"),
+          max(when(col("doc_id") === col("id_b"), col("sh"))).as("sh_b"))
+        // a pair whose member lost its text to the null filter keeps only
+        // one side; the two-join form dropped such pairs — preserve that
+        .filter(col("sh_a").isNotNull && col("sh_b").isNotNull)
+        .select(col("id_a"), col("id_b"),
+          graft.functions.JaccardExpression.overlapCounts(
+            col("sh_a"), col("sh_b")).as("oc")),
+      minContain)
   }
 
   /** SIZE-STRATIFIED containment banding — the LSH Ensemble remedy
@@ -1056,12 +950,8 @@ object Dedup {
     * lineage, no per-layout re-derivation — the smoothedStatTable
     * discipline).
     */
-  def ngramContainmentStratified(spark: SparkSession, d: String,
-                                 minContain: Double = 0.5,
-                                 numHashes: Int = 32, baseBands: Int = 8,
-                                 strataGrowth: Double = 4.0): DataFrame =
-    ngramContainmentStratifiedDf(Tables.documents(spark, d), minContain,
-      numHashes, baseBands, strataGrowth)
+  def ngramContainmentStratified(spark: SparkSession, d: String): DataFrame =
+    ngramContainmentStratifiedDf(Tables.documents(spark, d))
 
   /** DataFrame form (docs must have doc_id + text). */
   def ngramContainmentStratifiedDf(docsIn: DataFrame,

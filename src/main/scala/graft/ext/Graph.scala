@@ -891,11 +891,7 @@ object Graph {
     *
     * Returns (start_id, walk_seed, step, node_id), step 0 = the start
     * itself; a walk that reaches a node with no out-edges simply ends.
-    *
-    * Scale shape: positions are one row per live walk; each step is one
-    * positions⋈edges keyed join + a (walk)-keyed MIN election + the
-    * equality join-back (the keeper-election idiom), checkpointed per
-    * step. Walk count — not corpus size — bounds the state.
+    * The loop is [[walksOn]] at p = q = 1.
     */
   def randomWalks(spark: SparkSession, d: String): DataFrame =
     // the deterministic walk table is parameter-free given the corpus
@@ -907,62 +903,13 @@ object Graph {
   /** The session walk table at the registered walk parameters — the
     * walk loop's output, consumed by q_random_walks (sorted) and
     * q_walk_context_pairs (windowed self-join). |starts|·seeds·(steps+1)
-    * rows pinned per (session, dir).
+    * rows pinned per (session, dir); the loop's final state is released
+    * once the pin materializes.
     */
   private[ext] val sessionWalkTable =
-    SessionArtifact.frame("walk_table", Pin.Checkpoint) { (spark, d) =>
-      randomWalksUnorderedOnEdges(Tables.fanOut(Tables.documents(spark, d)),
-        sessionEdges(spark, d), WalkSteps, WalkSeeds, WalkStartEvery)
+    SessionArtifact.frameWithScratch("walk_table", Pin.Checkpoint) { (spark, d) =>
+      walksOn(Tables.fanOut(Tables.documents(spark, d)), sessionEdges(spark, d))
     }
-
-  /** The walk loop over an ALREADY-CHECKPOINTED edge table, without
-    * the presentation sort — its consumers (the context-pair self-join)
-    * destroy any ordering (the minhashCandidatePairsUnordered
-    * discipline).
-    */
-  private[graft] def randomWalksUnorderedOnEdges(docs: DataFrame, edges: DataFrame,
-                                                 steps: Int = WalkSteps, seeds: Int = WalkSeeds,
-                                                 startEvery: Int = WalkStartEvery): DataFrame = {
-    require(steps >= 1 && seeds >= 1 && startEvery >= 1,
-      s"need steps/seeds/startEvery >= 1, got $steps/$seeds/$startEvery")
-    var pos = docs.select(col("doc_id"))
-      .filter(col("doc_id") % startEvery === 0)
-      .select(col("doc_id").as("start_id"),
-        explode(sequence(lit(1), lit(seeds))).as("seed0"),
-        col("doc_id").as("node_id"))
-      .select(col("start_id"), col("seed0").cast("long").as("walk_seed"),
-        col("node_id"))
-      .localCheckpoint()
-    val acc = scala.collection.mutable.ListBuffer(
-      pos.withColumn("step", lit(0L)))
-    // not on [[Fixpoint]]: the final union reads every step's positions,
-    // so no round may be released
-    for (k <- 1 to steps) {
-      // checkpointed: cand feeds BOTH the argmin groupBy and the
-      // equality join-back — without the checkpoint each step pays the
-      // pos⋈edges keyed join twice unless AQE happens to reuse the
-      // exchange (single evaluation must be structural, the
-      // smoothedStatTable lesson)
-      val cand = pos.join(edges, pos("node_id") === edges("src"))
-        .select(col("start_id"), col("walk_seed"), col("dst"),
-          md5(concat_ws(":", col("walk_seed"), col("start_id"), lit(k),
-            col("src"), col("dst"))).as("h"))
-        .localCheckpoint()
-      val best = cand.groupBy(col("start_id"), col("walk_seed"))
-        .agg(min(col("h")).as("mh"))
-      pos = cand.join(best, Seq("start_id", "walk_seed"))
-        .filter(col("h") === col("mh"))
-        .select(col("start_id"), col("walk_seed"), col("dst").as("node_id"))
-        .localCheckpoint()
-      // the elected positions are materialized: the step's candidate
-      // table has no reader left (the per-step pos frames DO stay live
-      // — the final union reads every one)
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(cand)
-      acc += pos.withColumn("step", lit(k.toLong))
-    }
-    acc.reduce(_ unionByName _)
-      .select(col("start_id"), col("walk_seed"), col("step"), col("node_id"))
-  }
 
   /** node2vec-BIASED deterministic walks (Grover & Leskovec, KDD 2016):
     * the 2nd-order walk whose next-hop distribution prefers returning
@@ -974,19 +921,14 @@ object Graph {
     * return (x = prev), local (prev → x is an edge), outward — classes
     * are ordered by descending weight, and the hash only tie-breaks
     * within the winning class. Equal weights collapse to equal
-    * priority, so p = q = 1 reproduces [[randomWalksUnorderedOnEdges]]
-    * EXACTLY (asserted in GraphSpec), the way the continuous sampler
-    * degenerates to the uniform walk. The registered query runs the
-    * DFS-like parameterization p = 4, q = 0.25 (outward class wins).
+    * priority, so p = q = 1 is the uniform walk of [[randomWalks]],
+    * the way the continuous sampler degenerates to the uniform walk.
+    * The registered query runs the DFS-like parameterization p = 4,
+    * q = 0.25 (outward class wins).
     *
     * Returns (start_id, walk_seed, step, node_id) — the
     * [[randomWalks]] schema, so the context-pair consumer composes
     * unchanged.
-    *
-    * Scale shape: the uniform walk loop plus ONE extra keyed join per
-    * step — the (prev, dst)-adjacency probe against the checkpointed
-    * edge table — and the same walk-keyed election. State adds one
-    * prev_id column.
     */
   def node2vecWalks(spark: SparkSession, d: String): DataFrame =
     // the biased walk table is parameter-free given the corpus —
@@ -995,10 +937,9 @@ object Graph {
       .orderBy(col("start_id"), col("walk_seed"), col("step"))
 
   private val sessionN2vWalkTable =
-    SessionArtifact.frame("n2v_walk_table", Pin.Checkpoint) { (spark, d) =>
-      node2vecWalksOn(Tables.fanOut(Tables.documents(spark, d)),
-        sessionEdges(spark, d), 4.0, 0.25, WalkSteps, WalkSeeds,
-        WalkStartEvery)
+    SessionArtifact.frameWithScratch("n2v_walk_table", Pin.Checkpoint) { (spark, d) =>
+      walksOn(Tables.fanOut(Tables.documents(spark, d)), sessionEdges(spark, d),
+        p = 4.0, q = 0.25)
     }
 
   /** Class priorities of the (return, local, outward) weights
@@ -1014,59 +955,68 @@ object Graph {
     (order.indexOf(wr), order.indexOf(wl), order.indexOf(wo))
   }
 
-  /** The biased-walk loop over an ALREADY-CHECKPOINTED edge table —
-    * the shared-session seam.
+  /** The one walk loop, over an ALREADY-CHECKPOINTED edge table and
+    * without the presentation sort (the context-pair self-join
+    * destroys any ordering): the node2vec election of
+    * [[node2vecWalks]], uniform at p = q = 1. Returns the walk rows and
+    * the loop's final state, which the lazy rows read (a caller that
+    * materializes the rows releases it).
+    *
+    * Scale shape: a walk's state row carries its path so far, one
+    * [[graft.Fixpoint]] round per step. A step is one state⋈edges
+    * keyed join, plus the (prev, dst)-adjacency probe against the same
+    * table unless the three class priorities are equal, one walk-keyed
+    * MIN election over (priority, hash, dst), and one walk-keyed left
+    * join back onto the state, which carries a walk at a node with no
+    * out-edge forward unchanged. The edges are distinct, so the
+    * election's argmin is the one hop the hash names. Walk count — not
+    * corpus size — bounds the state.
     */
-  private[graft] def node2vecWalksOn(docs: DataFrame, edges: DataFrame,
-                                     p: Double, q: Double, steps: Int, seeds: Int,
-                                     startEvery: Int): DataFrame = {
+  private[graft] def walksOn(docs: DataFrame, edges: DataFrame,
+                             p: Double = 1.0, q: Double = 1.0,
+                             steps: Int = WalkSteps, seeds: Int = WalkSeeds,
+                             startEvery: Int = WalkStartEvery): (DataFrame, Seq[DataFrame]) = {
     require(steps >= 1 && seeds >= 1 && startEvery >= 1,
       s"need steps/seeds/startEvery >= 1, got $steps/$seeds/$startEvery")
     val (prReturn, prLocal, prOut) = node2vecPriorities(p, q)
-    // adjacency probe side: (prev_id, dst) — renamed once, reused per step
-    val adj = edges.select(col("src").as("prev_id"), col("dst").as("dst"),
-      lit(1).as("is_local"))
-    var pos = docs.select(col("doc_id"))
+    val start = docs.select(col("doc_id"))
       .filter(col("doc_id") % startEvery === 0)
       .select(col("doc_id").as("start_id"),
-        explode(sequence(lit(1), lit(seeds))).as("seed0"),
-        col("doc_id").as("node_id"))
+        explode(sequence(lit(1), lit(seeds))).as("seed0"))
       .select(col("start_id"), col("seed0").cast("long").as("walk_seed"),
-        col("node_id"), lit(null).cast("long").as("prev_id"))
-      .localCheckpoint()
-    val acc = scala.collection.mutable.ListBuffer(
-      pos.select(col("start_id"), col("walk_seed"), col("node_id"))
-        .withColumn("step", lit(0L)))
-    // not on [[Fixpoint]]: every step's positions stay live for the union
-    for (k <- 1 to steps) {
-      // candidates + their node2vec class priority; checkpointed (the
-      // uniform walk's discipline: cand feeds the election AND
-      // the join-back)
-      val cand = pos.join(edges, pos("node_id") === edges("src"))
-        .join(adj, Seq("prev_id", "dst"), "left")
-        .select(col("start_id"), col("walk_seed"), col("node_id"),
-          col("prev_id"), col("dst"),
-          md5(concat_ws(":", col("walk_seed"), col("start_id"), lit(k),
+        array(col("start_id")).as("path"))
+    val last = Fixpoint.iterate(start.localCheckpoint(), steps) { st =>
+      // a live walk's path holds k nodes before step k: the current
+      // node is its last, the previous one (null at step 1) the one before
+      val k = size(col("path"))
+      val pos = st.select(col("start_id"), col("walk_seed"), k.as("k"),
+        get(col("path"), k - 1).as("node_id"), get(col("path"), k - 2).as("prev_id"))
+      val hops = pos.join(edges, pos("node_id") === edges("src"))
+      val cand =
+        if (prReturn == prLocal && prLocal == prOut) hops.withColumn("pr", lit(prLocal))
+        else hops
+          .join(edges.select(col("src").as("prev_id"), col("dst"), lit(1).as("is_local")),
+            Seq("prev_id", "dst"), "left")
+          .withColumn("pr",
+            when(col("prev_id").isNull, lit(prLocal))
+              .when(col("dst") === col("prev_id"), lit(prReturn))
+              .when(col("is_local").isNotNull, lit(prLocal))
+              .otherwise(lit(prOut)))
+      val elected = cand.groupBy(col("start_id"), col("walk_seed"))
+        .agg(min(struct(col("pr"),
+          md5(concat_ws(":", col("walk_seed"), col("start_id"), col("k"),
             col("src"), col("dst"))).as("h"),
-          when(col("prev_id").isNull, lit(prLocal))
-            .when(col("dst") === col("prev_id"), lit(prReturn))
-            .when(col("is_local").isNotNull, lit(prLocal))
-            .otherwise(lit(prOut)).as("pr"))
-        .localCheckpoint()
-      val best = cand.groupBy(col("start_id"), col("walk_seed"))
-        .agg(min(struct(col("pr"), col("h"))).as("m"))
-      pos = cand.join(best, Seq("start_id", "walk_seed"))
-        .filter(col("pr") === col("m.pr") && col("h") === col("m.h"))
-        .select(col("start_id"), col("walk_seed"), col("dst").as("node_id"),
-          col("node_id").as("prev_id"))
-        .localCheckpoint()
-      // elected → this step's candidate table is dead (walk discipline)
-      org.apache.spark.sql.GraftSql.releaseCheckpoint(cand)
-      acc += pos.select(col("start_id"), col("walk_seed"), col("node_id"))
-        .withColumn("step", lit(k.toLong))
-    }
-    acc.reduce(_ unionByName _)
-      .select(col("start_id"), col("walk_seed"), col("step"), col("node_id"))
+          col("dst"))).as("m"))
+      st.join(elected, Seq("start_id", "walk_seed"), "left")
+        .select(col("start_id"), col("walk_seed"),
+          when(col("m").isNull, col("path"))
+            .otherwise(concat(col("path"), array(col("m.dst")))).as("path"))
+    }(Fixpoint.Never)
+    val walks = last.select(col("start_id"), col("walk_seed"),
+        posexplode(col("path")).as(Seq("step", "node_id")))
+      .select(col("start_id"), col("walk_seed"), col("step").cast("long").as("step"),
+        col("node_id"))
+    (walks, Seq(last))
   }
 
   /** Skip-gram context pairs from the deterministic walks — the actual
@@ -1250,23 +1200,27 @@ object Graph {
     sessionComponents(spark, d).orderBy(col("doc_id"))
 
   private val sessionComponents =
-    SessionArtifact.frame("components_state", Pin.Checkpoint) { (spark, d) =>
-      org.apache.spark.sql.GraftSql.unordered(
-        minLabelComponentsOn(
-          Tables.fanOut(Tables.documents(spark, d)).select(col("doc_id")),
-          sessionUndirected(spark, d), ComponentRounds))
+    SessionArtifact.frameWithScratch("components_state", Pin.Checkpoint) { (spark, d) =>
+      val (labels, scratch) = minLabelComponentsOn(
+        Tables.fanOut(Tables.documents(spark, d)).select(col("doc_id")),
+        sessionUndirected(spark, d), ComponentRounds)
+      (org.apache.spark.sql.GraftSql.unordered(labels), scratch)
     }
 
   /** The min-label propagation core over an explicit node frontier and
-    * an ALREADY-CHECKPOINTED undirected edge table — shared by
-    * [[linkComponents]] and the media dedup-cluster query (one loop,
-    * no drift). Iterates to a fixpoint, capped at `rounds`; the early
-    * exit is free parity-wise (the oracle's fixed unroll runs ≥ as
-    * many rounds, post-fixpoint rounds are identities). Returns
-    * (doc_id, component, component_size) ordered by doc_id.
+    * an ALREADY-CHECKPOINTED undirected edge table — the one
+    * connected-components loop: [[linkComponents]] runs it over the
+    * session graph, and the near-dup and media dedup clusters over
+    * their pair lists ([[pairComponentsOn]]). Iterates to a fixpoint,
+    * capped at `rounds`; the early exit is free parity-wise (the
+    * oracle's fixed unroll runs ≥ as many rounds, post-fixpoint rounds
+    * are identities). Returns (doc_id, component, component_size)
+    * ordered by doc_id, and the final round's checkpoint, which the
+    * lazy result reads (a caller that materializes the result releases
+    * it).
     */
   private[graft] def minLabelComponentsOn(nodes: DataFrame, und: DataFrame,
-                                          rounds: Int): DataFrame = {
+                                          rounds: Int): (DataFrame, Seq[DataFrame]) = {
     val labels = Fixpoint.iterate(
         nodes.select(col("doc_id"), col("doc_id").as("component")).localCheckpoint(),
         rounds) { ck =>
@@ -1279,12 +1233,33 @@ object Graph {
           least(col("component"), coalesce(col("nbr_min"), col("component")))
             .as("component"))
     } { (_, upd) => upd.filter(col("component") =!= col("old_c")).isEmpty }
-      .select(col("doc_id"), col("component"))
-    val sizes = labels.groupBy(col("component"))
+    val state = labels.select(col("doc_id"), col("component"))
+    val sizes = state.groupBy(col("component"))
       .agg(count(lit(1)).as("component_size"))
-    labels.join(sizes, Seq("component"))
+    (state.join(sizes, Seq("component"))
       .select(col("doc_id"), col("component"), col("component_size"))
-      .orderBy(col("doc_id"))
+      .orderBy(col("doc_id")), Seq(labels))
+  }
+
+  /** [[minLabelComponentsOn]] over an undirected pair list (id_a, id_b)
+    * and `nodes` (doc_id; by default the pairs' endpoints): the pairs
+    * are checkpointed once (they feed both directions), their
+    * symmetric edge table is checkpointed for the rounds, and both are
+    * released once the loop is done — the result reads only the final
+    * round. Shared by [[Dedup.dedupClusters]] and the media
+    * dedup-cluster query.
+    */
+  private[graft] def pairComponentsOn(pairs: DataFrame, rounds: Int,
+                                      nodes: Option[DataFrame] = None)
+      : (DataFrame, Seq[DataFrame]) = {
+    val p = pairs.select(col("id_a").as("src"), col("id_b").as("dst")).localCheckpoint()
+    val und = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
+      .localCheckpoint()
+    org.apache.spark.sql.GraftSql.releaseCheckpoint(p)
+    val out = minLabelComponentsOn(
+      nodes.getOrElse(und.select(col("src").as("doc_id")).distinct()), und, rounds)
+    org.apache.spark.sql.GraftSql.releaseCheckpoint(und)
+    out
   }
 
   /** Round cap / unreached sentinel of [[crawlDepth]] — shared with

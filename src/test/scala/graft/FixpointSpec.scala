@@ -32,6 +32,32 @@ class FixpointSpec extends SparkTestBase {
 
   private def xs(df: DataFrame): Set[Long] = df.select("x").collect().map(_.getLong(0)).toSet
 
+  /** `body`'s result and the warnings the operator logged meanwhile. */
+  private def warningsOf[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val name = Fixpoint.getClass.getName
+    val seen = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val appender = new AbstractAppender("fixpoint-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage): Unit
+    }
+    appender.start()
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val level = logger.getLevel
+    Configurator.setLevel(name, Level.WARN)
+    logger.addAppender(appender)
+    try (body, seen.toArray(Array.empty[String]).toSeq)
+    finally {
+      logger.removeAppender(appender)
+      Configurator.setLevel(name, level)
+      appender.stop()
+    }
+  }
+
   test("a cap below one round fails before the init is built") {
     var built = false
     val e = intercept[IllegalArgumentException] {
@@ -84,5 +110,21 @@ class FixpointSpec extends SparkTestBase {
     assert(xs(out) == Set(2L))
     GraftSql.releaseCheckpoint(out)
     GraftSql.releaseCheckpoint(shared)
+  }
+
+  test("a probed loop stopped at its cap logs it; a converged or fixed-round loop does not") {
+    val (capped, warned) = warningsOf(
+      Fixpoint.iterate(init, 2)(step(9))((p, n) => unchanged(p, n)))
+    assert(xs(capped) == Set(2L))
+    assert(warned.size == 1 && warned.head.contains("cap of 2 rounds") &&
+      warned.head.contains("FixpointSpec"), s"expected one cap warning naming the caller: $warned")
+    GraftSql.releaseCheckpoint(capped)
+    // converging on the last allowed round is not a cap: rounds 1 and 2
+    // move x, round 3 is the identity its probe sees
+    val (converged, quiet) = warningsOf(
+      Fixpoint.iterate(init, 3)(step(2))((p, n) => unchanged(p, n)))
+    val (fixed, quietToo) = warningsOf(Fixpoint.iterate(init, 2)(step(9))(Fixpoint.Never))
+    assert(quiet.isEmpty && quietToo.isEmpty, s"unexpected warnings: ${quiet ++ quietToo}")
+    Seq(converged, fixed).foreach(GraftSql.releaseCheckpoint)
   }
 }

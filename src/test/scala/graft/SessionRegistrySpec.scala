@@ -53,20 +53,37 @@ class SessionRegistrySpec extends AnyFunSuite {
     * `hit` — the enclosing member is the last `def`/`val` at the
     * two-space object-member indent.
     */
-  private def placesWhere(hit: String => Boolean): Seq[String] = {
+  private def placesWhere(hit: String => Boolean): Seq[String] =
+    placesWhereIn((code, _) => hit(code))
+
+  /** [[placesWhere]] with a second argument to `hit`: whether the line
+    * sits inside the braces of a `for`, `while` or `.foreach` body.
+    */
+  private def placesWhereIn(hit: (String, Boolean) => Boolean): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (no $root)")
     val member = """^  (?:(?:private|protected)(?:\[\w+\])?\s+|lazy\s+|final\s+|override\s+)*(?:def|val)\s+(\w+)""".r
+    val loop = """\b(?:for|while)\s*\(|\.foreach\s*\{""".r
     Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         var enclosing = "<top>"
+        var depth = 0
+        var bodies = List.empty[Int] // brace depth inside each open loop body
         Files.readAllLines(p).asScala.flatMap { line =>
           member.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
           val code = line.trim
           val isComment = code.startsWith("*") || code.startsWith("/*") || code.startsWith("//")
-          if (!isComment && hit(code.split("//")(0))) Some(s"${p.getFileName}:$enclosing")
-          else None
+          if (isComment) None
+          else {
+            val live = code.split("//")(0)
+            val matched = hit(live, bodies.nonEmpty)
+            val opened = depth + live.count(_ == '{') - live.count(_ == '}')
+            if (loop.findFirstIn(live).isDefined && opened > depth) bodies = opened :: bodies
+            depth = opened
+            bodies = bodies.dropWhile(_ > depth)
+            if (matched) Some(s"${p.getFileName}:$enclosing") else None
+          }
         }
       }.toSeq.sorted
   }
@@ -129,5 +146,25 @@ class SessionRegistrySpec extends AnyFunSuite {
     val schemaTest = """\b(?:columns|schema|fieldNames)\b.*"toks"""".r
     val sniffers = placesWhere(code => schemaTest.findFirstIn(code).isDefined)
     assert(sniffers.isEmpty, s"schema tests for toks in: ${sniffers.mkString(", ")}")
+  }
+
+  test("each iterative algorithm has one loop: one min-label core, and no hand-rolled checkpoint loop") {
+    // min-label propagation is an aggregate MIN over a neighbour's id
+    // label; the one components loop is Graph.minLabelComponentsOn.
+    // sccDf's forward colouring is the other: a directed reachability
+    // label inside each SCC peel, not a component label
+    val minLabel = """\bmin\(col\("\w*(?:label|component|cluster|canonical_id)"\)\)""".r
+    val propagators = placesWhere(code => minLabel.findFirstIn(code).isDefined)
+    assert(propagators == Seq("Graph.scala:minLabelComponentsOn", "Graph.scala:sccDf"),
+      s"min-label propagation in: ${propagators.mkString(", ")}")
+    // a checkpoint or persist inside a for/while/foreach body is a loop
+    // that bypasses graft.Fixpoint. HITS keeps its own (a round
+    // materializes two tables); funnelReached is a fixed three-step
+    // chain that keeps every step for its readers
+    val looped = placesWhereIn((code, inLoop) =>
+        inLoop && (code.contains("localCheckpoint") || code.contains(".persist(")))
+      .filterNot(_.startsWith("Fixpoint.scala:")).distinct
+    assert(looped == Seq("ExtraQueries.scala:funnelReached", "Graph.scala:hitsStateOn"),
+      s"checkpoints inside loop bodies in: ${looped.mkString(", ")}")
   }
 }

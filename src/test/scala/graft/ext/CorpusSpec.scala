@@ -877,7 +877,8 @@ class CorpusSpec extends SparkTestBase {
     val singles = (0 until 20).map(k =>
       (500L + k, (1 to 30).map(i => s"u${k}x$i").mkString(" ")))
     val docs = (variants ++ singles).toDF("doc_id", "text")
-    val safe = Corpus.leakageSafeSplitsDf(docs, 0.7).collect()
+    val safe = Corpus.leakageSafeSplitsFromPairs(docs,
+        Dedup.minhashCandidatePairsUnordered(docs), 0.7)._1.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
     assert(safe.size == variants.size + singles.size, "every doc must be assigned")
     // the plain content split must straddle the variant family (or the

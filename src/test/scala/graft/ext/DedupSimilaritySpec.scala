@@ -140,7 +140,7 @@ class DedupSimilaritySpec extends SparkTestBase {
       (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 21L)
     ).toDF("id_a", "id_b")
-    val clusters = Dedup.dedupClusters(pairs).collect()
+    val clusters = Dedup.dedupClusters(pairs)._1.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clusters == Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
@@ -149,10 +149,10 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("dedup clusters: randomized graphs agree with a union-find reference") {
-    // guards the span-paired propagation + early-stop convergence
-    // rewrite: any divergence from textbook connected components on
-    // arbitrary topologies (long chains stress maxIter, dense blobs
-    // stress the min-label merge) fails here deterministically
+    // guards the shared min-label core and its early-stop convergence:
+    // any divergence from textbook connected components on arbitrary
+    // topologies (long chains stress maxIter, dense blobs stress the
+    // min-label merge) fails here deterministically
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 3) {
       val n = 30 + trial * 20
@@ -161,7 +161,7 @@ class DedupSimilaritySpec extends SparkTestBase {
       }.filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
         .distinct
-      // chain of length 12 to stress multi-span convergence
+      // chain of length 12 to stress multi-round convergence
       val chain = (100L to 111L).sliding(2).map(s => (s.head, s.last)).toSeq
       val all = edges ++ chain
       // reference: path-compressed union-find on the driver
@@ -179,7 +179,7 @@ class DedupSimilaritySpec extends SparkTestBase {
       val expected = nodes.groupBy(find).flatMap { case (_, members) =>
         val m = members.min; members.map(_ -> m)
       }
-      val actual = Dedup.dedupClusters(all.toDF("id_a", "id_b"), maxIter = 20)
+      val actual = Dedup.dedupClusters(all.toDF("id_a", "id_b"), maxIter = 20)._1
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(actual == expected, s"trial $trial: CC disagrees with union-find")
     }
@@ -1236,7 +1236,7 @@ class DedupSimilaritySpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val sizes = Dedup.clusterSizesDf(
         Dedup.dedupClusters(Dedup.minhashCandidatePairsUnordered(docs)
-          .filter(col("est_jaccard") >= 0.7)))
+          .filter(col("est_jaccard") >= 0.7))._1)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(sizes == Map(3L -> ((1L, 3L)), 2L -> ((1L, 2L))),
       s"planted distribution must be exactly one 3-cluster + one 2-cluster: $sizes")

@@ -29,6 +29,17 @@ class GraphSpec extends SparkTestBase {
     ).toDF("doc_id", "text")
   }
 
+  /** The walk rows of [[Graph.walksOn]] over the fixture graph `g`,
+    * whose final loop state `g` releases.
+    */
+  private def walksOver(g: FixtureGraph, docs: org.apache.spark.sql.DataFrame,
+                        p: Double = 1.0, q: Double = 1.0, steps: Int = Graph.WalkSteps,
+                        seeds: Int = Graph.WalkSeeds, startEvery: Int = Graph.WalkStartEvery) = {
+    val (walks, last) = Graph.walksOn(docs, g.edges, p, q, steps, seeds, startEvery)
+    last.foreach(g.own)
+    walks
+  }
+
   test("doc_id frontier is contiguous [0, D) — the md5-mod edge targets rely on it") {
     val r = docs.agg(count(lit(1)).as("n"), min(col("doc_id")).as("mn"),
       max(col("doc_id")).as("mx"),
@@ -209,8 +220,8 @@ class GraphSpec extends SparkTestBase {
     val edges = Graph.linkEdgesDf(fixture).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val bySrc = edges.groupBy(_._1)
-    val walks = FixtureGraph.of(fixture)(g => Graph.randomWalksUnorderedOnEdges(
-        fixture, g.edges, steps = 3, seeds = 2, startEvery = 1).collect())
+    val walks = FixtureGraph.of(fixture)(g => walksOver(g,
+        fixture, steps = 3, seeds = 2, startEvery = 1).collect())
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2), r.getLong(3)))
     val byWalk = walks.groupBy(_._1).map { case (w, rs) =>
       w -> rs.sortBy(_._2).map(_._3).toSeq }
@@ -292,7 +303,7 @@ class GraphSpec extends SparkTestBase {
     }.toMap
     val sizes = expected.values.groupBy(identity).map { case (c, vs) => c -> vs.size.toLong }
     val got = FixtureGraph.of(fixture)(g =>
-        Graph.minLabelComponentsOn(fixture.select("doc_id"), g.undirected, 8).collect())
+        Graph.minLabelComponentsOn(fixture.select("doc_id"), g.undirected, 8)._1.collect())
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == expected.map { case (d, c) => d -> (c, sizes(c)) },
       s"got=$got expected labels=$expected sizes=$sizes")
@@ -301,7 +312,7 @@ class GraphSpec extends SparkTestBase {
   test("linkComponents converged at fixture scale (one more round is a fixpoint)") {
     val (a, b) = FixtureGraph.of(docs) { g =>
       def labels(rounds: Int) = Graph.minLabelComponentsOn(docs.select("doc_id"),
-        g.undirected, rounds).collect().map(_.toSeq).toSeq
+        g.undirected, rounds)._1.collect().map(_.toSeq).toSeq
       (labels(8), labels(9))
     }
     assert(a == b, "label propagation had not converged after 8 rounds")
@@ -461,31 +472,56 @@ class GraphSpec extends SparkTestBase {
     assert(got == label.toMap, "peel labels must equal Tarjan's components")
   }
 
-  test("node2vec with p = q = 1 degenerates to the uniform walk exactly") {
+  test("node2vec walks match an exact replay of the biased election") {
+    // p = q = 1 is the uniform walk by construction (one loop), which
+    // the md5-argmin replay above checks; this replays the class-priority
+    // branch at the registered DFS-like parameterization
     val docs = plantedDocs
-    val (uniform, unbiased) = FixtureGraph.of(docs) { g =>
-      (Graph.randomWalksUnorderedOnEdges(docs, g.edges, startEvery = 2)
-        .collect().map(_.toSeq).toSet,
-        Graph.node2vecWalksOn(docs, g.edges, p = 1.0, q = 1.0, Graph.WalkSteps,
-          Graph.WalkSeeds, startEvery = 2).collect().map(_.toSeq).toSet)
+    val edges = Graph.linkEdgesDf(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val bySrc = edges.groupBy(_._1)
+    val (prReturn, prLocal, prOut) = Graph.node2vecPriorities(4.0, 0.25)
+    assert(prOut < prLocal && prLocal < prReturn, "p = 4, q = 0.25 ranks outward first")
+    def h(seed: Long, start: Long, step: Int, src: Long, dst: Long): String = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      md.digest(s"$seed:$start:$step:$src:$dst".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
     }
-    assert(unbiased == uniform,
-      "equal class weights must reproduce the md5-argmin uniform election")
+    val byWalk = FixtureGraph.of(docs)(g => walksOver(g, docs, 4.0, 0.25, startEvery = 1)
+        .collect())
+      .groupBy(r => (r.getLong(0), r.getLong(1)))
+      .map { case (w, rs) => w -> rs.sortBy(_.getLong(2)).map(_.getLong(3)).toSeq }
+    assert(byWalk.size == 10 * Graph.WalkSeeds, "one walk per (start, seed)")
+    for (((start, seed), path) <- byWalk) {
+      assert(path.head == start)
+      for (i <- 1 until path.length) {
+        val (src, prev) = (path(i - 1), if (i >= 2) Some(path(i - 2)) else None)
+        val pr = (x: Long) => prev match {
+          case None => prLocal
+          case Some(v) if x == v => prReturn
+          case Some(v) if edges.contains(v -> x) => prLocal
+          case _ => prOut
+        }
+        val expected = bySrc(src).map(_._2).minBy(x => (pr(x), h(seed, start, i, src, x)))
+        assert(path(i) == expected, s"hop $i of ($start,$seed): ${path(i)}, replay $expected")
+      }
+      if (path.length < Graph.WalkSteps + 1)
+        assert(!bySrc.contains(path.last), "walk ended early without a dead end")
+    }
   }
 
   test("node2vec bias is honored: return-preferring walks backtrack when they can") {
     val docs = plantedDocs
     val edges = Graph.linkEdgesDf(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def n2v(g: FixtureGraph, p: Double, q: Double) = Graph.node2vecWalksOn(docs,
-      g.edges, p, q, Graph.WalkSteps, Graph.WalkSeeds, startEvery = 2).collect()
+    def n2v(g: FixtureGraph, p: Double, q: Double) =
+      walksOver(g, docs, p, q, startEvery = 2).collect()
     // p tiny -> return class has top priority: whenever cur -> prev is
     // an edge, the elected hop MUST be prev; the DFS-like registered
     // parameterization and the uniform walk are compared below
     val (returning, dfs, uniform) = FixtureGraph.of(docs)(g =>
       (n2v(g, 0.01, 1.0), n2v(g, 4.0, 0.25).map(_.toSeq).toSet,
-        Graph.randomWalksUnorderedOnEdges(docs, g.edges, startEvery = 2)
-          .collect().map(_.toSeq).toSet))
+        walksOver(g, docs, startEvery = 2).collect().map(_.toSeq).toSet))
     val walks = returning
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2) -> r.getLong(3)))
       .groupBy(_._1).map { case (k, vs) =>
@@ -549,8 +585,7 @@ class GraphSpec extends SparkTestBase {
     // dense walks (a start at every node) train the embeddings the
     // evaluation scores the same edge checkpoint against
     def aucOf(docs: org.apache.spark.sql.DataFrame) = FixtureGraph.of(docs) { g =>
-      val walks = g.own(Graph.randomWalksUnorderedOnEdges(docs, g.edges, startEvery = 1)
-        .localCheckpoint())
+      val walks = g.own(walksOver(g, docs, startEvery = 1).localCheckpoint())
       val pairs = g.own(Graph.walkPairsFrom(walks, Graph.WalkWindow).localCheckpoint())
       val em = g.own(Graph.nodeEmbeddingsOnPairs(pairs, docs.count()).localCheckpoint())
       Graph.linkPredictionAucOnEdges(g.edges, em, docs.count()).collect()
@@ -732,8 +767,7 @@ class GraphSpec extends SparkTestBase {
   test("node embeddings on the planted corpus cover exactly the walk-pair centers") {
     val docs = plantedDocs
     val (emb, centers, np) = FixtureGraph.of(docs) { g =>
-      val walks = g.own(Graph.randomWalksUnorderedOnEdges(docs, g.edges, startEvery = 2)
-        .localCheckpoint())
+      val walks = g.own(walksOver(g, docs, startEvery = 2).localCheckpoint())
       val pairs = g.own(Graph.walkPairsFrom(walks, Graph.WalkWindow).localCheckpoint())
       (Graph.nodeEmbeddingsOnPairs(pairs, nTotal = docs.count()).collect(),
         pairs.select("center").distinct().collect().map(_.getLong(0)).toSet,
@@ -882,9 +916,10 @@ class GraphSpec extends SparkTestBase {
 
   /** (jobs, persisted RDDs left) per call of every loop that runs on
     * [[graft.Fixpoint]] (and the HITS loop beside them), measured on
-    * the planted graphs; `/1` is the one-round call. The cores run over
-    * the test's [[FixtureGraph]], whose two builds are the first two
-    * entries: they are not billed to the cores. A moved job count means
+    * the planted graphs; `/1` is the one-round call, and the walks start
+    * at every node. The cores run over the test's [[FixtureGraph]],
+    * whose two builds are the first two entries: they are not billed to
+    * the cores. A moved job count means
     * a round, a probe or a checkpoint was added or dropped; the
     * checkpoints left are those the lazy result still reads.
     */
@@ -906,6 +941,9 @@ class GraphSpec extends SparkTestBase {
     "minLabelComponentsOn" -> (18, 1),
     "minLabelComponentsOn/1" -> (6, 1),
     "mediaDedupClusters" -> (20, 1),
+    "dedupClusters" -> (26, 1),
+    "walksOn" -> (20, 1),
+    "walksOn/node2vec" -> (25, 1),
     "crawlDepthOn" -> (24, 1),
     "hopDistancesOn" -> (17, 1),
     "hopDistancesOn/1" -> (6, 1),
@@ -933,6 +971,10 @@ class GraphSpec extends SparkTestBase {
     val cliques = Seq(Seq(0L, 1L, 2L, 3L), Seq(4L, 5L, 6L, 7L))
     val pairs = (for { c <- cliques; x <- c; y <- c if x != y }
       yield (x, y, 25L)).toDF("center", "context", "n_cooc")
+    // a chain, a triangle and a lone pair: three clusters, the chain
+    // converging in three rounds
+    val nearDups = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L),
+      (20L, 21L)).toDF("id_a", "id_b")
     graft.analytics.ExtraQueries.mediaDedupClusters(spark, sfDir).collect() // schema memo
     val got = FixtureGraph.of(fx) { g =>
       val (e, und) = (g.edges, g.undirected)
@@ -954,9 +996,13 @@ class GraphSpec extends SparkTestBase {
         "nodeEmbeddingsOnPairs" -> (() => Graph.nodeEmbeddingsOnPairs(pairs, 8)),
         "nodeEmbeddingsOnPairs/1" -> (() => Graph.nodeEmbeddingsOnPairs(pairs, 8, epochs = 1)),
         "minLabelComponentsOn" -> (() =>
-          Graph.minLabelComponentsOn(fx.select("doc_id"), und, Graph.ComponentRounds)),
-        "minLabelComponentsOn/1" -> (() => Graph.minLabelComponentsOn(fx.select("doc_id"), und, 1)),
+          Graph.minLabelComponentsOn(fx.select("doc_id"), und, Graph.ComponentRounds)._1),
+        "minLabelComponentsOn/1" -> (() =>
+          Graph.minLabelComponentsOn(fx.select("doc_id"), und, 1)._1),
         "mediaDedupClusters" -> (() => graft.analytics.ExtraQueries.mediaDedupClusters(spark, sfDir)),
+        "dedupClusters" -> (() => Dedup.dedupClusters(nearDups)._1),
+        "walksOn" -> (() => Graph.walksOn(fx, e, startEvery = 1)._1),
+        "walksOn/node2vec" -> (() => Graph.walksOn(fx, e, 4.0, 0.25, startEvery = 1)._1),
         "crawlDepthOn" -> (() => Graph.crawlDepthOn(fx, e, trust, Graph.BfsRounds)),
         "hopDistancesOn" -> (() => Graph.hopDistancesOn(depth0, paths, Graph.BfsRounds)),
         "hopDistancesOn/1" -> (() => Graph.hopDistancesOn(depth0, paths, 1)),

@@ -39,7 +39,7 @@ class SessionArtifactSpec extends SparkTestBase {
 
   test("link components via sessionUndirected equal the standalone Df form") {
     val core = FixtureGraph.of(docs)(g => rows(Graph.minLabelComponentsOn(
-      docs.select("doc_id"), g.undirected, Graph.ComponentRounds)))
+      docs.select("doc_id"), g.undirected, Graph.ComponentRounds)._1))
     assert(rows(Graph.linkComponents(spark, sfDir)) == core)
   }
 
@@ -68,7 +68,9 @@ class SessionArtifactSpec extends SparkTestBase {
 
   test("node embeddings and link-prediction AUC via the session walk table equal the cores") {
     val (emb, auc) = FixtureGraph.of(docs) { g =>
-      val walks = g.own(Graph.randomWalksUnorderedOnEdges(docs, g.edges).localCheckpoint())
+      val (w, last) = Graph.walksOn(docs, g.edges)
+      last.foreach(g.own)
+      val walks = g.own(w.localCheckpoint())
       val pairs = g.own(Graph.walkPairsFrom(walks, Graph.WalkWindow).localCheckpoint())
       val em = g.own(Graph.nodeEmbeddingsOnPairs(pairs, docs.count()).localCheckpoint())
       (rows(em), rows(Graph.linkPredictionAucOnEdges(g.edges, em, docs.count())))

@@ -1229,7 +1229,8 @@ class StreamingSpec extends SparkTestBase {
     val batch = graft.ext.Corpus.splitAssignAgainst(
         arrivals.toDF("doc_id", "text"),
         graft.ext.Dedup.minhashBandIndex(base),
-        graft.ext.Corpus.leakageSafeSplitsDf(base, 0.7)
+        graft.ext.Corpus.leakageSafeSplitsFromPairs(base,
+            graft.ext.Dedup.minhashCandidatePairsUnordered(base), 0.7)._1
           .select(col("doc_id"), col("split")))
       .collect().map(_.toSeq).toSet
     assert(streamed == batch, s"streamed $streamed != batch $batch")
