@@ -47,6 +47,18 @@ object SparkEntry {
   val correctnessOnly: Set[String] =
     Set("q_kn_logprob_wide", "q_pagerank_converge")
 
+  /** The registered queries with no oracle SQL: the correctness gate
+    * checks them for rows > 0 only, and ScalaTest ground truth covers
+    * their values. Every registered query is in exactly one of this set
+    * and `oracleSql.keySet` (SparkEntrySpec), so none can leave the
+    * gate silently.
+    */
+  val rowsOnly: Set[String] = Set(
+    "q_approx_distincts", "q_bpe_fertility", "q_bpe_merges", "q_bpe_stats",
+    "q_compression_ratio", "q_hot_terms", "q_media_features", "q_pack_stats",
+    "q_sketch_overlap", "q_tokenizer_bakeoff", "q_unigram_fertility",
+    "q_unigram_tokenizer", "q_unigram_vocab")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- reference analytics surface (SURVEY §2.6–§2.8)
     "q_domain_stats"      -> (CoreQueries.domainStats _),
@@ -5255,12 +5267,6 @@ object SparkEntry {
         "floor(CAST(n_kept AS DOUBLE) / n_docs * 1000000.0 + 0.5) / 1000000.0 AS kept_rate, " +
         "floor(CAST(n_tokens AS DOUBLE) / n_docs * 1000000.0 + 0.5) / 1000000.0 AS avg_tokens " +
         "FROM g ORDER BY source")
-    // No oracle (rows-only checks) — the authoritative list is
-    // `queries.keySet -- oracleSql.keySet` (don't trust a hardcoded
-    // enumeration here); currently that's the xxhash64-based dedup
-    // queries, the ANN variants (hash/centroid models are Spark-side),
-    // the codec-seam media query, the engine-specific sketches, and the
-    // partitioning-dependent heavy-hitters. Each is covered by ScalaTest
-    // ground-truth assertions instead (see src/test/scala/graft).
+    // No oracle (rows-only checks): the queries named in [[rowsOnly]].
   )
 }

@@ -17,9 +17,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * every micro-batch against. A lazy DataFrame passed into a
   * foreachBatch closure is NOT frozen: each trigger re-runs its whole
   * lineage (and re-reads its source files, so the "static" table
-  * silently tracks live data). `freeze` pins the semantics the sink
-  * scaladocs promise — persist + count before the stream starts, so
-  * every batch joins one precomputed, truly static table.
+  * silently tracks live data). [[scoped]] pins the semantics the sink
+  * scaladocs promise — persist + count before the stream starts
+  * ([[graft.SessionArtifact.Pin.Persist]]), so every batch joins one
+  * precomputed, truly static table.
   *
   * Lifecycle: the pins are held for the stream's lifetime. Sinks pin
   * their frozen tables ([[scoped]]) and broadcast values
@@ -101,12 +102,6 @@ object Freeze {
   private val registry =
     new java.util.concurrent.ConcurrentHashMap[String, List[Pin]]()
 
-  def apply(df: DataFrame): DataFrame = {
-    val pinned = df.persist()
-    pinned.count()
-    pinned
-  }
-
   /** One canonical spelling per checkpoint location: `file:` URIs drop
     * their scheme, local paths absolutize + normalize (so relative vs
     * absolute, `.` segments, and trailing slashes all collapse), and
@@ -138,7 +133,7 @@ object Freeze {
     * [[release]] can unpersist it once the scope's stream has stopped.
     */
   private[ext] def scoped(scope: String, df: DataFrame): DataFrame = {
-    val pinned = apply(df)
+    val pinned = graft.SessionArtifact.Pin.Persist(df)
     register(scope, FramePin(pinned))
     pinned
   }

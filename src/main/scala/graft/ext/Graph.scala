@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Fixpoint, SessionArtifact, Tables}
 import graft.SessionArtifact.Pin
@@ -386,7 +386,7 @@ object Graph {
   private[graft] def rankLoopOn(docs: DataFrame, edges: DataFrame, seed: Column,
                                 iters: Int, topK: Int): DataFrame = {
     val ranks = Fixpoint.iterate(rankSeedState(docs, edges, seed), iters)(
-      rankStep(_, edges))(Fixpoint.Never)
+      rankStep(_, edges))
     val inDeg = edges.groupBy(col("dst").as("doc_id"))
       .agg(count(lit(1)).as("in_deg"))
     ranks.join(inDeg, Seq("doc_id"), "left")
@@ -476,7 +476,7 @@ object Graph {
               (coalesce(col("inflow_t"), lit(0L)) +
                 col("s_t") * snap(col("dang_t").cast("double") / col("n_trust")))
                 .cast("double"))).as("trust_nano"))
-    }(Fixpoint.Never)
+    }
     (last.select(col("doc_id"), col("rank_nano"), col("trust_nano")), Seq(last))
   }
 
@@ -592,9 +592,11 @@ object Graph {
 
   /** One rank-recurrence iteration over the carried state — shared by
     * [[rankLoopOn]], [[pagerankConvergenceOn]] and the incremental
-    * rounds so they cannot drift.
+    * rounds so they cannot drift. `keepOld` carries the input rank
+    * beside the new one as `r_old` (the audit's per-round movement).
     */
-  private def rankStep(ranks: DataFrame, edges: DataFrame): DataFrame = {
+  private def rankStep(ranks: DataFrame, edges: DataFrame,
+                       keepOld: Boolean = false): DataFrame = {
     val contribs = ranks.filter(col("out_deg") > 0)
       .select(col("doc_id").as("src"),
         snap(col("rank_nano").cast("double") / col("out_deg")).as("c"))
@@ -604,15 +606,18 @@ object Graph {
     val dang = ranks
       .agg(coalesce(sum(when(col("out_deg") === 0, col("rank_nano"))),
         lit(0L)).as("dang"))
-    ranks.select(col("doc_id"), col("is_seed"), col("out_deg"), col("n_seed"))
+    val kept = Seq(col("doc_id"), col("is_seed"), col("out_deg"), col("n_seed")) ++
+      (if (keepOld) Seq(col("r_old")) else Nil)
+    ranks.select(col("doc_id"), col("is_seed"), col("out_deg"), col("n_seed"),
+        col("rank_nano").as("r_old"))
       .join(contribs, Seq("doc_id"), "left")
       .crossJoin(dang)
-      .select(col("doc_id"), col("is_seed"), col("out_deg"), col("n_seed"),
+      .select(kept :+
         (col("is_seed") * snap(lit((1.0 - Damping) * Unit) / col("n_seed")) +
           snap(lit(Damping) *
             (coalesce(col("inflow"), lit(0L)) +
               col("is_seed") * snap(col("dang").cast("double") / col("n_seed")))
-              .cast("double"))).as("rank_nano"))
+              .cast("double"))).as("rank_nano"): _*)
   }
 
   /** Convergence audit for the rank recurrence: per iteration, the
@@ -630,24 +635,25 @@ object Graph {
 
   private[graft] def pagerankConvergenceOn(spark: SparkSession, docs: DataFrame,
                                            edges: DataFrame, iters: Int): DataFrame = {
-    // the per-round movement IS the probe: it reads both rounds, so it
-    // runs before the operator releases the older one
-    val deltas = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val last = Fixpoint.iterate(rankSeedState(docs, edges, lit(true)), iters)(
-        rankStep(_, edges)) { (ranks, next) =>
-      val d = next.select(col("doc_id"), col("rank_nano").as("r_new"))
-        .join(ranks.select(col("doc_id"), col("rank_nano").as("r_old")),
-          Seq("doc_id"))
-        .agg(sum(abs(col("r_new") - col("r_old"))).as("l1"),
-          max(abs(col("r_new") - col("r_old"))).as("mx")).head()
-      deltas += ((deltas.size + 1L, d.getLong(0), d.getLong(1)))
-      false
+    // the step carries the old rank beside the new one, so each
+    // round's movement is observed in that round's checkpoint job
+    val moves = scala.collection.mutable.ArrayBuffer.empty[Observation]
+    val last = Fixpoint.iterate(rankSeedState(docs, edges, lit(true)), iters) { ranks =>
+      val move = Observation()
+      moves += move
+      val delta = abs(col("rank_nano") - col("r_old"))
+      rankStep(ranks, edges, keepOld = true)
+        .observe(move, sum(delta).as("l1"), max(delta).as("mx"))
+        .drop("r_old")
     }
     // the result is built on the driver from the collected deltas: the
     // final ranks have no reader left (the edge table is the caller's)
     org.apache.spark.sql.GraftSql.releaseCheckpoint(last)
     import spark.implicits._
-    deltas.toSeq.toDF("iter", "l1_delta_nano", "max_delta_nano").orderBy(col("iter"))
+    moves.toSeq.zipWithIndex.map { case (move, i) =>
+      val d = move.get
+      (i + 1L, d("l1").asInstanceOf[Long], d("mx").asInstanceOf[Long])
+    }.toDF("iter", "l1_delta_nano", "max_delta_nano").orderBy(col("iter"))
   }
 
   /** Base-corpus fraction (numerator/denominator, integer arithmetic
@@ -726,7 +732,7 @@ object Graph {
       .select(col("src"), col("dst"))
       .localCheckpoint()
     val base = Fixpoint.iterate(rankSeedState(docs, baseEdges, lit(true)), iters)(
-      rankStep(_, baseEdges))(Fixpoint.Never)
+      rankStep(_, baseEdges))
     // the base state is checkpointed — its edge subset is dead
     org.apache.spark.sql.GraftSql.releaseCheckpoint(baseEdges)
     // warm start: rank mass carried over, out-degrees rebound to the
@@ -753,8 +759,7 @@ object Graph {
     */
   private[graft] def pagerankIncrementalTail(baseState: DataFrame, edges: DataFrame,
                                              refine: Int, topK: Int): DataFrame =
-    Fixpoint.iterate(baseState, refine, releaseInit = false)(
-        rankStep(_, edges))(Fixpoint.Never)
+    Fixpoint.iterate(baseState, refine, releaseInit = false)(rankStep(_, edges))
       .join(baseState
           .select(col("doc_id"), col("rank_nano").as("base_rank_nano")),
         Seq("doc_id"))
@@ -1011,7 +1016,7 @@ object Graph {
         .select(col("start_id"), col("walk_seed"),
           when(col("m").isNull, col("path"))
             .otherwise(concat(col("path"), array(col("m.dst")))).as("path"))
-    }(Fixpoint.Never)
+    }
     val walks = last.select(col("start_id"), col("walk_seed"),
         posexplode(col("path")).as(Seq("step", "node_id")))
       .select(col("start_id"), col("walk_seed"), col("step").cast("long").as("step"),
@@ -1159,7 +1164,7 @@ object Graph {
           (col("x1") - snap(lit(lr) * (col("g1") / col("m")))).as("x1"),
           (col("x2") - snap(lit(lr) * (col("g2") / col("m")))).as("x2"),
           (col("x3") - snap(lit(lr) * (col("g3") / col("m")))).as("x3"))
-    }(Fixpoint.Never)
+    }
     // the pair table is dead once the last epoch is materialized
     org.apache.spark.sql.GraftSql.releaseCheckpoint(pp)
     val np = pairs.groupBy(col("center"))
@@ -1187,8 +1192,8 @@ object Graph {
     * round is one labels⋈edges keyed join + one groupBy(dst) MIN + a
     * doc_id-keyed combine — the standard Pregel-without-Pregel shape
     * (GraphX connectedComponents does exactly this under the hood).
-    * The loop exits at the fixpoint (a cheap changed-count against the
-    * checkpointed round result), capped at `rounds`; the oracle's
+    * The loop exits at the fixpoint (the changed-label count rides each
+    * round's checkpoint job), capped at `rounds`; the oracle's
     * fixed 8-round unroll agrees either way — it runs at least as many
     * rounds and post-fixpoint rounds are identities. The link graph's
     * hub structure keeps real eccentricities tiny (GraphSpec asserts
@@ -1223,7 +1228,7 @@ object Graph {
                                           rounds: Int): (DataFrame, Seq[DataFrame]) = {
     val labels = Fixpoint.iterate(
         nodes.select(col("doc_id"), col("doc_id").as("component")).localCheckpoint(),
-        rounds) { ck =>
+        rounds, changed = Some(col("component") =!= col("old_c"))) { ck =>
       val labels = ck.select(col("doc_id"), col("component"))
       val neighborMin = labels.join(und, labels("doc_id") === und("src"))
         .groupBy(col("dst").as("doc_id"))
@@ -1232,7 +1237,7 @@ object Graph {
         .select(col("doc_id"), col("component").as("old_c"),
           least(col("component"), coalesce(col("nbr_min"), col("component")))
             .as("component"))
-    } { (_, upd) => upd.filter(col("component") =!= col("old_c")).isEmpty }
+    }
     val state = labels.select(col("doc_id"), col("component"))
     val sizes = state.groupBy(col("component"))
       .agg(count(lit(1)).as("component_size"))
@@ -1333,7 +1338,8 @@ object Graph {
     */
   private[graft] def hopDistancesOn(init: DataFrame, e: DataFrame,
                                     rounds: Int): DataFrame =
-    Fixpoint.iterate(init.localCheckpoint(), rounds) { ck =>
+    Fixpoint.iterate(init.localCheckpoint(), rounds,
+        changed = Some(col("depth") =!= col("old_d"))) { ck =>
       val dist = ck.select(col("doc_id"), col("depth"))
       val nd = dist.filter(col("depth") < lit(BfsUnreached))
         .join(e, dist("doc_id") === e("src"))
@@ -1342,8 +1348,7 @@ object Graph {
       dist.join(nd, Seq("doc_id"), "left")
         .select(col("doc_id"), col("depth").as("old_d"),
           least(col("depth"), coalesce(col("nd"), col("depth"))).as("depth"))
-    } { (_, upd) => upd.filter(col("depth") =!= col("old_d")).isEmpty }
-      .select(col("doc_id"), col("depth"))
+    }.select(col("doc_id"), col("depth"))
 
   /** Peel count of [[linkScc]] — shared with the oracle builder. */
   private[graft] val SccPeels = 3
@@ -1518,10 +1523,18 @@ object Graph {
                            rounds: Int = ComponentRounds): DataFrame = {
     // (doc_id, scc_id), scc_id null until confirmed
     val state0 = nodes.select(col("doc_id"), lit(null).cast("long").as("scc_id"))
-    // what a peel builds besides its state: dead once the next peel
-    // state is materialized, so the peel probe releases it
+    // what a peel builds besides its state: dead once the peel state
+    // that absorbed it is materialized, so the next peel (or the end of
+    // the loop) releases it
     var peelScratch = Seq.empty[DataFrame]
-    val state = Fixpoint.iterate(state0.localCheckpoint(), peels) { state =>
+    def releaseScratch(): Unit = {
+      peelScratch.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
+      peelScratch = Nil
+    }
+    // a peel that leaves no node unassigned is the fixpoint
+    val state = Fixpoint.iterate(state0.localCheckpoint(), peels,
+        changed = Some(col("scc_id").isNull)) { state =>
+      releaseScratch()
       val un = state.filter(col("scc_id").isNull).select(col("doc_id"))
       // keyed on src (the forward loop's per-round join key; stamped
       // layout — see sessionEdges): the live subgraph is re-joined
@@ -1535,7 +1548,7 @@ object Graph {
       // forward min-label over the live subgraph, early-exit at fixpoint
       val f = Fixpoint.iterate(
           un.select(col("doc_id"), col("doc_id").as("flabel")).localCheckpoint(),
-          rounds) { ck =>
+          rounds, changed = Some(col("flabel") =!= col("old_f"))) { ck =>
         val f = ck.select(col("doc_id"), col("flabel"))
         val nm = f.join(e, f("doc_id") === e("src"))
           .groupBy(col("dst").as("doc_id"))
@@ -1543,7 +1556,7 @@ object Graph {
         f.join(nm, Seq("doc_id"), "left")
           .select(col("doc_id"), col("flabel").as("old_f"),
             least(col("flabel"), coalesce(col("m"), col("flabel"))).as("flabel"))
-      } { (_, upd) => upd.filter(col("flabel") =!= col("old_f")).isEmpty }
+      }
       // backward: each root's id flows along reverse edges, gated to
       // its own F-class; blabel != null == "confirmed member of
       // SCC(flabel)"
@@ -1552,7 +1565,8 @@ object Graph {
         .localCheckpoint()
       // the b seed consumed the converged forward state
       org.apache.spark.sql.GraftSql.releaseCheckpoint(f)
-      val b = Fixpoint.iterate(b0, rounds) { ck =>
+      val b = Fixpoint.iterate(b0, rounds,
+          changed = Some(col("blabel").isNotNull && col("old_b").isNull)) { ck =>
         val b = ck.select(col("doc_id"), col("flabel"), col("blabel"))
         // distinct (receiver, root) PAIRS with the class gate as a join
         // key — aggregating MIN(blabel) before gating would let a
@@ -1572,18 +1586,14 @@ object Graph {
             col("doc_id") === col("pid") && col("bm") === col("flabel"), "left")
           .select(col("doc_id"), col("flabel"), col("blabel").as("old_b"),
             coalesce(col("blabel"), col("bm")).as("blabel"))
-      } { (_, upd) => upd.filter(col("blabel").isNotNull && col("old_b").isNull).isEmpty }
+      }
       peelScratch = Seq(b, e)
       state
         .join(b.select(col("doc_id"), col("blabel")), Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("scc_id"), col("blabel")).as("scc_id"))
-    } { (_, next) =>
-      // the new peel state absorbed the confirmed backward labels and
-      // the live subgraph
-      peelScratch.foreach(org.apache.spark.sql.GraftSql.releaseCheckpoint)
-      next.filter(col("scc_id").isNull).isEmpty
     }
+    releaseScratch()
     val labeled = state.select(col("doc_id"),
       coalesce(col("scc_id"), col("doc_id")).as("scc_id"))
     val sizes = labeled.groupBy(col("scc_id"))
@@ -1651,7 +1661,8 @@ object Graph {
         (col("doc_id") % 3 === 0).as("is_seed"))
       .select(col("doc_id"), col("lang"), col("is_seed"),
         when(col("is_seed"), col("lang")).as("label"))
-    val st = Fixpoint.iterate(st0.localCheckpoint(), rounds) { ck =>
+    val st = Fixpoint.iterate(st0.localCheckpoint(), rounds,
+        changed = Some(!(col("label") <=> col("old_l")))) { ck =>
       val st = ck.select(col("doc_id"), col("lang"), col("is_seed"), col("label"))
       val votes = st.filter(col("label").isNotNull)
         .select(col("doc_id").as("src"), col("label"))
@@ -1669,10 +1680,6 @@ object Graph {
           col("label").as("old_l"),
           when(col("is_seed"), col("label"))
             .otherwise(coalesce(col("vote"), col("label"))).as("label"))
-    } { (_, next) =>
-      next.filter(
-        coalesce(col("label") =!= col("old_l"),
-          col("label").isNotNull =!= col("old_l").isNotNull)).isEmpty
     }
     st.select(col("doc_id"), col("lang"), col("is_seed"),
         col("label").as("predicted_lang"),
@@ -1742,23 +1749,22 @@ object Graph {
       floor(lit(5.0) * sum(col("udeg")) / (lit(8.0) * count(lit(1))))
         .cast("long").as("k_threshold"))
       .localCheckpoint()
-    // round 1 is degenerate: the starting alive set IS the full
-    // degree-carrying frontier, so the within-subgraph degree equals
-    // udeg and the two semi-joins are identities — the first peel is a
-    // plain filter (the oracle's kd1/ka1 compute the same values the
-    // expensive way; results coincide, only the plan differs)
-    val alive1 = udeg.crossJoin(kRow)
-      .filter(col("udeg") >= col("k_threshold"))
-      .select(col("doc_id"))
+    // each round's state is the set that entered it, flagged with
+    // whether the node survives the round's peel (the peel only
+    // removes, so a round that peels nothing is the fixpoint). Round 1
+    // is degenerate: the entering set IS the full degree-carrying
+    // frontier, so the within-subgraph degree equals udeg and the two
+    // semi-joins are identities — the first peel is a plain comparison
+    // (the oracle's kd1/ka1 compute the same values the expensive way;
+    // results coincide, only the plan differs)
+    val round1 = udeg.crossJoin(kRow)
+      .select(col("doc_id"), (col("udeg") >= col("k_threshold")).as("keep"))
       .localCheckpoint()
-    // the fixpoint test is a COUNT COMPARISON (the peel only removes),
-    // and the previous round's count is carried — one count action per
-    // round, not two
-    var aliveN = alive1.count()
-    // round 1 is the filter above; the operator runs rounds 2..rounds
-    val alive =
-      if (rounds == 1) alive1
-      else Fixpoint.iterate(alive1, rounds - 1) { alive =>
+    // round 1 is the comparison above; the operator runs rounds 2..rounds
+    val last =
+      if (rounds == 1) round1
+      else Fixpoint.iterate(round1, rounds - 1, changed = Some(!col("keep"))) { st =>
+        val alive = st.filter(col("keep")).select(col("doc_id"))
         val e2 = und
           .join(alive.select(col("doc_id").as("src")), Seq("src"))
           .join(alive.select(col("doc_id").as("dst")), Seq("dst"))
@@ -1766,14 +1772,10 @@ object Graph {
           .agg(count(lit(1)).as("d"))
         alive.join(deg, Seq("doc_id"), "left")
           .crossJoin(kRow)
-          .filter(coalesce(col("d"), lit(0L)) >= col("k_threshold"))
-          .select(col("doc_id"))
-      } { (_, next) =>
-        val nextN = next.count()
-        val converged = nextN == aliveN
-        aliveN = nextN
-        converged
+          .select(col("doc_id"),
+            (coalesce(col("d"), lit(0L)) >= col("k_threshold")).as("keep"))
       }
+    val alive = last.filter(col("keep")).select(col("doc_id"))
     docs.select(col("doc_id"))
       .join(udeg, Seq("doc_id"), "left")
       .join(alive.withColumn("in_kcore", lit(true)), Seq("doc_id"), "left")

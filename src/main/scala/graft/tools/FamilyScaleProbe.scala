@@ -30,19 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object FamilyScaleProbe {
 
-  private def timeIt(f: => DataFrame): (Double, Long) = {
-    System.gc()
-    val t0 = System.nanoTime()
-    val n = f.count()
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
-
-  private def minOf2(f: => DataFrame): (Double, Long) = {
-    val a = timeIt(f)
-    val b = timeIt(f)
-    (math.min(a._1, b._1), a._2)
-  }
-
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.01")
     val reps = { val r = args.drop(1).map(_.toInt); if (r.nonEmpty) r.toSeq else Seq(1, 3, 10, 30, 100) }
@@ -123,7 +110,9 @@ object FamilyScaleProbe {
       }.reduce(_ unionAll _).localCheckpoint()
 
     // prepare each replica input ONCE (checkpointed), time only the
-    // operator chain over it (min-of-2), release before the next R so
+    // operator chain over it (BenchKit.bestDf: a noop write of every
+    // column, min-of-2; the row count runs untimed after), release
+    // before the next R so
     // leaked blocks cannot skew the larger-R timings (ADVICE r17)
     // SPARK_GRAFT_PROBE_FAMILIES=substring,gann_bucket narrows a run
     // to the named families (re-probing one family need not pay all)
@@ -167,7 +156,8 @@ object FamilyScaleProbe {
       var base = -1.0
       reps.foreach { r =>
         val in = fam.prepare(r)
-        val (sec, rows) = minOf2(fam.op(in))
+        val sec = graft.BenchKit.bestDf(() => fam.op(in))
+        val rows = fam.op(in).count()
         org.apache.spark.sql.GraftSql.releaseCheckpoint(in)
         if (base < 0) base = sec
         println(f"${fam.name}%-12s $r%4d $rows%10d $sec%8.2f ${sec / base}%8.2f")
@@ -192,8 +182,10 @@ object FamilyScaleProbe {
         val prefix = s"probe_gann_r$r"
         val (embT, edgesT) =
           graft.ext.Similarity.bucketedAnnState(spark, in, prefix, buckets = 8 * r)
-        val (sec, rows) = minOf2(graft.ext.Similarity.graphAnnServeOnceOn(
-          queries, embT, edgesT, entry = Some(entry0)))
+        def serve = graft.ext.Similarity.graphAnnServeOnceOn(
+          queries, embT, edgesT, entry = Some(entry0))
+        val sec = graft.BenchKit.bestDf(() => serve)
+        val rows = serve.count()
         org.apache.spark.sql.GraftSql.releaseCheckpoint(in)
         spark.sql(s"DROP TABLE IF EXISTS ${prefix}_emb")
         spark.sql(s"DROP TABLE IF EXISTS ${prefix}_edges")

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, GraftSql}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** The fixpoint operator's contract: round cap, early exit, probe
-  * order and release ownership. The graph loops built on it are pinned
-  * per loop in GraphSpec.
+/** The fixpoint operator's contract: round cap, early exit, the probe
+  * counted inside the round's checkpoint job, and release ownership.
+  * The graph loops built on it are pinned per loop in GraphSpec.
   */
 class FixpointSpec extends SparkTestBase {
 
@@ -18,17 +18,19 @@ class FixpointSpec extends SparkTestBase {
   private def persisted(df: DataFrame): Boolean =
     spark.sparkContext.getPersistentRDDs.contains(rddId(df))
 
-  /** x in [0, 5) with an old-value column for the probe. */
-  private def init: DataFrame =
-    spark.range(5).select(col("id").as("k"), lit(0L).as("old"), lit(0L).as("x"))
+  /** k in [0, n) with x = 0 and an old-value column for the probe. */
+  private def initOf(n: Int): DataFrame =
+    spark.range(n).select(col("id").as("k"), lit(0L).as("old"), lit(0L).as("x"))
       .localCheckpoint()
+
+  private def init: DataFrame = initOf(5)
 
   /** x ← min(x + 1, cap): changes for `cap` rounds, then is a fixpoint. */
   private def step(cap: Long)(prev: DataFrame): DataFrame =
     prev.select(col("k"), col("x").as("old"), least(col("x") + 1, lit(cap)).as("x"))
 
-  private def unchanged(prev: DataFrame, next: DataFrame): Boolean =
-    next.filter(col("x") =!= col("old")).isEmpty
+  /** The probe: rows whose x moved this round. */
+  private val moved = Some(col("x") =!= col("old"))
 
   private def xs(df: DataFrame): Set[Long] = df.select("x").collect().map(_.getLong(0)).toSet
 
@@ -61,7 +63,7 @@ class FixpointSpec extends SparkTestBase {
   test("a cap below one round fails before the init is built") {
     var built = false
     val e = intercept[IllegalArgumentException] {
-      Fixpoint.iterate({ built = true; init }, 0)(step(9))(Fixpoint.Never)
+      Fixpoint.iterate({ built = true; init }, 0)(step(9))
     }
     assert(e.getMessage.contains(">= 1 round"))
     assert(!built, "the init must not be evaluated for a rejected cap")
@@ -69,35 +71,54 @@ class FixpointSpec extends SparkTestBase {
 
   test("maxRounds = 1 runs exactly one round") {
     var steps = 0
-    val out = Fixpoint.iterate(init, 1) { p => steps += 1; step(9)(p) }(Fixpoint.Never)
+    val out = Fixpoint.iterate(init, 1) { p => steps += 1; step(9)(p) }
     assert(steps == 1 && xs(out) == Set(1L))
   }
 
-  test("Never runs every round up to the cap") {
+  test("a loop with no changed column runs every round up to the cap") {
     var steps = 0
-    val out = Fixpoint.iterate(init, 4) { p => steps += 1; step(2)(p) }(Fixpoint.Never)
+    val out = Fixpoint.iterate(init, 4) { p => steps += 1; step(2)(p) }
     assert(steps == 4 && xs(out) == Set(2L))
   }
 
   test("the loop stops at the first round whose probe finds no change") {
     var steps = 0
-    var probes = 0
-    val out = Fixpoint.iterate(init, 10) { p => steps += 1; step(2)(p) } { (p, n) =>
-      probes += 1; unchanged(p, n)
-    }
+    val out = Fixpoint.iterate(init, 10, changed = moved) { p => steps += 1; step(2)(p) }
     // rounds 1 and 2 move x to 1 then 2; round 3 is the first identity
-    assert(steps == 3 && probes == 3 && xs(out) == Set(2L))
+    assert(steps == 3 && xs(out) == Set(2L))
   }
 
-  test("an owned init and every round but the last are released; the probe reads both") {
-    val seen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val out = Fixpoint.iterate(init, 3) { p => seen += p; step(9)(p) } { (p, n) =>
-      // probe order: both rounds are still readable here
-      assert(persisted(p) && persisted(n))
-      assert(xs(n) == xs(p).map(_ + 1))
-      false
+  test("a probed loop of k rounds over a narrow step starts exactly k jobs") {
+    val start = init
+    var steps = 0
+    val (out, jobs) = GraftSql.jobsStartedBy(spark)(
+      Fixpoint.iterate(start, 10, changed = moved) { p => steps += 1; step(2)(p) })
+    // the change count rides the checkpoint job: no probe job per round
+    assert(steps == 3 && jobs == 3, s"$steps rounds started $jobs jobs")
+    GraftSql.releaseCheckpoint(out)
+  }
+
+  test("a probed loop over an empty state stops after one round") {
+    var steps = 0
+    // a shuffle in the step: adaptive execution sees the empty stage
+    val out = Fixpoint.iterate(initOf(0), 10, changed = moved) { p =>
+      steps += 1
+      step(2)(p).join(p.groupBy(col("k")).count(), Seq("k"))
     }
-    assert(seen.size == 3)
+    assert(steps == 1 && out.isEmpty)
+    GraftSql.releaseCheckpoint(out)
+  }
+
+  test("an owned init and every round but the last are released") {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // x <- min(x + 1, k): row k moves in rounds 1..k, so round r changes
+    // 5 - r rows and round 5 is the first to change none
+    val out = Fixpoint.iterate(init, 10, changed = moved) { p =>
+      assert(persisted(p), "a step reads a live round")
+      seen += p
+      p.select(col("k"), col("x").as("old"), least(col("x") + 1, col("k")).as("x"))
+    }
+    assert(seen.size == 5 && xs(out) == (0L to 4L).toSet)
     seen.foreach(p => assert(!persisted(p), "a consumed round must be released"))
     assert(persisted(out), "the final round belongs to the caller")
     GraftSql.releaseCheckpoint(out)
@@ -105,7 +126,7 @@ class FixpointSpec extends SparkTestBase {
 
   test("an init the caller does not own is never released") {
     val shared = init
-    val out = Fixpoint.iterate(shared, 2, releaseInit = false)(step(9))(Fixpoint.Never)
+    val out = Fixpoint.iterate(shared, 2, releaseInit = false)(step(9))
     assert(persisted(shared) && xs(shared) == Set(0L))
     assert(xs(out) == Set(2L))
     GraftSql.releaseCheckpoint(out)
@@ -113,17 +134,15 @@ class FixpointSpec extends SparkTestBase {
   }
 
   test("a probed loop stopped at its cap logs it; a converged or fixed-round loop does not") {
-    val (capped, warned) = warningsOf(
-      Fixpoint.iterate(init, 2)(step(9))((p, n) => unchanged(p, n)))
+    val (capped, warned) = warningsOf(Fixpoint.iterate(init, 2, changed = moved)(step(9)))
     assert(xs(capped) == Set(2L))
     assert(warned.size == 1 && warned.head.contains("cap of 2 rounds") &&
       warned.head.contains("FixpointSpec"), s"expected one cap warning naming the caller: $warned")
     GraftSql.releaseCheckpoint(capped)
     // converging on the last allowed round is not a cap: rounds 1 and 2
     // move x, round 3 is the identity its probe sees
-    val (converged, quiet) = warningsOf(
-      Fixpoint.iterate(init, 3)(step(2))((p, n) => unchanged(p, n)))
-    val (fixed, quietToo) = warningsOf(Fixpoint.iterate(init, 2)(step(9))(Fixpoint.Never))
+    val (converged, quiet) = warningsOf(Fixpoint.iterate(init, 3, changed = moved)(step(2)))
+    val (fixed, quietToo) = warningsOf(Fixpoint.iterate(init, 2)(step(9)))
     assert(quiet.isEmpty && quietToo.isEmpty, s"unexpected warnings: ${quiet ++ quietToo}")
     Seq(converged, fixed).foreach(GraftSql.releaseCheckpoint)
   }
